@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.ext.Ann
 import graft.ingest.{Decode, Sequencer}
 import graft.serve.Subscribe
 import graft.store.EventsTable
@@ -343,14 +344,13 @@ object ScaleSmoke {
           .as("embedding"))
       val idx = java.nio.file.Files.createTempDirectory("batchprobe-idx").toString
       var t0 = System.nanoTime()
-      graft.ext.Similarity.buildIvfPq(vecsOf(nVecs, 0L), "vec_id", "embedding",
-        idx, k = cells, dim = dim, m = 8, ksub = 16)
+      Ann.build(vecsOf(nVecs, 0L), "vec_id", "embedding", idx,
+        Ann.PQ(dim = dim, m = 8, ksub = 16), Ann.Ivf(k = cells))
       println(f"[batchprobe] index built over $nVecs vectors in ${(System.nanoTime() - t0) / 1e9}%.1fs")
 
       val queries = vecsOf(nQ, 7L)
-      val big = graft.ext.Similarity.ivfPqProbeBatch(spark, idx, "vec_id",
-        "label", "embedding", queries, "vec_id", "embedding",
-        k = 10, nprobe = 4, rerank = 50)
+      val big = Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 4), "vec_id",
+        "embedding", queries, "vec_id", "embedding", k = 10, rerank = 50)
       val hints = big.queryExecution.analyzed.collect {
         case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
       }.size
@@ -371,9 +371,9 @@ object ScaleSmoke {
       // path equality on a 2k-query sample
       val step = math.max(1L, nQ / 2000L)
       val sample = queries.filter(col("vec_id") % step === 0)
-      def probe(maxRows: Long) = graft.ext.Similarity.ivfPqProbeBatch(spark,
-        idx, "vec_id", "label", "embedding", sample, "vec_id", "embedding",
-        k = 10, nprobe = 4, rerank = 50, broadcastMaxRows = maxRows)
+      def probe(maxRows: Long) = Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 4),
+        "vec_id", "embedding", sample, "vec_id", "embedding",
+        k = 10, rerank = 50, broadcastMaxRows = maxRows)
       val bc = probe(Long.MaxValue)
       val sh = probe(0L)
       val onlyBc = bc.exceptAll(sh).count()
@@ -643,8 +643,8 @@ object ScaleSmoke {
         println(f"[rehearsal] coarse k-means (K=$k, 2 iters, 1/50 sample): ${sec(t0)}%.1fs")
         val bqIdx = java.nio.file.Files.createTempDirectory("graft-rehearsal-bq").toString
         t0 = System.nanoTime()
-        // CELL-RANGE-CHUNKED shared build (VERDICT r17 #8): the one-shot
-        // buildIvfSq8BqShared write sorts the WHOLE corpus by cell inside
+        // CELL-RANGE-CHUNKED shared build: a one-shot
+        // shared-base write sorts the WHOLE corpus by cell inside
         // the partitionBy writer — a transient spill copy that doubled
         // the 24.6 GB vectors table and filled the disk at 8M. Here the
         // dim-wide data never reorganizes: the assignment runs ONCE into
@@ -654,8 +654,11 @@ object ScaleSmoke {
         // broadcast-joins its chunk's labels, and partitionBy-sorts only
         // chunk-sized data (~1/8 of the corpus spill at a time). Peak
         // disk = final artifacts + one chunk's spill.
-        graft.ext.Similarity.buildIvfSq8BqSharedChunked(corpus, "vec_id",
-          "embedding", idx, bqIdx, cents, dim, ranges = 8)
+        Ann.buildBaseChunked(corpus, "vec_id", "embedding", idx, cents, ranges = 8)
+        Ann.build(corpus, "vec_id", "embedding", idx, Ann.SQ8(dim),
+          Ann.Ivf(vectorsDir = Some(idx)))
+        Ann.build(corpus, "vec_id", "embedding", bqIdx, Ann.BQ(dim),
+          Ann.Ivf(vectorsDir = Some(idx)))
         println(f"[rehearsal] shared IVF base (chunked) + SQ8 codes + BQ words: " +
           f"${sec(t0)}%.1fs | " +
           f"vectors ${dirBytes(s"$idx/vectors") / 1e9}%.1f GB, " +
@@ -670,24 +673,23 @@ object ScaleSmoke {
           }
           runs.minBy(_._1)
         }
-        val (sq8One, _) = timed(graft.ext.Similarity.ivfSq8Probe(spark, idx,
-          "vec_id", "label", "embedding", q, k = 10, nprobe = 8, rerank = 100).count())
-        val (bqOne, _) = timed(graft.ext.Similarity.ivfBqProbe(spark, bqIdx,
-          "vec_id", "label", "embedding", q, k = 10, nprobe = 8, rerank = 100,
-          vectorsDir = Some(idx)).count())
+        val (sq8One, _) = timed(Ann.probe(spark, idx, Ann.Ivf(nprobe = 8),
+          "vec_id", "embedding", q, k = 10, rerank = 100).count())
+        val (bqOne, _) = timed(Ann.probe(spark, bqIdx,
+          Ann.Ivf(nprobe = 8, vectorsDir = Some(idx)),
+          "vec_id", "embedding", q, k = 10, rerank = 100).count())
         println(f"[rehearsal] single probe (nprobe=8, rerank=100, ~${nVecs / k * 8}%d " +
           f"candidate rows): ivf-sq8 $sq8One%.2fs, ivf-bq $bqOne%.2fs")
         val nq = args.lift(3).map(_.toLong).getOrElse(10000L)
         val queries = corpus.filter(col("vec_id") < nq)
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val (sq8Batch, sq8Rows) = timed(graft.ext.Similarity.ivfSq8ProbeBatch(spark, idx,
-          "vec_id", "label", "embedding", queries, "qid", "qvec",
-          k = 10, nprobe = 8, rerank = 100).count())
+        val (sq8Batch, sq8Rows) = timed(Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 8),
+          "vec_id", "embedding", queries, "qid", "qvec", k = 10, rerank = 100).count())
         println(f"[rehearsal] ivf-sq8 batch $nq queries: $sq8Batch%.1fs = " +
           f"${nq / sq8Batch}%.0f q/s ($sq8Rows rows)")
-        val (bqBatch, bqRows) = timed(graft.ext.Similarity.ivfBqProbeBatch(spark, bqIdx,
-          "vec_id", "label", "embedding", queries, "qid", "qvec",
-          k = 10, nprobe = 8, rerank = 100, vectorsDir = Some(idx)).count())
+        val (bqBatch, bqRows) = timed(Ann.probeBatch(spark, bqIdx,
+          Ann.Ivf(nprobe = 8, vectorsDir = Some(idx)),
+          "vec_id", "embedding", queries, "qid", "qvec", k = 10, rerank = 100).count())
         println(f"[rehearsal] ivf-bq batch $nq queries: $bqBatch%.1fs = " +
           f"${nq / bqBatch}%.0f q/s ($bqRows rows)")
         def rm(d: String): Unit = {
@@ -777,11 +779,11 @@ object ScaleSmoke {
       // rung 1: SQ8 — 8-bit/dim affine codes + stored norm
       val sq8 = java.nio.file.Files.createTempDirectory("ladder-sq8").toString
       var t0 = System.nanoTime()
-      graft.ext.Similarity.buildSq8(corpus, "vec_id", "embedding", sq8, dim = dim)
+      Ann.build(corpus, "vec_id", "embedding", sq8, Ann.SQ8(dim), Ann.Flat())
       println(f"[ladder] sq8 build ${(System.nanoTime() - t0) / 1e9}%.1fs")
       var sq8Ids: Seq[Long] = Seq.empty
       val sq8Sec = timed {
-        sq8Ids = graft.ext.Similarity.sq8AdcRerank(spark, sq8, corpus, "vec_id",
+        sq8Ids = Ann.probe(spark, sq8, Ann.Flat(corpus), "vec_id",
           "embedding", q, k = 10, rerank = 100)
           .select("vec_id").as[Long](spark.implicits.newLongEncoder).collect().toSeq
       }
@@ -791,8 +793,8 @@ object ScaleSmoke {
       // unpruned corpus-width scan that dominates at large N; the
       // composed IVF rungs prune that read to <= nprobe cells)
       val sq8FirstSec = timed {
-        graft.ext.Similarity.sq8Candidates(spark, sq8, "vec_id", q, rerank = 100)
-          .collect()
+        Ann.candidates(spark.read.parquet(s"$sq8/codes"), Ann.read(spark, sq8),
+          "vec_id", q, 100).collect()
       }
       println(f"[ladder] sq8: ${sq8Sec}%.2fs (first pass ${sq8FirstSec}%.2fs), " +
         f"scans ${sq8B / 1e6}%.0f MB " +
@@ -801,18 +803,18 @@ object ScaleSmoke {
       // rung 2: BQ — 1-bit/dim sign words, integer Hamming first pass
       val bq = java.nio.file.Files.createTempDirectory("ladder-bq").toString
       t0 = System.nanoTime()
-      graft.ext.Similarity.buildBq(corpus, "vec_id", "embedding", bq, dim = dim)
+      Ann.build(corpus, "vec_id", "embedding", bq, Ann.BQ(dim), Ann.Flat())
       println(f"[ladder] bq build ${(System.nanoTime() - t0) / 1e9}%.1fs")
       var bqIds: Seq[Long] = Seq.empty
       val bqSec = timed {
-        bqIds = graft.ext.Similarity.bqHammingRerank(spark, bq, corpus, "vec_id",
+        bqIds = Ann.probe(spark, bq, Ann.Flat(corpus), "vec_id",
           "embedding", q, k = 10, rerank = 100)
           .select("vec_id").as[Long](spark.implicits.newLongEncoder).collect().toSeq
       }
       val bqB = dirBytes(s"$bq/words")
       val bqFirstSec = timed {
-        graft.ext.Similarity.bqCandidates(spark, bq, "vec_id", q, rerank = 100)
-          .collect()
+        Ann.candidates(spark.read.parquet(s"$bq/words"), Ann.read(spark, bq),
+          "vec_id", q, 100).collect()
       }
       println(f"[ladder] bq: ${bqSec}%.2fs (first pass ${bqFirstSec}%.2fs), " +
         f"scans ${bqB / 1e6}%.0f MB " +
@@ -822,7 +824,7 @@ object ScaleSmoke {
       // 1000 is tiny, below 64 sign bits' resolution); the rerank knob
       // is the recovery lever, at first-pass cost unchanged
       Seq(1000, 10000).foreach { r =>
-        val ids = graft.ext.Similarity.bqHammingRerank(spark, bq, corpus,
+        val ids = Ann.probe(spark, bq, Ann.Flat(corpus),
           "vec_id", "embedding", q, k = 10, rerank = r)
           .select("vec_id").as[Long](spark.implicits.newLongEncoder).collect().toSeq
         println(f"[ladder] bq rerank=$r: recall ${recall(ids)}%.3f")
@@ -845,13 +847,12 @@ object ScaleSmoke {
       }
       val ivf = java.nio.file.Files.createTempDirectory("ladder-ivfsq8").toString
       t0 = System.nanoTime()
-      graft.ext.Similarity.buildIvfSq8(corpus, "vec_id", "embedding", ivf,
-        k = 64, dim = dim)
+      Ann.build(corpus, "vec_id", "embedding", ivf, Ann.SQ8(dim), Ann.Ivf(k = 64))
       println(f"[ladder] ivf-sq8 build ${(System.nanoTime() - t0) / 1e9}%.1fs (64 cells)")
       var ivfIds: Seq[Long] = Seq.empty
       val ivfSec = timed {
-        ivfIds = graft.ext.Similarity.ivfSq8Probe(spark, ivf, "vec_id", "label",
-          "embedding", q, k = 10, nprobe = 4, rerank = 100)
+        ivfIds = Ann.probe(spark, ivf, Ann.Ivf(nprobe = 4), "vec_id",
+          "embedding", q, k = 10, rerank = 100)
           .select("vec_id").as[Long](spark.implicits.newLongEncoder).collect().toSeq
       }
       println(f"[ladder] ivf-sq8 nprobe=4/64: ${ivfSec}%.2fs " +

@@ -7,6 +7,7 @@ import java.util.concurrent.CompletionStage
 
 import org.apache.spark.sql.SparkSession
 
+import graft.ext.Ann
 import graft.serve.Metrics
 import graft.store.EventsTable
 import graft.tools.Service
@@ -397,43 +398,43 @@ object Soak {
             lastPosPath.set(p); refreshTicks.incrementAndGet(); p
           }),
           Service.IndexRefresh("soak-ivfpq", { s =>
-            val p = graft.ext.Similarity.ensureIncrementalIvfPq(
-              s, "soakivfpq", corpusDir, "vec_id", "embedding", soakCents, soakCbs)
+            val p = Ann.ensureIncremental(s, "soakivfpq", corpusDir, "vec_id",
+              "embedding", Ann.PqCodec(soakCbs), Ann.Ivf(centroids = soakCents))
             lastIvfPath.set(p); p
           }),
           Service.IndexRefresh("soak-sq8", { s =>
-            val p = graft.ext.Similarity.ensureIncrementalSq8(
-              s, "soaksq8", corpusDir, "vec_id", "embedding", soakSq8)
+            val p = Ann.ensureIncremental(s, "soaksq8", corpusDir, "vec_id",
+              "embedding", Ann.Sq8Codec(soakSq8), Ann.Flat())
             lastSq8Path.set(p); p
           }),
           Service.IndexRefresh("soak-bq", { s =>
-            val p = graft.ext.Similarity.ensureIncrementalBq(
-              s, "soakbq", corpusDir, "vec_id", "embedding", soakBqThr)
+            val p = Ann.ensureIncremental(s, "soakbq", corpusDir, "vec_id",
+              "embedding", Ann.BqCodec(soakBqThr), Ann.Flat())
             lastBqPath.set(p); p
           }),
           // round 16: the composed IVF-BQ family ages with the corpus
           // on the same ticker (frozen coarse quantizer + frozen
           // thresholds, like every other maintenance refresher)
           Service.IndexRefresh("soak-ivfbq", { s =>
-            val p = graft.ext.Similarity.ensureIncrementalIvfBq(
-              s, "soakivfbq", corpusDir, "vec_id", "embedding", soakCents, soakBqThr)
+            val p = Ann.ensureIncremental(s, "soakivfbq", corpusDir, "vec_id",
+              "embedding", Ann.BqCodec(soakBqThr), Ann.Ivf(centroids = soakCents))
             lastIvfBqPath.set(p); p
           }),
           // round 17: the OPQ family ages with the corpus on the same
           // ticker (frozen rotation + codebooks; appended parts encode
           // against them, like every other maintenance refresher)
           Service.IndexRefresh("soak-opq", { s =>
-            val p = graft.ext.Similarity.ensureIncrementalOpq(
-              s, "soakopq", corpusDir, "vec_id", "embedding", soakOpqRot, soakOpqCbs)
+            val p = Ann.ensureIncremental(s, "soakopq", corpusDir, "vec_id",
+              "embedding", Ann.PqCodec(soakOpqCbs, Some(soakOpqRot)), Ann.Flat())
             lastOpqPath.set(p); p
           }),
           // round 18: the composed IVF-OPQ family ages on the same
           // ticker (frozen rotation + rotated-space coarse quantizer +
           // rotated codebooks)
           Service.IndexRefresh("soak-ivfopq", { s =>
-            val p = graft.ext.Similarity.ensureIncrementalIvfOpq(
-              s, "soakivfopq", corpusDir, "vec_id", "embedding",
-              soakOpqRot, soakIvfOpqCents, soakOpqCbs)
+            val p = Ann.ensureIncremental(s, "soakivfopq", corpusDir, "vec_id",
+              "embedding", Ann.PqCodec(soakOpqCbs, Some(soakOpqRot)),
+              Ann.Ivf(centroids = soakIvfOpqCents))
             lastIvfOpqPath.set(p); p
           })),
         indexJanitor = true),
@@ -593,30 +594,28 @@ object Soak {
           // repro-scale pass, soak-scale miss); the exact rerank then
           // puts it at cos = 1.0 top-1 whenever it reaches the
           // candidate set
-          val ivfIds = graft.ext.Similarity.ivfPqProbe(spark, lastIvfPath.get(),
-            "vec_id", "label", "embedding", q,
-            k = 5, nprobe = 4, rerank = 2000)
+          val ivfIds = Ann.probe(spark, lastIvfPath.get(), Ann.Ivf(nprobe = 4),
+            "vec_id", "embedding", q, k = 5, rerank = 2000)
             .collect().map(_.getLong(0)).toSet
           // SQ8/BQ freshness: same marker, exact-rerank probes over the
           // refreshed code tables (the corpus read supplies the rerank
           // vectors; same generous rerank as the IVF probe)
           val corpusAll = spark.read.parquet(corpusDir)
             .select(col("vec_id"), col("embedding"))
-          val sq8Ids = graft.ext.Similarity.sq8AdcRerank(spark, lastSq8Path.get(),
-            corpusAll, "vec_id", "embedding", q, k = 5, rerank = 2000)
+          val sq8Ids = Ann.probe(spark, lastSq8Path.get(), Ann.Flat(corpusAll),
+            "vec_id", "embedding", q, k = 5, rerank = 2000)
             .collect().map(_.getLong(0)).toSet
-          val bqIds = graft.ext.Similarity.bqHammingRerank(spark, lastBqPath.get(),
-            corpusAll, "vec_id", "embedding", q, k = 5, rerank = 2000)
+          val bqIds = Ann.probe(spark, lastBqPath.get(), Ann.Flat(corpusAll),
+            "vec_id", "embedding", q, k = 5, rerank = 2000)
             .collect().map(_.getLong(0)).toSet
-          val ivfBqIds = graft.ext.Similarity.ivfBqProbe(spark, lastIvfBqPath.get(),
-            "vec_id", "label", "embedding", q, k = 5, nprobe = 4, rerank = 2000)
+          val ivfBqIds = Ann.probe(spark, lastIvfBqPath.get(), Ann.Ivf(nprobe = 4),
+            "vec_id", "embedding", q, k = 5, rerank = 2000)
             .collect().map(_.getLong(0)).toSet
-          val opqIds = graft.ext.Similarity.opqRerank(spark, lastOpqPath.get(),
-            corpusAll, "vec_id", "embedding", q, k = 5, rerank = 2000)
+          val opqIds = Ann.probe(spark, lastOpqPath.get(), Ann.Flat(corpusAll),
+            "vec_id", "embedding", q, k = 5, rerank = 2000)
             .collect().map(_.getLong(0)).toSet
-          val ivfOpqIds = graft.ext.Similarity.ivfOpqProbe(spark,
-            lastIvfOpqPath.get(), "vec_id", "label", "embedding", q,
-            k = 5, nprobe = 4, rerank = 2000)
+          val ivfOpqIds = Ann.probe(spark, lastIvfOpqPath.get(), Ann.Ivf(nprobe = 4),
+            "vec_id", "embedding", q, k = 5, rerank = 2000)
             .collect().map(_.getLong(0)).toSet
           if (posIds.contains(MarkerId) && ivfIds.contains(MarkerId) &&
               sq8Ids.contains(MarkerId) && bqIds.contains(MarkerId) &&

@@ -268,13 +268,13 @@ object ExtQueries {
   }
 
   /** E2 — product-quantization codes ([[Similarity.pqCodebooks]] +
-    * [[Similarity.pqEncode]]): 64-dim vectors → 4 subspace codewords
+    * [[Ann.PqCodec]]): 64-dim vectors → 4 subspace codewords
     * (16 each, quantized-L2 k-means) + the stored norm — the m-bytes-
     * per-vector representation behind billion-scale ANN (Jégou 2011).
     * Hash-gated end to end (learning included) via the same 1e-9
     * quantization as `kmeans_centroids`.
     */
-  /** The persisted PQ index for `dir`'s embeddings ([[Similarity.buildPq]]
+  /** The persisted PQ index for `dir`'s embeddings ([[Ann.build]]
     * behind [[IndexStore.ensure]] — round 14, VERDICT r13 #3 / ADVICE
     * r13 #1: codebooks AND codes now persist keyed by the corpus
     * fingerprint, replacing the per-JVM codebook memo that could serve
@@ -287,9 +287,8 @@ object ExtQueries {
     val kind = if (corpusOnly) "pq_noq" else "pq_all"
     IndexStore.ensure(kind, spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
       val emb = Tables.embeddings(spark, dir)
-      Similarity.buildPq(
-        if (corpusOnly) emb.filter(col("vec_id") =!= 0) else emb,
-        "vec_id", "embedding", tmp, dim = 64, m = 4, ksub = 16)
+      Ann.build(if (corpusOnly) emb.filter(col("vec_id") =!= 0) else emb,
+        "vec_id", "embedding", tmp, Ann.PQ(dim = 64, m = 4, ksub = 16), Ann.Flat())
     }
   }
 
@@ -302,20 +301,19 @@ object ExtQueries {
   private val lastOpqIndex = new java.util.concurrent.atomic.AtomicReference[String]
 
   /** E2 — OPQ: learned orthogonal rotation + PQ + exact rerank (Ge et
-    * al. CVPR 2013; [[Similarity.buildOpq]]/[[Similarity.opqRerank]]) —
+    * al. CVPR 2013; [[Ann.build]]/[[Ann.probe]]) —
     * the accuracy rung above plain PQ at the same bit budget.
     * Probe-only: the alternating rotation/codebook learn pays once per
     * corpus snapshot behind [[IndexStore.ensure]].
     */
   def opqTopk(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("opq", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildOpq(
-        Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
-        "vec_id", "embedding", tmp, dim = 64, m = 4, ksub = 16)
+      Ann.build(Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
+        "vec_id", "embedding", tmp, Ann.PQ(dim = 64, m = 4, ksub = 16, opqIters = 2),
+        Ann.Flat())
     }
     lastOpqIndex.set(idx)
-    Similarity.opqRerank(spark, idx,
-      Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
+    Ann.probe(spark, idx, Ann.Flat(Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0)),
       "vec_id", "embedding", queryVec(spark, dir))
   }
 
@@ -330,7 +328,7 @@ object ExtQueries {
       case Some(idx) =>
         val spark = SparkSession.active
         Similarity.opqOracleSql(
-          Similarity.readOpqRotation(spark, idx), dim = 64, m = 4, ksub = 16)
+          Ann.PqCodec.read(spark, idx).rotation.get, dim = 64, m = 4, ksub = 16)
       case None => "SELECT 1 AS x WHERE false"
     }
 
@@ -340,20 +338,20 @@ object ExtQueries {
   private val lastIvfOpqIndex = new java.util.concurrent.atomic.AtomicReference[String]
 
   /** E2 — composed IVF-OPQ (FAISS's "OPQ,IVF,PQ"; VERDICT r17 #6 —
-    * [[Similarity.buildIvfOpq]]/[[Similarity.ivfOpqProbe]]): the
+    * [[Ann.build]]/[[Ann.probe]]): the
     * learned rotation ahead of the coarse quantizer, cells and codes
     * both in rotated space, exact rerank over the cell-pruned
     * originals. Probe-only behind [[IndexStore.ensure]].
     */
   def ivfOpqTopk(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("ivfopq", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfOpq(
-        Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64, m = 4, ksub = 16)
+      Ann.build(Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
+        "vec_id", "embedding", tmp, Ann.PQ(dim = 64, m = 4, ksub = 16, opqIters = 2),
+        Ann.Ivf(k = 8))
     }
     lastIvfOpqIndex.set(idx)
-    Similarity.ivfOpqProbe(spark, idx, "vec_id", "label", "embedding",
-      queryVec(spark, dir), k = 10, nprobe = 2, rerank = 50)
+    Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      queryVec(spark, dir), k = 10, rerank = 50)
   }
 
   /** The `ivf_opq_topk` oracle, built at dump time from the persisted
@@ -364,7 +362,7 @@ object ExtQueries {
       case Some(idx) =>
         val spark = SparkSession.active
         Similarity.ivfOpqOracleSql(
-          Similarity.readOpqRotation(spark, idx),
+          Ann.PqCodec.read(spark, idx).rotation.get,
           dim = 64, m = 4, ksub = 16, k = 8)
       case None => "SELECT 1 AS x WHERE false"
     }
@@ -372,7 +370,7 @@ object ExtQueries {
   def pqCodes(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"${pqIndexFor(spark, dir, corpusOnly = false)}/codes")
 
-  /** E2 — PQ asymmetric-distance top-k ([[Similarity.pqAdcTopK]]): the
+  /** E2 — PQ asymmetric-distance top-k ([[Ann.candidates]]): the
     * query stays exact, every corpus vector is scored from m table
     * lookups over its PERSISTED codes — the scan never touches the
     * original vectors (probe-only since round 14; the learn+encode is
@@ -380,11 +378,11 @@ object ExtQueries {
     */
   def pqAdcTopk(spark: SparkSession, dir: String): DataFrame = {
     val idx = pqIndexFor(spark, dir, corpusOnly = true)
-    Similarity.pqAdcTopK(spark.read.parquet(s"$idx/codes"), "vec_id",
-      Similarity.readPqCodebooks(spark, idx), queryVec(spark, dir))
+    Ann.candidates(spark.read.parquet(s"$idx/codes"), Ann.PqCodec.read(spark, idx),
+      "vec_id", queryVec(spark, dir), 10)
   }
 
-  /** E2 — PQ candidates + exact re-rank ([[Similarity.pqAdcRerank]]):
+  /** E2 — PQ candidates + exact re-rank ([[Ann.probe]]):
     * the production PQ composition — ADC picks 50 candidate ids from
     * the persisted-code scan, exact cosine over those 50 originals
     * ranks the final 10. Raw ADC cannot rank within a tight
@@ -393,14 +391,12 @@ object ExtQueries {
     */
   def pqRerankTopk(spark: SparkSession, dir: String): DataFrame = {
     val idx = pqIndexFor(spark, dir, corpusOnly = true)
-    Similarity.pqAdcRerank(spark.read.parquet(s"$idx/codes"),
-      Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
-      "vec_id", "embedding", Similarity.readPqCodebooks(spark, idx),
-      queryVec(spark, dir))
+    Ann.probe(spark, idx, Ann.Flat(Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0)),
+      "vec_id", "embedding", queryVec(spark, dir))
   }
 
   /** E2 — SQ8 scalar-quantized ADC + exact re-rank
-    * ([[Similarity.buildSq8]]/[[Similarity.sq8AdcRerank]]): the
+    * ([[Ann.build]]/[[Ann.probe]]): the
     * 8-bit/dim rung of the compression ladder — per-dim affine codes
     * learned from one exact min/max pass (no iterative FP anywhere),
     * probe scans the 4×-smaller codes table, raw vectors consulted only
@@ -409,64 +405,58 @@ object ExtQueries {
     */
   def sq8Topk(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("sq8", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildSq8(
-        Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
-        "vec_id", "embedding", tmp, dim = 64)
+      Ann.build(Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
+        "vec_id", "embedding", tmp, Ann.SQ8(dim = 64), Ann.Flat())
     }
-    Similarity.sq8AdcRerank(spark, idx,
-      Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
+    Ann.probe(spark, idx, Ann.Flat(Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0)),
       "vec_id", "embedding", queryVec(spark, dir))
   }
 
   /** E2 — binary-quantization Hamming + exact re-rank
-    * ([[Similarity.buildBq]]/[[Similarity.bqHammingRerank]]): the
+    * ([[Ann.build]]/[[Ann.probe]]): the
     * 1-bit/dim rung — mean-centered sign bits packed 32/word, integer
     * popcount(xor) candidate scan (zero FP before the rerank join).
     * Probe-only behind [[IndexStore.ensure]].
     */
   def bqHammingTopk(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("bq1", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildBq(
-        Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
-        "vec_id", "embedding", tmp, dim = 64)
+      Ann.build(Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
+        "vec_id", "embedding", tmp, Ann.BQ(dim = 64), Ann.Flat())
     }
-    Similarity.bqHammingRerank(spark, idx,
-      Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
+    Ann.probe(spark, idx, Ann.Flat(Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0)),
       "vec_id", "embedding", queryVec(spark, dir))
   }
 
-  /** E2 — composed IVF-BQ ([[Similarity.buildIvfBq]] /
-    * [[Similarity.ivfBqProbe]], VERDICT r15 #3 — the billion-vector
+  /** E2 — composed IVF-BQ ([[Ann.build]] /
+    * [[Ann.probe]] — the billion-vector
     * first-pass shape): cell-pruned sign-bit words, integer-exact
     * Hamming over ≤ nprobe cells, exact rerank; hash-gated by the
     * k-means unroll × sign-bit CTE composition.
     */
   def ivfBqTopk(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("ivfbq", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfBq(
-        Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64)
+      Ann.build(Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
+        "vec_id", "embedding", tmp, Ann.BQ(dim = 64), Ann.Ivf(k = 8))
     }
-    Similarity.ivfBqProbe(spark, idx, "vec_id", "label", "embedding",
-      queryVec(spark, dir), k = 10, nprobe = 2, rerank = 50)
+    Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      queryVec(spark, dir), k = 10, rerank = 50)
   }
 
-  /** E2 — BATCH composed IVF-BQ ([[Similarity.ivfBqProbeBatch]]):
+  /** E2 — BATCH composed IVF-BQ ([[Ann.probeBatch]]):
     * per-query cell ranking + the words scan restricted to the batch's
     * probed-cell union + integer Hamming + exact rerank, one pass.
     */
   def ivfBqBatch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val idx = IndexStore.ensure("ivfbqb", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfBq(emb.filter(col("vec_id") >= 3).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64)
+      Ann.build(emb.filter(col("vec_id") >= 3).drop("label"),
+        "vec_id", "embedding", tmp, Ann.BQ(dim = 64), Ann.Ivf(k = 8))
     }
-    Similarity.ivfBqProbeBatch(spark, idx, "vec_id", "label", "embedding",
-      emb.filter(col("vec_id") < 3), "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50)
+    Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 10, rerank = 50)
   }
 
-  /** E2 — BATCH SQ8 ([[Similarity.sq8ProbeBatch]]): 3 queries ADC-score
+  /** E2 — BATCH SQ8 ([[Ann.probeBatch]]): 3 queries ADC-score
     * the codes table and exact-rerank in ONE distributed pass — the
     * flat-rung serving shape (VERDICT r15 #2: batch probes were
     * PQ-only). Corpus = vec_id ≥ 3, queries = vec_id < 3; every window
@@ -475,15 +465,15 @@ object ExtQueries {
   def sq8Batch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val idx = IndexStore.ensure("sq8b", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildSq8(emb.filter(col("vec_id") >= 3),
-        "vec_id", "embedding", tmp, dim = 64)
+      Ann.build(emb.filter(col("vec_id") >= 3),
+        "vec_id", "embedding", tmp, Ann.SQ8(dim = 64), Ann.Flat())
     }
-    Similarity.sq8ProbeBatch(spark, idx, emb.filter(col("vec_id") >= 3),
+    Ann.probeBatch(spark, idx, Ann.Flat(emb.filter(col("vec_id") >= 3)),
       "vec_id", "embedding", emb.filter(col("vec_id") < 3), "vec_id",
       "embedding", k = 10, rerank = 50)
   }
 
-  /** E2 — BATCH composed IVF-SQ8 ([[Similarity.ivfSq8ProbeBatch]]):
+  /** E2 — BATCH composed IVF-SQ8 ([[Ann.probeBatch]]):
     * per-query cell ranking + the codes scan restricted to the batch's
     * probed-cell union + exact rerank, all in one distributed pass;
     * hash-gated by the k-means × SQ8 per-qid composition.
@@ -491,15 +481,14 @@ object ExtQueries {
   def ivfSq8Batch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val idx = IndexStore.ensure("ivfsq8b", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfSq8(emb.filter(col("vec_id") >= 3).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64)
+      Ann.build(emb.filter(col("vec_id") >= 3).drop("label"),
+        "vec_id", "embedding", tmp, Ann.SQ8(dim = 64), Ann.Ivf(k = 8))
     }
-    Similarity.ivfSq8ProbeBatch(spark, idx, "vec_id", "label", "embedding",
-      emb.filter(col("vec_id") < 3), "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50)
+    Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 10, rerank = 50)
   }
 
-  /** E2 — BATCH BQ ([[Similarity.bqProbeBatch]]): queries binarize
+  /** E2 — BATCH BQ ([[Ann.probeBatch]]): queries binarize
     * in-plan against the frozen thresholds, every (query, words row)
     * pair scores integer-exact Hamming, per-qid rank + exact rerank —
     * one pass, zero FP before the rerank join.
@@ -507,10 +496,10 @@ object ExtQueries {
   def bqHammingBatch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val idx = IndexStore.ensure("bqb", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildBq(emb.filter(col("vec_id") >= 3),
-        "vec_id", "embedding", tmp, dim = 64)
+      Ann.build(emb.filter(col("vec_id") >= 3),
+        "vec_id", "embedding", tmp, Ann.BQ(dim = 64), Ann.Flat())
     }
-    Similarity.bqProbeBatch(spark, idx, emb.filter(col("vec_id") >= 3),
+    Ann.probeBatch(spark, idx, Ann.Flat(emb.filter(col("vec_id") >= 3)),
       "vec_id", "embedding", emb.filter(col("vec_id") < 3), "vec_id",
       "embedding", k = 10, rerank = 50)
   }
@@ -800,51 +789,51 @@ object ExtQueries {
     */
   private def ivfIndexFor(spark: SparkSession, dir: String): String =
     IndexStore.ensure("ivf_novec0", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvf(
-        Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
-        "vec_id", "label", "embedding", tmp)
+      Ann.build(Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0),
+        "vec_id", "embedding", tmp, Ann.Exact, Ann.Ivf())
     }
 
   /** E2 — IVF probe: best cell by centroid score, exact top-10 within
-    * it, served from the persisted index ([[Similarity.ivfProbe]]): the
+    * it, served from the persisted index ([[Ann.probe]]): the
     * cell ranking reads the K-row centroids table, the candidate scan
     * reads ONE pruned partition of the cell-partitioned vectors table —
     * the raw embeddings are never scanned (the coarse-quantizer ANN
     * scale path; a probe touches corpus/K rows).
     */
   def ivfProbe(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfProbe(spark, ivfIndexFor(spark, dir),
-      "vec_id", "label", "embedding", queryVec(spark, dir), k = 10)
+    Ann.probe(spark, ivfIndexFor(spark, dir), Ann.Ivf(nprobe = 1),
+      "vec_id", "embedding", queryVec(spark, dir), k = 10)
 
   /** E2 — IVF probe at nprobe=2: exact top-10 within the TWO best
-    * cells ([[Similarity.ivfProbe]]'s recall knob — more cells probed,
+    * cells ([[Ann.probe]]'s recall knob — more cells probed,
     * strictly better recall, still nprobe pruned partitions scanned).
     */
   def ivfProbe2(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfProbe(spark, ivfIndexFor(spark, dir),
-      "vec_id", "label", "embedding", queryVec(spark, dir), k = 10, nprobe = 2)
+    Ann.probe(spark, ivfIndexFor(spark, dir), Ann.Ivf(nprobe = 2),
+      "vec_id", "embedding", queryVec(spark, dir), k = 10)
 
   /** E2 — IVF probe with the DERIVED nprobe default
-    * ([[Similarity.ivfProbeAuto]]): the caller states a recall target
+    * ([[Ann.autoNprobe]]): the caller states a recall target
     * and the probe reads the cell count off the persisted index and
     * applies the curve-calibrated closed form `nprobeFor(K, target)`.
     * The oracle derives the same nprobe from K in SQL, so the formula
     * itself is under the hash gate.
     */
-  def ivfProbeAuto(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfProbeAuto(spark, ivfIndexFor(spark, dir),
-      "vec_id", "label", "embedding", queryVec(spark, dir), k = 10,
-      targetRecall = 0.9)
+  def ivfProbeAuto(spark: SparkSession, dir: String): DataFrame = {
+    val idx = ivfIndexFor(spark, dir)
+    Ann.probe(spark, idx, Ann.Ivf(nprobe = Ann.autoNprobe(spark, idx, targetRecall = 0.9)),
+      "vec_id", "embedding", queryVec(spark, dir), k = 10)
+  }
 
   /** The LEARNED-quantizer IVF index: no label column consumed — cells
-    * come from [[Similarity.buildIvfKmeans]] (deterministic spherical
+    * come from [[Ann.build]] (deterministic spherical
     * k-means, K ≈ √(n/8)). Built once per corpus snapshot.
     */
   private def ivfKmeansIndexFor(spark: SparkSession, dir: String): String =
     IndexStore.ensure("ivfkmeans", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
       val emb = Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label")
       val k = math.max(4, math.ceil(math.sqrt(emb.count().toDouble / 8)).toInt)
-      Similarity.buildIvfKmeans(emb, "vec_id", "embedding", tmp, k = k)
+      Ann.build(emb, "vec_id", "embedding", tmp, Ann.Exact, Ann.Ivf(k = k, coarseIters = 5))
     }
 
   /** E2 — IVF probe over the LEARNED coarse quantizer (the real-corpus
@@ -858,34 +847,32 @@ object ExtQueries {
     * hash-exact probe can still be a bad quantizer).
     */
   def ivfProbeKmeans(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfProbe(spark, ivfKmeansIndexFor(spark, dir),
-      "vec_id", "label", "embedding", queryVec(spark, dir), k = 10, nprobe = 2)
+    Ann.probe(spark, ivfKmeansIndexFor(spark, dir), Ann.Ivf(nprobe = 2),
+      "vec_id", "embedding", queryVec(spark, dir), k = 10)
 
-  /** The composed IVF-ADC index ([[Similarity.buildIvfPq]]): 8 learned
+  /** The composed IVF-ADC index ([[Ann.build]]): 8 learned
     * coarse cells × (4 × 16)-codeword PQ, built once per corpus
     * snapshot.
     */
-  /** E2 — COMPOSED IVF-SQ8 probe ([[Similarity.buildIvfSq8]] /
-    * [[Similarity.ivfSq8Probe]]): the FAISS "IVF,SQ8" pairing — coarse
+  /** E2 — COMPOSED IVF-SQ8 probe ([[Ann.build]] /
+    * [[Ann.probe]]): the FAISS "IVF,SQ8" pairing — coarse
     * cells × per-dim affine 8-bit codes, probe pruned to ≤ nprobe cells
     * on both the code scan and the rerank read. Probe-only behind
     * [[IndexStore.ensure]].
     */
   def ivfSq8Topk(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("ivfsq8", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfSq8(
-        Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64)
+      Ann.build(Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
+        "vec_id", "embedding", tmp, Ann.SQ8(dim = 64), Ann.Ivf(k = 8))
     }
-    Similarity.ivfSq8Probe(spark, idx, "vec_id", "label", "embedding",
-      queryVec(spark, dir), k = 10, nprobe = 2, rerank = 50)
+    Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      queryVec(spark, dir), k = 10, rerank = 50)
   }
 
   private def ivfPqIndexFor(spark: SparkSession, dir: String): String =
     IndexStore.ensure("ivfpq", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfPq(
-        Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64, m = 4, ksub = 16)
+      Ann.build(Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
+        "vec_id", "embedding", tmp, Ann.PQ(dim = 64, m = 4, ksub = 16), Ann.Ivf(k = 8))
     }
 
   /** E2 — the production billion-scale ANN probe (VERDICT r13 #1,
@@ -899,11 +886,10 @@ object ExtQueries {
     * floor at ≥ 0.9.
     */
   def ivfPqTopk(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfPqProbe(spark, ivfPqIndexFor(spark, dir),
-      "vec_id", "label", "embedding", queryVec(spark, dir),
-      k = 10, nprobe = 2, rerank = 50)
+    Ann.probe(spark, ivfPqIndexFor(spark, dir), Ann.Ivf(nprobe = 2),
+      "vec_id", "embedding", queryVec(spark, dir), k = 10, rerank = 50)
 
-  /** E2 — BATCH IVF-ADC ([[Similarity.ivfPqProbeBatch]]): 3 queries
+  /** E2 — BATCH IVF-ADC ([[Ann.probeBatch]]): 3 queries
     * rank cells, ADC-scan, and exact-rerank in ONE set of distributed
     * joins — the retrieval-pipeline serving shape (a driver loop of
     * single probes is N jobs; the batch is one). Corpus = vec_id ≥ 3,
@@ -914,15 +900,14 @@ object ExtQueries {
   def ivfPqBatch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val idx = IndexStore.ensure("ivfpqb", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfPq(emb.filter(col("vec_id") >= 3).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64, m = 4, ksub = 16)
+      Ann.build(emb.filter(col("vec_id") >= 3).drop("label"),
+        "vec_id", "embedding", tmp, Ann.PQ(dim = 64, m = 4, ksub = 16), Ann.Ivf(k = 8))
     }
-    Similarity.ivfPqProbeBatch(spark, idx, "vec_id", "label", "embedding",
-      emb.filter(col("vec_id") < 3), "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50)
+    Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 10, rerank = 50)
   }
 
-  /** E2 — RESIDUAL IVF-ADC ([[Similarity.buildIvfPqResidual]], the
+  /** E2 — RESIDUAL IVF-ADC ([[Ann.build]], the
     * classic Jégou 2011 IVFADC): PQ codes quantize v − c(v), probes add
     * the cell's q·c back — within-cell resolution the raw-code form
     * lacks at the same bit budget. Same pruned probe shape as
@@ -930,18 +915,18 @@ object ExtQueries {
     */
   def ivfPqResidual(spark: SparkSession, dir: String): DataFrame = {
     val idx = IndexStore.ensure("ivfpqres", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfPqResidual(
-        Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64, m = 4, ksub = 16)
+      Ann.build(Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0).drop("label"),
+        "vec_id", "embedding", tmp, Ann.PQ(dim = 64, m = 4, ksub = 16, residual = true),
+        Ann.Ivf(k = 8))
     }
-    Similarity.ivfPqResidualProbe(spark, idx, "vec_id", "label", "embedding",
-      queryVec(spark, dir), k = 10, nprobe = 2, rerank = 50)
+    Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      queryVec(spark, dir), k = 10, rerank = 50)
   }
 
   /** E2 — RESIDUAL × BATCH (VERDICT r14 #4, the production pair:
     * residual accuracy at the same bit budget × one-distributed-pass
-    * serving): [[Similarity.ivfPqProbeBatch]] auto-detects the
-    * [[Similarity.buildIvfPqResidual]] layout and joins the broadcast
+    * serving): [[Ann.probeBatch]] auto-detects the
+    * [[Ann.build]] layout and joins the broadcast
     * K-row quantizer for the per-(query, cell) q·c terms — the batch
     * twin of the single probe's literal CASE. Corpus = vec_id ≥ 3,
     * queries = vec_id < 3, windows all qid-partitioned; hash-gated by
@@ -950,12 +935,12 @@ object ExtQueries {
   def ivfPqResidualBatch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val idx = IndexStore.ensure("ivfpqresb", spark, Seq(s"$dir/embeddings.parquet")) { tmp =>
-      Similarity.buildIvfPqResidual(emb.filter(col("vec_id") >= 3).drop("label"),
-        "vec_id", "embedding", tmp, k = 8, dim = 64, m = 4, ksub = 16)
+      Ann.build(emb.filter(col("vec_id") >= 3).drop("label"),
+        "vec_id", "embedding", tmp, Ann.PQ(dim = 64, m = 4, ksub = 16, residual = true),
+        Ann.Ivf(k = 8))
     }
-    Similarity.ivfPqProbeBatch(spark, idx, "vec_id", "label", "embedding",
-      emb.filter(col("vec_id") < 3), "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50)
+    Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 10, rerank = 50)
   }
 
   /** Multimodal — fixed 64-char payload chunking with per-chunk digest

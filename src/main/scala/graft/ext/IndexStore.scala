@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Build-once / probe-many lifecycle for the persisted retrieval and
-  * ANN index tables ([[Similarity.buildIvf]], [[Retrieval.buildTextIndex]]).
+  * ANN index tables ([[Ann.build]], [[Retrieval.buildTextIndex]]).
   *
   * The reference's core storage posture is "pay the layout cost at
   * write time, serve cheap reads forever" — its LSM key

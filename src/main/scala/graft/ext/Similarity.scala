@@ -329,7 +329,7 @@ object Similarity {
   }
 
   /** Deterministic spherical k-means — the LEARNED coarse quantizer for
-    * [[buildIvfKmeans]] when the corpus carries no precomputed cell
+    * [[Ann.build]] when the corpus carries no precomputed cell
     * assignment. Init is a hash-ordered sample (md5 over the id:
     * seedless, engine-reproducible, independent of data order); each
     * iteration is ONE corpus pass (the codegen'd [[assignCell]]
@@ -576,176 +576,6 @@ object Similarity {
     }
   }
 
-  /** PQ encode: per vector, the m codeword indices (argmin-L2 per
-    * subspace) plus its exact norm (‖v‖, 1e-9-rounded) — the stored
-    * scalar that lets ADC approximate COSINE, not just inner product.
-    * One codegen'd projection: m × ksub literal distance expressions,
-    * no shuffle, no join — at 100 TB this is the map-only pass that
-    * shrinks a 256 B vector to m bytes + 8.
-    */
-  def pqEncode(df: DataFrame, idCol: String, vecCol: String,
-      codebooks: Seq[Seq[Seq[Double]]], keep: Seq[String] = Nil): DataFrame =
-    pqEncodeOf(df, idCol, toDoubleArr(col(vecCol)), toDoubleArr(col(vecCol)),
-      codebooks, keep)
-
-  /** [[pqEncode]] with the CODE source decoupled from the NORM source:
-    * residual encoding quantizes v − c(v) (`codeVec`) while the stored
-    * scalar stays ‖v‖ of the ORIGINAL vector (`normVec`) — the cosine
-    * denominator is the real vector's norm regardless of what the
-    * codes approximate.
-    */
-  def pqEncodeOf(df: DataFrame, idCol: String, codeVec: Column,
-      normVec: Column, codebooks: Seq[Seq[Seq[Double]]],
-      keep: Seq[String] = Nil): DataFrame = {
-    val sub = codebooks.head.head.size
-    val codeCols = codebooks.zipWithIndex.map { case (cb, s) =>
-      assignCellL2(slice(codeVec, lit(s * sub + 1), lit(sub)), cb)
-        .cast("long").as(s"code_$s")
-    }
-    df.select(
-      (col(idCol) +: codeCols) ++
-        (pround(sqrt(dot(normVec, normVec)), 9).as("vnorm") +:
-          keep.map(col)): _*)
-  }
-
-  /** ADC (asymmetric distance computation) top-k over PQ codes:
-    * the query stays EXACT, each corpus vector is its reconstruction —
-    * approx_dot(q, v) = Σₘ dot(q_m, codebook_m[code_m]), turned into an
-    * approximate cosine by the stored ‖v‖. The per-(subspace, codeword)
-    * dot table folds to m × ksub literals driver-side, so scoring a
-    * vector is m array lookups + a divide — the scan never touches the
-    * original vectors. Scores round at 1e-6 like every probe; ties
-    * break on the id.
-    */
-  def pqAdcTopK(codes: DataFrame, idCol: String,
-      codebooks: Seq[Seq[Seq[Double]]], query: Seq[Double],
-      k: Int = 10, digits: Int = 6, dotBase: Column = lit(0.0)): DataFrame = {
-    val sub = codebooks.head.head.size
-    val qNorm = math.sqrt(query.map(x => x * x).sum)
-    val safeQ = if (qNorm > 0) qNorm else 1.0
-    val tables = codebooks.zipWithIndex.map { case (cb, s) =>
-      val qSub = query.slice(s * sub, (s + 1) * sub)
-      cb.map(cw => cw.zip(qSub).foldLeft(0.0) { case (a, (c, q)) => a + c * q })
-    }
-    // dotBase: an additive per-row base for the approximate dot —
-    // lit(0.0) for plain PQ (codes approximate v itself); the residual
-    // form passes q·c(v) of the row's coarse cell, since there
-    // v ≈ c(v) + reconstruction and q·v ≈ q·c + Σ lookups
-    val approxDot = tables.zipWithIndex.map { case (t, s) =>
-      element_at(array(t.map(lit): _*), (col(s"code_$s") + 1).cast("int"))
-    }.foldLeft(dotBase)(_ + _)
-    codes.select(col(idCol),
-      pround(approxDot / (col("vnorm") * lit(safeQ)), digits).as("adc_cos"))
-      .orderBy(col("adc_cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** ADC candidates + EXACT re-rank — the standard PQ serving
-    * composition (Jégou 2011 §V): codes are too coarse to rank WITHIN
-    * a tight neighborhood (cluster members collapse to near-identical
-    * codes — measured 0.16 raw-ADC recall@10 on the planted fixture,
-    * where the true top-10 live inside an 80-member cluster), so ADC
-    * selects `rerank` candidates from the code scan and the original
-    * vectors are consulted ONLY for those — an id-equi-join against
-    * `rerank` ids, never a corpus scan. `rerank` should exceed the
-    * expected neighborhood size (RecallSpec pins ≥0.9 recall@10 at
-    * rerank=100 over 80-member clusters).
-    */
-  def pqAdcRerank(codes: DataFrame, vectors: DataFrame, idCol: String,
-      vecCol: String, codebooks: Seq[Seq[Seq[Double]]], query: Seq[Double],
-      k: Int = 10, rerank: Int = 50, digits: Int = 6): DataFrame = {
-    val cand = pqAdcTopK(codes, idCol, codebooks, query, rerank, digits)
-      .select(col(idCol))
-    vectors.join(broadcast(cand), idCol)
-      .select(col(idCol), cosineTo(query, vecCol).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Persist the PQ index family (VERDICT r13 #3): `$path/codebooks`
-    * holds the m × ksub learned codewords as (s, j, c) rows,
-    * `$path/codes` the corpus encoded — (id, code_0..code_{m-1},
-    * vnorm). Learning pays its m × iters corpus passes ONCE per corpus
-    * snapshot (wrap in [[IndexStore.ensure]]); every probe after reads
-    * the ~20×-smaller codes table plus the m·ksub-row codebooks and
-    * never touches the raw vectors. Replaces the per-JVM codebook memo
-    * (ADVICE r13 #1: a memo keyed only by path served stale codebooks
-    * to a regenerated corpus; the index store's source fingerprint
-    * cannot).
-    */
-  def buildPq(df: DataFrame, idCol: String, vecCol: String, path: String,
-      dim: Int, m: Int, ksub: Int, iters: Int = 3): Unit = {
-    val cbs = pqCodebooks(df, idCol, vecCol, dim, m, ksub, iters)
-    writePqCodebooks(df.sparkSession, cbs, path)
-    pqEncode(df, idCol, vecCol, cbs)
-      .write.mode("overwrite").parquet(s"$path/codes")
-  }
-
-  private def writePqCodebooks(spark: org.apache.spark.sql.SparkSession,
-      cbs: Seq[Seq[Seq[Double]]], path: String): Unit = {
-    import spark.implicits._
-    cbs.zipWithIndex.flatMap { case (cb, s) =>
-      cb.zipWithIndex.map { case (c, j) => (s, j, c) }
-    }.toDF("s", "j", "c")
-      .coalesce(1) // m × ksub rows — one footer per probe
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-  }
-
-  /** The learned codebooks back off a [[buildPq]] index — an m·ksub-row
-    * driver read (an index lookup, not a data collect); parquet doubles
-    * roundtrip exactly, so the values are bit-identical to the learn.
-    */
-  def readPqCodebooks(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Seq[Seq[Double]]] = {
-    import graft.util.SmallParquet
-    SmallParquet.rows(spark, s"$path/codebooks", Seq("s", "j", "c"))
-      .map(r => (SmallParquet.int(r(0)), SmallParquet.int(r(1)),
-        SmallParquet.darr(r(2))))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3).toSeq)
-  }
-
-  /** Per-partition PQ encode against FROZEN codebooks — the incremental
-    * refresh unit: appending an hour encodes ONLY that hour (one
-    * map-only projection over the new rows); the quantizer moves only
-    * on a periodic full rebuild, same policy as [[buildIvfPart]].
-    */
-  def buildPqPart(df: DataFrame, idCol: String, vecCol: String,
-      cbs: Seq[Seq[Seq[Double]]], path: String): Unit =
-    pqEncode(df, idCol, vecCol, cbs)
-      .write.mode("overwrite").parquet(s"$path/codes")
-
-  /** Merge committed per-partition PQ indexes into a probe-ready
-    * [[buildPq]]-layout index: codes — the corpus-proportional table —
-    * merge by FILE COPY into `codes/part=N` (zero reads, zero
-    * shuffles; the extra `part` partition column rides along
-    * harmlessly), and the frozen codebooks are written once.
-    */
-  def mergePq(spark: org.apache.spark.sql.SparkSession,
-      cbs: Seq[Seq[Seq[Double]]], partPaths: Seq[String], path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    partPaths.zipWithIndex.foreach { case (pp, i) =>
-      val src = new org.apache.hadoop.fs.Path(s"$pp/codes")
-      val dst = new org.apache.hadoop.fs.Path(s"$path/codes/part=$i")
-      val fs = src.getFileSystem(conf)
-      fs.mkdirs(dst.getParent)
-      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
-    }
-    writePqCodebooks(spark, cbs, path)
-  }
-
-  /** Incremental PQ index for an append-only partitioned corpus
-    * (frozen-codebook per-partition encodes + file-copy merge via
-    * [[IndexStore.ensureIncremental]]) — the lifecycle twin of
-    * [[ensureIncrementalIvf]].
-    */
-  def ensureIncrementalPq(spark: org.apache.spark.sql.SparkSession, kind: String,
-      sourceDir: String, idCol: String, vecCol: String,
-      cbs: Seq[Seq[Seq[Double]]]): String =
-    IndexStore.ensureIncremental(kind, spark, sourceDir) { (part, tmp) =>
-      buildPqPart(spark.read.parquet(part), idCol, vecCol, cbs, tmp)
-    } { (parts, tmp) => mergePq(spark, cbs, parts, tmp) }
-
   // ----------------------------------------------------------------
   // OPQ — Optimized Product Quantization (Ge et al., CVPR 2013,
   // "Optimized Product Quantization for Approximate Nearest Neighbor
@@ -773,7 +603,7 @@ object Similarity {
 
   /** The rotation as a row expression: rotatedᵢ = pround(Σⱼ Rᵢⱼ vⱼ, 9)
     * — a map-only codegen projection, the same shape at 100 TB as
-    * [[pqEncode]] (the rotate rides into the encode pass; the rotated
+    * the PQ encode (the rotate rides into the encode pass; the rotated
     * corpus is never materialized). Since round 18 this is ONE native
     * expression carrying the matrix as a reference object
     * ([[graft.functions.RotateVec]]): the previous literal form —
@@ -803,7 +633,7 @@ object Similarity {
     * optimization over a deterministic hash-sample of ≤ `sampleCap`
     * vectors (rotation learning is statistics estimation — faiss
     * trains OPQ on a sample too; the FINAL codebooks and every code
-    * are learned/encoded over the FULL corpus by [[buildOpq]], and
+    * are learned/encoded over the FULL corpus by [[Ann.build]], and
     * those are what the oracle re-derives). Returns the d×d rotation,
     * every entry 1e-9-quantized.
     */
@@ -981,463 +811,6 @@ object Similarity {
     }
   }
 
-  /** Persist the OPQ index family: `$path/rotation` — the d×d learned
-    * rotation as (i, r) rows; `$path/codebooks` / `$path/codes` — the
-    * [[buildPq]] layout, codebooks learned on and codes encoding the
-    * ROTATED corpus, each row's stored norm still ‖v‖ of the ORIGINAL
-    * vector (the cosine denominator; rotation preserves it up to the
-    * 1e-9 quantization, and using the original keeps the exact-rerank
-    * contract identical to every other rung).
-    */
-  def buildOpq(df: DataFrame, idCol: String, vecCol: String, path: String,
-      dim: Int, m: Int, ksub: Int, pqIters: Int = 3, opqIters: Int = 2): Unit = {
-    val r = learnOpqRotation(df, idCol, vecCol, dim, m, ksub, pqIters, opqIters)
-    writeOpqRotation(df.sparkSession, r, path)
-    val rot = rotateExpr(col(vecCol), r)
-    val cbs = pqCodebooksOf(df, idCol, rot, dim, m, ksub, pqIters)
-    writePqCodebooks(df.sparkSession, cbs, path)
-    pqEncodeOf(df, idCol, rot, toDoubleArr(col(vecCol)), cbs)
-      .write.mode("overwrite").parquet(s"$path/codes")
-  }
-
-  private[ext] def writeOpqRotation(spark: org.apache.spark.sql.SparkSession,
-      r: Seq[Seq[Double]], path: String): Unit = {
-    import spark.implicits._
-    r.zipWithIndex.map { case (row, i) => (i, row) }.toDF("i", "r")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/rotation")
-  }
-
-  /** The learned rotation back off a [[buildOpq]] index — a d-row
-    * driver read; parquet doubles roundtrip exactly.
-    */
-  def readOpqRotation(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Seq[Double]] = {
-    import graft.util.SmallParquet
-    SmallParquet.rows(spark, s"$path/rotation", Seq("i", "r"))
-      .map(row => SmallParquet.int(row(0)) -> SmallParquet.darr(row(1)))
-      .sortBy(_._1).map(_._2).toSeq
-  }
-
-  /** OPQ probe: rotate the query (driver-side d² fold), ADC over the
-    * rotated-space codes picks `rerank` candidates, exact cosine over
-    * the ORIGINAL vectors and ORIGINAL query ranks the final k — the
-    * [[pqAdcRerank]] composition with the rotation folded in. The code
-    * scan never touches raw vectors; the rerank is an id-equi-join.
-    */
-  def opqRerank(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      vectors: DataFrame, idCol: String, vecCol: String, query: Seq[Double],
-      k: Int = 10, rerank: Int = 50, digits: Int = 6): DataFrame = {
-    val r = readOpqRotation(spark, indexPath)
-    val cbs = readPqCodebooks(spark, indexPath)
-    val qRot = rotateQuery(query, r)
-    val cand = pqAdcTopK(readIdx(spark, s"$indexPath/codes"), idCol,
-      cbs, qRot, rerank, digits).select(col(idCol))
-    vectors.join(broadcast(cand), idCol)
-      .select(col(idCol), cosineTo(query, vecCol, digits).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Per-partition OPQ encode against a FROZEN rotation + codebooks —
-    * the incremental refresh unit ([[buildPqPart]] with the rotate
-    * folded into the encode pass).
-    */
-  def buildOpqPart(df: DataFrame, idCol: String, vecCol: String,
-      r: Seq[Seq[Double]], cbs: Seq[Seq[Seq[Double]]], path: String): Unit =
-    pqEncodeOf(df, idCol, rotateExpr(col(vecCol), r),
-      toDoubleArr(col(vecCol)), cbs)
-      .write.mode("overwrite").parquet(s"$path/codes")
-
-  /** Incremental OPQ index for an append-only partitioned corpus:
-    * frozen-rotation + frozen-codebook per-partition encodes, file-copy
-    * merge — the lifecycle twin of [[ensureIncrementalPq]], with the
-    * rotation persisted alongside the codebooks at merge time.
-    */
-  def ensureIncrementalOpq(spark: org.apache.spark.sql.SparkSession, kind: String,
-      sourceDir: String, idCol: String, vecCol: String,
-      r: Seq[Seq[Double]], cbs: Seq[Seq[Seq[Double]]]): String =
-    IndexStore.ensureIncremental(kind, spark, sourceDir) { (part, tmp) =>
-      buildOpqPart(spark.read.parquet(part), idCol, vecCol, r, cbs, tmp)
-    } { (parts, tmp) =>
-      mergePq(spark, cbs, parts, tmp)
-      writeOpqRotation(spark, r, tmp)
-    }
-
-  /** COMPOSED IVF-OPQ index — FAISS's standard "OPQ,IVF,PQ" pairing
-    * (VERDICT r17 #6): the learned orthogonal rotation sits AHEAD of
-    * the coarse quantizer, so BOTH the cell structure and the PQ
-    * codebooks live in rotated space — the rotation decorrelates and
-    * balances subspace variance for the PQ (Ge et al. CVPR 2013) while
-    * the coarse k-means sees the same geometry the codes quantize
-    * (rotation is orthogonal, so cosine cell structure is preserved up
-    * to the 1e-9 quantization). Layout = [[buildIvfPq]] plus
-    * `$path/rotation`:
-    *   - `$path/rotation` — the d×d learned rotation ([[buildOpq]])
-    *   - `$path/centroids` — per-cell means of the ROTATED vectors
-    *     (cell ranking happens in rotated space, against the rotated
-    *     query)
-    *   - `$path/vectors` — the ORIGINAL vectors, cell-partitioned (the
-    *     exact rerank scores the original query against originals —
-    *     the same contract as every other rung)
-    *   - `$path/codebooks` / `$path/codes` — PQ learned on and
-    *     encoding the rotated corpus; `vnorm` stays ‖v‖ of the
-    *     ORIGINAL vector (the cosine denominator)
-    */
-  def buildIvfOpq(df: DataFrame, idCol: String, vecCol: String, path: String,
-      k: Int, dim: Int, m: Int, ksub: Int, coarseIters: Int = 3,
-      pqIters: Int = 3, opqIters: Int = 2): Unit = {
-    val r = learnOpqRotation(df, idCol, vecCol, dim, m, ksub, pqIters, opqIters)
-    writeOpqRotation(df.sparkSession, r, path)
-    val rotated = df.withColumn("__rv", rotateExpr(col(vecCol), r))
-    val cents = kmeansCentroids(rotated, idCol, "__rv", k, coarseIters)
-    val labeled = withCellLabels(rotated, idCol, "__rv", cents)
-    // served centroids = per-cell means of the ROTATED vectors (the
-    // [[buildIvf]] derivation, in rotated space)
-    centroidComponents(labeled, "label", "__rv")
-      .groupBy(col("label"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
-        s => s.getField("c")).as("centroid"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    labeled.select(col(idCol), col(vecCol), col("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$path/vectors")
-    val cbs = pqCodebooksOf(df, idCol, rotateExpr(col(vecCol), r),
-      dim, m, ksub, pqIters)
-    writePqCodebooks(df.sparkSession, cbs, path)
-    pqEncodeOf(labeled, idCol, col("__rv"), toDoubleArr(col(vecCol)), cbs,
-      keep = Seq("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$path/codes")
-  }
-
-  /** ANN probe over a [[buildIvfOpq]] index — the [[ivfPqProbe]] shape
-    * with the query rotated once driver-side ([[rotateQuery]], the d²
-    * fold bit-identical to the oracle's CTE): cell ranking AND ADC run
-    * against the rotated query over rotated-space centroids/codes, the
-    * exact rerank scores the ORIGINAL query over the cell-pruned
-    * ORIGINAL vectors. Both data reads partition-pruned to ≤ nprobe
-    * cells (IndexSpec-pinned like the other composed rungs).
-    */
-  def ivfOpqProbe(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      idCol: String, labelCol: String, vecCol: String, query: Seq[Double],
-      k: Int = 10, nprobe: Int = 2, rerank: Int = 50, digits: Int = 6): DataFrame = {
-    require(nprobe >= 1 && rerank >= k)
-    val r = readOpqRotation(spark, indexPath)
-    require(r.size == query.size, s"dim ${r.size} != query ${query.size}")
-    val qRot = rotateQuery(query, r)
-    val cells = rankIndexCells(spark, indexPath, qRot, digits).take(nprobe)
-    def pruned(table: String): DataFrame = {
-      val df = readIdx(spark, s"$indexPath/$table")
-      val t = df.schema(df.schema.fieldIndex(labelCol)).dataType
-      df.filter(col(labelCol).isin(cells.map(c => lit(c).cast(t)): _*))
-    }
-    val cand = pqAdcTopK(pruned("codes"), idCol,
-      readPqCodebooks(spark, indexPath), qRot, rerank, digits)
-      .select(col(idCol))
-    pruned("vectors")
-      .join(broadcast(cand), idCol)
-      .select(col(idCol), cosineTo(query, vecCol, digits).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Per-partition IVF-OPQ build against a FROZEN rotation, FROZEN
-    * coarse quantizer and FROZEN codebooks — the incremental-refresh
-    * unit of [[buildIvfOpq]]: one rotate+assign pass feeding the
-    * original-vector write, the mergeable rotated-space centroid
-    * partials ([[buildIvfPart]]'s exact summable form), and the
-    * rotated-code encode.
-    */
-  def buildIvfOpqPart(df: DataFrame, idCol: String, vecCol: String,
-      r: Seq[Seq[Double]], centroids: Seq[Seq[Double]],
-      cbs: Seq[Seq[Seq[Double]]], path: String): Unit = {
-    val labeled = withCellLabels(
-      df.withColumn("__rv", rotateExpr(col(vecCol), r)), idCol, "__rv", centroids)
-    labeled.select(col(idCol), col(vecCol), col("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$path/vectors")
-    labeled
-      .select(col("label"), posexplode(toDoubleArr(col("__rv"))).as(Seq("i", "v")))
-      .groupBy(col("label"), col("i"))
-      .agg(graft.util.Portable.dsum(col("v")).as("s"), count(lit(1)).as("n"))
-      .groupBy(col("label"))
-      .agg(
-        max(col("n")).as("n"),
-        transform(array_sort(collect_list(struct(col("i"), col("s")))),
-          x => x.getField("s")).as("sums"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroid_partial")
-    pqEncodeOf(labeled, idCol, col("__rv"), toDoubleArr(col(vecCol)), cbs,
-      keep = Seq("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$path/codes")
-  }
-
-  /** Incremental IVF-OPQ for an append-only partitioned corpus —
-    * frozen-rotation [[buildIvfOpqPart]] appends + the [[mergeIvfPq]]
-    * file-copy merge, with the rotation persisted at merge time
-    * ([[ensureIncrementalOpq]]'s lifecycle composed with
-    * [[ensureIncrementalIvfPq]]'s).
-    */
-  def ensureIncrementalIvfOpq(spark: org.apache.spark.sql.SparkSession,
-      kind: String, sourceDir: String, idCol: String, vecCol: String,
-      r: Seq[Seq[Double]], centroids: Seq[Seq[Double]],
-      cbs: Seq[Seq[Seq[Double]]]): String =
-    IndexStore.ensureIncremental(kind, spark, sourceDir) { (part, tmp) =>
-      buildIvfOpqPart(spark.read.parquet(part), idCol, vecCol, r, centroids,
-        cbs, tmp)
-    } { (parts, tmp) =>
-      mergeIvfPq(spark, cbs, parts, tmp)
-      writeOpqRotation(spark, r, tmp)
-    }
-
-  /** IVF-ADC composed index (Jégou et al. 2011 §V's IVFADC shape,
-    * non-residual form — VERDICT r13 #1): ONE learned coarse quantizer
-    * ([[kmeansCentroids]], quantized spherical k-means) splits the
-    * corpus into K cells, and every vector's PQ codes are stored
-    * PARTITIONED BY its cell — so a probe touches nprobe cells' CODES
-    * (m bytes + a norm per vector), never the corpus and never even
-    * the full code table. This composes the two existing halves:
-    * cell ranking/pruning from [[buildIvf]]/[[ivfProbe]] and ADC +
-    * exact rerank from [[pqAdcTopK]]/[[pqAdcRerank]].
-    *
-    * Layout on top of [[buildIvf]] (centroids for ranking + cell-
-    * partitioned vectors for the exact rerank):
-    *   - `$path/centroids`, `$path/vectors` — exactly [[buildIvf]]
-    *   - `$path/codebooks` — the m × ksub learned PQ codewords
-    *   - `$path/codes` — (id, code_0.., vnorm) partitioned by cell
-    *
-    * At 100 TB the probe cost is corpus/K × nprobe CODE rows scanned
-    * (~12 B each at m=4) + rerank exact distances — the standard
-    * billion-scale serving shape.
-    *
-    * Design choice: codes encode the RAW vectors, not per-cell
-    * residuals (classic IVFADC encodes v − c(v) for tighter
-    * quantization at the same bit budget). Residual encoding is a
-    * drop-in — subtract the assigned centroid before [[pqEncode]] and
-    * build the ADC lookup table per probed cell — but it multiplies
-    * the oracle unroll for a fixture whose recall the rerank stage
-    * already saturates (RecallSpec ≥ 0.9); the non-residual form
-    * keeps the whole learn→encode→probe chain hash-gated end to end.
-    */
-  def buildIvfPq(df: DataFrame, idCol: String, vecCol: String, path: String,
-      k: Int, dim: Int, m: Int, ksub: Int,
-      coarseIters: Int = 3, pqIters: Int = 3): Unit = {
-    val cents = kmeansCentroids(df, idCol, vecCol, k, coarseIters)
-    val labeled = withCellLabels(df, idCol, vecCol, cents)
-    buildIvf(labeled, idCol, "label", vecCol, path)
-    val cbs = pqCodebooks(df, idCol, vecCol, dim, m, ksub, pqIters)
-    writePqCodebooks(df.sparkSession, cbs, path)
-    pqEncode(labeled, idCol, vecCol, cbs, keep = Seq("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$path/codes")
-  }
-
-  /** ANN probe over a [[buildIvfPq]] index: rank cells against the
-    * K-row centroids table (driver-side index lookup), ADC-score ONLY
-    * the nprobe best cells' codes (partition-pruned read; m array
-    * lookups + a divide per code row), take `rerank` candidates, then
-    * exact-rerank those against the cell-partitioned original vectors
-    * (a second pruned read + a broadcast id-join — never a corpus
-    * scan). IndexSpec pins both reads pruned; RecallSpec pins the
-    * composed recall floor.
-    */
-  def ivfPqProbe(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      idCol: String, labelCol: String, vecCol: String, query: Seq[Double],
-      k: Int = 10, nprobe: Int = 2, rerank: Int = 50, digits: Int = 6): DataFrame = {
-    require(nprobe >= 1 && rerank >= k)
-    val cells = rankIndexCells(spark, indexPath, query, digits).take(nprobe)
-    def pruned(table: String): DataFrame = {
-      val df = readIdx(spark, s"$indexPath/$table")
-      val t = df.schema(df.schema.fieldIndex(labelCol)).dataType
-      df.filter(col(labelCol).isin(cells.map(c => lit(c).cast(t)): _*))
-    }
-    val cand = pqAdcTopK(pruned("codes"), idCol,
-      readPqCodebooks(spark, indexPath), query, rerank, digits)
-      .select(col(idCol))
-    pruned("vectors")
-      .join(broadcast(cand), idCol)
-      .select(col(idCol), cosineTo(query, vecCol, digits).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** COMPOSED IVF-SQ8 index (the FAISS "IVF,SQ8" shape — the other
-    * standard quantization×partitioning pairing next to IVF-PQ): a
-    * learned coarse quantizer partitions per-dim affine 8-bit codes BY
-    * CELL. Same layout contract as [[buildIvfPq]] (`centroids` +
-    * cell-partitioned `vectors` via [[buildIvf]]) with SQ8 `params` +
-    * cell-partitioned `codes`; probes prune both data reads to ≤ nprobe
-    * cells. vs IVF-PQ: ~dim bytes/vector instead of m, but near-lossless
-    * ADC (8-bit affine) — the rung for corpora where PQ's rerank budget
-    * is the bottleneck rather than memory.
-    */
-  def buildIvfSq8(df: DataFrame, idCol: String, vecCol: String, path: String,
-      k: Int, dim: Int, coarseIters: Int = 3): Unit = {
-    val cents = kmeansCentroids(df, idCol, vecCol, k, coarseIters)
-    val labeled = withCellLabels(df, idCol, vecCol, cents)
-    buildIvf(labeled, idCol, "label", vecCol, path)
-    val prm = sq8Params(df, idCol, vecCol, dim)
-    writeSq8Params(df.sparkSession, prm, path)
-    sq8EncodeTo(labeled, idCol, vecCol, prm, s"$path/codes", keep = Seq("label"))
-  }
-
-  /** ANN probe over a [[buildIvfSq8]] index — the [[ivfPqProbe]] shape
-    * with the SQ8 reconstruction dot ([[graft.functions.Sq8Adc]], the
-    * native loop) as the first pass: rank cells from the K-row
-    * centroids, ADC-scan ONLY the nprobe best cells' codes
-    * (partition-pruned), exact-rerank against the cell-pruned vectors.
-    */
-  def ivfSq8Probe(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      idCol: String, labelCol: String, vecCol: String, query: Seq[Double],
-      k: Int = 10, nprobe: Int = 2, rerank: Int = 50, digits: Int = 6): DataFrame = {
-    require(nprobe >= 1 && rerank >= k)
-    val cells = rankIndexCells(spark, indexPath, query, digits).take(nprobe)
-    def pruned(table: String): DataFrame = {
-      val df = readIdx(spark, s"$indexPath/$table")
-      val t = df.schema(df.schema.fieldIndex(labelCol)).dataType
-      df.filter(col(labelCol).isin(cells.map(c => lit(c).cast(t)): _*))
-    }
-    val (mns, sts) = readSq8Params(spark, indexPath)
-    require(mns.size == query.size, s"dim ${mns.size} != query ${query.size}")
-    val qNorm = math.sqrt(query.map(x => x * x).sum)
-    val safeQ = if (qNorm > 0) qNorm else 1.0
-    val adc = ecol(graft.functions.Sq8AdcBytes(eexpr(col("codes")),
-      query, mns, sts))
-    val cand = pruned("codes")
-      .select(col(idCol), pround(adc / (col("vnorm") * lit(safeQ)), digits).as("adc_cos"))
-      .orderBy(col("adc_cos").desc, col(idCol))
-      .limit(rerank)
-      .select(col(idCol))
-    pruned("vectors")
-      .join(broadcast(cand), idCol)
-      .select(col(idCol), cosineTo(query, vecCol, digits).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Per-partition COMPOSED IVF-PQ build against a FROZEN coarse
-    * quantizer and FROZEN PQ codebooks — the incremental-refresh unit
-    * of [[buildIvfPq]]: one assignment pass + one encode projection
-    * over only the new partition's rows. [[buildIvfPart]] contributes
-    * the cell-partitioned vectors and the summable centroid partials;
-    * this adds the cell-partitioned codes.
-    */
-  def buildIvfPqPart(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]], cbs: Seq[Seq[Seq[Double]]],
-      path: String): Unit = {
-    buildIvfPart(df, idCol, vecCol, centroids, path)
-    pqEncode(withCellLabels(df, idCol, vecCol, centroids), idCol, vecCol,
-      cbs, keep = Seq("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$path/codes")
-  }
-
-  /** Merge committed per-partition IVF-PQ indexes into a probe-ready
-    * [[buildIvfPq]]-layout index: vectors + true combined-corpus
-    * centroid means via [[mergeIvf]], codes by FILE COPY into
-    * `codes/part=N/label=…` (the probe's cell filter partition-prunes
-    * across every part), frozen codebooks written once.
-    */
-  def mergeIvfPq(spark: org.apache.spark.sql.SparkSession,
-      cbs: Seq[Seq[Seq[Double]]], partPaths: Seq[String], path: String): Unit = {
-    mergeIvf(spark, partPaths, path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    partPaths.zipWithIndex.foreach { case (pp, i) =>
-      val src = new org.apache.hadoop.fs.Path(s"$pp/codes")
-      val dst = new org.apache.hadoop.fs.Path(s"$path/codes/part=$i")
-      val fs = src.getFileSystem(conf)
-      fs.mkdirs(dst.getParent)
-      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
-    }
-    writePqCodebooks(spark, cbs, path)
-  }
-
-  /** The incremental COMPOSED IVF-PQ index for an append-only
-    * partitioned corpus — [[ensureIncrementalIvf]] and
-    * [[ensureIncrementalPq]] fused on one lifecycle: appending an hour
-    * assigns + encodes ONLY that hour (two map-only projections), the
-    * merge is file copies plus the K-row centroid re-derivation, and
-    * [[ivfPqProbe]] over the merged layout is identical to a
-    * monolithic [[buildIvfPq]] under the same frozen learners
-    * (IncrementalIndexSpec pins it). Quantizer and codebooks move only
-    * on a periodic full rebuild — the standard billion-scale ANN
-    * maintenance posture.
-    */
-  def ensureIncrementalIvfPq(spark: org.apache.spark.sql.SparkSession,
-      kind: String, sourceDir: String, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]], cbs: Seq[Seq[Seq[Double]]]): String =
-    IndexStore.ensureIncremental(kind, spark, sourceDir) { (part, tmp) =>
-      buildIvfPqPart(spark.read.parquet(part), idCol, vecCol, centroids, cbs, tmp)
-    } { (parts, tmp) => mergeIvfPq(spark, cbs, parts, tmp) }
-
-  /** Per-partition COMPOSED IVF-SQ8 build against a FROZEN coarse
-    * quantizer and FROZEN SQ8 params — the incremental-refresh unit of
-    * [[buildIvfSq8]]: one assignment pass + one encode projection.
-    */
-  def buildIvfSq8Part(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]], prm: Seq[(Int, Double, Double)],
-      path: String): Unit = {
-    buildIvfPart(df, idCol, vecCol, centroids, path)
-    sq8EncodeTo(withCellLabels(df, idCol, vecCol, centroids), idCol, vecCol,
-      prm, s"$path/codes", keep = Seq("label"))
-  }
-
-  /** Merge committed per-partition IVF-SQ8 indexes — vectors + combined
-    * centroid means via [[mergeIvf]], codes by file copy, frozen params
-    * written once ([[mergeIvfPq]]'s shape).
-    */
-  def mergeIvfSq8(spark: org.apache.spark.sql.SparkSession,
-      prm: Seq[(Int, Double, Double)], partPaths: Seq[String],
-      path: String): Unit = {
-    mergeIvf(spark, partPaths, path)
-    copyIndexParts(spark, partPaths, "codes", path)
-    writeSq8Params(spark, prm, path)
-  }
-
-  /** Incremental COMPOSED IVF-SQ8 — the [[ensureIncrementalIvfPq]]
-    * lifecycle with SQ8 codes: appending an hour assigns + encodes only
-    * that hour, merge is file copies + the K-row centroid re-derivation,
-    * probe ≡ monolithic under the same frozen learners.
-    */
-  def ensureIncrementalIvfSq8(spark: org.apache.spark.sql.SparkSession,
-      kind: String, sourceDir: String, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]], prm: Seq[(Int, Double, Double)]): String =
-    IndexStore.ensureIncremental(kind, spark, sourceDir) { (part, tmp) =>
-      buildIvfSq8Part(spark.read.parquet(part), idCol, vecCol, centroids, prm, tmp)
-    } { (parts, tmp) => mergeIvfSq8(spark, prm, parts, tmp) }
-
-  /** RESIDUAL IVF-ADC (classic Jégou 2011 §V IVFADC — the depth the
-    * non-residual [[buildIvfPq]] deliberately deferred): PQ codes
-    * quantize the residual v − c(v) against the row's LEARNED coarse
-    * centroid instead of v itself. Residual magnitudes are a fraction
-    * of vector magnitudes, so the same m × ksub bit budget spends its
-    * codewords on a much smaller ball — WITHIN-CELL resolution the raw
-    * form provably lacks (members of one tight cluster collapse to
-    * near-identical raw codes; RecallSpec measures raw ADC at 0.16
-    * recall@10 there, residual ADC materially higher).
-    *
-    * Layout = [[buildIvfPq]] plus `$path/quantizer` — the learned
-    * K-row coarse centroid table the residuals were taken against
-    * (NOT the served per-cell means in `centroids`, which exist for
-    * cell RANKING): decode needs the exact encode-time quantizer, and
-    * probes add q·c(cell) back per scored row (v ≈ c(v) + recon ⇒
-    * q·v ≈ q·c + Σ table lookups). Residuals are IEEE subtractions of
-    * 1e-9-quantized centroids from exact inputs — deterministic and
-    * engine-identical, so the whole chain stays hash-gated
-    * ([[ivfPqResidualOracleSql]]).
-    */
-  def buildIvfPqResidual(df: DataFrame, idCol: String, vecCol: String,
-      path: String, k: Int, dim: Int, m: Int, ksub: Int,
-      coarseIters: Int = 3, pqIters: Int = 3): Unit = {
-    val cents = kmeansCentroids(df, idCol, vecCol, k, coarseIters)
-    val labeled = withCellLabels(df, idCol, vecCol, cents)
-    buildIvf(labeled, idCol, "label", vecCol, path)
-    writeQuantizer(df.sparkSession, cents, path)
-    val res = residualOf(col(vecCol), col("label"), cents)
-    val cbs = pqCodebooksOf(labeled, idCol, res, dim, m, ksub, pqIters)
-    writePqCodebooks(df.sparkSession, cbs, path)
-    pqEncodeOf(labeled, idCol, res, toDoubleArr(col(vecCol)), cbs,
-      keep = Seq("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$path/codes")
-  }
-
   /** v − c(v): the per-row residual against the row's assigned learned
     * centroid — a K-entry literal lookup plus one `zip_with`, map-only.
     */
@@ -1446,963 +819,6 @@ object Similarity {
     val table = array(cents.map(c => array(c.map(lit): _*)): _*)
     zip_with(toDoubleArr(vecCol),
       element_at(table, labelCol.cast("int") + 1), (a, b) => a - b)
-  }
-
-  private def writeQuantizer(spark: org.apache.spark.sql.SparkSession,
-      cents: Seq[Seq[Double]], path: String): Unit = {
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, j) => (j, c) }.toDF("j", "c")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/quantizer")
-  }
-
-  private[ext] def readQuantizer(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Seq[Double]] = {
-    import graft.util.SmallParquet
-    SmallParquet.rows(spark, s"$path/quantizer", Seq("j", "c"))
-      .map(r => SmallParquet.int(r(0)) -> SmallParquet.darr(r(1)))
-      .sortBy(_._1).map(_._2).toSeq
-  }
-
-  /** Probe over a [[buildIvfPqResidual]] index: same pruned shape as
-    * [[ivfPqProbe]] (rank cells from the K-row table, ADC over ONLY the
-    * nprobe cells' codes, exact rerank against the pruned vectors) with
-    * one extra per-row term — the probed cell's q·c, a driver-side
-    * scalar per cell folded in as a literal CASE over the ≤ nprobe
-    * probed labels. Still zero corpus scans, still m lookups + an add
-    * per code row.
-    */
-  def ivfPqResidualProbe(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, idCol: String, labelCol: String, vecCol: String,
-      query: Seq[Double], k: Int = 10, nprobe: Int = 2, rerank: Int = 50,
-      digits: Int = 6): DataFrame = {
-    require(nprobe >= 1 && rerank >= k)
-    val cells = rankIndexCells(spark, indexPath, query, digits).take(nprobe)
-    val quant = readQuantizer(spark, indexPath)
-    def pruned(table: String): DataFrame = {
-      val df = readIdx(spark, s"$indexPath/$table")
-      val t = df.schema(df.schema.fieldIndex(labelCol)).dataType
-      df.filter(col(labelCol).isin(cells.map(c => lit(c).cast(t)): _*))
-    }
-    val codes = pruned("codes")
-    val lt = codes.schema(codes.schema.fieldIndex(labelCol)).dataType
-    // q·c per probed cell; labels index the quantizer table directly
-    // (assignCell emits 0..K-1)
-    def qDot(label: Any): Double = {
-      val j = label.toString.toInt
-      quant(j).zip(query).foldLeft(0.0) { case (a, (c, q)) => a + c * q }
-    }
-    val cellDot = coalesce(
-      (cells.map(c =>
-        when(col(labelCol) === lit(c).cast(lt), lit(qDot(c)))) :+ lit(0.0)): _*)
-    val cand = pqAdcTopK(codes, idCol, readPqCodebooks(spark, indexPath),
-      query, rerank, digits, dotBase = cellDot)
-      .select(col(idCol))
-    pruned("vectors")
-      .join(broadcast(cand), idCol)
-      .select(col(idCol), cosineTo(query, vecCol, digits).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Per-partition RESIDUAL IVF-PQ build against a frozen quantizer +
-    * frozen residual codebooks — [[buildIvfPqPart]]'s twin for the
-    * [[buildIvfPqResidual]] layout: the appended hour assigns to the
-    * frozen cells and encodes its RESIDUALS in one projection.
-    */
-  def buildIvfPqResidualPart(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]], cbs: Seq[Seq[Seq[Double]]],
-      path: String): Unit = {
-    buildIvfPart(df, idCol, vecCol, centroids, path)
-    val labeled = withCellLabels(df, idCol, vecCol, centroids)
-    pqEncodeOf(labeled, idCol, residualOf(col(vecCol), col("label"), centroids),
-      toDoubleArr(col(vecCol)), cbs, keep = Seq("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$path/codes")
-  }
-
-  /** Incremental lifecycle for the RESIDUAL composed index: per-hour
-    * [[buildIvfPqResidualPart]] + [[mergeIvfPq]] plus the frozen
-    * quantizer persisted for the probe's q·c terms and residual
-    * decode. Probe ≡ monolithic under the same frozen learners
-    * (IncrementalIndexSpec).
-    */
-  def ensureIncrementalIvfPqResidual(spark: org.apache.spark.sql.SparkSession,
-      kind: String, sourceDir: String, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]], cbs: Seq[Seq[Seq[Double]]]): String =
-    IndexStore.ensureIncremental(kind, spark, sourceDir) { (part, tmp) =>
-      buildIvfPqResidualPart(spark.read.parquet(part), idCol, vecCol,
-        centroids, cbs, tmp)
-    } { (parts, tmp) =>
-      mergeIvfPq(spark, cbs, parts, tmp)
-      writeQuantizer(spark, centroids, tmp)
-    }
-
-  /** BATCH form of [[ivfPqProbe]] — the retrieval-pipeline serving
-    * shape at scale: N queries rank cells, scan codes, and rerank in
-    * ONE set of distributed joins, instead of N driver-looped probe
-    * jobs. `queries` is a (qid, vector) DataFrame; returns (qid,
-    * vec_id, cos), top-k per query.
-    *
-    * Plan shape: the K-row centroids and m·ksub-row codebooks fold to
-    * broadcast/literal lookups exactly as in the single-query path;
-    * the code scan is restricted to the BATCH'S probed-cell union by a
-    * LITERAL partition filter collected from the probe set (static
-    * pruning — per-query constants don't exist in a batch, but the
-    * union IS the correct read set, and pushing it as literals
-    * survives the [[spreadForScore]] repartition that blocks dynamic
-    * partition pruning; VERDICT r17 #1); per-query restriction within
-    * the union comes from the cell-label join — broadcast below
-    * `broadcastMaxRows` probe/candidate rows, shuffle above (the size
-    * gate in the body). Every window is partitioned by qid — no global
-    * sorts anywhere.
-    */
-  def ivfPqProbeBatch(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, idCol: String, labelCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qVecCol: String,
-      k: Int = 10, nprobe: Int = 2, rerank: Int = 50,
-      digits: Int = 6, broadcastMaxRows: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nprobe >= 1 && rerank >= k)
-    // The probe-set (N_q × nprobe) and candidate-set (N_q × rerank)
-    // broadcasts are SIZE-GATED, not assumed (VERDICT r14 #2, the
-    // decontam gate pattern, [[Dedup.contaminationFlags]]): both row
-    // counts are exact at plan time from one narrow count of the query
-    // frame, and a retrieval-pipeline batch (10⁵-10⁶ queries, each row
-    // carrying a dim-wide query vector) above `broadcastMaxRows` falls
-    // back to shuffle joins on the same keys — the cell-label join loses
-    // broadcast-driven partition pruning, which is moot at that volume
-    // (the probed-cell union of 10⁶ queries covers every cell). The two
-    // paths are result-identical (IndexSpec-pinned); only the exchange
-    // strategy differs.
-    def gated(df: DataFrame, rows: Long): DataFrame =
-      sizeGated(df, rows, broadcastMaxRows)
-    // RESIDUAL layout auto-detection (VERDICT r14 #4 — the production
-    // pair: residual accuracy × batch serving): a `quantizer` dir marks
-    // a [[buildIvfPqResidual]] index, whose codes quantize v − c(v) —
-    // every ADC score needs the per-(query, cell) q·c term added back.
-    // In the single probe that term is a literal CASE over ≤ nprobe
-    // labels; per-query literals don't exist in a batch, so it becomes
-    // a broadcast join against the K-row persisted quantizer, computed
-    // on the N_q × nprobe probe set (never the scored stream).
-    val residual = {
-      val p = new org.apache.hadoop.fs.Path(s"$indexPath/quantizer")
-      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-    }
-    val cbs = readPqCodebooks(spark, indexPath)
-    val sub = cbs.head.head.size
-    // ADVICE r16: the PQ batch (and its residual path) was the one
-    // batch probe missing the dimension guard — a mismatched per-row
-    // vector slices/zip_withs to null ADC scores that sort NULLS LAST
-    // into plausible-looking garbage ranks. Below the literal-query
-    // gate the guard runs driver-side on the one collected batch.
-    val (qn, nq, qrows) = literalQueryFrame(queries, qidCol, qVecCol,
-      cbs.length * sub, broadcastMaxRows)
-    // the (query, cell) probe set broadcasts NARROW — carrying the
-    // dim-wide query vector per probed cell multiplied the broadcast by
-    // nprobe × dim×8 B and blew spark.driver.maxResultSize at the 10k-
-    // query 768-dim rehearsal; the vector rides in via a second
-    // broadcast keyed by qid alone (one copy per query). Below the
-    // literal-query gate the whole probe set is driver arithmetic
-    // ([[driverCellProbeSet]] — zero Spark jobs, residual q·c folded
-    // exactly as the single probe's qDot); above it, the distributed
-    // window plan + [[literalProbeSet]] as before.
-    // per-query ADC dot TABLES fold driver-side below the gate — the
-    // exact m×ksub-literal shape the SINGLE probe has always used
-    // ([[pqAdcTopK]]'s `tables`), one per collected query: the scored
-    // stream then needs neither the dim-wide __qe nor the m×ksub×sub
-    // codebook literals (whose per-run plan/codegen cost dominated the
-    // probe's driver gaps), and the qn join drops out of the widest
-    // dataflow entirely. Entry s of table m is VecDot's sequential
-    // fold of the query's slice against codeword s — bit-identical to
-    // the in-plan dot(slice(__qe), element_at(table, code)) it replaces
-    // (multiplication operand order aside, which IEEE rounds
-    // identically); __qn replicates [[literalQueryFrame]]'s
-    // zero-guarded norm.
-    val adcTablesOf: Array[Double] => (Seq[Seq[Double]], Double) = { qe =>
-      val tabs = cbs.zipWithIndex.map { case (cb, s) =>
-        cb.map { cw =>
-          var d = 0.0; var i = 0
-          while (i < sub) { d += qe(s * sub + i) * cw(i); i += 1 }
-          d
-        }
-      }
-      var n2 = 0.0; var i = 0
-      while (i < qe.length) { n2 += qe(i) * qe(i); i += 1 }
-      val n = math.sqrt(n2)
-      (tabs, if (n == 0.0) 1.0 else n)
-    }
-    val (probeNarrow, cells) = qrows.flatMap { rows =>
-      driverCellProbeSet(spark, indexPath, rows, nprobe, digits,
-        qn.schema("__qid").dataType,
-        residualQuant =
-          if (residual) Some(readQuantizer(spark, indexPath)) else None,
-        adcTables = Some(adcTablesOf))
-    }.getOrElse {
-      val probeSetRaw = batchCellProbeSet(spark, indexPath, labelCol, qn,
-        nprobe, digits)
-      // residual: attach q·c(cell) per probed (query, cell) — a
-      // broadcast join against the K-row quantizer, the same sequential
-      // dim-order dot the single probe's driver-side qDot folds
-      val probeSet =
-        if (!residual) probeSetRaw
-        else probeSetRaw
-          .join(broadcast(readIdx(spark, s"$indexPath/quantizer")
-            .select(col("j").cast("long").as("__qj"), toDoubleArr(col("c")).as("__qcv"))),
-            col("__cell").cast("long") === col("__qj"))
-          .withColumn("__qc", dot(col("__qcv"), col("__qe")))
-          .drop("__qj", "__qcv")
-      literalProbeSet(
-        probeSet.select(
-          (col("__qid") +: col("__cell") +:
-            (if (residual) Seq(col("__qc")) else Nil)): _*),
-        nq * nprobe, broadcastMaxRows)
-    }
-    // static cell pruning BEFORE the spread (VERDICT r17 #1): the
-    // repartition between the scan and the probe join blocks dynamic
-    // partition pruning, so the probed-cell union is pushed as a
-    // literal partition filter on the scan itself
-    val (prunedRows, prunedSizes) =
-      parquetCensus(spark, s"$indexPath/codes", labelCol, cells)
-    val codes = spreadForScore(
-      cellUnionPruned(readIdx(spark, s"$indexPath/codes"), labelCol, cells),
-      if (cells.isEmpty) 0L else prunedRows * nq * nprobe / cells.size,
-      prunedSizes)
-    // the top-k cut carries ONLY (qid, adc, cell, id) — never the
-    // dim-wide query vector: the scored stream is N_q × nprobe ×
-    // cellRows, the widest dataflow in the plan. The vector re-attaches
-    // AFTER the top-rerank cut, where rows are N_q × rerank.
-    // fold seed: the residual form's q·c base comes FIRST, matching the
-    // single probe's dotBase + Σ lookups addition order exactly (IEEE
-    // addition order is part of the hash-gated contract)
-    val scored =
-      if (probeNarrow.schema.fieldNames.contains("__tab")) {
-        // literal path: per-query dot tables ride the probe frame —
-        // ADC is m table lookups per row, no qn join in the stream
-        val adcDot = (0 until cbs.length).map { s =>
-          element_at(element_at(col("__tab"), lit(s + 1)),
-            (col(s"code_$s") + 1).cast("int"))
-        }.foldLeft(if (residual) col("__qc") else lit(0.0))(_ + _)
-        codes.join(gated(probeNarrow, nq * nprobe),
-          codes(labelCol) === probeNarrow("__cell"))
-          .withColumn("__adc",
-            pround(adcDot / (col("vnorm") * col("__qn")), digits))
-      } else {
-        // distributed path: ADC per (query, code row) — codeword
-        // vectors are m×ksub literal arrays indexed by the stored code;
-        // the per-subspace dot runs against the query's slice
-        val adcDot = cbs.zipWithIndex.map { case (cb, s) =>
-          val table = array(cb.map(cw => array(cw.map(lit): _*)): _*)
-          dot(slice(col("__qe"), lit(s * sub + 1), lit(sub)),
-            element_at(table, (col(s"code_$s") + 1).cast("int")))
-        }.foldLeft(if (residual) col("__qc") else lit(0.0))(_ + _)
-        codes.join(gated(probeNarrow, nq * nprobe),
-          codes(labelCol) === probeNarrow("__cell"))
-          .join(gated(qn, nq), "__qid")
-          .withColumn("__adc",
-            pround(adcDot / (col("vnorm") * col("__qn")), digits))
-      }
-    val cand = topKPerQid(
-      scored.select(col("__qid"), col("__adc"), col("__cell"), col(idCol)),
-      col("__adc"), keyDesc = true, rerank, idCol, Seq("__cell"))
-      .select(col("__qid"), col("__cell"), col(idCol))
-    // exact rerank: original vectors consulted only for the candidate
-    // ids, read through the same union-pruned scan + (size-gated) join
-    heapScoped(batchCellExactRerank(spark, indexPath, labelCol, cand, qn,
-      idCol, vecCol, k, digits, nq, rerank, broadcastMaxRows, cells))
-  }
-
-  /** The shared query frame of every batch probe: (qid, double-widened
-    * vector, zero-guarded norm) — the distributed twin of the single
-    * probes' driver-side `safeQ`.
-    */
-  private def batchQueryFrame(queries: DataFrame, qidCol: String,
-      qVecCol: String): DataFrame =
-    queries.select(col(qidCol).as("__qid"), toDoubleArr(col(qVecCol)).as("__qe"))
-      .withColumn("__qn", {
-        val n = sqrt(dot(col("__qe"), col("__qe")))
-        when(n === 0.0, lit(1.0)).otherwise(n)
-      })
-
-  /** Every single probe `require`s its query dimension against the
-    * learned params and throws; the batch twins would otherwise fail
-    * SILENTLY (a mismatched per-row vector nulls the score or
-    * zero-pads the word packing — plausible-looking garbage ranks).
-    * One narrow aggregate over the query frame closes the gap: all
-    * rows must carry exactly the index's dimension.
-    */
-  private def requireQueryDim(queries: DataFrame, qVecCol: String,
-      dim: Int): Long = {
-    // min/max skip nulls, so a null query vector would slip through
-    // the dimension check and silently score null downstream — count
-    // them explicitly so they fail as loudly as a wrong dimension.
-    // Returns the BATCH ROW COUNT from the same aggregate: every batch
-    // probe needs n_q for its broadcast size gates, and folding the
-    // count into this pass saves one whole Spark job per probe call
-    // (each batch probe paid a separate count job at construction).
-    val row = queries
-      .agg(min(size(col(qVecCol))), max(size(col(qVecCol))),
-        count(when(col(qVecCol).isNull, lit(1))), count(lit(1))).head()
-    require(row.getLong(2) == 0L,
-      s"query batch contains ${row.getLong(2)} null vectors in $qVecCol")
-    // an empty batch is valid (probes return empty); only NON-empty
-    // frames must carry the index's dimension uniformly
-    require(row.isNullAt(0) ||
-        (row.getInt(0) == dim && row.getInt(1) == dim),
-      s"query vectors must all be dim $dim, got " +
-        s"[${row.get(0)}, ${row.get(1)}]")
-    row.getLong(3)
-  }
-
-  /** Memoized-schema read of an index TABLE (guide §1.2 — job count):
-    * a schemaless `spark.read.parquet` runs a footer-inference Spark
-    * job on every call, so each probe construction paid 1-3 ~50 ms
-    * driver jobs re-learning the schema of an immutable table. Index
-    * roots are content-addressed (fingerprint-keyed store) or
-    * write-once temp dirs, so a path's schema never changes within a
-    * JVM; the memo holds exactly what inference returned on the first
-    * read. Probe-side reads only — builders read freshly written
-    * unique temp paths where a memo buys nothing.
-    */
-  private val idxSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-  private def readIdx(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val cached = idxSchemaCache.get(path)
-    if (cached != null) spark.read.schema(cached).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      idxSchemaCache.putIfAbsent(path, df.schema)
-      df
-    }
-  }
-
-  /** The size gate every batch-probe join goes through (VERDICT r14
-    * #2): broadcast at ≤ `maxRows` (row counts exact at plan time),
-    * shuffle join on the same keys above — result-identical, only the
-    * exchange strategy differs.
-    */
-  private def sizeGated(df: DataFrame, rows: Long, maxRows: Long): DataFrame =
-    if (rows <= maxRows) broadcast(df) else df
-
-  /** Spread a compressed code/word table across the executor cores
-    * before the batch scoring stage: the scored stream is
-    * codes × queries, but a BROADCAST probe join preserves the CODES
-    * read's partitioning — and a compressed rung's table is tiny on
-    * disk (1 B/dim, 1 bit/dim), so a corpus-scale batch can otherwise
-    * funnel billions of scored rows through one or two scan partitions
-    * (measured at the 100×-rehearsal geometry). One narrow exchange of
-    * the codes table buys full-width parallelism for the ADC/Hamming ×
-    * heap stage.
-    *
-    * Width is SIZED TO THE WORK, not unconditional (VERDICT r17 #2 —
-    * the r17 form repartitioned even a 3-query sf0.1 probe, paying a
-    * shuffle to parallelize half a second of scoring): the caller
-    * passes its scored-row estimate (pruned code rows × the per-query
-    * fan-out), one task absorbs [[SpreadRowsPerTask]] scored rows, and
-    * the repartition is SKIPPED whenever the (pruned) scan is already
-    * that wide — so a selective batch runs straight off the pruned
-    * read while a corpus-scale batch still gets executor-width
-    * REPARTITION_BY_NUM (AQE never coalesces it below the requested
-    * width).
-    */
-  private def spreadForScore(df: DataFrame, scoredRows: Long,
-      fileSizes: Seq[Long]): DataFrame = {
-    val target = math.min(
-      df.sparkSession.sparkContext.defaultParallelism.toLong,
-      scoredRows / SpreadRowsPerTask + 1).toInt
-    // scan width estimated from the census's (pruned) file sizes —
-    // FilePartition's split/packing formula replicated driver-side, so
-    // the check costs no physical-planning pass (VERDICT r18 #8); the
-    // estimate only decides whether the repartition is skippable, never
-    // a result
-    if (target <= graft.util.Scans.estimateScanPartitions(
-        df.sparkSession, fileSizes)) df
-    else df.repartition(target)
-  }
-
-  /** ~0.2-2 s of ADC/Hamming work per scoring task — small enough to
-    * saturate the cluster at the rehearsal geometry (1.25e9 scored
-    * rows → full width), large enough that a fixture-scale batch
-    * (1e5-1e6 scored rows) never pays a repartition for sub-second
-    * work.
-    */
-  private val SpreadRowsPerTask = 2000000L
-
-  /** The batch's probed-cell UNION, collected driver-side — ≤
-    * min(n_q × nprobe, K) labels (the probe set is already computed;
-    * this is the batch twin of the single probes' [[rankIndexCells]]
-    * collect, an index lookup, never a data collect). The union feeds
-    * a LITERAL partition filter on every code/word/vector read
-    * (VERDICT r17 #1): static pruning at the scan, which the
-    * downstream [[spreadForScore]] repartition cannot block the way it
-    * blocked dynamic partition pruning through the probe join. A
-    * near-total union (rehearsal geometry: 10k queries × nprobe 8 over
-    * K=256 probes every cell) degenerates gracefully to the full scan.
-    */
-  private def probedCellUnion(probeSet: DataFrame): Seq[Any] =
-    probeSet.select(col("__cell")).distinct()
-      .collect().map(_.get(0)).toIndexedSeq
-
-  /** Collect the NARROW probe set once and re-enter it as a literal
-    * frame, deriving the probed-cell union from the same rows: below
-    * the broadcast gate (n_q × nprobe rows — the exact bound the
-    * broadcast already accepts) the probe-set plan used to execute
-    * TWICE per batch probe, once for [[probedCellUnion]]'s collect and
-    * once to build the probe join's broadcast; the literal form pays
-    * one execution and zero extra jobs for the union. Above the gate
-    * (a shuffle-join batch) nothing is collected — the lazy frame and
-    * the separate union collect are kept, since the probe set is then
-    * too large to hold driver-side by the same reasoning that disables
-    * its broadcast.
-    */
-  private def literalProbeSet(probeNarrow: DataFrame, rows: Long,
-      maxRows: Long): (DataFrame, Seq[Any]) =
-    if (rows <= maxRows) {
-      val collected = probeNarrow.collect()
-      val ci = probeNarrow.schema.fieldIndex("__cell")
-      val cells: Seq[Any] = collected.map(_.get(ci)).distinct.toIndexedSeq
-      (probeNarrow.sparkSession.createDataFrame(
-        java.util.Arrays.asList(collected: _*), probeNarrow.schema), cells)
-    } else (probeNarrow, probedCellUnion(probeNarrow))
-
-  /** Byte budget for collecting a query batch driver-side
-    * ([[literalQueryFrame]]); row gate = bytes / (dim × 8). Overridable
-    * for specs via `graft.batchquery.collect.maxbytes` (forcing the
-    * distributed path with a tiny budget).
-    */
-  private def queryCollectMaxBytes: Long =
-    sys.props.get("graft.batchquery.collect.maxbytes").map(_.toLong)
-      .getOrElse(64L << 20)
-
-  /** Collect the query batch ONCE under a driver-size gate and re-enter
-    * it as a LITERAL frame — below the gate every downstream broadcast
-    * of the queries is a LocalTableScan (zero Spark jobs to
-    * materialize: `ConvertToLocalRelation` folds the projections and
-    * `BroadcastExchange.executeCollect` over a local relation launches
-    * nothing), and the dim guard runs driver-side on the same collected
-    * rows. That replaces the 2-3 separate executions of the query scan
-    * each batch probe paid: one [[requireQueryDim]] job plus one
-    * broadcast job per `qn` consumer (the scoring join and the rerank
-    * join each rebuilt it). The gate is BYTE-aware, not row-aware
-    * ([[batchExactRerank]]'s maxResultSize lesson — row-count gates
-    * cannot see row width): vectors weigh dim×8 B/row. Above the gate,
-    * or when a vector carries null ELEMENTS (only the null-propagating
-    * in-plan expressions score those correctly), nothing changes — the
-    * distributed [[batchQueryFrame]] + [[requireQueryDim]] path runs
-    * as before. Both paths are result-identical: the collected doubles
-    * ARE the plan-computed cast, and the driver-side norm is
-    * [[graft.functions.VecDot]]'s sequential fold (IndexSpec pins the
-    * literal path ≡ a loop of single probes; the distributed path was
-    * pinned in r17).
-    */
-  private def literalQueryFrame(queries: DataFrame, qidCol: String,
-      qVecCol: String, dim: Int, broadcastMaxRows: Long):
-      (DataFrame, Long, Option[IndexedSeq[(Any, Array[Double])]]) = {
-    import org.apache.spark.sql.types._
-    // ALSO capped by the caller's broadcast gate: a batch the caller
-    // won't broadcast must not be collected either (same driver-memory
-    // reasoning), and broadcastMaxRows = 0 is the spec hook forcing
-    // the fully distributed path
-    val maxRows = math.min(math.min(Int.MaxValue - 8L, broadcastMaxRows),
-      math.max(0L, queryCollectMaxBytes / (dim.toLong * 8L))).toInt
-    val narrow = queries.select(col(qidCol).as("__qid"),
-      toDoubleArr(col(qVecCol)).as("__qe"))
-    val head = narrow.limit(maxRows + 1).collect()
-    if (head.length > maxRows || head.exists(r =>
-        !r.isNullAt(1) && r.getSeq[Any](1).contains(null))) {
-      val nq = requireQueryDim(queries, qVecCol, dim)
-      (batchQueryFrame(queries, qidCol, qVecCol), nq, None)
-    } else {
-      // the driver-side twin of [[requireQueryDim]], same checks in the
-      // same order over the same values
-      val nNull = head.count(_.isNullAt(1))
-      require(nNull == 0,
-        s"query batch contains $nNull null vectors in $qVecCol")
-      val rows: IndexedSeq[(Any, Array[Double])] = head.iterator.map { r =>
-        (r.get(0), r.getSeq[Double](1).toArray)
-      }.toIndexedSeq
-      require(rows.isEmpty ||
-          (rows.iterator.map(_._2.length).min == dim &&
-            rows.iterator.map(_._2.length).max == dim),
-        s"query vectors must all be dim $dim, got " +
-          s"[${rows.iterator.map(_._2.length).min}, " +
-          s"${rows.iterator.map(_._2.length).max}]")
-      val schema = StructType(Seq(
-        StructField("__qid", narrow.schema("__qid").dataType),
-        StructField("__qe", ArrayType(DoubleType)),
-        StructField("__qn", DoubleType)))
-      val litRows = rows.map { case (qid, qe) =>
-        // zero-guarded norm: sqrt of VecDot's sequential self-dot
-        var d = 0.0; var i = 0
-        while (i < qe.length) { d += qe(i) * qe(i); i += 1 }
-        val n = math.sqrt(d)
-        org.apache.spark.sql.Row(qid, qe.toSeq, if (n == 0.0) 1.0 else n)
-      }
-      (queries.sparkSession.createDataFrame(
-        java.util.Arrays.asList(litRows: _*), schema), rows.size.toLong,
-        Some(rows))
-    }
-  }
-
-  /** Spark literal type of a collected probe-set value — the label
-    * classes the index builders actually write; an exotic label class
-    * returns None and the caller keeps the distributed probe set.
-    */
-  private def litDataType(v: Any): Option[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
-    v match {
-      case _: java.lang.Integer => Some(IntegerType)
-      case _: java.lang.Long    => Some(LongType)
-      case _: java.lang.Short   => Some(ShortType)
-      case _: java.lang.Byte    => Some(ByteType)
-      case _: String            => Some(StringType)
-      case _                    => None
-    }
-  }
-
-  /** Driver-side twin of [[batchCellProbeSet]] + [[literalProbeSet]]
-    * over a COLLECTED query batch (≤ the literal-query gate): ONE
-    * [[graft.util.SmallParquet]] read of the K-row centroids ranks
-    * every query's cells with [[rankIndexCells]]'s exact arithmetic
-    * (score, NaN and tie semantics already pinned against the in-plan
-    * ranking by batch ≡ single-probe-loop specs), so the probe SET
-    * costs zero Spark jobs instead of the window plan + collect the
-    * distributed form pays. `residualQuant` attaches the residual q·c
-    * per probed (query, cell) — [[ivfPqResidualProbe]]'s driver qDot,
-    * sequential dim order ≡ [[graft.functions.VecDot]]. `queryWords`
-    * maps a query to its packed sign-bit words ([[bqPackQuery]], the
-    * documented literal twin of [[bqWords]]) carried as __qw ahead of
-    * __cell — the IVF-BQ probe frame's column order. Returns the
-    * literal probe frame and the probed-cell union (first-appearance
-    * order), or None when the label class has no literal type (the
-    * caller keeps the distributed probe set).
-    */
-  private def driverCellProbeSet(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, rows: Seq[(Any, Array[Double])], nprobe: Int,
-      digits: Int, qidType: org.apache.spark.sql.types.DataType,
-      residualQuant: Option[Seq[Seq[Double]]] = None,
-      queryWords: Option[Array[Double] => Seq[Long]] = None,
-      adcTables: Option[Array[Double] => (Seq[Seq[Double]], Double)] = None):
-      Option[(DataFrame, Seq[Any])] = {
-    import org.apache.spark.sql.types._
-    val centRows = graft.util.SmallParquet.rows(spark,
-      s"$indexPath/centroids", Nil)
-    // per-query blocks (packed words / ADC tables) fold ONCE per query
-    // row — never keyed by qid, which the contract does not require to
-    // be unique — and fan out over that query's probed cells
-    val probe = rows.flatMap { case (qid, qe) =>
-      val w = queryWords.map(f => f(qe))
-      val t = adcTables.map(f => f(qe))
-      rankCellsOf(centRows, scala.collection.immutable.ArraySeq
-        .unsafeWrapArray(qe), digits).take(nprobe).map(c => (qid, qe, c, w, t))
-    }
-    val cells: Seq[Any] = probe.map(_._3).distinct
-    val cellType = cells.headOption match {
-      case Some(c) => litDataType(c) match {
-        case Some(t) => t
-        case None => return None
-      }
-      case None => LongType // empty batch: any comparable type
-    }
-    // residual q·c: sequential dim-order dot of the cell's quantizer
-    // row against the query — VecDot's fold order exactly
-    def qDot(quant: Seq[Seq[Double]], cell: Any, qe: Array[Double]): Double = {
-      val cv = quant(cell.toString.toInt)
-      var s = 0.0; var i = 0
-      while (i < qe.length) { s += cv(i) * qe(i); i += 1 }
-      s
-    }
-    // columns compose: __qid, [__qw], __cell, [__qc], [__tab, __qn] —
-    // each optional block keyed by the caller's per-rung shape
-    val fields = Seq(StructField("__qid", qidType)) ++
-      queryWords.map(_ => StructField("__qw", ArrayType(LongType))) ++
-      Seq(StructField("__cell", cellType)) ++
-      residualQuant.map(_ => StructField("__qc", DoubleType)) ++
-      adcTables.toSeq.flatMap(_ => Seq(
-        StructField("__tab", ArrayType(ArrayType(DoubleType))),
-        StructField("__qn", DoubleType)))
-    val litRows = probe.map { case (qid, qe, c, w, t) =>
-      val vals = Seq[Any](qid) ++
-        w ++
-        Seq[Any](c) ++
-        residualQuant.map(q => qDot(q, c, qe)) ++
-        t.toSeq.flatMap { case (tab, n) => Seq[Any](tab, n) }
-      org.apache.spark.sql.Row(vals: _*)
-    }
-    Some((spark.createDataFrame(
-      java.util.Arrays.asList(litRows: _*), StructType(fields)), cells))
-  }
-
-  /** Literal `isin` partition filter over the collected cell union —
-    * the batch twin of the single probes' `pruned(table)` shape; the
-    * literals cast to the partition column's inferred type so pruning
-    * applies to the partition column directly. An EMPTY union (empty
-    * query batch) short-circuits to a false predicate.
-    */
-  private def cellUnionPruned(df: DataFrame, labelCol: String,
-      cells: Seq[Any]): DataFrame = {
-    if (cells.isEmpty) df.filter(lit(false))
-    else {
-      val t = df.schema(df.schema.fieldIndex(labelCol)).dataType
-      df.filter(col(labelCol).isin(cells.map(c => lit(c).cast(t)): _*))
-    }
-  }
-
-  /** Row count of a parquet table from its FILE FOOTERS — a
-    * driver-side metadata read, never a Spark job (ADVICE r17 #1: the
-    * flat-batch steer's `count()` re-ran the full scan-plus-shuffle
-    * per probe just to log an estimate). With `cells` given, only
-    * files under the union's `label=<cell>` partition dirs are
-    * footer-read — both the monolithic (`codes/label=N/`) and merged
-    * (`codes/part=N/label=N/`) layouts carry the dir at some depth.
-    */
-  private[ext] def parquetRowCount(spark: org.apache.spark.sql.SparkSession,
-      path: String, labelCol: String = null, cells: Seq[Any] = Nil): Long =
-    parquetCensus(spark, path, labelCol, cells)._1
-
-  /** [[parquetRowCount]] plus the matching files' BYTE sizes from the
-    * same single listing pass — the sizes feed
-    * [[graft.util.Scans.estimateScanPartitions]] so [[spreadForScore]]
-    * can size its skip-the-repartition check without `df.rdd`
-    * materializing a second physical plan at construction
-    * (VERDICT r18 #8).
-    */
-  private[ext] def parquetCensus(spark: org.apache.spark.sql.SparkSession,
-      path: String, labelCol: String = null, cells: Seq[Any] = Nil):
-      (Long, Seq[Long]) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val wanted = cells.map(c => s"/$labelCol=$c/").toArray
-    var total = 0L
-    val sizes = Seq.newBuilder[Long]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val p = st.getPath
-      if (!p.getName.startsWith("_") && !p.getName.startsWith(".") &&
-          (wanted.isEmpty || wanted.exists(p.toString.contains))) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-        try total += r.getRecordCount finally r.close()
-        sizes += st.getLen
-      }
-    }
-    (total, sizes.result())
-  }
-
-  /** Sort-free per-query top-`k` candidate cut — the batch probes'
-    * widest dataflow. The previous form,
-    * `row_number().over(partitionBy(qid).orderBy(key, id)) <= k`, plans
-    * as a FULL SORT of the scored stream under the window: at the
-    * 100×-rehearsal geometry (10M×768 corpus, 10k-query batch, K=256)
-    * that is a multi-billion-row TimSort funneled through however many
-    * partitions the (small) codes table read produced — the 150k-vector
-    * smoke already spent 10+ minutes there. [[CollectTopK]] instead
-    * keeps a bounded per-(partition, qid) heap, combines MAP-SIDE, and
-    * shuffles only n_q × k survivors. The kept SET is identical:
-    * (key, id) is a strict total order (ids unique), so heap membership
-    * equals the window's rank cut exactly — IndexSpec pins batch ≡ a
-    * loop of single probes bit-for-bit across all five batch probes.
-    * `keyDesc` true keeps the largest keys (ADC cosine), false the
-    * smallest (Hamming); [[graft.functions.TopKScoreAgg]] breaks key
-    * ties on ascending id in BOTH directions. The id (and payload)
-    * column must be integral — the heap buffer is a primitive long
-    * array, and a silent cast of a non-numeric id would rank
-    * null/garbage candidates (ADVICE r17 #3: fail fast instead).
-    */
-  private def topKPerQid(scored: DataFrame, key: Column, keyDesc: Boolean,
-      k: Int, idCol: String, payload: Seq[String]): DataFrame = {
-    (idCol +: payload).foreach { c =>
-      import org.apache.spark.sql.types._
-      val t = scored.schema(scored.schema.fieldIndex(c)).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
-        s"topKPerQid needs an integral $c column (the heap carries " +
-          s"primitive longs); got $t — map non-numeric ids to a " +
-          "surrogate long first")
-    }
-    val topk = org.apache.spark.sql.functions.udaf(
-      new graft.functions.TopKScoreAgg(k, keyDesc))
-    val payloadCol = payload.headOption.map(col).getOrElse(lit(-1L))
-    scored
-      .groupBy(col("__qid"))
-      .agg(topk(key.cast("double"), col(idCol).cast("long"),
-        payloadCol.cast("long")).as("__topk"))
-      .select(col("__qid"), explode(col("__topk")).as("__e"))
-      .select(col("__qid") +: col("__e._1").as(idCol) +:
-        payload.headOption.map(n => col("__e._2").as(n)).toSeq: _*)
-  }
-
-  /** Scope the heap aggregate's conf requirement to THIS probe
-    * (VERDICT r17 #2 / ADVICE r17 #2 — the r17 form mutated the
-    * caller's session): [[topKPerQid]]'s bounded heap only engages
-    * while the object-hash aggregate stays hash-based, and the default
-    * sort-based fallback threshold is 128 DISTINCT GROUPS — any real
-    * query batch exceeds it and the partial aggregate degenerates into
-    * a per-partition sort of the scored stream. Raising it is
-    * semantics-free and memory-bounded (groups × k × 24 B per task;
-    * 10k queries × 100 ≈ 24 MB), but it must not leak to unrelated
-    * aggregates (a user's million-group `collect_list` needs its spill
-    * fallback). So the finished probe plan REBINDS to a cloned session
-    * carrying the override: a Dataset action propagates its own
-    * session's conf, so the override applies exactly to this probe's
-    * execution and the caller's session is never touched
-    * (IndexSpec-pinned).
-    */
-  private def heapScoped(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.Bridge.withConfOverride(df,
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      (1 << 20).toString)
-
-  /** Per-query cell ranking — the distributed twin of
-    * [[rankIndexCells]], shared by every composed batch probe: score =
-    * rounded dot/|c| (the query norm is constant per query and
-    * cancels), NaN (zero-norm centroid) sorts greatest in Spark
-    * exactly as in the driver-side sort, ties to the lower label.
-    * Output: the query frame's columns plus __cell, ≤ nprobe cells per
-    * query.
-    */
-  private def batchCellProbeSet(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, labelCol: String, qn: DataFrame, nprobe: Int,
-      digits: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cents = readIdx(spark, s"$indexPath/centroids")
-      .select(col(labelCol).as("__cell"), toDoubleArr(col("centroid")).as("__c"))
-    val wCell = Window.partitionBy(col("__qid"))
-      .orderBy(col("__s").desc, col("__cell").asc)
-    qn.join(broadcast(cents))
-      .withColumn("__s", pround(dot(col("__c"), col("__qe")) / l2Norm(col("__c")), digits))
-      .withColumn("__rn", row_number().over(wCell))
-      .filter(col("__rn") <= nprobe)
-      .select(qn.columns.map(col).toSeq :+ col("__cell"): _*)
-  }
-
-  /** The shared exact-rerank tail of the flat batch probes: candidates
-    * (__qid, id) re-attach their query vector, join the raw `vectors`
-    * by id, score exact cosine, and keep top-`k` per qid — every join
-    * size-gated, every window qid-partitioned.
-    */
-  private def batchExactRerank(vectors: DataFrame, cand: DataFrame,
-      qn: DataFrame, idCol: String, vecCol: String, k: Int, digits: Int,
-      nq: Long, rerank: Int, broadcastMaxRows: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // the candidate broadcast stays NARROW (qid, id) and the query
-    // vector attaches via its own per-qid broadcast AFTER the vectors
-    // join — a fat candQ (qe per candidate row) weighs n_q × rerank ×
-    // dim×8 B and blew spark.driver.maxResultSize at the rehearsal's
-    // 10k × 768 geometry (the row-count gate cannot see row width)
-    val wTop = Window.partitionBy(col("__qid"))
-      .orderBy(col("cos").desc, vectors(idCol).asc)
-    vectors.join(sizeGated(cand, nq * rerank, broadcastMaxRows),
-        vectors(idCol) === cand(idCol))
-      .join(sizeGated(qn.select(col("__qid"), col("__qe")), nq, broadcastMaxRows),
-        "__qid")
-      .withColumn("cos", pround(
-        dot(col("__qe"), toDoubleArr(vectors(vecCol))) /
-          (l2Norm(toDoubleArr(vectors(vecCol))) * l2Norm(col("__qe"))), digits))
-      .withColumn("__rn", row_number().over(wTop))
-      .filter(col("__rn") <= k)
-      .select(col("__qid").as("qid"), vectors(idCol).as(idCol), col("cos"))
-  }
-
-  /** The shared exact-rerank tail of the COMPOSED batch probes:
-    * candidates (__qid, __cell, id) re-attach their query vector, join
-    * the CELL-PRUNED vectors on (cell, id), score exact cosine, keep
-    * top-`k` per qid — every join size-gated, every window
-    * qid-partitioned ([[batchExactRerank]]'s cell-pruned twin).
-    */
-  private def batchCellExactRerank(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, labelCol: String, cand: DataFrame, qn: DataFrame,
-      idCol: String, vecCol: String, k: Int, digits: Int,
-      nq: Long, rerank: Int, broadcastMaxRows: Long,
-      cells: Seq[Any]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // narrow candidate broadcast + per-qid vector broadcast — see
-    // [[batchExactRerank]]'s note; the corpus-heavy vectors read is
-    // statically pruned to the probed-cell union (candidates can only
-    // come from probed cells), mirroring the single probes' rerank
-    val vecs = cellUnionPruned(readIdx(spark, s"$indexPath/vectors"),
-      labelCol, cells)
-    val wTop = Window.partitionBy(col("__qid"))
-      .orderBy(col("cos").desc, vecs(idCol).asc)
-    vecs.join(sizeGated(cand, nq * rerank, broadcastMaxRows),
-        vecs(labelCol) === cand("__cell") && vecs(idCol) === cand(idCol))
-      .join(sizeGated(qn.select(col("__qid"), col("__qe")), nq, broadcastMaxRows),
-        "__qid")
-      .withColumn("cos", pround(
-        dot(col("__qe"), toDoubleArr(vecs(vecCol))) /
-          (l2Norm(toDoubleArr(vecs(vecCol))) * l2Norm(col("__qe"))), digits))
-      .withColumn("__rn", row_number().over(wTop))
-      .filter(col("__rn") <= k)
-      .select(col("__qid").as("qid"), vecs(idCol).as(idCol), col("cos"))
-  }
-
-  /** BATCH form of [[sq8AdcRerank]] — N queries ADC-score the codes
-    * table and exact-rerank in ONE distributed pass instead of N
-    * driver-looped jobs. The first pass is a full codes scan PER QUERY
-    * (the flat SQ8 rung's contract; the cell-pruned form is
-    * [[ivfSq8ProbeBatch]]): the gated query frame joins the scan as a
-    * broadcast nested-loop below `broadcastMaxRows` queries — above
-    * it, the flat rung's all-pairs scan is the wrong tool and the IVF
-    * composition is the answer, not a shuffled cartesian. Rank windows
-    * are qid-partitioned and carry only (qid, score, id) — Spark's
-    * window-group-limit keeps ≤ rerank rows per (partition, qid)
-    * ahead of the exchange, so no task ever sorts a query's full
-    * corpus. Results ≡ a loop of single probes, bit-for-bit
-    * ([[graft.functions.Sq8AdcVec]]'s fused loop matches
-    * [[graft.functions.Sq8AdcBytes]] term-for-term; IndexSpec-pinned).
-    */
-  /** Flat-batch scale guard (VERDICT r16 "what's wrong" #2): the flat
-    * SQ8/BQ batch probes materialize corpus×n_q scored rows BY CONTRACT
-    * (each single probe scans every code; a batch is a loop of them) —
-    * correct, but a caller batching 10⁵ queries against a flat rung
-    * builds a 10¹¹-row intermediate with no warning while the
-    * IVF-composed twins serve the same queries over ≤ nprobe cells per
-    * query. Above the threshold (default 10⁹ scored rows; the
-    * `graft.flatbatch.warn.rows` system property overrides, spec hook)
-    * log a steer to the IVF twin. No behavior change — the counter
-    * exists so a spec can pin that the warning actually fires.
-    */
-  private[ext] object FlatBatchGuard extends org.apache.spark.internal.Logging {
-    val fired = new java.util.concurrent.atomic.AtomicLong
-    def check(rung: String, twin: String, corpusRows: Long, nq: Long): Unit = {
-      val threshold =
-        sys.props.get("graft.flatbatch.warn.rows").map(_.toLong).getOrElse(1000000000L)
-      if (corpusRows * nq > threshold) {
-        fired.incrementAndGet()
-        logWarning(s"$rung will score ~${corpusRows * nq} rows " +
-          s"($corpusRows codes x $nq queries) — the flat rung's contract, " +
-          s"but at this volume the IVF-composed twin ($twin) serves the " +
-          "same batch over <= nprobe cells per query")
-      }
-    }
-  }
-
-  def sq8ProbeBatch(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, vectors: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qVecCol: String,
-      k: Int = 10, rerank: Int = 50, digits: Int = 6,
-      broadcastMaxRows: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(rerank >= k)
-    val (mns, sts) = readSq8Params(spark, indexPath)
-    // one collected literal query frame: dim guard driver-side, zero
-    // broadcast jobs downstream ([[literalQueryFrame]])
-    val (qn, nq, _) = literalQueryFrame(queries, qidCol, qVecCol, mns.size,
-      broadcastMaxRows)
-    // footer-metadata census, not a count() job (ADVICE r17 #1) —
-    // shared by the steer and the spread's scored-row sizing
-    val (corpusRows, corpusSizes) = parquetCensus(spark, s"$indexPath/codes")
-    val codes = spreadForScore(readIdx(spark, s"$indexPath/codes"),
-      corpusRows * nq, corpusSizes)
-    FlatBatchGuard.check("sq8ProbeBatch", "ivfSq8ProbeBatch", corpusRows, nq)
-    val adc = ecol(graft.functions.Sq8AdcVec(
-      eexpr(col("codes")), eexpr(col("__qe")), mns, sts))
-    val cand = topKPerQid(
-      codes.crossJoin(sizeGated(qn, nq, broadcastMaxRows))
-        .withColumn("__adc", pround(adc / (col("vnorm") * col("__qn")), digits))
-        .select(col("__qid"), col("__adc"), col(idCol)),
-      col("__adc"), keyDesc = true, rerank, idCol, Nil)
-    heapScoped(batchExactRerank(vectors, cand, qn, idCol, vecCol, k, digits,
-      nq, rerank, broadcastMaxRows))
-  }
-
-  /** BATCH form of [[ivfSq8Probe]] — the [[ivfPqProbeBatch]] shape
-    * over the composed IVF-SQ8 layout: per-query cell ranking against
-    * the broadcast K-row centroids, the codes scan restricted to the
-    * batch's probed-cell union via the size-gated cell join, ADC =
-    * [[graft.functions.Sq8AdcVec]] per (query, code row), qid-windowed
-    * top-rerank carrying only (qid, adc, cell, id), exact rerank
-    * against the cell-pruned vectors. Bit-identical to a loop of
-    * single probes (IndexSpec-pinned).
-    */
-  def ivfSq8ProbeBatch(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, idCol: String, labelCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qVecCol: String,
-      k: Int = 10, nprobe: Int = 2, rerank: Int = 50,
-      digits: Int = 6, broadcastMaxRows: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nprobe >= 1 && rerank >= k)
-    val (mns, sts) = readSq8Params(spark, indexPath)
-    val (qn, nq, qrows) = literalQueryFrame(queries, qidCol, qVecCol,
-      mns.size, broadcastMaxRows)
-    // narrow (qid, cell) broadcast + per-qid vector broadcast — see
-    // ivfPqProbeBatch's note (the fat probe set blew maxResultSize);
-    // below the literal-query gate the probe set is driver arithmetic
-    // ([[driverCellProbeSet]]), above it the distributed window plan +
-    // [[literalProbeSet]] as before
-    val (probeNarrow, cells) = qrows.flatMap { rows =>
-      driverCellProbeSet(spark, indexPath, rows, nprobe, digits,
-        qn.schema("__qid").dataType)
-    }.getOrElse {
-      literalProbeSet(
-        batchCellProbeSet(spark, indexPath, labelCol, qn, nprobe, digits)
-          .select(col("__qid"), col("__cell")), nq * nprobe,
-        broadcastMaxRows)
-    }
-    // static cell pruning before the spread — VERDICT r17 #1, see
-    // ivfPqProbeBatch
-    val (prunedRows, prunedSizes) =
-      parquetCensus(spark, s"$indexPath/codes", labelCol, cells)
-    val codes = spreadForScore(
-      cellUnionPruned(readIdx(spark, s"$indexPath/codes"), labelCol, cells),
-      if (cells.isEmpty) 0L else prunedRows * nq * nprobe / cells.size,
-      prunedSizes)
-    val paired = codes
-      .join(sizeGated(probeNarrow, nq * nprobe, broadcastMaxRows),
-        codes(labelCol) === probeNarrow("__cell"))
-      .join(sizeGated(qn, nq, broadcastMaxRows), "__qid")
-    val adcDot = ecol(graft.functions.Sq8AdcVec(
-      eexpr(col("codes")), eexpr(col("__qe")), mns, sts))
-    val cand = topKPerQid(
-      paired
-        .withColumn("__adc", pround(adcDot / (col("vnorm") * col("__qn")), digits))
-        .select(col("__qid"), col("__adc"), col("__cell"), col(idCol)),
-      col("__adc"), keyDesc = true, rerank, idCol, Seq("__cell"))
-      .select(col("__qid"), col("__cell"), col(idCol))
-    heapScoped(batchCellExactRerank(spark, indexPath, labelCol, cand, qn,
-      idCol, vecCol, k, digits, nq, rerank, broadcastMaxRows, cells))
-  }
-
-  /** BATCH form of [[bqHammingRerank]] — N queries binarize IN-PLAN
-    * against the frozen thresholds ([[bqWords]] over the per-row query
-    * vector — the distributed twin of the single probe's driver-side
-    * packing), every (query, words row) pair scores
-    * Σ_w popcount(word ⊕ qword) via an integer-only zip_with/aggregate
-    * (zero FP before the rerank, the rung's memory-bandwidth
-    * contract), qid-windowed top-rerank ascending, exact cosine
-    * rerank. Integer arithmetic is order-independent, so batch ≡ a
-    * loop of single probes exactly (IndexSpec-pinned).
-    */
-  def bqProbeBatch(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, vectors: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qVecCol: String,
-      k: Int = 10, rerank: Int = 50, digits: Int = 6,
-      broadcastMaxRows: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(rerank >= k)
-    val thr = readBqParams(spark, indexPath)
-    val (qnBase, nq, _) = literalQueryFrame(queries, qidCol, qVecCol,
-      thr.size, broadcastMaxRows)
-    // the packed-words projection over the literal frame folds into the
-    // LocalRelation (ConvertToLocalRelation) — still zero broadcast jobs
-    val qn = qnBase.withColumn("__qw", bqWords(col("__qe"), thr))
-    // footer-metadata census, not a count() job (ADVICE r17 #1)
-    val (corpusRows, corpusSizes) = parquetCensus(spark, s"$indexPath/words")
-    val words = spreadForScore(readIdx(spark, s"$indexPath/words"),
-      corpusRows * nq, corpusSizes)
-    FlatBatchGuard.check("bqProbeBatch", "ivfBqProbeBatch", corpusRows, nq)
-    val ham = aggregate(
-      zip_with(col("words"), col("__qw"), (a, b) => bit_count(a.bitwiseXOR(b))),
-      lit(0L), (acc, x) => acc + x)
-    val cand = topKPerQid(
-      words.crossJoin(
-          sizeGated(qn.select(col("__qid"), col("__qw")), nq, broadcastMaxRows))
-        .withColumn("__ham", ham)
-        .select(col("__qid"), col("__ham"), col(idCol)),
-      col("__ham"), keyDesc = false, rerank, idCol, Nil)
-    heapScoped(batchExactRerank(vectors, cand, qn, idCol, vecCol, k, digits,
-      nq, rerank, broadcastMaxRows))
   }
 
   /** Parametric CTE chain for the quantized k-means unroll: `vSql`
@@ -2510,7 +926,7 @@ object Similarity {
        |$encs""".stripMargin
   }
 
-  /** Oracle twin of [[pqCodebooks]] + [[pqEncode]] over the full
+  /** Oracle twin of [[pqCodebooks]] + the [[Ann.PqCodec]] encode over the full
     * embeddings table.
     */
   def pqCodesOracleSql(dim: Int, m: Int, ksub: Int, iters: Int = 3): String = {
@@ -2718,9 +1134,9 @@ object Similarity {
   /** DuckDB oracle twin of the FULL IVF-ADC chain (`ivf_pq_topk`):
     * quantized coarse k-means over the corpus minus the query vector
     * (prefix-`g` CTE chain), final cell assignment, SERVED centroids
-    * re-derived as per-cell means ([[buildIvf]]'s layout), cells
+    * re-derived as per-cell means ([[Ann.Ivf]]'s layout), cells
     * ranked by 1e-6-rounded query cosine (ties to the lower label —
-    * [[rankIndexCells]]' order), m quantized-L2 PQ chains + encode
+    * [[Ann.rankIndexCells]]' order), m quantized-L2 PQ chains + encode
     * ([[pqCtes]]), ADC scoring restricted to vectors ASSIGNED to the
     * nprobe best cells, top-`rerank` candidates, exact cosine rerank.
     * Every learner in the chain is individually oracle-exact via the
@@ -3067,8 +1483,8 @@ object Similarity {
     * the query vector), k derived from the corpus size exactly like
     * the query builder, one final assignment pass with the learned
     * cells, SERVED centroids re-derived as the per-cell means
-    * ([[buildIvf]]'s layout), cells ranked by the 1e-6-rounded
-    * query-cosine (ties to the lower label — [[ivfProbe]]'s order),
+    * ([[Ann.Ivf]]'s layout), cells ranked by the 1e-6-rounded
+    * query-cosine (ties to the lower label — [[Ann.probe]]'s order),
     * and brute top-k cosine within the nprobe best cells. Rounds 9-12
     * registered this query no-oracle ("iterative FP k-means is not
     * SQL-expressible"); the quantized update closed that.
@@ -3101,207 +1517,11 @@ object Similarity {
        |ORDER BY cos DESC, vec_id LIMIT $topk""".stripMargin
   }
 
-  /** IVF index build over an UNLABELED corpus: learn the coarse
-    * quantizer with [[kmeansCentroids]], assign each vector its cell in
-    * one codegen'd pass, then persist through [[buildIvf]] (which
-    * derives the served centroids from the final assignment, so probes
-    * rank against the cells exactly as laid out). Same build-once
-    * lifecycle: wrap in [[IndexStore.ensure]].
-    */
-  def buildIvfKmeans(df: DataFrame, idCol: String, vecCol: String, path: String,
-      k: Int, iters: Int = 5): Unit = {
-    val cents = kmeansCentroids(df, idCol, vecCol, k, iters)
-    buildIvf(withCellLabels(df, idCol, vecCol, cents), idCol, "label", vecCol, path)
-  }
-
-  /** IVF index build — pay the layout cost ONCE (the posture of the
-    * reference's write-time LSM key, persist.go:101-108), then serve
-    * probes from the persisted tables via [[ivfProbe]]:
-    *
-    *   - `$path/centroids`: one row per cell — (labelCol,
-    *     centroid array<double>). K rows; a probe collects this whole
-    *     table driver-side as its index lookup.
-    *   - `$path/vectors`: the corpus re-laid-out PARTITIONED BY the
-    *     cell label, so a probe's nprobe-cell scan is a partition-
-    *     pruned read of nprobe directories — never a full-corpus scan.
-    *
-    * Build cost: one posexplode aggregate (shuffle keyed (cell, dim),
-    * partial-agged map-side) + one corpus rewrite. Use
-    * [[IndexStore.ensure]] for the build-once lifecycle.
-    */
-  def buildIvf(df: DataFrame, idCol: String, labelCol: String, vecCol: String,
-      path: String): Unit = {
-    centroidComponents(df, labelCol, vecCol)
-      .groupBy(col(labelCol))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
-        s => s.getField("c")).as("centroid"))
-      .coalesce(1) // K rows — one footer to read per probe
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    df.select(col(idCol), col(vecCol), col(labelCol))
-      .write.mode("overwrite").partitionBy(labelCol).parquet(s"$path/vectors")
-  }
-
-  /** Per-partition IVF build against a FROZEN coarse quantizer — the
-    * incremental-refresh unit ([[IndexStore.ensureIncremental]]) and
-    * the standard ANN posture for append-only corpora: the quantizer
-    * is learned once ([[kmeansCentroids]] on the initial corpus), new
-    * hours are ASSIGNED to the existing cells (one codegen'd
-    * [[assignCell]] pass), and only a periodic full rebuild moves the
-    * cells. Writes the partition's cell-partitioned vectors plus the
-    * EXACTLY mergeable centroid form — per-cell (count, dim-sums), so
-    * the merged index serves the true per-cell means, same as a
-    * monolithic [[buildIvf]] over the combined corpus.
-    */
-  def buildIvfPart(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]], path: String): Unit = {
-    val labeled = withCellLabels(df, idCol, vecCol, centroids)
-    labeled.select(col(idCol), col(vecCol), col("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$path/vectors")
-    labeled
-      .select(col("label"), posexplode(toDoubleArr(col(vecCol))).as(Seq("i", "v")))
-      .groupBy(col("label"), col("i"))
-      // order-deterministic partials (Portable.dsum): the merged
-      // centroid re-derivation is bit-identical however the corpus was
-      // partitioned into parts
-      .agg(graft.util.Portable.dsum(col("v")).as("s"), count(lit(1)).as("n"))
-      .groupBy(col("label"))
-      .agg(
-        max(col("n")).as("n"), // rows per (cell, dim) are the cell size
-        transform(array_sort(collect_list(struct(col("i"), col("s")))),
-          x => x.getField("s")).as("sums"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroid_partial")
-  }
-
-  /** Merge committed per-partition IVF indexes into a probe-ready
-    * [[buildIvf]]-layout index. Vectors — the corpus-proportional
-    * table — merge by FILE COPY into `vectors/part=N/label=…` (zero
-    * reads; the probe's cell filter partition-prunes across every
-    * part, the extra `part` column rides along harmlessly). Centroids
-    * re-derive from the K-row summable partials: Σsums/Σcount per
-    * cell — the true combined-corpus means, so cell ranking matches a
-    * monolithic rebuild.
-    */
-  def mergeIvf(spark: org.apache.spark.sql.SparkSession,
-      partPaths: Seq[String], path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    partPaths.zipWithIndex.foreach { case (pp, i) =>
-      val src = new org.apache.hadoop.fs.Path(s"$pp/vectors")
-      val dst = new org.apache.hadoop.fs.Path(s"$path/vectors/part=$i")
-      val fs = src.getFileSystem(conf)
-      fs.mkdirs(dst.getParent)
-      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
-    }
-    spark.read.parquet(partPaths.map(_ + "/centroid_partial"): _*)
-      .select(col("label"), col("n"), posexplode(col("sums")).as(Seq("i", "s")))
-      .groupBy(col("label"), col("i"))
-      .agg(graft.util.Portable.dsum(col("s")).as("s"), sum(col("n")).as("n"))
-      .groupBy(col("label"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("s"), col("n")))),
-        x => x.getField("s") / x.getField("n")).as("centroid"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  /** The incremental IVF index for an append-only partitioned corpus:
-    * frozen-quantizer per-partition builds + metadata-cheap merge via
-    * [[IndexStore.ensureIncremental]]. Appending an hour assigns ONLY
-    * that hour's vectors; probes ([[ivfProbe]]) are layout-identical
-    * to a monolithic [[buildIvf]] over the combined corpus with the
-    * same assignment.
-    */
-  def ensureIncrementalIvf(spark: org.apache.spark.sql.SparkSession, kind: String,
-      sourceDir: String, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]]): String =
-    IndexStore.ensureIncremental(kind, spark, sourceDir) { (part, tmp) =>
-      buildIvfPart(spark.read.parquet(part), idCol, vecCol, centroids, tmp)
-    } { (parts, tmp) => mergeIvf(spark, parts, tmp) }
-
-  /** IVF probe against a [[buildIvf]] index: rank cells by centroid
-    * score against the query (the query norm is constant across cells
-    * so it cancels), then exact cosine top-k within the `nprobe` best
-    * cells. The ranking reads the K-row centroids table driver-side —
-    * an index lookup, not a data collect — and the candidate scan reads
-    * ONLY the nprobe pruned partitions of the vectors table: the plan
-    * never touches the raw corpus (PlanAuditSpec pins this).
-    */
-  /** Every cell of a persisted index ranked best-first against the
-    * query — the K-row centroids read both persisted-probe forms
-    * ([[ivfProbe]], [[ivfPqProbe]]) share. An index lookup, never a
-    * data collect.
-    */
-  def rankIndexCells(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      query: Seq[Double], digits: Int = 6): Seq[Any] =
-    rankCellsOf(graft.util.SmallParquet.rows(spark,
-      s"$indexPath/centroids", Nil), query, digits)
-
-  /** [[rankIndexCells]] over PRE-READ centroid rows — the batch probes
-    * rank many queries against ONE driver read of the K-row table.
-    */
-  private def rankCellsOf(centRows: Seq[IndexedSeq[Any]],
-      query: Seq[Double], digits: Int): Seq[Any] = {
-    // positional (label, centroid) — the label column's NAME varies by
-    // build entry point, its position does not
-    val ranked = centRows.map { r =>
-      val c = graft.util.SmallParquet.darr(r(1))
-      var dot = 0.0; var nn = 0.0; var i = 0
-      while (i < c.length) { dot += c(i) * query(i); nn += c(i) * c(i); i += 1 }
-      (r(0), graft.util.Portable.proundD(dot / math.sqrt(nn), digits))
-    }
-    // score desc, label asc — the same order the inline form's
-    // orderBy(score.desc, label) produces (numeric labels numerically).
-    // java.lang.Double.compare is a TOTAL order with NaN greatest — the
-    // exact Spark sort semantics (a zero-norm centroid scores NaN and
-    // must rank the same here as in ivfTopK), and a strict weak
-    // ordering so TimSort can't throw on it.
-    ranked.sortWith { case ((la, sa), (lb, sb)) =>
-      val c = java.lang.Double.compare(sb, sa) // desc, NaN greatest
-      if (c != 0) c < 0
-      else (la, lb) match {
-        case (x: Number, y: Number) => x.doubleValue < y.doubleValue
-        case (x, y) => String.valueOf(x) < String.valueOf(y)
-      }
-    }.map(_._1).toSeq
-  }
-
-  def ivfProbe(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      idCol: String, labelCol: String, vecCol: String,
-      query: Seq[Double], k: Int = 10, nprobe: Int = 1, digits: Int = 6): DataFrame = {
-    require(nprobe >= 1)
-    val cells = rankIndexCells(spark, indexPath, query, digits).take(nprobe)
-    val vecs = readIdx(spark, s"$indexPath/vectors")
-    // the partition dir re-infers the label's type; cast the cell
-    // literals to it so pruning applies to the partition column directly
-    val labelType = vecs.schema(vecs.schema.fieldIndex(labelCol)).dataType
-    vecs.filter(col(labelCol).isin(cells.map(c => lit(c).cast(labelType)): _*))
-      .select(col(idCol), cosineTo(query, vecCol).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** [[ivfProbe]] with `nprobe` DERIVED instead of caller-chosen:
-    * reads the persisted index's cell count from its K-row centroids
-    * table (driver-side, an index lookup) and probes
-    * [[nprobeFor]](K, targetRecall) cells — the curve-calibrated
-    * default for a caller who knows their recall target but not the
-    * index geometry. RecallSpec pins the derived default clearing the
-    * 0.8 floor on an over-segmented quantizer.
-    */
-  def ivfProbeAuto(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      idCol: String, labelCol: String, vecCol: String,
-      query: Seq[Double], k: Int = 10, targetRecall: Double = 0.9,
-      digits: Int = 6): DataFrame = {
-    // K-row footer count, zero Spark jobs (the parquetRowCount shape)
-    val nCells = parquetRowCount(spark, s"$indexPath/centroids").toInt
-    ivfProbe(spark, indexPath, idCol, labelCol, vecCol, query, k,
-      nprobe = nprobeFor(nCells, targetRecall), digits)
-  }
-
   /** One-shot IVF probe (build folded into the query): rank cells with
     * an inline centroid aggregate, then exact cosine top-k within the
     * `nprobe` best cells. For a SINGLE ad-hoc query this is the minimum
     * work possible (any probe must derive the centroids once); for
-    * repeated probes use [[buildIvf]] + [[ivfProbe]], which persist the
+    * repeated probes use [[Ann.build]] + [[Ann.probe]], which persist the
     * centroid/cell layout so each probe is a partition-pruned read.
     */
   def ivfTopK(df: DataFrame, idCol: String, labelCol: String, vecCol: String,
@@ -3378,31 +1598,6 @@ object Similarity {
   // Scalar quantization (SQ8) — the 8-bit/dim rung of the ANN ladder
   // ------------------------------------------------------------------
 
-  /** SQ8 scalar-quantization index (FAISS `ScalarQuantizer` QT_8bit
-    * shape): per-dimension affine 8-bit codes — code_d = round((v_d −
-    * min_d) / step_d) with step_d = (max_d − min_d)/255, learned from
-    * ONE corpus pass of per-dim min/max. Unlike the PQ family there is
-    * NO iterative FP in the learner: min/max are exact order-independent
-    * aggregates, 1e-9-quantized like every learner, so the oracle twin
-    * is exact BY CONSTRUCTION (not by noise margin). The encode is one
-    * map-only codegen projection — dim×4 B → dim bytes (4×), the middle
-    * rung between BQ's 1 bit/dim and the raw vectors; recall at this
-    * budget is near-lossless, vs PQ which buys 20×+ at real recall
-    * loss. Layout: `$path/params` (i, mn, mx) — a dim-row table — and
-    * `$path/codes` (id, codes, vnorm ‖v‖ for the cosine denominator).
-    *
-    * 100 TB posture: train is one scan + a dim-group aggregate; encode
-    * is embarrassingly parallel and shuffle-free; every probe scans the
-    * 4×-smaller codes table and touches the raw vectors only for the
-    * `rerank` id-equi-join, exactly like [[pqAdcRerank]].
-    */
-  def buildSq8(df: DataFrame, idCol: String, vecCol: String, path: String,
-      dim: Int): Unit = {
-    val prm = sq8Params(df, idCol, vecCol, dim)
-    writeSq8Params(df.sparkSession, prm, path)
-    sq8EncodeTo(df, idCol, vecCol, prm, s"$path/codes")
-  }
-
   /** The SQ8 learner alone: per-dim (i, mn, mx), exact order-independent
     * aggregates 1e-9-quantized — a dim-row driver collect. Exposed so
     * the incremental lifecycle can learn once and freeze.
@@ -3417,155 +1612,6 @@ object Similarity {
       .sortBy(_._1).toSeq
     require(rows.size == dim, s"params rows ${rows.size} != dim $dim")
     rows
-  }
-
-  private def writeSq8Params(spark: org.apache.spark.sql.SparkSession,
-      prm: Seq[(Int, Double, Double)], path: String): Unit = {
-    import spark.implicits._
-    prm.toDF("i", "mn", "mx").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/params")
-  }
-
-  private def sq8Steps(prm: Seq[(Int, Double, Double)]): Seq[Double] =
-    prm.map(r => (r._3 - r._2) / 255.0)
-
-  /** Encode `df` against frozen params into `$dst` — one map-only
-    * codegen projection. Clamp AFTER the floor, exactly as the oracle's
-    * greatest/least — the 1e-9 quantization of min can push
-    * (v − mn)/st a hair outside [0, 255] at the corpus extremes (and
-    * incremental appends may fall anywhere: out-of-range vectors clamp
-    * to the edge code, the standard frozen-learner trade).
-    *
-    * Codes persist BINARY-PACKED ([[graft.functions.Sq8Pack]], 1 byte
-    * per dim): the earlier `array<long>` layout decoded to 8 B/dim in
-    * memory — the dense 1M×768 ladder measured that "compressed" first
-    * pass SLOWER than the brute scan it undercuts on disk. Code VALUES
-    * are unchanged (bytes read back unsigned), so every oracle hash and
-    * probe score is identical.
-    */
-  private def sq8EncodeTo(df: DataFrame, idCol: String, vecCol: String,
-      prm: Seq[(Int, Double, Double)], dst: String,
-      keep: Seq[String] = Nil): Unit = {
-    val mns = prm.map(_._2)
-    val sts = sq8Steps(prm)
-    val v = toDoubleArr(col(vecCol))
-    val codes = array(prm.indices.map { d =>
-      if (sts(d) == 0.0) lit(0L)
-      else greatest(lit(0.0), least(lit(255.0),
-        floor((element_at(v, d + 1) - lit(mns(d))) / lit(sts(d)) + lit(0.5))))
-        .cast("long")
-    }: _*)
-    val packed = ecol(graft.functions.Sq8Pack(eexpr(codes)))
-    val out = df.select(Seq(col(idCol), packed.as("codes"),
-      pround(sqrt(dot(v, v)), 9).as("vnorm")) ++ keep.map(col): _*)
-    val w = out.write.mode("overwrite")
-    (if (keep.nonEmpty) w.partitionBy(keep: _*) else w).parquet(dst)
-  }
-
-  /** Per-partition SQ8 encode against FROZEN params — the incremental
-    * refresh unit, same policy as [[buildPqPart]]: appending an hour
-    * encodes ONLY that hour; params move only on a periodic full
-    * rebuild.
-    */
-  def buildSq8Part(df: DataFrame, idCol: String, vecCol: String,
-      prm: Seq[(Int, Double, Double)], path: String): Unit =
-    sq8EncodeTo(df, idCol, vecCol, prm, s"$path/codes")
-
-  /** Merge committed per-partition SQ8 indexes into a probe-ready
-    * [[buildSq8]]-layout index — codes merge by FILE COPY (zero reads,
-    * zero shuffles), the frozen params are written once.
-    */
-  def mergeSq8(spark: org.apache.spark.sql.SparkSession,
-      prm: Seq[(Int, Double, Double)], partPaths: Seq[String],
-      path: String): Unit = {
-    copyIndexParts(spark, partPaths, "codes", path)
-    writeSq8Params(spark, prm, path)
-  }
-
-  /** Incremental SQ8 index for an append-only partitioned corpus — the
-    * lifecycle twin of [[ensureIncrementalPq]].
-    */
-  def ensureIncrementalSq8(spark: org.apache.spark.sql.SparkSession,
-      kind: String, sourceDir: String, idCol: String, vecCol: String,
-      prm: Seq[(Int, Double, Double)]): String =
-    IndexStore.ensureIncremental(kind, spark, sourceDir) { (part, tmp) =>
-      buildSq8Part(spark.read.parquet(part), idCol, vecCol, prm, tmp)
-    } { (parts, tmp) => mergeSq8(spark, prm, parts, tmp) }
-
-  /** File-copy merge of one subtable (`sub`) from each part index into
-    * `$path/$sub/part=N` — the shared shape of every frozen-learner
-    * merge ([[mergePq]] precedent).
-    */
-  private def copyIndexParts(spark: org.apache.spark.sql.SparkSession,
-      partPaths: Seq[String], sub: String, path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    partPaths.zipWithIndex.foreach { case (pp, i) =>
-      val src = new org.apache.hadoop.fs.Path(s"$pp/$sub")
-      val dst = new org.apache.hadoop.fs.Path(s"$path/$sub/part=$i")
-      val fs = src.getFileSystem(conf)
-      fs.mkdirs(dst.getParent)
-      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
-    }
-  }
-
-  /** The learned per-dim affine params back off a [[buildSq8]] index —
-    * (mins, steps), each dim-long; a dim-row driver read (an index
-    * lookup, not a data collect). step is derived here as
-    * (mx − mn)/255.0 so the probe and the oracle compute the identical
-    * IEEE expression.
-    */
-  def readSq8Params(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Seq[Double], Seq[Double]) = {
-    import graft.util.SmallParquet
-    val rows = SmallParquet.rows(spark, s"$path/params", Seq("i", "mn", "mx"))
-      .map(r => (SmallParquet.int(r(0)), SmallParquet.dbl(r(1)),
-        SmallParquet.dbl(r(2)))).sortBy(_._1)
-    (rows.map(_._2), rows.map(r => (r._3 - r._2) / 255.0))
-  }
-
-  /** SQ8 ADC + exact re-rank: each code row scores as
-    * Σ_d q_d·(mn_d + code_d·step_d) — the reconstruction dot, unrolled
-    * into a codegen'd literal fold (q, mn, step are all driver
-    * literals; only the code byte is per-row) — normalized by the
-    * stored ‖v‖, top-`rerank` candidates, raw vectors consulted only
-    * for those ids. Term order is the dim order in BOTH engines, so
-    * the fold is bit-deterministic.
-    */
-  def sq8AdcRerank(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, vectors: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Double], k: Int = 10, rerank: Int = 50,
-      digits: Int = 6): DataFrame = {
-    val cand = sq8Candidates(spark, indexPath, idCol, query, rerank, digits)
-      .select(col(idCol))
-    vectors.join(broadcast(cand), idCol)
-      .select(col(idCol), cosineTo(query, vecCol).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** The SQ8 FIRST PASS alone — the codes scan + ADC rank, top-`rerank`
-    * (id, adc_cos). Exposed as its own primitive: it is the
-    * bandwidth-bound half the rung is sold on, the ladder times it
-    * separately, and a serving tier that keeps raw vectors elsewhere
-    * (the common disaggregated layout) consumes exactly this.
-    */
-  def sq8Candidates(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, idCol: String, query: Seq[Double],
-      rerank: Int = 50, digits: Int = 6): DataFrame = {
-    val (mns, sts) = readSq8Params(spark, indexPath)
-    require(mns.size == query.size, s"dim ${mns.size} != query ${query.size}")
-    val qNorm = math.sqrt(query.map(x => x * x).sum)
-    val safeQ = if (qNorm > 0) qNorm else 1.0
-    // native loop expression — IEEE-identical to the dim-order literal
-    // fold (and to the oracle's ordered list_reduce), but ~0.3 KB of
-    // generated code instead of ~260 expression nodes per row
-    val approxDot = ecol(graft.functions.Sq8AdcBytes(eexpr(col("codes")),
-      query, mns, sts))
-    readIdx(spark, s"$indexPath/codes")
-      .select(col(idCol),
-        pround(approxDot / (col("vnorm") * lit(safeQ)), digits).as("adc_cos"))
-      .orderBy(col("adc_cos").desc, col(idCol))
-      .limit(rerank)
   }
 
   /** DuckDB oracle twin of the full SQ8 chain (`sq8_topk`): per-dim
@@ -3613,35 +1659,6 @@ object Similarity {
   // Binary quantization (BQ) — the 1-bit/dim rung of the ANN ladder
   // ------------------------------------------------------------------
 
-  /** Binary-quantization index: one bit per dimension — bit_d =
-    * (v_d > thr_d) with thr_d the per-dim corpus MEAN (mean-centering,
-    * the classic sign-binarization after centering; Charikar 2002's
-    * hyperplane LSH degenerates to exactly this when the hyperplanes
-    * are the coordinate axes through the centroid). Bits pack 32 per
-    * BIGINT word (32, not 64 — both engines then stay inside non-sign
-    * bit territory and the packing sum is small-integer exact), so a
-    * 64-dim vector is 2 longs = 16 B, 16× under SQ8 and 32× under raw.
-    * The threshold mean uses [[graft.util.Portable.dsum]] — exact
-    * decimal accumulation, order-deterministic — then the usual 1e-9
-    * quantization, so the learned params are engine-portable the same
-    * way every other learner's are. Layout: `$path/params` (i, thr),
-    * `$path/words` (id, words).
-    *
-    * 100 TB posture: candidate generation is integer-only — a scan of
-    * the 32×-smaller words table computing Σ popcount(xor) per row
-    * (top-`rerank` via per-partition heaps, no global sort, NO floating
-    * point at all until the exact rerank join) — the memory-bandwidth
-    * shape modern vector stores use for billion-vector first-pass
-    * filtering.
-    */
-  def buildBq(df: DataFrame, idCol: String, vecCol: String, path: String,
-      dim: Int): Unit = {
-    val thr = bqThresholds(df, idCol, vecCol, dim)
-    writeBqParams(df.sparkSession, thr, path)
-    df.select(col(idCol), bqWords(toDoubleArr(col(vecCol)), thr).as("words"))
-      .write.mode("overwrite").parquet(s"$path/words")
-  }
-
   /** The BQ learner alone: per-dim decimal-exact mean thresholds
     * ([[graft.util.Portable.dsum]], 1e-9-quantized) — a dim-row driver
     * collect, exposed for the incremental lifecycle's learn-once.
@@ -3657,377 +1674,6 @@ object Similarity {
     require(rows.size == dim, s"params rows ${rows.size} != dim $dim")
     rows
   }
-
-  private def writeBqParams(spark: org.apache.spark.sql.SparkSession,
-      thr: Seq[Double], path: String): Unit = {
-    import spark.implicits._
-    thr.zipWithIndex.map { case (t, i) => (i, t) }.toDF("i", "thr")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-  }
-
-  /** Per-partition BQ binarize against FROZEN thresholds — the
-    * incremental refresh unit (map-only; appended vectors binarize
-    * against the learned means, which move only on a full rebuild).
-    */
-  def buildBqPart(df: DataFrame, idCol: String, vecCol: String,
-      thr: Seq[Double], path: String): Unit =
-    df.select(col(idCol), bqWords(toDoubleArr(col(vecCol)), thr).as("words"))
-      .write.mode("overwrite").parquet(s"$path/words")
-
-  /** Merge committed per-partition BQ indexes — words by file copy,
-    * frozen thresholds written once.
-    */
-  def mergeBq(spark: org.apache.spark.sql.SparkSession, thr: Seq[Double],
-      partPaths: Seq[String], path: String): Unit = {
-    copyIndexParts(spark, partPaths, "words", path)
-    writeBqParams(spark, thr, path)
-  }
-
-  /** Incremental BQ index — the lifecycle twin of
-    * [[ensureIncrementalSq8]].
-    */
-  def ensureIncrementalBq(spark: org.apache.spark.sql.SparkSession,
-      kind: String, sourceDir: String, idCol: String, vecCol: String,
-      thr: Seq[Double]): String =
-    IndexStore.ensureIncremental(kind, spark, sourceDir) { (part, tmp) =>
-      buildBqPart(spark.read.parquet(part), idCol, vecCol, thr, tmp)
-    } { (parts, tmp) => mergeBq(spark, thr, parts, tmp) }
-
-  /** The learned per-dim thresholds back off a [[buildBq]] index. */
-  def readBqParams(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Double] = {
-    import graft.util.SmallParquet
-    SmallParquet.rows(spark, s"$path/params", Seq("i", "thr"))
-      .map(r => (SmallParquet.int(r(0)), SmallParquet.dbl(r(1))))
-      .sortBy(_._1).map(_._2)
-  }
-
-  /** Pack (v_d > thr_d) bits 32-per-long — a codegen'd integer fold,
-    * no shuffle, no UDF.
-    */
-  private def bqWords(v: Column, thr: Seq[Double]): Column = {
-    val nw = (thr.size + 31) / 32
-    array((0 until nw).map { w =>
-      (0 until 32).filter(b => w * 32 + b < thr.size).foldLeft(lit(0L)) { (acc, b) =>
-        val d = w * 32 + b
-        acc + when(element_at(v, d + 1) > lit(thr(d)), lit(1L << b)).otherwise(lit(0L))
-      }
-    }: _*)
-  }
-
-  /** BQ Hamming + exact re-rank: the query binarizes driver-side
-    * against the same thresholds, candidates rank by
-    * Σ_w popcount(word_w XOR qword_w) ascending (integer-exact — zero
-    * FP in the first pass), ties to the lower id, and the raw vectors
-    * are consulted only for the `rerank` winners.
-    */
-  def bqHammingRerank(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, vectors: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Double], k: Int = 10, rerank: Int = 50): DataFrame = {
-    val cand = bqCandidates(spark, indexPath, idCol, query, rerank)
-      .select(col(idCol))
-    vectors.join(broadcast(cand), idCol)
-      .select(col(idCol), cosineTo(query, vecCol).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** The BQ FIRST PASS alone — the integer-only Hamming scan over the
-    * words table, top-`rerank` (id, hamming) ascending. The
-    * memory-bandwidth candidate pass the rung is sold on, timed
-    * separately by the ladder ([[sq8Candidates]]'s twin).
-    */
-  def bqCandidates(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, idCol: String, query: Seq[Double],
-      rerank: Int = 50): DataFrame = {
-    val thr = readBqParams(spark, indexPath)
-    require(thr.size == query.size, s"dim ${thr.size} != query ${query.size}")
-    readIdx(spark, s"$indexPath/words")
-      .select(col(idCol), bqHammingLit(bqPackQuery(query, thr)).as("hamming"))
-      .orderBy(col("hamming").asc, col(idCol))
-      .limit(rerank)
-  }
-
-  /** Driver-side sign-bit packing of a query against frozen thresholds
-    * — the literal twin of the in-plan [[bqWords]].
-    */
-  private def bqPackQuery(query: Seq[Double], thr: Seq[Double]): Seq[Long] = {
-    val nw = (thr.size + 31) / 32
-    (0 until nw).map { w =>
-      (0 until 32).filter(b => w * 32 + b < thr.size).foldLeft(0L) { (acc, b) =>
-        val d = w * 32 + b
-        if (query(d) > thr(d)) acc | (1L << b) else acc
-      }
-    }
-  }
-
-  /** Σ_w popcount(words_w ⊕ qw_w) over a stored words row, the query
-    * words as literals — integer-exact, word order irrelevant.
-    */
-  private def bqHammingLit(qw: Seq[Long]): Column =
-    qw.indices.foldLeft(lit(0L)) { (acc, w) =>
-      acc + bit_count(element_at(col("words"), w + 1).bitwiseXOR(lit(qw(w))))
-    }
-
-  // ------------------------------------------------------------------
-  // Composed IVF-BQ — cell-pruned sign-bit codes (the billion-vector
-  // first-pass shape: the standard first filter at that scale is
-  // exactly Hamming over binary codes restricted to the probed cells)
-  // ------------------------------------------------------------------
-
-  /** COMPOSED IVF-BQ index: a learned coarse quantizer partitions the
-    * BQ sign-bit words BY CELL. Layout contract = [[buildIvfPq]]'s
-    * (`centroids` + cell-partitioned `vectors` via [[buildIvf]]) with
-    * BQ `params` + cell-partitioned `words`. Probes prune BOTH data
-    * reads to ≤ nprobe cells — the first pass touches
-    * ~corpus·nprobe/K words rows at 1 bit/dim (8× under the IVF-SQ8
-    * composition's bytes); the recall cost of 1-bit codes is absorbed
-    * by the exact rerank (RecallSpec floor).
-    */
-  def buildIvfBq(df: DataFrame, idCol: String, vecCol: String, path: String,
-      k: Int, dim: Int, coarseIters: Int = 3): Unit = {
-    val cents = kmeansCentroids(df, idCol, vecCol, k, coarseIters)
-    val labeled = withCellLabels(df, idCol, vecCol, cents)
-    buildIvf(labeled, idCol, "label", vecCol, path)
-    val thr = bqThresholds(df, idCol, vecCol, dim)
-    writeBqParams(df.sparkSession, thr, path)
-    labeled.select(col(idCol), bqWords(toDoubleArr(col(vecCol)), thr).as("words"),
-        col("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$path/words")
-  }
-
-  /** [[buildIvfSq8]] and [[buildIvfBq]] over ONE shared IVF base: the
-    * coarse centroids come from the caller (typically a sampled learn —
-    * quantizer statistics from a hash sample are the at-scale posture;
-    * the full corpus pays only the assignment pass, once, inside the
-    * cell-partitioned vectors write), and the SQ8 codes and BQ words
-    * are both map-only projections of the written vectors — so serving
-    * BOTH compressed rungs costs one assignment pass and one
-    * corpus-heavy vectors layout instead of two of each.
-    * [[ivfSq8Probe]]/[[ivfSq8ProbeBatch]] read `path` directly;
-    * [[ivfBqProbe]]/[[ivfBqProbeBatch]] read `bqPath` with
-    * `vectorsDir = Some(path)` for the rerank.
-    */
-  def buildIvfSq8BqShared(df: DataFrame, idCol: String, vecCol: String,
-      path: String, bqPath: String, cents: Seq[Seq[Double]], dim: Int): Unit = {
-    val labeled = withCellLabels(df, idCol, vecCol, cents)
-    buildIvf(labeled, idCol, "label", vecCol, path)
-    val fromDisk = df.sparkSession.read.parquet(s"$path/vectors")
-    val prm = sq8Params(df, idCol, vecCol, dim)
-    writeSq8Params(df.sparkSession, prm, path)
-    sq8EncodeTo(fromDisk, idCol, vecCol, prm, s"$path/codes", keep = Seq("label"))
-    // the BQ rung gets its own dir (its per-dim thresholds and the SQ8
-    // affine params share the `params` table name) holding params +
-    // words + a copy of the K-row centroids; the corpus-heavy vectors
-    // stay ONLY under `path` — probe with vectorsDir = Some(path)
-    val thr = bqThresholds(df, idCol, vecCol, dim)
-    writeBqParams(df.sparkSession, thr, bqPath)
-    fromDisk.select(col(idCol),
-        bqWords(toDoubleArr(col(vecCol)), thr).as("words"), col("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$bqPath/words")
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(s"$path/centroids")
-    val dst = new org.apache.hadoop.fs.Path(s"$bqPath/centroids")
-    val fs = src.getFileSystem(conf)
-    fs.delete(dst, true)
-    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf): Unit
-  }
-
-  /** [[buildIvfSq8BqShared]] with the corpus-heavy vectors write
-    * CHUNKED over the cell range (VERDICT r17 #8): the one-shot form's
-    * partitionBy writer SORTS the whole corpus by cell per task — a
-    * transient spill that doubles the vectors table's footprint on
-    * local disk mid-write (the wall that capped the 100×-ANN rehearsal
-    * at 4M×768 on a 76 GB box). Here the dim-wide rows never
-    * reorganize all at once: the assignment runs ONCE into a narrow
-    * (id, label) table (`$path/assign`, ~16 B/row), then each of
-    * `ranges` passes re-evaluates the (lazily-defined) corpus,
-    * broadcast-joins its cell range's labels, and writes only
-    * chunk-sized data through the partition sorter — peak disk =
-    * final artifacts + one chunk's spill. Trade: `ranges` extra corpus
-    * evaluations (cheap for generated/columnar-pruned sources) buys an
-    * O(corpus)-smaller transient. Learners (per-dim SQ8 min/max, BQ
-    * decimal means, per-cell centroid means) are order-independent, so
-    * the served index is probe-identical to the one-shot build
-    * (IndexSpec-pinned).
-    */
-  def buildIvfSq8BqSharedChunked(df: DataFrame, idCol: String, vecCol: String,
-      path: String, bqPath: String, cents: Seq[Seq[Double]], dim: Int,
-      ranges: Int = 8): Unit = {
-    require(ranges >= 1)
-    val spark = df.sparkSession
-    val k = cents.size
-    withCellLabels(df, idCol, vecCol, cents)
-      .select(col(idCol), col("label"))
-      .write.mode("overwrite").parquet(s"$path/assign")
-    (0 until ranges).foreach { ri =>
-      val lo = ri * k / ranges
-      val hi = (ri + 1) * k / ranges
-      if (lo < hi) {
-        val chunkLabels = spark.read.parquet(s"$path/assign")
-          .filter(col("label") >= lo && col("label") < hi)
-        // narrow the corpus FIRST: a source carrying its own `label`
-        // column must not collide with the assignment's
-        df.select(col(idCol), col(vecCol))
-          .join(broadcast(chunkLabels), idCol)
-          .select(col(idCol), col(vecCol), col("label"))
-          .write.mode("append").partitionBy("label").parquet(s"$path/vectors")
-      }
-    }
-    val fromDisk = spark.read.parquet(s"$path/vectors")
-    centroidComponents(fromDisk, "label", vecCol)
-      .groupBy(col("label"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
-        s => s.getField("c")).as("centroid"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    val prm = sq8Params(fromDisk, idCol, vecCol, dim)
-    writeSq8Params(spark, prm, path)
-    sq8EncodeTo(fromDisk, idCol, vecCol, prm, s"$path/codes", keep = Seq("label"))
-    val thr = bqThresholds(fromDisk, idCol, vecCol, dim)
-    writeBqParams(spark, thr, bqPath)
-    fromDisk.select(col(idCol),
-        bqWords(toDoubleArr(col(vecCol)), thr).as("words"), col("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$bqPath/words")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(s"$path/centroids")
-    val dst = new org.apache.hadoop.fs.Path(s"$bqPath/centroids")
-    val fs = src.getFileSystem(conf)
-    fs.delete(dst, true)
-    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf): Unit
-  }
-
-  /** ANN probe over a [[buildIvfBq]] index — the [[ivfSq8Probe]] shape
-    * with integer-exact Hamming as the first pass: rank cells from the
-    * K-row centroids, Σ popcount(xor) over ONLY the nprobe best cells'
-    * words (partition-pruned; zero FP before the rerank join),
-    * exact-rerank against the cell-pruned vectors.
-    */
-  def ivfBqProbe(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      idCol: String, labelCol: String, vecCol: String, query: Seq[Double],
-      k: Int = 10, nprobe: Int = 2, rerank: Int = 50, digits: Int = 6,
-      // a SHARED-base deployment ([[buildIvfSq8BqShared]]) stores the
-      // corpus-heavy cell-partitioned vectors once; the BQ rung's own
-      // dir holds only params + words + the K-row centroids
-      vectorsDir: Option[String] = None): DataFrame = {
-    require(nprobe >= 1 && rerank >= k)
-    val cells = rankIndexCells(spark, indexPath, query, digits).take(nprobe)
-    def prunedAt(root: String, table: String): DataFrame = {
-      val df = readIdx(spark, s"$root/$table")
-      val t = df.schema(df.schema.fieldIndex(labelCol)).dataType
-      df.filter(col(labelCol).isin(cells.map(c => lit(c).cast(t)): _*))
-    }
-    def pruned(table: String): DataFrame = prunedAt(indexPath, table)
-    val thr = readBqParams(spark, indexPath)
-    require(thr.size == query.size, s"dim ${thr.size} != query ${query.size}")
-    val cand = pruned("words")
-      .select(col(idCol), bqHammingLit(bqPackQuery(query, thr)).as("hamming"))
-      .orderBy(col("hamming").asc, col(idCol))
-      .limit(rerank)
-      .select(col(idCol))
-    prunedAt(vectorsDir.getOrElse(indexPath), "vectors")
-      .join(broadcast(cand), idCol)
-      .select(col(idCol), cosineTo(query, vecCol, digits).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** BATCH form of [[ivfBqProbe]] — per-query cell ranking, the words
-    * scan restricted to the batch's probed-cell union via the
-    * size-gated cell join, integer-only Hamming per (query, words
-    * row), qid-windowed top-rerank ascending, exact rerank against the
-    * cell-pruned vectors. Bit-identical to a loop of single probes
-    * (integer first pass; IndexSpec-pinned).
-    */
-  def ivfBqProbeBatch(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, idCol: String, labelCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qVecCol: String,
-      k: Int = 10, nprobe: Int = 2, rerank: Int = 50,
-      digits: Int = 6, broadcastMaxRows: Long = 1000000L,
-      vectorsDir: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nprobe >= 1 && rerank >= k)
-    val thr = readBqParams(spark, indexPath)
-    val (qnBase, nq, qrows) = literalQueryFrame(queries, qidCol, qVecCol,
-      thr.size, broadcastMaxRows)
-    val qn = qnBase.withColumn("__qw", bqWords(col("__qe"), thr))
-    // the probe set carries the packed query words (dim/32 longs per
-    // row, n_q × nprobe rows) — below the literal-query gate it is
-    // driver arithmetic ([[driverCellProbeSet]] with [[bqPackQuery]],
-    // the documented literal twin of [[bqWords]]); above it the
-    // distributed window plan + [[literalProbeSet]] as before
-    val (probeLit, cells) = qrows.flatMap { rows =>
-      driverCellProbeSet(spark, indexPath, rows, nprobe, digits,
-        qnBase.schema("__qid").dataType,
-        queryWords = Some((qe: Array[Double]) =>
-          bqPackQuery(scala.collection.immutable.ArraySeq
-            .unsafeWrapArray(qe), thr)))
-    }.getOrElse {
-      literalProbeSet(
-        batchCellProbeSet(spark, indexPath, labelCol, qn, nprobe, digits)
-          .select(col("__qid"), col("__qw"), col("__cell")),
-        nq * nprobe, broadcastMaxRows)
-    }
-    // static cell pruning before the spread — VERDICT r17 #1, see
-    // ivfPqProbeBatch
-    val (prunedRows, prunedSizes) =
-      parquetCensus(spark, s"$indexPath/words", labelCol, cells)
-    val words = spreadForScore(
-      cellUnionPruned(readIdx(spark, s"$indexPath/words"), labelCol, cells),
-      if (cells.isEmpty) 0L else prunedRows * nq * nprobe / cells.size,
-      prunedSizes)
-    val paired = words.join(sizeGated(probeLit, nq * nprobe, broadcastMaxRows),
-      words(labelCol) === probeLit("__cell"))
-    val ham = aggregate(
-      zip_with(col("words"), col("__qw"), (a, b) => bit_count(a.bitwiseXOR(b))),
-      lit(0L), (acc, x) => acc + x)
-    val cand = topKPerQid(
-      paired
-        .withColumn("__ham", ham)
-        .select(col("__qid"), col("__ham"), col("__cell"), col(idCol)),
-      col("__ham"), keyDesc = false, rerank, idCol, Seq("__cell"))
-      .select(col("__qid"), col("__cell"), col(idCol))
-    heapScoped(batchCellExactRerank(spark, vectorsDir.getOrElse(indexPath),
-      labelCol, cand, qn, idCol, vecCol, k, digits, nq, rerank,
-      broadcastMaxRows, cells))
-  }
-
-  /** Per-partition COMPOSED IVF-BQ build against a FROZEN coarse
-    * quantizer and FROZEN thresholds — the incremental-refresh unit of
-    * [[buildIvfBq]]: one assignment pass + one binarize projection.
-    */
-  def buildIvfBqPart(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]], thr: Seq[Double], path: String): Unit = {
-    buildIvfPart(df, idCol, vecCol, centroids, path)
-    withCellLabels(df, idCol, vecCol, centroids)
-      .select(col(idCol), bqWords(toDoubleArr(col(vecCol)), thr).as("words"),
-        col("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(s"$path/words")
-  }
-
-  /** Merge committed per-partition IVF-BQ indexes — vectors + combined
-    * centroid means via [[mergeIvf]], words by file copy, frozen
-    * thresholds written once ([[mergeIvfSq8]]'s shape).
-    */
-  def mergeIvfBq(spark: org.apache.spark.sql.SparkSession, thr: Seq[Double],
-      partPaths: Seq[String], path: String): Unit = {
-    mergeIvf(spark, partPaths, path)
-    copyIndexParts(spark, partPaths, "words", path)
-    writeBqParams(spark, thr, path)
-  }
-
-  /** Incremental COMPOSED IVF-BQ — the [[ensureIncrementalIvfSq8]]
-    * lifecycle with sign-bit words: appending an hour assigns +
-    * binarizes only that hour, merge is file copies + the K-row
-    * centroid re-derivation, probe ≡ monolithic under the same frozen
-    * learners.
-    */
-  def ensureIncrementalIvfBq(spark: org.apache.spark.sql.SparkSession,
-      kind: String, sourceDir: String, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]], thr: Seq[Double]): String =
-    IndexStore.ensureIncremental(kind, spark, sourceDir) { (part, tmp) =>
-      buildIvfBqPart(spark.read.parquet(part), idCol, vecCol, centroids, thr, tmp)
-    } { (parts, tmp) => mergeIvfBq(spark, thr, parts, tmp) }
 
   /** DuckDB oracle twin of the full BQ chain (`bq_hamming_topk`):
     * per-dim decimal-exact mean thresholds over the corpus minus the

@@ -35,8 +35,9 @@ object Service {
 
   /** A derived index the maintenance ticker keeps fresh (VERDICT r13
     * #6: retention + compaction ran on the ticker but a standing
-    * service's indexes silently aged). `refresh` is expected to be one
-    * of the `ensureIncremental*` family ([[graft.ext.IndexStore]]):
+    * service's indexes silently aged). `refresh` is expected to be an
+    * [[graft.ext.IndexStore.ensureIncremental]] lifecycle — for ANN
+    * indexes the codec × layout engine's [[graft.ext.Ann.ensureIncremental]]:
     * idempotent, fingerprint-keyed, and metadata-cheap when nothing
     * changed — appending an hour to the corpus builds exactly that
     * hour's part index on the next tick, any other tick is a cache

@@ -14,7 +14,7 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   * (parquet doubles roundtrip IEEE-exactly either way). Every caller
   * sorts the rows it reads (the tables are keyed), so file/row order
   * never matters — the same argument the footer-count reader
-  * ([[graft.ext.Similarity.parquetRowCount]]) already relies on.
+  * ([[graft.ext.Ann]]'s parquet census) already relies on.
   *
   * Supports exactly the param tables' shapes: primitive int/long/
   * float/double/boolean/binary-UTF8 columns and array<double>/

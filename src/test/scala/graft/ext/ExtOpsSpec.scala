@@ -477,22 +477,22 @@ class ExtOpsSpec extends SparkSpec {
   test("flat batch probes log the corpus x nq steer above the threshold") {
     val docsDir = java.nio.file.Files.createTempDirectory("graft-flatguard").toString
     val emb = graft.Tables.embeddings(spark, sf).filter(col("vec_id") =!= 0)
-    Similarity.buildSq8(emb, "vec_id", "embedding", docsDir, dim = 64)
+    Ann.build(emb, "vec_id", "embedding", docsDir, Ann.SQ8(64), Ann.Flat())
     val queries = graft.Tables.embeddings(spark, sf)
       .filter(col("vec_id") < 2)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val before = Similarity.FlatBatchGuard.fired.get()
+    val before = Ann.FlatBatchGuard.fired.get()
     // silent at the default 10^9 threshold on a fixture-sized corpus...
-    Similarity.sq8ProbeBatch(spark, docsDir, emb, "vec_id", "embedding",
-      queries, "qid", "qvec").count()
-    assert(Similarity.FlatBatchGuard.fired.get() == before,
+    Ann.probeBatch(spark, docsDir, Ann.Flat(emb), "vec_id", "embedding", queries, "qid",
+      "qvec").count()
+    assert(Ann.FlatBatchGuard.fired.get() == before,
       "guard fired below threshold")
     // ...and fires once the scored-row estimate crosses it
     System.setProperty("graft.flatbatch.warn.rows", "1")
     try {
-      Similarity.sq8ProbeBatch(spark, docsDir, emb, "vec_id", "embedding",
-        queries, "qid", "qvec").count()
-      assert(Similarity.FlatBatchGuard.fired.get() == before + 1,
+      Ann.probeBatch(spark, docsDir, Ann.Flat(emb), "vec_id", "embedding", queries, "qid",
+        "qvec").count()
+      assert(Ann.FlatBatchGuard.fired.get() == before + 1,
         "guard did not fire above threshold")
     } finally System.clearProperty("graft.flatbatch.warn.rows")
   }

@@ -117,31 +117,32 @@ class IncrementalIndexSpec extends SparkSpec {
     def ensureInc(): String =
       IndexStore.ensureIncremental("incpq", spark, src) { (part, tmp) =>
         partBuilds += 1
-        Similarity.buildPqPart(spark.read.parquet(part), "vec_id", "embedding", cbs, tmp)
-      } { (parts, tmp) => Similarity.mergePq(spark, cbs, parts, tmp) }
+        Ann.buildPart(spark.read.parquet(part), "vec_id", "embedding", Ann.PqCodec(cbs),
+          Ann.Flat(), tmp)
+      } { (parts, tmp) => Ann.merge(spark, Ann.PqCodec(cbs), Ann.Flat(), parts, tmp) }
 
     val q = all.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     def probe(idx: String): Seq[(Long, Double)] =
-      Similarity.pqAdcTopK(spark.read.parquet(s"$idx/codes"), "vec_id",
-        Similarity.readPqCodebooks(spark, idx), q)
+      Ann.candidates(spark.read.parquet(s"$idx/codes"),
+        Ann.PqCodec.read(spark, idx), "vec_id", q, 10)
         .as[(Long, Double)].collect().toSeq
     def inlineProbe(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
-      Similarity.pqAdcTopK(
-        Similarity.pqEncode(df, "vec_id", "embedding", cbs), "vec_id", cbs, q)
+      Ann.candidates(Ann.PqCodec(cbs).encode(df, "vec_id", "embedding", Nil),
+        Ann.PqCodec(cbs), "vec_id", q, 10)
         .as[(Long, Double)].collect().toSeq
 
     val i1 = ensureInc()
     assert(partBuilds == 2)
     assert(ensureInc() == i1 && partBuilds == 2) // idempotent cache hit
     // the merge's persisted codebooks are bit-identical to the learn
-    assert(Similarity.readPqCodebooks(spark, i1) == cbs)
+    assert(Ann.PqCodec.read(spark, i1).cbs == cbs)
     assert(probe(i1) == inlineProbe(initial))
-    // monolithic buildPq over the same corpus learns the same
+    // a monolithic flat PQ build over the same corpus learns the same
     // (deterministic) codebooks and probes identically
     val mono1 = tmpDir("inc-pq-mono1")
-    Similarity.buildPq(initial, "vec_id", "embedding", mono1,
-      dim = 24, m = 4, ksub = 8)
+    Ann.build(initial, "vec_id", "embedding", mono1, Ann.PQ(dim = 24, m = 4, ksub = 8),
+      Ann.Flat())
     assert(probe(mono1) == probe(i1))
 
     // --- a new hour of vectors arrives
@@ -167,30 +168,31 @@ class IncrementalIndexSpec extends SparkSpec {
     def ensureInc(): String =
       IndexStore.ensureIncremental("incivfpq", spark, src) { (part, tmp) =>
         partBuilds += 1
-        Similarity.buildIvfPqPart(spark.read.parquet(part), "vec_id", "embedding",
-          cents, cbs, tmp)
-      } { (parts, tmp) => Similarity.mergeIvfPq(spark, cbs, parts, tmp) }
+        Ann.buildPart(spark.read.parquet(part), "vec_id", "embedding", Ann.PqCodec(cbs),
+          Ann.Ivf(centroids = cents), tmp)
+      } { (parts, tmp) => Ann.merge(spark, Ann.PqCodec(cbs), Ann.Ivf(), parts, tmp) }
 
     val q = all.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     def probeDf(idx: String) =
-      Similarity.ivfPqProbe(spark, idx, "vec_id", "label", "embedding", q,
-        k = 10, nprobe = 2, rerank = 60)
+      Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q, k = 10,
+        rerank = 60)
     def probe(idx: String): Seq[(Long, Double)] =
       probeDf(idx).as[(Long, Double)].collect().toSeq
     // monolithic-with-frozen-learners twin: the single-part merge IS
-    // buildIvfPq's layout under the same (deterministic) learners
+    // the monolithic IVF-PQ build's layout under the same (deterministic) learners
     def mono(df: org.apache.spark.sql.DataFrame, tag: String): String = {
       val part = tmpDir(s"inc-ivfpq-$tag-part"); val out = tmpDir(s"inc-ivfpq-$tag")
-      Similarity.buildIvfPqPart(df, "vec_id", "embedding", cents, cbs, part)
-      Similarity.mergeIvfPq(spark, cbs, Seq(part), out)
+      Ann.buildPart(df, "vec_id", "embedding", Ann.PqCodec(cbs), Ann.Ivf(centroids = cents),
+        part)
+      Ann.merge(spark, Ann.PqCodec(cbs), Ann.Ivf(), Seq(part), out)
       out
     }
 
     val i1 = ensureInc()
     assert(partBuilds == 2)
     assert(ensureInc() == i1 && partBuilds == 2) // idempotent cache hit
-    assert(Similarity.readPqCodebooks(spark, i1) == cbs)
+    assert(Ann.PqCodec.read(spark, i1).cbs == cbs)
     assert(probe(i1) == probe(mono(initial, "m1")))
 
     // --- a new hour of vectors arrives
@@ -220,17 +222,18 @@ class IncrementalIndexSpec extends SparkSpec {
     val prm = Similarity.sq8Params(initial, "vec_id", "embedding", dim = 24)
 
     def ensureInc(): String =
-      Similarity.ensureIncrementalIvfSq8(spark, "incivfsq8", src,
-        "vec_id", "embedding", cents, prm)
+      Ann.ensureIncremental(spark, "incivfsq8", src, "vec_id", "embedding",
+        Ann.Sq8Codec(prm), Ann.Ivf(centroids = cents))
     val q = all.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     def probe(idx: String): Seq[(Long, Double)] =
-      Similarity.ivfSq8Probe(spark, idx, "vec_id", "label", "embedding", q,
-        k = 10, nprobe = 2, rerank = 60).as[(Long, Double)].collect().toSeq
+      Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q, k = 10,
+        rerank = 60).as[(Long, Double)].collect().toSeq
     def mono(df: org.apache.spark.sql.DataFrame, tag: String): String = {
       val part = tmpDir(s"inc-ivfsq8-$tag-part"); val out = tmpDir(s"inc-ivfsq8-$tag")
-      Similarity.buildIvfSq8Part(df, "vec_id", "embedding", cents, prm, part)
-      Similarity.mergeIvfSq8(spark, prm, Seq(part), out)
+      Ann.buildPart(df, "vec_id", "embedding", Ann.Sq8Codec(prm),
+        Ann.Ivf(centroids = cents), part)
+      Ann.merge(spark, Ann.Sq8Codec(prm), Ann.Ivf(), Seq(part), out)
       out
     }
 
@@ -253,17 +256,18 @@ class IncrementalIndexSpec extends SparkSpec {
     val thr = Similarity.bqThresholds(initial, "vec_id", "embedding", dim = 24)
 
     def ensureInc(): String =
-      Similarity.ensureIncrementalIvfBq(spark, "incivfbq", src,
-        "vec_id", "embedding", cents, thr)
+      Ann.ensureIncremental(spark, "incivfbq", src, "vec_id", "embedding", Ann.BqCodec(thr),
+        Ann.Ivf(centroids = cents))
     val q = all.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     def probe(idx: String): Seq[(Long, Double)] =
-      Similarity.ivfBqProbe(spark, idx, "vec_id", "label", "embedding", q,
-        k = 10, nprobe = 2, rerank = 60).as[(Long, Double)].collect().toSeq
+      Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q, k = 10,
+        rerank = 60).as[(Long, Double)].collect().toSeq
     def mono(df: org.apache.spark.sql.DataFrame, tag: String): String = {
       val part = tmpDir(s"inc-ivfbq-$tag-part"); val out = tmpDir(s"inc-ivfbq-$tag")
-      Similarity.buildIvfBqPart(df, "vec_id", "embedding", cents, thr, part)
-      Similarity.mergeIvfBq(spark, thr, Seq(part), out)
+      Ann.buildPart(df, "vec_id", "embedding", Ann.BqCodec(thr), Ann.Ivf(centroids = cents),
+        part)
+      Ann.merge(spark, Ann.BqCodec(thr), Ann.Ivf(), Seq(part), out)
       out
     }
 
@@ -275,8 +279,8 @@ class IncrementalIndexSpec extends SparkSpec {
     assert(i2 != i1)
     assert(probe(i2) == probe(mono(all.drop("label"), "m2")))
     // the merged multi-part layout still partition-prunes words+vectors
-    val scans = Similarity.ivfBqProbe(spark, i2, "vec_id", "label",
-      "embedding", q, k = 10, nprobe = 2, rerank = 60)
+    val scans = Ann.probe(spark, i2, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q, k = 10,
+      rerank = 60)
       .queryExecution.sparkPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }
@@ -293,7 +297,7 @@ class IncrementalIndexSpec extends SparkSpec {
     all.filter(col("vec_id") % 3 === 0).drop("label").write.parquet(s"$src/part=0")
     all.filter(col("vec_id") % 3 === 1).drop("label").write.parquet(s"$src/part=1")
     val initial = all.filter(col("vec_id") % 3 =!= 2).drop("label")
-    // frozen learners, learned exactly as buildIvfPqResidual would
+    // frozen learners, learned exactly as a residual IVF-PQ build would
     // (same deterministic quantized updates, same iters) — so the
     // monolithic twin below relearning them lands on identical values
     val cents = Similarity.kmeansCentroids(initial, "vec_id", "embedding", 6, 3)
@@ -303,24 +307,24 @@ class IncrementalIndexSpec extends SparkSpec {
       dim = 24, m = 4, ksub = 8)
 
     def ensureIncFull(): String =
-      Similarity.ensureIncrementalIvfPqResidual(spark, "incivfpqres", src,
-        "vec_id", "embedding", cents, cbs)
+      Ann.ensureIncremental(spark, "incivfpqres", src, "vec_id", "embedding",
+        Ann.PqCodec(cbs, quantizer = Some(cents)), Ann.Ivf(centroids = cents))
 
     val q = all.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     def probe(idx: String): Seq[(Long, Double)] =
-      Similarity.ivfPqResidualProbe(spark, idx, "vec_id", "label", "embedding",
-        q, k = 10, nprobe = 2, rerank = 60).as[(Long, Double)].collect().toSeq
+      Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q, k = 10,
+        rerank = 60).as[(Long, Double)].collect().toSeq
 
     val i1 = ensureIncFull()
     assert(ensureIncFull() == i1) // idempotent cache hit
-    assert(Similarity.readPqCodebooks(spark, i1) == cbs)
-    assert(Similarity.readQuantizer(spark, i1) == cents)
+    assert(Ann.PqCodec.read(spark, i1).cbs == cbs)
+    assert(Ann.PqCodec.read(spark, i1).quantizer.get == cents)
     // monolithic twin: the REAL monolithic builder relearns the same
     // deterministic learners over the same corpus
     val mono1 = tmpDir("inc-ivfpqres-mono1")
-    Similarity.buildIvfPqResidual(initial, "vec_id", "embedding", mono1,
-      k = 6, dim = 24, m = 4, ksub = 8)
+    Ann.build(initial, "vec_id", "embedding", mono1,
+      Ann.PQ(dim = 24, m = 4, ksub = 8, residual = true), Ann.Ivf(k = 6))
     assert(probe(mono1) == probe(i1))
 
     // --- a new hour arrives
@@ -332,9 +336,9 @@ class IncrementalIndexSpec extends SparkSpec {
     // (the incremental contract: the quantizer/codebooks move only on a
     // periodic full rebuild)
     val part2 = tmpDir("inc-ivfpqres-mono2-part")
-    Similarity.buildIvfPqResidualPart(all.drop("label"), "vec_id", "embedding",
-      cents, cbs, part2)
-    Similarity.mergeIvfPq(spark, cbs, Seq(part2), mono2)
+    Ann.buildPart(all.drop("label"), "vec_id", "embedding",
+      Ann.PqCodec(cbs, quantizer = Some(cents)), Ann.Ivf(centroids = cents), part2)
+    Ann.merge(spark, Ann.PqCodec(cbs), Ann.Ivf(), Seq(part2), mono2)
     val fs = new org.apache.hadoop.fs.Path(mono2)
       .getFileSystem(spark.sessionState.newHadoopConf())
     org.apache.hadoop.fs.FileUtil.copy(fs,
@@ -351,36 +355,38 @@ class IncrementalIndexSpec extends SparkSpec {
     all.filter(col("vec_id") % 3 === 1).drop("label").write.parquet(s"$src/part=1")
     val initial = all.filter(col("vec_id") % 3 =!= 2).drop("label")
     // learn once on the initial corpus, freeze (the one-pass exact
-    // learners — identical to what buildSq8/buildBq would derive)
+    // learners — identical to what a flat SQ8/BQ build would derive)
     val prm = Similarity.sq8Params(initial, "vec_id", "embedding", dim = 24)
     val thr = Similarity.bqThresholds(initial, "vec_id", "embedding", dim = 24)
     val q = all.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
 
     def probeSq8(idx: String): Seq[(Long, Double)] =
-      Similarity.sq8AdcRerank(spark, idx, all.drop("label"), "vec_id",
-        "embedding", q, k = 10, rerank = 60).as[(Long, Double)].collect().toSeq
+      Ann.probe(spark, idx, Ann.Flat(all.drop("label")), "vec_id", "embedding", q, k = 10,
+        rerank = 60).as[(Long, Double)].collect().toSeq
     def probeBq(idx: String): Seq[(Long, Double)] =
-      Similarity.bqHammingRerank(spark, idx, all.drop("label"), "vec_id",
-        "embedding", q, k = 10, rerank = 60).as[(Long, Double)].collect().toSeq
+      Ann.probe(spark, idx, Ann.Flat(all.drop("label")), "vec_id", "embedding", q, k = 10,
+        rerank = 60).as[(Long, Double)].collect().toSeq
 
     def incSq8(): String =
-      Similarity.ensureIncrementalSq8(spark, "incsq8", src, "vec_id", "embedding", prm)
+      Ann.ensureIncremental(spark, "incsq8", src, "vec_id", "embedding", Ann.Sq8Codec(prm),
+        Ann.Flat())
     def incBq(): String =
-      Similarity.ensureIncrementalBq(spark, "incbq", src, "vec_id", "embedding", thr)
+      Ann.ensureIncremental(spark, "incbq", src, "vec_id", "embedding", Ann.BqCodec(thr),
+        Ann.Flat())
 
     val s1 = incSq8()
     assert(incSq8() == s1) // idempotent cache hit
     val b1 = incBq()
     assert(incBq() == b1)
     // monolithic twins over the same corpus: the one-pass learners are
-    // deterministic, so buildSq8/buildBq relearn identical params and
+    // deterministic, so flat SQ8/BQ builds relearn identical params and
     // the probes must agree exactly
     val monoS = tmpDir("inc-sq8-mono")
-    Similarity.buildSq8(initial, "vec_id", "embedding", monoS, dim = 24)
+    Ann.build(initial, "vec_id", "embedding", monoS, Ann.SQ8(24), Ann.Flat())
     assert(probeSq8(s1) == probeSq8(monoS))
     val monoB = tmpDir("inc-bq-mono")
-    Similarity.buildBq(initial, "vec_id", "embedding", monoB, dim = 24)
+    Ann.build(initial, "vec_id", "embedding", monoB, Ann.BQ(24), Ann.Flat())
     assert(probeBq(b1) == probeBq(monoB))
 
     // --- a new hour arrives: only that partition encodes (frozen params)
@@ -390,14 +396,16 @@ class IncrementalIndexSpec extends SparkSpec {
     assert(s2 != s1 && b2 != b1)
     // monolithic-with-frozen-params twins over the combined corpus
     val monoS2p = tmpDir("inc-sq8-mono2-part")
-    Similarity.buildSq8Part(all.drop("label"), "vec_id", "embedding", prm, monoS2p)
+    Ann.buildPart(all.drop("label"), "vec_id", "embedding", Ann.Sq8Codec(prm), Ann.Flat(),
+      monoS2p)
     val monoS2 = tmpDir("inc-sq8-mono2")
-    Similarity.mergeSq8(spark, prm, Seq(monoS2p), monoS2)
+    Ann.merge(spark, Ann.Sq8Codec(prm), Ann.Flat(), Seq(monoS2p), monoS2)
     assert(probeSq8(s2) == probeSq8(monoS2))
     val monoB2p = tmpDir("inc-bq-mono2-part")
-    Similarity.buildBqPart(all.drop("label"), "vec_id", "embedding", thr, monoB2p)
+    Ann.buildPart(all.drop("label"), "vec_id", "embedding", Ann.BqCodec(thr), Ann.Flat(),
+      monoB2p)
     val monoB2 = tmpDir("inc-bq-mono2")
-    Similarity.mergeBq(spark, thr, Seq(monoB2p), monoB2)
+    Ann.merge(spark, Ann.BqCodec(thr), Ann.Flat(), Seq(monoB2p), monoB2)
     assert(probeBq(b2) == probeBq(monoB2))
   }
 
@@ -415,14 +423,14 @@ class IncrementalIndexSpec extends SparkSpec {
     def ensureInc(): String =
       IndexStore.ensureIncremental("incivf", spark, src) { (part, tmp) =>
         partBuilds += 1
-        Similarity.buildIvfPart(spark.read.parquet(part), "vec_id", "embedding", cents, tmp)
-      } { (parts, tmp) => Similarity.mergeIvf(spark, parts, tmp) }
+        Ann.buildPart(spark.read.parquet(part), "vec_id", "embedding", Ann.Exact,
+          Ann.Ivf(centroids = cents), tmp)
+      } { (parts, tmp) => Ann.merge(spark, Ann.Exact, Ann.Ivf(), parts, tmp) }
 
     def probe(idx: String, nprobe: Int): Seq[(Long, Double)] = {
       val q = all.filter(col("vec_id") === 0)
         .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
-      Similarity.ivfProbe(spark, idx, "vec_id", "label", "embedding", q,
-        k = 10, nprobe = nprobe).as[(Long, Double)].collect().toSeq
+      Ann.probe(spark, idx, Ann.Ivf(nprobe = nprobe), "vec_id", "embedding", q, k = 10).as[(Long, Double)].collect().toSeq
     }
 
     val i1 = ensureInc()
@@ -430,9 +438,8 @@ class IncrementalIndexSpec extends SparkSpec {
     assert(ensureInc() == i1 && partBuilds == 2) // idempotent cache hit
     // monolithic twin: same frozen assignment over the same corpus
     val mono1 = tmpDir("inc-ivf-mono1")
-    Similarity.buildIvf(
-      initial.withColumn("label", Similarity.assignCell("embedding", cents)),
-      "vec_id", "label", "embedding", mono1)
+    Ann.build(initial.withColumn("label", Similarity.assignCell("embedding", cents)),
+      "vec_id", "embedding", mono1, Ann.Exact, Ann.Ivf())
     (1 to 3).foreach(np => assert(probe(i1, np) == probe(mono1, np), s"nprobe=$np"))
 
     // --- a new hour of vectors arrives
@@ -440,9 +447,8 @@ class IncrementalIndexSpec extends SparkSpec {
     val i2 = ensureInc()
     assert(partBuilds == 3, "only the appended partition may build")
     val mono2 = tmpDir("inc-ivf-mono2")
-    Similarity.buildIvf(
-      all.drop("label").withColumn("label", Similarity.assignCell("embedding", cents)),
-      "vec_id", "label", "embedding", mono2)
+    Ann.build(all.drop("label").withColumn("label", Similarity.assignCell("embedding", cents)),
+      "vec_id", "embedding", mono2, Ann.Exact, Ann.Ivf())
     (1 to 3).foreach(np => assert(probe(i2, np) == probe(mono2, np), s"nprobe=$np"))
   }
 }

@@ -90,20 +90,21 @@ class IndexSpec extends SparkSpec {
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding", 8, 3)
     val shared = tmpDir("ivf-shared"); val sharedBq = tmpDir("ivf-shared-bq")
-    Similarity.buildIvfSq8BqShared(emb, "vec_id", "embedding", shared, sharedBq,
-      cents, dim = 64)
+    Ann.build(emb, "vec_id", "embedding", shared, Ann.SQ8(64), Ann.Ivf(centroids = cents))
+    Ann.build(emb, "vec_id", "embedding", sharedBq, Ann.BQ(64),
+      Ann.Ivf(vectorsDir = Some(shared)))
     val sq8Sep = tmpDir("ivf-sq8-sep"); val bqSep = tmpDir("ivf-bq-sep")
     // the separate builds learn the same deterministic centroids
-    Similarity.buildIvfSq8(emb, "vec_id", "embedding", sq8Sep, k = 8, dim = 64)
-    Similarity.buildIvfBq(emb, "vec_id", "embedding", bqSep, k = 8, dim = 64)
+    Ann.build(emb, "vec_id", "embedding", sq8Sep, Ann.SQ8(64), Ann.Ivf(k = 8))
+    Ann.build(emb, "vec_id", "embedding", bqSep, Ann.BQ(64), Ann.Ivf(k = 8))
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq
-    assert(rows(Similarity.ivfSq8Probe(spark, shared, "vec_id", "label", "embedding", q)) ==
-      rows(Similarity.ivfSq8Probe(spark, sq8Sep, "vec_id", "label", "embedding", q)),
+    assert(rows(Ann.probe(spark, shared, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q)) ==
+      rows(Ann.probe(spark, sq8Sep, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q)),
       "shared-base SQ8 probe diverged from the separate build")
-    assert(rows(Similarity.ivfBqProbe(spark, sharedBq, "vec_id", "label", "embedding", q,
-        vectorsDir = Some(shared))) ==
-      rows(Similarity.ivfBqProbe(spark, bqSep, "vec_id", "label", "embedding", q)),
+    assert(rows(Ann.probe(spark, sharedBq, Ann.Ivf(nprobe = 2, vectorsDir = Some(shared)),
+      "vec_id", "embedding", q)) ==
+      rows(Ann.probe(spark, bqSep, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q)),
       "shared-base BQ probe diverged from the separate build")
   }
 
@@ -119,27 +120,29 @@ class IndexSpec extends SparkSpec {
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding", 8, 3)
     val one = tmpDir("ivf-chunk-one"); val oneBq = tmpDir("ivf-chunk-one-bq")
-    Similarity.buildIvfSq8BqShared(emb, "vec_id", "embedding", one, oneBq,
-      cents, dim = 64)
+    Ann.build(emb, "vec_id", "embedding", one, Ann.SQ8(64), Ann.Ivf(centroids = cents))
+    Ann.build(emb, "vec_id", "embedding", oneBq, Ann.BQ(64), Ann.Ivf(vectorsDir = Some(one)))
     val chk = tmpDir("ivf-chunk-many"); val chkBq = tmpDir("ivf-chunk-many-bq")
-    Similarity.buildIvfSq8BqSharedChunked(emb, "vec_id", "embedding", chk, chkBq,
-      cents, dim = 64, ranges = 3) // ranges not dividing K exercises the bounds
+    // ranges not dividing K exercises the bounds
+    Ann.buildBaseChunked(emb, "vec_id", "embedding", chk, cents, ranges = 3)
+    Ann.build(emb, "vec_id", "embedding", chk, Ann.SQ8(64), Ann.Ivf(vectorsDir = Some(chk)))
+    Ann.build(emb, "vec_id", "embedding", chkBq, Ann.BQ(64), Ann.Ivf(vectorsDir = Some(chk)))
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq
-    assert(rows(Similarity.ivfSq8Probe(spark, chk, "vec_id", "label", "embedding", q)) ==
-      rows(Similarity.ivfSq8Probe(spark, one, "vec_id", "label", "embedding", q)),
+    assert(rows(Ann.probe(spark, chk, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q)) ==
+      rows(Ann.probe(spark, one, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q)),
       "chunked-build SQ8 probe diverged from the one-shot build")
-    assert(rows(Similarity.ivfBqProbe(spark, chkBq, "vec_id", "label", "embedding", q,
-        vectorsDir = Some(chk))) ==
-      rows(Similarity.ivfBqProbe(spark, oneBq, "vec_id", "label", "embedding", q,
-        vectorsDir = Some(one))),
+    assert(rows(Ann.probe(spark, chkBq, Ann.Ivf(nprobe = 2, vectorsDir = Some(chk)),
+      "vec_id", "embedding", q)) ==
+      rows(Ann.probe(spark, oneBq, Ann.Ivf(nprobe = 2, vectorsDir = Some(one)), "vec_id",
+        "embedding", q)),
       "chunked-build BQ probe diverged from the one-shot build")
     // and batch probes over the chunked layout work too (the batch
     // scan pruning must tolerate the appended multi-file label dirs)
     val queries = graft.Tables.embeddings(spark, sf).filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    assert(Similarity.ivfSq8ProbeBatch(spark, chk, "vec_id", "label", "embedding",
-      queries, "qid", "qvec", k = 5, nprobe = 2, rerank = 20).count() > 0)
+    assert(Ann.probeBatch(spark, chk, Ann.Ivf(nprobe = 2), "vec_id", "embedding", queries,
+      "qid", "qvec", k = 5, rerank = 20).count() > 0)
   }
 
   test("janitor: reclaims epoch debris, dead corpora, crash orphans — and nothing else") {
@@ -272,12 +275,12 @@ class IndexSpec extends SparkSpec {
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val rest = emb.filter(col("vec_id") =!= 0)
     val idx = tmpDir("idx-ivf")
-    Similarity.buildIvf(rest, "vec_id", "label", "embedding", idx)
+    Ann.build(rest, "vec_id", "embedding", idx, Ann.Exact, Ann.Ivf())
     for (nprobe <- Seq(1, 2, 3)) {
       val oneShot = Similarity.ivfTopK(rest, "vec_id", "label", "embedding", q,
         k = 10, nprobe = nprobe).as[(Long, Double)].collect().toSeq
-      val probed = Similarity.ivfProbe(spark, idx, "vec_id", "label", "embedding", q,
-        k = 10, nprobe = nprobe).as[(Long, Double)].collect().toSeq
+      val probed = Ann.probe(spark, idx, Ann.Ivf(nprobe = nprobe), "vec_id", "embedding", q,
+        k = 10).as[(Long, Double)].collect().toSeq
       assert(probed == oneShot, s"nprobe=$nprobe")
     }
   }
@@ -287,9 +290,9 @@ class IndexSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val idx = tmpDir("idx-ivf-plan")
-    Similarity.buildIvf(emb.filter(col("vec_id") =!= 0),
-      "vec_id", "label", "embedding", idx)
-    val probe = Similarity.ivfProbe(spark, idx, "vec_id", "label", "embedding", q, k = 10)
+    Ann.build(emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", idx, Ann.Exact,
+      Ann.Ivf())
+    val probe = Ann.probe(spark, idx, Ann.Ivf(nprobe = 1), "vec_id", "embedding", q, k = 10)
     val scans = fileScans(probe)
     assert(scans.nonEmpty)
     // every scan reads the index, none the raw corpus
@@ -309,10 +312,10 @@ class IndexSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val idx = tmpDir("idx-ivfpq-plan")
-    Similarity.buildIvfPq(emb.filter(col("vec_id") =!= 0).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64, m = 4, ksub = 16)
-    val probe = Similarity.ivfPqProbe(spark, idx, "vec_id", "label", "embedding",
-      q, k = 10, nprobe = 2, rerank = 50)
+    Ann.build(emb.filter(col("vec_id") =!= 0).drop("label"), "vec_id", "embedding", idx,
+      Ann.PQ(dim = 64, m = 4, ksub = 16), Ann.Ivf(k = 8))
+    val probe = Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q, k = 10,
+      rerank = 50)
     val scans = fileScans(probe)
     assert(scans.nonEmpty)
     val roots = scans.flatMap(_.relation.location.rootPaths.map(_.toString))
@@ -341,10 +344,10 @@ class IndexSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val idx = tmpDir("idx-ivfsq8-plan")
-    Similarity.buildIvfSq8(emb.filter(col("vec_id") =!= 0).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64)
-    val probe = Similarity.ivfSq8Probe(spark, idx, "vec_id", "label", "embedding",
-      q, k = 10, nprobe = 2, rerank = 50)
+    Ann.build(emb.filter(col("vec_id") =!= 0).drop("label"), "vec_id", "embedding", idx,
+      Ann.SQ8(64), Ann.Ivf(k = 8))
+    val probe = Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q, k = 10,
+      rerank = 50)
     val scans = fileScans(probe)
     assert(scans.nonEmpty)
     val roots = scans.flatMap(_.relation.location.rootPaths.map(_.toString))
@@ -370,16 +373,16 @@ class IndexSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf)
     val corpus = emb.filter(col("vec_id") >= 3).drop("label")
     val idx = tmpDir("idx-sq8-guard")
-    Similarity.buildSq8(corpus, "vec_id", "embedding", idx, dim = 64)
+    Ann.build(corpus, "vec_id", "embedding", idx, Ann.SQ8(64), Ann.Flat())
     val bad = emb.filter(col("vec_id") < 3)
       .select(col("vec_id"), slice(col("embedding"), 1, 32).as("embedding"))
     intercept[IllegalArgumentException] {
-      Similarity.sq8ProbeBatch(spark, idx, corpus, "vec_id", "embedding",
-        bad, "vec_id", "embedding")
+      Ann.probeBatch(spark, idx, Ann.Flat(corpus), "vec_id", "embedding", bad, "vec_id",
+        "embedding")
     }
     val empty = emb.filter(col("vec_id") < 0)
-    assert(Similarity.sq8ProbeBatch(spark, idx, corpus, "vec_id", "embedding",
-      empty, "vec_id", "embedding").count() == 0)
+    assert(Ann.probeBatch(spark, idx, Ann.Flat(corpus), "vec_id", "embedding", empty,
+      "vec_id", "embedding").count() == 0)
   }
 
   test("ivfOpqProbe: both data reads pruned to <= nprobe cells, no corpus scan") {
@@ -387,10 +390,10 @@ class IndexSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val idx = tmpDir("idx-ivfopq-plan")
-    Similarity.buildIvfOpq(emb.filter(col("vec_id") =!= 0).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64, m = 4, ksub = 16)
-    val probe = Similarity.ivfOpqProbe(spark, idx, "vec_id", "label", "embedding",
-      q, k = 10, nprobe = 2, rerank = 50)
+    Ann.build(emb.filter(col("vec_id") =!= 0).drop("label"), "vec_id", "embedding", idx,
+      Ann.PQ(dim = 64, m = 4, ksub = 16, opqIters = 2), Ann.Ivf(k = 8))
+    val probe = Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q, k = 10,
+      rerank = 50)
     val scans = fileScans(probe)
     assert(scans.nonEmpty)
     val roots = scans.flatMap(_.relation.location.rootPaths.map(_.toString))
@@ -448,27 +451,23 @@ class IndexSpec extends SparkSpec {
       assert(probe.count() > 0)
     }
     val idxPq = tmpDir("idx-ivfpq-batchplan")
-    Similarity.buildIvfPq(corpus, "vec_id", "embedding", idxPq,
-      k = 8, dim = 64, m = 4, ksub = 16)
-    pinned("ivf_pq_batch", Similarity.ivfPqProbeBatch(spark, idxPq,
-      "vec_id", "label", "embedding", queries, "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50), Seq("codes", "vectors"))
+    Ann.build(corpus, "vec_id", "embedding", idxPq, Ann.PQ(dim = 64, m = 4, ksub = 16),
+      Ann.Ivf(k = 8))
+    pinned("ivf_pq_batch", Ann.probeBatch(spark, idxPq, Ann.Ivf(nprobe = 2), "vec_id",
+      "embedding", queries, "vec_id", "embedding", k = 10, rerank = 50), Seq("codes", "vectors"))
     val idxRes = tmpDir("idx-ivfpqres-batchplan")
-    Similarity.buildIvfPqResidual(corpus, "vec_id", "embedding", idxRes,
-      k = 8, dim = 64, m = 4, ksub = 16)
-    pinned("ivf_pq_residual_batch", Similarity.ivfPqProbeBatch(spark, idxRes,
-      "vec_id", "label", "embedding", queries, "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50), Seq("codes", "vectors"))
+    Ann.build(corpus, "vec_id", "embedding", idxRes,
+      Ann.PQ(dim = 64, m = 4, ksub = 16, residual = true), Ann.Ivf(k = 8))
+    pinned("ivf_pq_residual_batch", Ann.probeBatch(spark, idxRes, Ann.Ivf(nprobe = 2),
+      "vec_id", "embedding", queries, "vec_id", "embedding", k = 10, rerank = 50), Seq("codes", "vectors"))
     val idxS = tmpDir("idx-ivfsq8-batchplan")
-    Similarity.buildIvfSq8(corpus, "vec_id", "embedding", idxS, k = 8, dim = 64)
-    pinned("ivf_sq8_batch", Similarity.ivfSq8ProbeBatch(spark, idxS,
-      "vec_id", "label", "embedding", queries, "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50), Seq("codes", "vectors"))
+    Ann.build(corpus, "vec_id", "embedding", idxS, Ann.SQ8(64), Ann.Ivf(k = 8))
+    pinned("ivf_sq8_batch", Ann.probeBatch(spark, idxS, Ann.Ivf(nprobe = 2), "vec_id",
+      "embedding", queries, "vec_id", "embedding", k = 10, rerank = 50), Seq("codes", "vectors"))
     val idxB = tmpDir("idx-ivfbq-batchplan")
-    Similarity.buildIvfBq(corpus, "vec_id", "embedding", idxB, k = 8, dim = 64)
-    pinned("ivf_bq_batch", Similarity.ivfBqProbeBatch(spark, idxB,
-      "vec_id", "label", "embedding", queries, "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50), Seq("words", "vectors"))
+    Ann.build(corpus, "vec_id", "embedding", idxB, Ann.BQ(64), Ann.Ivf(k = 8))
+    pinned("ivf_bq_batch", Ann.probeBatch(spark, idxB, Ann.Ivf(nprobe = 2), "vec_id",
+      "embedding", queries, "vec_id", "embedding", k = 10, rerank = 50), Seq("words", "vectors"))
   }
 
   test("batch probes scope the heap-aggregate conf to a cloned session") {
@@ -483,10 +482,9 @@ class IndexSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf)
     val corpus = emb.filter(col("vec_id") >= 3).drop("label")
     val idx = tmpDir("idx-ivfsq8-confscope")
-    Similarity.buildIvfSq8(corpus, "vec_id", "embedding", idx, k = 8, dim = 64)
-    val probe = Similarity.ivfSq8ProbeBatch(spark, idx,
-      "vec_id", "label", "embedding", emb.filter(col("vec_id") < 3),
-      "vec_id", "embedding", k = 10, nprobe = 2, rerank = 50)
+    Ann.build(corpus, "vec_id", "embedding", idx, Ann.SQ8(64), Ann.Ivf(k = 8))
+    val probe = Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 10, rerank = 50)
     assert(probe.count() > 0)
     assert(spark.conf.getOption(key) == before,
       "batch probe mutated the caller session's conf")
@@ -505,7 +503,7 @@ class IndexSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf)
     val corpus = emb.filter(col("vec_id") >= 3).drop("label")
     val idx = tmpDir("idx-sq8-censusjobs")
-    Similarity.buildSq8(corpus, "vec_id", "embedding", idx, dim = 64)
+    Ann.build(corpus, "vec_id", "embedding", idx, Ann.SQ8(64), Ann.Flat())
     val queries = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext)
@@ -517,8 +515,8 @@ class IndexSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      Similarity.sq8ProbeBatch(spark, idx, corpus, "vec_id", "embedding",
-        queries, "qid", "qvec") // constructed, never executed
+      Ann.probeBatch(spark, idx, Ann.Flat(corpus), "vec_id", "embedding", queries, "qid",
+        "qvec") // constructed, never executed
       org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext)
       // measured construction budget: 2 AQE sub-jobs each for the two
       // tiny query-frame aggregates (batch-size count + dimension
@@ -537,10 +535,10 @@ class IndexSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val idx = tmpDir("idx-ivfbq-plan")
-    Similarity.buildIvfBq(emb.filter(col("vec_id") =!= 0).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64)
-    val probe = Similarity.ivfBqProbe(spark, idx, "vec_id", "label", "embedding",
-      q, k = 10, nprobe = 2, rerank = 50)
+    Ann.build(emb.filter(col("vec_id") =!= 0).drop("label"), "vec_id", "embedding", idx,
+      Ann.BQ(64), Ann.Ivf(k = 8))
+    val probe = Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q, k = 10,
+      rerank = 50)
     val scans = fileScans(probe)
     assert(scans.nonEmpty)
     val roots = scans.flatMap(_.relation.location.rootPaths.map(_.toString))
@@ -564,10 +562,10 @@ class IndexSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0)
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
     val idx = tmpDir("idx-ivfpqres-plan")
-    Similarity.buildIvfPqResidual(emb.filter(col("vec_id") =!= 0).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64, m = 4, ksub = 16)
-    val probe = Similarity.ivfPqResidualProbe(spark, idx, "vec_id", "label",
-      "embedding", q, k = 10, nprobe = 2, rerank = 50)
+    Ann.build(emb.filter(col("vec_id") =!= 0).drop("label"), "vec_id", "embedding", idx,
+      Ann.PQ(dim = 64, m = 4, ksub = 16, residual = true), Ann.Ivf(k = 8))
+    val probe = Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q, k = 10,
+      rerank = 50)
     val scans = fileScans(probe)
     assert(scans.nonEmpty)
     val roots = scans.flatMap(_.relation.location.rootPaths.map(_.toString))
@@ -589,11 +587,10 @@ class IndexSpec extends SparkSpec {
   test("ivfPqProbeBatch equals a loop of single-query probes; windows all qid-partitioned") {
     val emb = graft.Tables.embeddings(spark, sf)
     val idx = tmpDir("idx-ivfpq-batch")
-    Similarity.buildIvfPq(emb.filter(col("vec_id") >= 3).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64, m = 4, ksub = 16)
-    val batch = Similarity.ivfPqProbeBatch(spark, idx, "vec_id", "label",
-      "embedding", emb.filter(col("vec_id") < 3), "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50)
+    Ann.build(emb.filter(col("vec_id") >= 3).drop("label"), "vec_id", "embedding", idx,
+      Ann.PQ(dim = 64, m = 4, ksub = 16), Ann.Ivf(k = 8))
+    val batch = Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 10, rerank = 50)
     // one distributed pass must produce EXACTLY what the driver loop of
     // single-query probes produces, query by query
     val got = batch.as[(Long, Long, Double)].collect()
@@ -601,8 +598,8 @@ class IndexSpec extends SparkSpec {
     (0L to 2L).foreach { qid =>
       val q = emb.filter(col("vec_id") === qid)
         .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
-      val single = Similarity.ivfPqProbe(spark, idx, "vec_id", "label",
-        "embedding", q, k = 10, nprobe = 2, rerank = 50)
+      val single = Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q,
+        k = 10, rerank = 50)
         .as[(Long, Double)].collect().toSeq
       assert(got(qid) == single, s"batch result for query $qid diverges from the single probe")
     }
@@ -617,9 +614,9 @@ class IndexSpec extends SparkSpec {
     // and candidate sets take the SHUFFLE path (the broadcast hints are
     // structurally absent from the analyzed plan), with per-query
     // results identical to the broadcast path
-    val shuffled = Similarity.ivfPqProbeBatch(spark, idx, "vec_id", "label",
-      "embedding", emb.filter(col("vec_id") < 3), "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50, broadcastMaxRows = 0L)
+    val shuffled = Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 10, rerank = 50,
+      broadcastMaxRows = 0L)
     def hintCount(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.analyzed.collect {
         case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
@@ -652,74 +649,66 @@ class IndexSpec extends SparkSpec {
     }
 
     val sq8 = tmpDir("idx-sq8-batch")
-    Similarity.buildSq8(corpus, "vec_id", "embedding", sq8, dim = 64)
-    val sq8Batch = Similarity.sq8ProbeBatch(spark, sq8, corpus, "vec_id",
-      "embedding", queriesDf, "vec_id", "embedding", k = 10, rerank = 50)
+    Ann.build(corpus, "vec_id", "embedding", sq8, Ann.SQ8(64), Ann.Flat())
+    val sq8Batch = Ann.probeBatch(spark, sq8, Ann.Flat(corpus), "vec_id", "embedding",
+      queriesDf, "vec_id", "embedding", k = 10, rerank = 50)
     val sq8Got = byQid(sq8Batch)
     pinQidWindows(sq8Batch, "sq8")
     (0L to 2L).foreach { qid =>
-      val single = Similarity.sq8AdcRerank(spark, sq8, corpus, "vec_id",
-        "embedding", queryOf(qid), k = 10, rerank = 50)
+      val single = Ann.probe(spark, sq8, Ann.Flat(corpus), "vec_id", "embedding",
+        queryOf(qid), k = 10, rerank = 50)
         .as[(Long, Double)].collect().toSeq
       assert(sq8Got(qid) == single, s"sq8 batch diverges from single probe for $qid")
     }
     // shuffle path (gate forced off) must be result-identical
-    assert(byQid(Similarity.sq8ProbeBatch(spark, sq8, corpus, "vec_id",
-      "embedding", queriesDf, "vec_id", "embedding", k = 10, rerank = 50,
-      broadcastMaxRows = 0L)) == sq8Got, "sq8 shuffle path diverges")
+    assert(byQid(Ann.probeBatch(spark, sq8, Ann.Flat(corpus), "vec_id", "embedding",
+      queriesDf, "vec_id", "embedding", k = 10, rerank = 50, broadcastMaxRows = 0L)) == sq8Got, "sq8 shuffle path diverges")
 
     val ivfSq8 = tmpDir("idx-ivfsq8-batch")
-    Similarity.buildIvfSq8(corpus, "vec_id", "embedding", ivfSq8,
-      k = 8, dim = 64)
-    val ivfBatch = Similarity.ivfSq8ProbeBatch(spark, ivfSq8, "vec_id",
-      "label", "embedding", queriesDf, "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50)
+    Ann.build(corpus, "vec_id", "embedding", ivfSq8, Ann.SQ8(64), Ann.Ivf(k = 8))
+    val ivfBatch = Ann.probeBatch(spark, ivfSq8, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      queriesDf, "vec_id", "embedding", k = 10, rerank = 50)
     val ivfGot = byQid(ivfBatch)
     pinQidWindows(ivfBatch, "ivfSq8")
     (0L to 2L).foreach { qid =>
-      val single = Similarity.ivfSq8Probe(spark, ivfSq8, "vec_id", "label",
-        "embedding", queryOf(qid), k = 10, nprobe = 2, rerank = 50)
+      val single = Ann.probe(spark, ivfSq8, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+        queryOf(qid), k = 10, rerank = 50)
         .as[(Long, Double)].collect().toSeq
       assert(ivfGot(qid) == single, s"ivfSq8 batch diverges from single probe for $qid")
     }
-    assert(byQid(Similarity.ivfSq8ProbeBatch(spark, ivfSq8, "vec_id",
-      "label", "embedding", queriesDf, "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50, broadcastMaxRows = 0L)) == ivfGot,
+    assert(byQid(Ann.probeBatch(spark, ivfSq8, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      queriesDf, "vec_id", "embedding", k = 10, rerank = 50, broadcastMaxRows = 0L)) == ivfGot,
       "ivfSq8 shuffle path diverges")
 
     val bq = tmpDir("idx-bq-batch")
-    Similarity.buildBq(corpus, "vec_id", "embedding", bq, dim = 64)
-    val bqBatch = Similarity.bqProbeBatch(spark, bq, corpus, "vec_id",
-      "embedding", queriesDf, "vec_id", "embedding", k = 10, rerank = 50)
+    Ann.build(corpus, "vec_id", "embedding", bq, Ann.BQ(64), Ann.Flat())
+    val bqBatch = Ann.probeBatch(spark, bq, Ann.Flat(corpus), "vec_id", "embedding",
+      queriesDf, "vec_id", "embedding", k = 10, rerank = 50)
     val bqGot = byQid(bqBatch)
     pinQidWindows(bqBatch, "bq")
     (0L to 2L).foreach { qid =>
-      val single = Similarity.bqHammingRerank(spark, bq, corpus, "vec_id",
-        "embedding", queryOf(qid), k = 10, rerank = 50)
+      val single = Ann.probe(spark, bq, Ann.Flat(corpus), "vec_id", "embedding",
+        queryOf(qid), k = 10, rerank = 50)
         .as[(Long, Double)].collect().toSeq
       assert(bqGot(qid) == single, s"bq batch diverges from single probe for $qid")
     }
-    assert(byQid(Similarity.bqProbeBatch(spark, bq, corpus, "vec_id",
-      "embedding", queriesDf, "vec_id", "embedding", k = 10, rerank = 50,
-      broadcastMaxRows = 0L)) == bqGot, "bq shuffle path diverges")
+    assert(byQid(Ann.probeBatch(spark, bq, Ann.Flat(corpus), "vec_id", "embedding",
+      queriesDf, "vec_id", "embedding", k = 10, rerank = 50, broadcastMaxRows = 0L)) == bqGot, "bq shuffle path diverges")
 
     val ivfBq = tmpDir("idx-ivfbq-batch")
-    Similarity.buildIvfBq(corpus, "vec_id", "embedding", ivfBq,
-      k = 8, dim = 64)
-    val ivfBqBatch = Similarity.ivfBqProbeBatch(spark, ivfBq, "vec_id",
-      "label", "embedding", queriesDf, "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50)
+    Ann.build(corpus, "vec_id", "embedding", ivfBq, Ann.BQ(64), Ann.Ivf(k = 8))
+    val ivfBqBatch = Ann.probeBatch(spark, ivfBq, Ann.Ivf(nprobe = 2), "vec_id",
+      "embedding", queriesDf, "vec_id", "embedding", k = 10, rerank = 50)
     val ivfBqGot = byQid(ivfBqBatch)
     pinQidWindows(ivfBqBatch, "ivfBq")
     (0L to 2L).foreach { qid =>
-      val single = Similarity.ivfBqProbe(spark, ivfBq, "vec_id", "label",
-        "embedding", queryOf(qid), k = 10, nprobe = 2, rerank = 50)
+      val single = Ann.probe(spark, ivfBq, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+        queryOf(qid), k = 10, rerank = 50)
         .as[(Long, Double)].collect().toSeq
       assert(ivfBqGot(qid) == single, s"ivfBq batch diverges from single probe for $qid")
     }
-    assert(byQid(Similarity.ivfBqProbeBatch(spark, ivfBq, "vec_id",
-      "label", "embedding", queriesDf, "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50, broadcastMaxRows = 0L)) == ivfBqGot,
+    assert(byQid(Ann.probeBatch(spark, ivfBq, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      queriesDf, "vec_id", "embedding", k = 10, rerank = 50, broadcastMaxRows = 0L)) == ivfBqGot,
       "ivfBq shuffle path diverges")
   }
 
@@ -730,18 +719,17 @@ class IndexSpec extends SparkSpec {
     // probe's literal-CASE term EXACTLY, query by query
     val emb = graft.Tables.embeddings(spark, sf)
     val idx = tmpDir("idx-ivfpqres-batch")
-    Similarity.buildIvfPqResidual(emb.filter(col("vec_id") >= 3).drop("label"),
-      "vec_id", "embedding", idx, k = 8, dim = 64, m = 4, ksub = 16)
-    val batch = Similarity.ivfPqProbeBatch(spark, idx, "vec_id", "label",
-      "embedding", emb.filter(col("vec_id") < 3), "vec_id", "embedding",
-      k = 10, nprobe = 2, rerank = 50)
+    Ann.build(emb.filter(col("vec_id") >= 3).drop("label"), "vec_id", "embedding", idx,
+      Ann.PQ(dim = 64, m = 4, ksub = 16, residual = true), Ann.Ivf(k = 8))
+    val batch = Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 10, rerank = 50)
     val got = batch.as[(Long, Long, Double)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(r => (-r._3, r._2)).map(r => (r._2, r._3)).toSeq).toMap
     (0L to 2L).foreach { qid =>
       val q = emb.filter(col("vec_id") === qid)
         .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
-      val single = Similarity.ivfPqResidualProbe(spark, idx, "vec_id", "label",
-        "embedding", q, k = 10, nprobe = 2, rerank = 50)
+      val single = Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q,
+        k = 10, rerank = 50)
         .as[(Long, Double)].collect().toSeq
       assert(got(qid) == single,
         s"residual batch result for query $qid diverges from the single residual probe")
@@ -762,7 +750,7 @@ class IndexSpec extends SparkSpec {
       .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
 
     val sq8 = tmpDir("idx-sq8")
-    Similarity.buildSq8(rest, "vec_id", "embedding", sq8, dim = 64)
+    Ann.build(rest, "vec_id", "embedding", sq8, Ann.SQ8(64), Ann.Flat())
     assert(spark.read.parquet(s"$sq8/params").count() == 64)
     val codes = spark.read.parquet(s"$sq8/codes")
     assert(codes.count() == n)
@@ -771,7 +759,7 @@ class IndexSpec extends SparkSpec {
     assert(codes.schema("codes").dataType ==
       org.apache.spark.sql.types.BinaryType)
     assert(codes.filter(length(col("codes")) =!= 64).count() == 0)
-    val probe = Similarity.sq8AdcRerank(spark, sq8, rest, "vec_id", "embedding", q7)
+    val probe = Ann.probe(spark, sq8, Ann.Flat(rest), "vec_id", "embedding", q7)
     // self-query: SQ8 reconstruction ranks the vector itself first at
     // exact cos 1.0 after the rerank
     val top = probe.as[(Long, Double)].collect()
@@ -783,7 +771,7 @@ class IndexSpec extends SparkSpec {
       s"unexpected scans: $roots")
 
     val bq = tmpDir("idx-bq")
-    Similarity.buildBq(rest, "vec_id", "embedding", bq, dim = 64)
+    Ann.build(rest, "vec_id", "embedding", bq, Ann.BQ(64), Ann.Flat())
     assert(spark.read.parquet(s"$bq/params").count() == 64)
     val words = spark.read.parquet(s"$bq/words")
     assert(words.count() == n)
@@ -792,8 +780,8 @@ class IndexSpec extends SparkSpec {
     // self-query at rerank=corpus (plumbing, not selectivity — Hamming-0
     // ties inside a tight cluster can outnumber a small rerank budget;
     // RecallSpec owns the quality floor)
-    val topBq = Similarity.bqHammingRerank(spark, bq, rest, "vec_id", "embedding",
-      q7, rerank = n.toInt).as[(Long, Double)].collect()
+    val topBq = Ann.probe(spark, bq, Ann.Flat(rest), "vec_id", "embedding", q7,
+      rerank = n.toInt).as[(Long, Double)].collect()
     assert(topBq.head == ((7L, 1.0)), s"bq self-query top: ${topBq.head}")
     rest.unpersist()
     ()
@@ -847,5 +835,53 @@ class IndexSpec extends SparkSpec {
     val scans = fileScans(Retrieval.bm25Probe(spark, idx, "doc_id", terms))
     val roots = scans.flatMap(_.relation.location.rootPaths.map(_.toString))
     assert(roots.nonEmpty && roots.forall(_.contains(idx)), s"non-index scans: $roots")
+  }
+
+  test("literal-query gate counts the PQ dot tables: over budget, no __tab and the same rows") {
+    val emb = graft.Tables.embeddings(spark, sf)
+    val idx = tmpDir("idx-ivfpq-tabgate")
+    Ann.build(emb.filter(col("vec_id") >= 3).drop("label"), "vec_id", "embedding", idx,
+      Ann.PQ(dim = 64, m = 4, ksub = 16), Ann.Ivf(k = 8))
+    def probe(): org.apache.spark.sql.DataFrame = Ann.probeBatch(spark, idx,
+      Ann.Ivf(nprobe = 2), "vec_id", "embedding", emb.filter(col("vec_id") < 3),
+      "vec_id", "embedding", k = 10, rerank = 50)
+    def hasTab(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.treeString.contains("__tab")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val literal = probe()
+    assert(hasTab(literal), "under the default budget the dot tables ride the probe rows")
+    // 3 queries x 64 dims x 8 B = 1.5 KB of vectors fit the budget; the
+    // dot tables add nprobe x m x ksub x 8 B = 1 KB per query, which
+    // does not — the batch must take the distributed path
+    System.setProperty("graft.batchquery.collect.maxbytes", "2048")
+    try {
+      val gated = probe()
+      assert(!hasTab(gated), "over-budget batch still ships per-row dot tables")
+      assert(rows(gated) == rows(literal), "distributed path diverges from the literal path")
+    } finally System.clearProperty("graft.batchquery.collect.maxbytes")
+  }
+
+  test("a same-path rebuild is probed with its new schema, never the memoized one") {
+    val emb = graft.Tables.embeddings(spark, sf)
+    val corpus = emb.filter(col("vec_id") =!= 0)
+    val q = emb.filter(col("vec_id") === 0)
+      .select(Similarity.toDoubleArr(col("embedding"))).head().getSeq[Double](0).toSeq
+    def probe(path: String): Seq[String] = Ann.probe(spark, path, Ann.Flat(corpus),
+      "vec_id", "embedding", q).collect().map(_.toString).toSeq
+    val p = tmpDir("idx-pq-rebuild")
+    Ann.build(corpus, "vec_id", "embedding", p, Ann.PQ(dim = 64, m = 4, ksub = 16), Ann.Flat())
+    probe(p) // memoizes the m=4 codes schema
+    Ann.build(corpus, "vec_id", "embedding", p, Ann.PQ(dim = 64, m = 8, ksub = 16), Ann.Flat())
+    val warm = probe(p)
+    // the same m=8 index under a path this JVM never read: a cold cache
+    val cold = tmpDir("idx-pq-rebuild-cold")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val src = new org.apache.hadoop.fs.Path(p)
+    val fs = src.getFileSystem(conf)
+    fs.delete(new org.apache.hadoop.fs.Path(cold), true)
+    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, new org.apache.hadoop.fs.Path(cold),
+      false, conf)
+    assert(warm == probe(cold), "rebuilt index probed through a stale schema")
   }
 }

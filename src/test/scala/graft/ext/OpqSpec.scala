@@ -93,11 +93,13 @@ class OpqSpec extends SparkSpec {
 
   test("OPQ beats plain PQ where rotation provably helps (distortion + candidates)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-opq-recall").toString
-    Similarity.buildPq(corpus, "vec_id", "embedding", s"$dir/pq", Dims, M, Ksub)
-    Similarity.buildOpq(corpus, "vec_id", "embedding", s"$dir/opq", Dims, M, Ksub)
-    val pqCbs = Similarity.readPqCodebooks(spark, s"$dir/pq")
-    val opqCbs = Similarity.readPqCodebooks(spark, s"$dir/opq")
-    val rot = Similarity.readOpqRotation(spark, s"$dir/opq")
+    Ann.build(corpus, "vec_id", "embedding", s"$dir/pq",
+      Ann.PQ(dim = Dims, m = M, ksub = Ksub), Ann.Flat())
+    Ann.build(corpus, "vec_id", "embedding", s"$dir/opq",
+      Ann.PQ(dim = Dims, m = M, ksub = Ksub, opqIters = 2), Ann.Flat())
+    val pqCbs = Ann.PqCodec.read(spark, s"$dir/pq").cbs
+    val opqCbs = Ann.PqCodec.read(spark, s"$dir/opq").cbs
+    val rot = Ann.PqCodec.read(spark, s"$dir/opq").rotation.get
 
     // (1) the paper's own objective: mean squared quantization error —
     // PQ reconstructs x from axis-aligned subspace codes, OPQ
@@ -132,12 +134,12 @@ class OpqSpec extends SparkSpec {
     val opqCodes = spark.read.parquet(s"$dir/opq/codes").cache()
     val rerank = 50
     val pqCand = meanRecall { (qid, q) =>
-      ids(Similarity.pqAdcTopK(pqCodes.filter(col("vec_id") =!= qid),
-        "vec_id", pqCbs, q, rerank))
+      ids(Ann.candidates(pqCodes.filter(col("vec_id") =!= qid), Ann.PqCodec(pqCbs),
+        "vec_id", q, rerank))
     }
     val opqCand = meanRecall { (qid, q) =>
-      ids(Similarity.pqAdcTopK(opqCodes.filter(col("vec_id") =!= qid),
-        "vec_id", opqCbs, Similarity.rotateQuery(q, rot), rerank))
+      ids(Ann.candidates(opqCodes.filter(col("vec_id") =!= qid), Ann.PqCodec(opqCbs),
+        "vec_id", Similarity.rotateQuery(q, rot), rerank))
     }
     info(f"true-top-10 candidate recall@$rerank: pq=$pqCand%.3f opq=$opqCand%.3f")
     assert(opqCand >= pqCand,
@@ -145,9 +147,8 @@ class OpqSpec extends SparkSpec {
 
     // (3) the composed probe (ADC + exact rerank) end to end
     val composed = meanRecall { (qid, q) =>
-      ids(Similarity.opqRerank(spark, s"$dir/opq",
-        corpus.filter(col("vec_id") =!= qid), "vec_id", "embedding", q,
-        k = TopK, rerank = 100))
+      ids(Ann.probe(spark, s"$dir/opq", Ann.Flat(corpus.filter(col("vec_id") =!= qid)),
+        "vec_id", "embedding", q, k = TopK, rerank = 100))
     }
     info(f"opq composed recall@$TopK (rerank=100) = $composed%.3f")
     assert(composed >= 0.85, f"OPQ composed recall $composed%.3f below 0.85")
@@ -163,19 +164,19 @@ class OpqSpec extends SparkSpec {
     // composed serving shape.
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfopq-recall").toString
     val idxCorpus = corpus.filter(col("vec_id") >= NQueries)
-    Similarity.buildIvfPq(idxCorpus, "vec_id", "embedding", s"$dir/ivfpq",
-      k = 8, dim = Dims, m = M, ksub = Ksub)
-    Similarity.buildIvfOpq(idxCorpus, "vec_id", "embedding", s"$dir/ivfopq",
-      k = 8, dim = Dims, m = M, ksub = Ksub)
+    Ann.build(idxCorpus, "vec_id", "embedding", s"$dir/ivfpq",
+      Ann.PQ(dim = Dims, m = M, ksub = Ksub), Ann.Ivf(k = 8))
+    Ann.build(idxCorpus, "vec_id", "embedding", s"$dir/ivfopq",
+      Ann.PQ(dim = Dims, m = M, ksub = Ksub, opqIters = 2), Ann.Ivf(k = 8))
     def recallOf(probe: Seq[Double] => Seq[Long]): Double =
       queries.map { case (_, q) =>
         val exact = ids(Similarity.cosineTopK(idxCorpus, "vec_id", "embedding", q, TopK))
         exact.toSet.intersect(probe(q).toSet).size.toDouble / exact.size
       }.sum / queries.size
-    val pq = recallOf(q => ids(Similarity.ivfPqProbe(spark, s"$dir/ivfpq",
-      "vec_id", "label", "embedding", q, k = TopK, nprobe = 3, rerank = 50)))
-    val opq = recallOf(q => ids(Similarity.ivfOpqProbe(spark, s"$dir/ivfopq",
-      "vec_id", "label", "embedding", q, k = TopK, nprobe = 3, rerank = 50)))
+    val pq = recallOf(q => ids(Ann.probe(spark, s"$dir/ivfpq", Ann.Ivf(nprobe = 3),
+      "vec_id", "embedding", q, k = TopK, rerank = 50)))
+    val opq = recallOf(q => ids(Ann.probe(spark, s"$dir/ivfopq", Ann.Ivf(nprobe = 3),
+      "vec_id", "embedding", q, k = TopK, rerank = 50)))
     info(f"composed recall@$TopK (nprobe=3, rerank=50): ivf-pq=$pq%.3f ivf-opq=$opq%.3f")
     assert(opq >= pq,
       f"IVF-OPQ recall $opq%.3f below plain IVF-PQ $pq%.3f")
@@ -199,18 +200,15 @@ class OpqSpec extends SparkSpec {
     val sysProp = System.getProperty("graft.index.dir")
     System.setProperty("graft.index.dir", s"$base/indexes")
     try {
-      val idx = Similarity.ensureIncrementalIvfOpq(spark, "ivfopqincr",
-        s"$base/corpus", "vec_id", "embedding", rot, cents, cbs)
+      val idx = Ann.ensureIncremental(spark, "ivfopqincr", s"$base/corpus", "vec_id",
+        "embedding", Ann.PqCodec(cbs, rotation = Some(rot)), Ann.Ivf(centroids = cents))
       val mono = s"$base/mono"
-      Similarity.buildIvfOpqPart(corpus, "vec_id", "embedding", rot, cents,
-        cbs, s"$mono/p")
-      Similarity.mergeIvfPq(spark, cbs, Seq(s"$mono/p"), mono)
-      Similarity.writeOpqRotation(spark, rot, mono)
+      Ann.buildPart(corpus, "vec_id", "embedding", Ann.PqCodec(cbs, rotation = Some(rot)),
+        Ann.Ivf(centroids = cents), s"$mono/p")
+      Ann.merge(spark, Ann.PqCodec(cbs, rotation = Some(rot)), Ann.Ivf(), Seq(s"$mono/p"), mono)
       val q = queries.head._2
-      val inc = Similarity.ivfOpqProbe(spark, idx, "vec_id", "label",
-        "embedding", q).collect().map(_.toString).toSeq
-      val mon = Similarity.ivfOpqProbe(spark, mono, "vec_id", "label",
-        "embedding", q).collect().map(_.toString).toSeq
+      val inc = Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q).collect().map(_.toString).toSeq
+      val mon = Ann.probe(spark, mono, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q).collect().map(_.toString).toSeq
       assert(inc == mon, "incremental IVF-OPQ diverged from the monolithic merge")
     } finally {
       if (sysProp == null) System.clearProperty("graft.index.dir")
@@ -229,18 +227,19 @@ class OpqSpec extends SparkSpec {
     val sysProp = System.getProperty("graft.index.dir")
     System.setProperty("graft.index.dir", s"$base/indexes")
     try {
-      val idx = Similarity.ensureIncrementalOpq(spark, "opqincr",
-        s"$base/corpus", "vec_id", "embedding", rot, cbs)
+      val idx = Ann.ensureIncremental(spark, "opqincr", s"$base/corpus", "vec_id",
+        "embedding", Ann.PqCodec(cbs, rotation = Some(rot)), Ann.Flat())
       // the merged incremental index serves the same results as a
       // monolithic build with the same frozen learners
       val mono = s"$base/mono"
-      Similarity.writeOpqRotation(spark, rot, mono)
-      Similarity.buildOpqPart(corpus, "vec_id", "embedding", rot, cbs, mono)
-      Similarity.mergePq(spark, cbs, Nil, mono) // writes codebooks only
+      Ann.buildPart(corpus, "vec_id", "embedding", Ann.PqCodec(cbs, rotation = Some(rot)),
+        Ann.Flat(), mono)
+      // writes the frozen codebooks + rotation only
+      Ann.merge(spark, Ann.PqCodec(cbs, rotation = Some(rot)), Ann.Flat(), Nil, mono)
       val q = queries.head._2
-      val inc = Similarity.opqRerank(spark, idx, corpus, "vec_id", "embedding", q)
+      val inc = Ann.probe(spark, idx, Ann.Flat(corpus), "vec_id", "embedding", q)
         .collect().map(_.toString).toSeq
-      val mon = Similarity.opqRerank(spark, mono, corpus, "vec_id", "embedding", q)
+      val mon = Ann.probe(spark, mono, Ann.Flat(corpus), "vec_id", "embedding", q)
         .collect().map(_.toString).toSeq
       assert(inc == mon, "incremental OPQ diverged from the monolithic build")
     } finally {

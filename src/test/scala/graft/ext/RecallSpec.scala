@@ -65,13 +65,13 @@ class RecallSpec extends SparkSpec {
     // those originals ranks the 10 — must hold a 0.9 floor.
     val cb = Similarity.pqCodebooks(corpus, "vec_id", "embedding",
       dim = Dims, m = 4, ksub = 16)
-    val codes = Similarity.pqEncode(corpus, "vec_id", "embedding", cb).cache()
+    val codes = Ann.PqCodec(cb).encode(corpus, "vec_id", "embedding", Nil).cache()
     val raw = meanRecall { (qid, q) =>
-      dropSelf(Similarity.pqAdcTopK(codes, "vec_id", cb, q, TopK + 1), qid)
+      dropSelf(Ann.candidates(codes, Ann.PqCodec(cb), "vec_id", q, TopK + 1), qid)
     }
     val rr = meanRecall { (qid, q) =>
-      dropSelf(Similarity.pqAdcRerank(codes, corpus, "vec_id", "embedding",
-        cb, q, k = TopK + 1, rerank = 100), qid)
+      dropSelf(Ann.rerank(corpus, Ann.candidates(codes, Ann.PqCodec(cb), "vec_id", q, 100),
+        "vec_id", "embedding", q, k = TopK + 1), qid)
     }
     info(f"pq raw-adc recall@$TopK = $raw%.3f; adc+rerank(100) = $rr%.3f")
     assert(raw < 0.5, f"raw ADC recall $raw%.3f unexpectedly high — fixture no longer clustered?")
@@ -91,11 +91,11 @@ class RecallSpec extends SparkSpec {
     // the final 10 — the composed floor must match the flat
     // ADC+rerank's 0.9, not degrade to the coarse quantizer's 0.8
     val idx = tmpDir("recall-ivfpq")
-    Similarity.buildIvfPq(corpus.drop("label"), "vec_id", "embedding", idx,
-      k = K, dim = Dims, m = 4, ksub = 16)
+    Ann.build(corpus.drop("label"), "vec_id", "embedding", idx,
+      Ann.PQ(dim = Dims, m = 4, ksub = 16), Ann.Ivf(k = K))
     val r = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfPqProbe(spark, idx, "vec_id", "label", "embedding",
-        q, k = TopK + 1, nprobe = 2, rerank = 100), qid)
+      dropSelf(Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q,
+        k = TopK + 1, rerank = 100), qid)
     }
     info(f"ivf-adc nprobe=2 rerank=100 recall@$TopK = $r%.3f")
     assert(r >= 0.9, f"IVF-ADC composed recall $r%.3f below floor")
@@ -106,11 +106,11 @@ class RecallSpec extends SparkSpec {
     // the cell pruning is the only recall loss — the composed floor
     // must match the flat SQ8's, not degrade to the coarse quantizer's
     val idx = tmpDir("recall-ivfsq8")
-    Similarity.buildIvfSq8(corpus.drop("label"), "vec_id", "embedding", idx,
-      k = K, dim = Dims)
+    Ann.build(corpus.drop("label"), "vec_id", "embedding", idx, Ann.SQ8(Dims),
+      Ann.Ivf(k = K))
     val r = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfSq8Probe(spark, idx, "vec_id", "label", "embedding",
-        q, k = TopK + 1, nprobe = 2, rerank = 100), qid)
+      dropSelf(Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q,
+        k = TopK + 1, rerank = 100), qid)
     }
     info(f"ivf-sq8 nprobe=2 rerank=100 recall@$TopK = $r%.3f")
     assert(r >= 0.9, f"IVF-SQ8 composed recall $r%.3f below floor")
@@ -123,11 +123,11 @@ class RecallSpec extends SparkSpec {
     // resolution inside the probed cells, so the composed floor holds
     // the flat BQ's
     val idx = tmpDir("recall-ivfbq")
-    Similarity.buildIvfBq(corpus.drop("label"), "vec_id", "embedding", idx,
-      k = K, dim = Dims)
+    Ann.build(corpus.drop("label"), "vec_id", "embedding", idx, Ann.BQ(Dims),
+      Ann.Ivf(k = K))
     val r = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfBqProbe(spark, idx, "vec_id", "label", "embedding",
-        q, k = TopK + 1, nprobe = 2, rerank = 100), qid)
+      dropSelf(Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q,
+        k = TopK + 1, rerank = 100), qid)
     }
     info(f"ivf-bq nprobe=2 rerank=100 recall@$TopK = $r%.3f")
     assert(r >= 0.7, f"IVF-BQ composed recall $r%.3f below floor")
@@ -139,32 +139,28 @@ class RecallSpec extends SparkSpec {
     // offset ball — the resolution the flat-PQ test above shows raw
     // codes lack (0.16 recall@10 inside an 80-member cluster).
     val idx = tmpDir("recall-ivfpqres")
-    Similarity.buildIvfPqResidual(corpus.drop("label"), "vec_id", "embedding",
-      idx, k = K, dim = Dims, m = 4, ksub = 16)
-    val cbs = Similarity.readPqCodebooks(spark, idx)
-    val quant = Similarity.readQuantizer(spark, idx)
+    Ann.build(corpus.drop("label"), "vec_id", "embedding", idx,
+      Ann.PQ(dim = Dims, m = 4, ksub = 16, residual = true), Ann.Ivf(k = K))
+    val cbs = Ann.PqCodec.read(spark, idx).cbs
+    val quant = Ann.PqCodec.read(spark, idx).quantizer.get
     val codes = spark.read.parquet(s"$idx/codes").cache()
     // RAW residual ADC over ALL cells (no rerank, no pruning) — the
     // apples-to-apples twin of the flat test's raw-ADC number
     val raw = meanRecall { (qid, q) =>
-      val cellDot = coalesce((quant.zipWithIndex.map { case (c, j) =>
-        when(col("label") === j,
-          lit(c.zip(q).foldLeft(0.0) { case (a, (x, y)) => a + x * y }))
-      } :+ lit(0.0)): _*)
-      dropSelf(Similarity.pqAdcTopK(codes, "vec_id", cbs, q, TopK + 1,
-        dotBase = cellDot), qid)
+      dropSelf(Ann.candidates(codes, Ann.PqCodec(cbs, quantizer = Some(quant)), "vec_id",
+        q, TopK + 1, cells = quant.indices), qid)
     }
     // the flat raw-ADC twin on the SAME corpus — the comparison is the
     // claim, so measure it here rather than hardcoding a margin
     val flatCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding",
       dim = Dims, m = 4, ksub = 16)
-    val flatCodes = Similarity.pqEncode(corpus, "vec_id", "embedding", flatCb).cache()
+    val flatCodes = Ann.PqCodec(flatCb).encode(corpus, "vec_id", "embedding", Nil).cache()
     val flatRaw = meanRecall { (qid, q) =>
-      dropSelf(Similarity.pqAdcTopK(flatCodes, "vec_id", flatCb, q, TopK + 1), qid)
+      dropSelf(Ann.candidates(flatCodes, Ann.PqCodec(flatCb), "vec_id", q, TopK + 1), qid)
     }
     val composed = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfPqResidualProbe(spark, idx, "vec_id", "label",
-        "embedding", q, k = TopK + 1, nprobe = 2, rerank = 100), qid)
+      dropSelf(Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q,
+        k = TopK + 1, rerank = 100), qid)
     }
     info(f"raw-adc recall@$TopK: flat = $flatRaw%.3f, residual = $raw%.3f " +
       f"(measured 0.160 vs 0.260); composed nprobe=2 rerank=100 = $composed%.3f")
@@ -186,16 +182,16 @@ class RecallSpec extends SparkSpec {
     // rerank > cluster size repairs rank resolution the same way it
     // does for PQ.
     val sq8 = tmpDir("recall-sq8")
-    Similarity.buildSq8(corpus, "vec_id", "embedding", sq8, Dims)
+    Ann.build(corpus, "vec_id", "embedding", sq8, Ann.SQ8(Dims), Ann.Flat())
     val rSq8 = meanRecall { (qid, q) =>
-      dropSelf(Similarity.sq8AdcRerank(spark, sq8, corpus, "vec_id",
-        "embedding", q, k = TopK + 1, rerank = 100), qid)
+      dropSelf(Ann.probe(spark, sq8, Ann.Flat(corpus), "vec_id", "embedding", q,
+        k = TopK + 1, rerank = 100), qid)
     }
     val bq = tmpDir("recall-bq")
-    Similarity.buildBq(corpus, "vec_id", "embedding", bq, Dims)
+    Ann.build(corpus, "vec_id", "embedding", bq, Ann.BQ(Dims), Ann.Flat())
     val rBq = meanRecall { (qid, q) =>
-      dropSelf(Similarity.bqHammingRerank(spark, bq, corpus, "vec_id",
-        "embedding", q, k = TopK + 1, rerank = 100), qid)
+      dropSelf(Ann.probe(spark, bq, Ann.Flat(corpus), "vec_id", "embedding", q,
+        k = TopK + 1, rerank = 100), qid)
     }
     info(f"sq8 rerank(100) recall@$TopK = $rSq8%.3f; bq hamming+rerank(100) = $rBq%.3f")
     assert(rSq8 >= 0.9, f"SQ8 rerank recall $rSq8%.3f below floor")
@@ -204,10 +200,10 @@ class RecallSpec extends SparkSpec {
 
   test("IVF probe (planted labels) nprobe=2 recall@10 >= 0.8") {
     val idx = tmpDir("recall-ivf")
-    Similarity.buildIvf(corpus, "vec_id", "label", "embedding", idx)
+    Ann.build(corpus, "vec_id", "embedding", idx, Ann.Exact, Ann.Ivf())
     val r = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfProbe(spark, idx, "vec_id", "label", "embedding",
-        q, k = TopK + 1, nprobe = 2), qid)
+      dropSelf(Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q,
+        k = TopK + 1), qid)
     }
     info(f"ivf nprobe=2 recall@$TopK = $r%.3f")
     assert(r >= 0.8, f"IVF recall $r%.3f below floor")
@@ -215,11 +211,11 @@ class RecallSpec extends SparkSpec {
 
   test("IVF probe (learned k-means, no label column) nprobe=2 recall@10 >= 0.8") {
     val idx = tmpDir("recall-ivf-kmeans")
-    Similarity.buildIvfKmeans(corpus.drop("label"), "vec_id", "embedding", idx,
-      k = K, iters = 5)
+    Ann.build(corpus.drop("label"), "vec_id", "embedding", idx, Ann.Exact,
+      Ann.Ivf(k = K, coarseIters = 5))
     val r = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfProbe(spark, idx, "vec_id", "label", "embedding",
-        q, k = TopK + 1, nprobe = 2), qid)
+      dropSelf(Ann.probe(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding", q,
+        k = TopK + 1), qid)
     }
     info(f"ivf(kmeans) nprobe=2 recall@$TopK = $r%.3f")
     assert(r >= 0.8, f"learned-quantizer IVF recall $r%.3f below floor")
@@ -231,13 +227,13 @@ class RecallSpec extends SparkSpec {
     // has to earn its keep
     val nCells = 2 * K
     val idx = tmpDir("recall-ivf-auto")
-    Similarity.buildIvfKmeans(corpus.drop("label"), "vec_id", "embedding", idx,
-      k = nCells, iters = 5)
-    // the integrated path: ivfProbeAuto reads K off the persisted
+    Ann.build(corpus.drop("label"), "vec_id", "embedding", idx, Ann.Exact,
+      Ann.Ivf(k = nCells, coarseIters = 5))
+    // the integrated path: Ann.autoNprobe reads K off the persisted
     // index and derives nprobe = nprobeFor(K, target) itself
     val r = meanRecall { (qid, q) =>
-      dropSelf(Similarity.ivfProbeAuto(spark, idx, "vec_id", "label", "embedding",
-        q, k = TopK + 1, targetRecall = 0.9), qid)
+      dropSelf(Ann.probe(spark, idx, Ann.Ivf(nprobe = Ann.autoNprobe(spark, idx, 0.9)),
+        "vec_id", "embedding", q, k = TopK + 1), qid)
     }
     info(f"ivf(kmeans, $nCells cells) derived nprobe=" +
       f"${Similarity.nprobeFor(nCells, 0.9)} recall@$TopK = $r%.3f")

@@ -36,7 +36,8 @@ class SoakProbeReproSpec extends SparkSpec {
 
     def refresh(): (String, String) = (
       Retrieval.ensureIncrementalPositionalIndex(spark, "sprt", corpusDir, "doc_id", "text"),
-      Similarity.ensureIncrementalIvfPq(spark, "sprv", corpusDir, "vec_id", "embedding", cents, cbs))
+      Ann.ensureIncremental(spark, "sprv", corpusDir, "vec_id", "embedding",
+        Ann.PqCodec(cbs), Ann.Ivf(centroids = cents)))
 
     val (p1, v1) = refresh()
     info(s"tick1: pos=$p1 ivf=$v1")
@@ -55,8 +56,8 @@ class SoakProbeReproSpec extends SparkSpec {
       Seq("soakzebra", "soakquagga"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     info(s"posIds=$posIds")
-    val ivf = Similarity.ivfPqProbe(spark, v2, "vec_id", "label", "embedding",
-      (0 until 16).map(i => if (i % 2 == 0) 0.95 else 0.05), k = 5, nprobe = 4, rerank = 2000)
+    val ivf = Ann.probe(spark, v2, Ann.Ivf(nprobe = 4), "vec_id", "embedding",
+      (0 until 16).map(i => if (i % 2 == 0) 0.95 else 0.05), k = 5, rerank = 2000)
       .collect().map(_.getLong(0)).toSet
     info(s"ivfIds=$ivf")
     assert(posIds.contains(MarkerId), s"positional probe missed marker: $posIds")
