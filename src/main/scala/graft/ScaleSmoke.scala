@@ -326,9 +326,9 @@ object ScaleSmoke {
     if (args.headOption.contains("batchprobe")) {
       // `runMain graft.ScaleSmoke batchprobe [nQueries]` — VERDICT r14
       // #2 at retrieval-pipeline volume: >= 100k queries against an
-      // IVF-PQ index. N_q × rerank lands far above the broadcast gate,
-      // so both data joins take the SHUFFLE path (structurally checked:
-      // only the K-row centroid broadcast hint remains); a 2k-query
+      // IVF-PQ index. The batch is planned with the driver budget at 0,
+      // so every data join takes the SHUFFLE path (structurally checked:
+      // the only broadcast hint is the K-row centroids'); a 2k-query
       // sample re-probes through the forced-broadcast path and the
       // per-query results must be identical (the same pin IndexSpec
       // holds at fixture scale).
@@ -349,19 +349,13 @@ object ScaleSmoke {
       println(f"[batchprobe] index built over $nVecs vectors in ${(System.nanoTime() - t0) / 1e9}%.1fs")
 
       val queries = vecsOf(nQ, 7L)
-      val big = Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 4), "vec_id",
-        "embedding", queries, "vec_id", "embedding", k = 10, rerank = 50)
+      val big = graft.util.DriverBudget.withBytes(0L)(Ann.probeBatch(spark, idx,
+        Ann.Ivf(nprobe = 4), "vec_id", "embedding", queries, "vec_id", "embedding",
+        k = 10, rerank = 50))
       val hints = big.queryExecution.analyzed.collect {
         case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
       }.size
-      // centroids always broadcast (K rows); the probe set, the query
-      // re-attach, and the candidate set hint only under the gate — at
-      // 100k queries the candidate set (N_q × 50) is over and MUST be
-      // unhinted; at 1M queries everything shuffles
-      val expectedHints = 1 + (if (nQ * 4 <= 1000000L) 1 else 0) +
-        (if (nQ <= 1000000L) 1 else 0) + (if (nQ * 50 <= 1000000L) 1 else 0)
-      require(hints == expectedHints,
-        s"expected $expectedHints broadcast hints at nQ=$nQ, got $hints")
+      require(hints == 1, s"expected only the centroid broadcast hint at nQ=$nQ, got $hints")
       t0 = System.nanoTime()
       val n = big.count()
       val secs = (System.nanoTime() - t0) / 1e9
@@ -371,9 +365,9 @@ object ScaleSmoke {
       // path equality on a 2k-query sample
       val step = math.max(1L, nQ / 2000L)
       val sample = queries.filter(col("vec_id") % step === 0)
-      def probe(maxRows: Long) = Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 4),
-        "vec_id", "embedding", sample, "vec_id", "embedding",
-        k = 10, rerank = 50, broadcastMaxRows = maxRows)
+      def probe(budget: Long) = graft.util.DriverBudget.withBytes(budget)(
+        Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 4), "vec_id", "embedding",
+          sample, "vec_id", "embedding", k = 10, rerank = 50))
       val bc = probe(Long.MaxValue)
       val sh = probe(0L)
       val onlyBc = bc.exceptAll(sh).count()
@@ -1176,9 +1170,9 @@ object ScaleSmoke {
     }
 
     // --- distributed connected components at edge volumes the driver
-    // union-find refuses (driverThreshold = 0 forces star contraction):
+    // union-find refuses (a zero driver budget forces star contraction):
     // 10M edges in 2M chains of 5 nodes. This is the 100 TB code path
-    // the ≤1M-edge driver shortcut hands off to.
+    // the driver union-find hands off to above the budget.
     {
       val nEdges = 10000000L
       // node ids: chain c holds nodes c*6 .. c*6+5; edges (v, v+1) ×2 dirs
@@ -1186,8 +1180,8 @@ object ScaleSmoke {
         .select((col("id") / lit(5)).cast("long").as("c"), pmod(col("id"), lit(5)).as("i"))
         .select((col("c") * 6 + col("i")).as("src"), (col("c") * 6 + col("i") + 1).as("dst"))
       val t = System.nanoTime()
-      val comps = graft.ext.Dedup.connectedComponents(pairs, "src", "dst",
-        driverThreshold = 0L)
+      val comps = graft.util.DriverBudget.withBytes(0L)(
+        graft.ext.Dedup.connectedComponents(pairs, "src", "dst"))
       val (nNodes, nComps) = {
         val r = comps.agg(count(lit(1)), countDistinct(col("comp"))).head()
         (r.getLong(0), r.getLong(1))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.util.Portable.pround
-import graft.util.SmallParquet
+import graft.util.{DriverBudget, SmallParquet}
 import Similarity.{cosineTo, dot, l2Norm, toDoubleArr}
 
 /** The ANN engine: every index is one [[Codec]] × one [[Layout]].
@@ -86,9 +86,9 @@ object Ann {
     /** Per-query columns a collected batch folds on the driver and ships
       * on every probed (query, cell) row. */
     def payload: Seq[(StructField, Array[Double] => Any)] = Nil
-    /** Bytes [[payload]] adds to each probed row — the literal-query gate
-      * counts them, not just the query vector. */
-    def payloadBytes: Long = 0L
+    /** Values [[payload]] adds to each probed row — the literal-query
+      * gate counts them, not just the query vector. */
+    def payloadValues: Long = 0L
     /** Per-query columns the distributed batch derives in-plan from
       * `__qe` (the distributed twin of [[payload]]), by name. */
     def queryCols: Seq[(String, Column)] = Nil
@@ -157,7 +157,7 @@ object Ann {
       StructField("__tab", ArrayType(ArrayType(DoubleType))) ->
         ((qe: Array[Double]) => tables(qe.toSeq)),
       StructField("__qn", DoubleType) -> ((qe: Array[Double]) => batchNorm(qe)))
-    override def payloadBytes: Long = cbs.map(_.size.toLong).sum * 8L + 8L
+    override def payloadValues: Long = cbs.map(_.size.toLong).sum + 1L
 
     /** Literal: m lookups into the row's dot tables. Distributed: m dots
       * of the query slice against the codeword literal the code picks. */
@@ -262,7 +262,7 @@ object Ann {
 
     override def payload: Seq[(StructField, Array[Double] => Any)] = Seq(
       StructField("__qw", ArrayType(LongType)) -> ((qe: Array[Double]) => pack(qe.toSeq)))
-    override def payloadBytes: Long = nWords * 8L
+    override def payloadValues: Long = nWords
     override def queryCols: Seq[(String, Column)] = Seq("__qw" -> words(col("__qe")))
     def batchScore(literal: Boolean, digits: Int, base: Column): Column =
       aggregate(zip_with(col("words"), col("__qw"), (a, b) => bit_count(a.bitwiseXOR(b))),
@@ -597,15 +597,14 @@ object Ann {
     *     cell; flat pairs every code with every query;
     *   - a bounded per-(partition, qid) heap keeps `rerank` candidates
     *     ([[topKPerQid]]), then the exact rerank.
-    * Every join is size-gated (broadcast ≤ `broadcastMaxRows` rows,
-    * shuffle above); every window is qid-partitioned. Offered for the
-    * IVF layout with PQ (plain or residual), SQ8 and BQ, and flat SQ8
-    * and BQ.
+    * Every join is size-gated (broadcast when its rows fit the
+    * [[DriverBudget]], shuffle above); every window is qid-partitioned.
+    * Offered for the IVF layout with PQ (plain or residual), SQ8 and BQ,
+    * and flat SQ8 and BQ.
     */
   def probeBatch(spark: SparkSession, indexPath: String, layout: Layout,
       idCol: String, vecCol: String, queries: DataFrame, qidCol: String,
-      qVecCol: String, k: Int = 10, rerank: Int = 50, digits: Int = 6,
-      broadcastMaxRows: Long = 1000000L): DataFrame = {
+      qVecCol: String, k: Int = 10, rerank: Int = 50, digits: Int = 6): DataFrame = {
     require(rerank >= k)
     val codec = read(spark, indexPath)
     val ivf = layout match {
@@ -619,13 +618,15 @@ object Ann {
       case Exact => throw new IllegalArgumentException("a batch probe needs a codec")
       case _ => None
     }
-    val fanout = ivf.fold(1)(_.nprobe)
+    // driver bytes per row: a query (qid, vector, norm) and a probed
+    // (query, cell) row carrying the codec's per-query payload (PQ's
+    // m×ksub dot tables and the norm) and the residual q·c
+    val qBytes = DriverBudget.fixedRowBytes(2L + codec.dim)
+    val pBytes = DriverBudget.fixedRowBytes(2L + codec.payloadValues + quant.size)
     val (qn, nq, qrows) = literalQueryFrame(queries, qidCol, qVecCol, codec.dim,
-      codec.dim * 8L + fanout * (codec.payloadBytes + quant.fold(0L)(_ => 8L)),
-      broadcastMaxRows)
+      qBytes + ivf.fold(1)(_.nprobe) * pBytes)
     val qnP = qn.select(col("*") +: codec.queryCols.map { case (n, c) => c.as(n) }: _*)
     val qcols = col("__qid") +: codec.queryCols.map(nc => col(nc._1))
-    def gated(df: DataFrame, rows: Long): DataFrame = sizeGated(df, rows, broadcastMaxRows)
     val (stream, literal, vecs, cellKey) = ivf match {
       case None =>
         val vectors = layout.asInstanceOf[Flat].vectors
@@ -634,7 +635,8 @@ object Ann {
         FlatBatchGuard.check(codec.getClass.getSimpleName, rows, nq)
         val codes = spreadForScore(readIdx(spark, s"$indexPath/${codec.table}"),
           rows * nq, sizes)
-        (codes.crossJoin(gated(if (codec.needsQuery(false)) qnP else qnP.select(qcols: _*), nq)),
+        (codes.crossJoin(sizeGated(if (codec.needsQuery(false)) qnP else qnP.select(qcols: _*),
+          nq, DriverBudget.fixedRowBytes(2L + codec.dim + codec.payloadValues))),
           false, vectors, None)
       case Some(l) =>
         val driver = qrows.flatMap(rows => driverCellProbeSet(spark, indexPath, rows,
@@ -649,15 +651,16 @@ object Ann {
               col("__cell").cast("long") === col("__qj"))
             .withColumn("__qc", dot(col("__qcv"), col("__qe"))))
           literalProbeSet(withQc.select(qcols ++ (col("__cell") +:
-            quant.map(_ => col("__qc")).toSeq): _*), nq * l.nprobe, broadcastMaxRows)
+            quant.map(_ => col("__qc")).toSeq): _*), nq * l.nprobe, pBytes)
         }
         val (cRows, cSizes) = parquetCensus(spark, s"$indexPath/${codec.table}", l.labelCol, cells)
         val codes = spreadForScore(
           cellUnionPruned(readIdx(spark, s"$indexPath/${codec.table}"), l.labelCol, cells),
           if (cells.isEmpty) 0L else cRows * nq * l.nprobe / cells.size, cSizes)
-        val joined = codes.join(gated(probe, nq * l.nprobe),
+        val joined = codes.join(sizeGated(probe, nq * l.nprobe, pBytes),
           codes(l.labelCol) === probe("__cell"))
-        (if (codec.needsQuery(driver.isDefined)) joined.join(gated(qn, nq), "__qid") else joined,
+        (if (codec.needsQuery(driver.isDefined)) joined.join(sizeGated(qn, nq, qBytes), "__qid")
+         else joined,
           driver.isDefined,
           cellUnionPruned(readIdx(spark, s"${l.vectorsDir.getOrElse(indexPath)}/vectors"),
             l.labelCol, cells),
@@ -674,7 +677,7 @@ object Ann {
       stream.select(Seq(col("__qid"), score.as("__s")) ++ cellCol.map(col) :+ col(idCol): _*),
       col("__s"), keyDesc = !codec.ascending, rerank, idCol, cellCol)
     heapScoped(batchExactRerank(vecs, cand, qn, idCol, vecCol, k, digits, nq, rerank,
-      broadcastMaxRows, cellKey))
+      qBytes, cellKey))
   }
 
   /** Every cell of a persisted index ranked best-first against the query
@@ -781,10 +784,11 @@ object Ann {
     forget(to)
   }
 
-  /** The size gate every batch join goes through: broadcast at ≤ `maxRows`
-    * (row counts exact at plan time), shuffle on the same keys above. */
-  private def sizeGated(df: DataFrame, rows: Long, maxRows: Long): DataFrame =
-    if (rows <= maxRows) broadcast(df) else df
+  /** The size gate every batch join goes through: broadcast when `rows`
+    * (exact at plan time) of `rowBytes` each fit the driver budget,
+    * shuffle on the same keys above. */
+  private def sizeGated(df: DataFrame, rows: Long, rowBytes: Long): DataFrame =
+    if (DriverBudget.fits(df.sparkSession, rows, rowBytes)) broadcast(df) else df
 
   /** Spread a compressed code table across the executor cores before the
     * batch scoring stage, SIZED TO THE WORK: a broadcast probe join keeps
@@ -807,11 +811,12 @@ object Ann {
 
   /** Collect the NARROW distributed probe set once and re-enter it as a
     * literal frame, deriving the probed-cell union from the same rows (one
-    * execution instead of two). Above `maxRows` nothing is collected: the
-    * lazy frame and a separate distinct-cell collect are kept. */
+    * execution instead of two). Above the driver budget nothing is
+    * collected: the lazy frame and a separate distinct-cell collect are
+    * kept. */
   private def literalProbeSet(probeNarrow: DataFrame, rows: Long,
-      maxRows: Long): (DataFrame, Seq[Any]) =
-    if (rows <= maxRows) {
+      rowBytes: Long): (DataFrame, Seq[Any]) =
+    if (DriverBudget.fits(probeNarrow.sparkSession, rows, rowBytes)) {
       val collected = probeNarrow.collect()
       val ci = probeNarrow.schema.fieldIndex("__cell")
       (probeNarrow.sparkSession.createDataFrame(
@@ -820,46 +825,37 @@ object Ann {
     } else (probeNarrow, probeNarrow.select(col("__cell")).distinct()
       .collect().map(_.get(0)).toIndexedSeq)
 
-  /** Byte budget for collecting a query batch driver-side; overridable for
-    * specs via `graft.batchquery.collect.maxbytes`. */
-  private def queryCollectMaxBytes: Long =
-    sys.props.get("graft.batchquery.collect.maxbytes").map(_.toLong).getOrElse(64L << 20)
-
-  /** Collect the query batch ONCE under a driver-size gate and re-enter it
+  /** Collect the query batch ONCE under the driver budget and re-enter it
     * as a LITERAL frame (qid, double vector, zero-guarded norm): every
     * downstream broadcast of it is then a LocalTableScan (zero jobs) and
-    * the dim guard runs on the same rows. The gate is BYTE-aware:
-    * `rowBytes` per query counts the vector AND what the probe set will
-    * carry for it (PQ's dot tables are m×ksub×8 B per probed cell), and
-    * it is also capped by the caller's broadcast gate (0 forces the
-    * distributed path). Above the gate, or when a vector carries null
-    * elements, the distributed [[batchQueryFrame]] + [[requireQueryDim]]
-    * path runs instead; both are result-identical.
+    * the dim guard runs on the same rows. `rowBytes` per query counts the
+    * query AND what the probe set will carry for it (PQ's m×ksub dot
+    * tables per probed cell). Above the budget, or when a vector
+    * carries null elements, the distributed [[batchQueryFrame]] +
+    * [[requireQueryDim]] path runs instead; both are result-identical.
     */
   private def literalQueryFrame(queries: DataFrame, qidCol: String,
-      qVecCol: String, dim: Int, rowBytes: Long, broadcastMaxRows: Long):
+      qVecCol: String, dim: Int, rowBytes: Long):
       (DataFrame, Long, Option[IndexedSeq[(Any, Array[Double])]]) = {
-    val maxRows = math.min(math.min(Int.MaxValue - 8L, broadcastMaxRows),
-      math.max(0L, queryCollectMaxBytes / rowBytes)).toInt
     val narrow = queries.select(col(qidCol).as("__qid"), toDoubleArr(col(qVecCol)).as("__qe"))
-    val head = narrow.limit(maxRows + 1).collect()
-    if (head.length > maxRows || head.exists(r =>
-        !r.isNullAt(1) && r.getSeq[Any](1).contains(null))) {
-      val nq = requireQueryDim(queries, qVecCol, dim)
-      (batchQueryFrame(queries, qidCol, qVecCol), nq, None)
-    } else {
-      // the driver-side twin of requireQueryDim: same checks, same order
-      val nNull = head.count(_.isNullAt(1))
-      require(nNull == 0, s"query batch contains $nNull null vectors in $qVecCol")
-      val rows = head.map(r => (r.get(0), r.getSeq[Double](1).toArray)).toIndexedSeq
-      val lens = rows.map(_._2.length)
-      require(rows.isEmpty || (lens.min == dim && lens.max == dim),
-        s"query vectors must all be dim $dim, got [${lens.min}, ${lens.max}]")
-      val schema = StructType(Seq(StructField("__qid", narrow.schema("__qid").dataType),
-        StructField("__qe", ArrayType(DoubleType)), StructField("__qn", DoubleType)))
-      (queries.sparkSession.createDataFrame(java.util.Arrays.asList(rows.map {
-        case (qid, qe) => Row(qid, qe.toSeq, batchNorm(qe)) }: _*), schema),
-        rows.size.toLong, Some(rows))
+    DriverBudget.collect(narrow, rowBytes).filterNot(_.exists(r =>
+        !r.isNullAt(1) && r.getSeq[Any](1).contains(null))) match {
+      case None =>
+        val nq = requireQueryDim(queries, qVecCol, dim)
+        (batchQueryFrame(queries, qidCol, qVecCol), nq, None)
+      case Some(head) =>
+        // the driver-side twin of requireQueryDim: same checks, same order
+        val nNull = head.count(_.isNullAt(1))
+        require(nNull == 0, s"query batch contains $nNull null vectors in $qVecCol")
+        val rows = head.map(r => (r.get(0), r.getSeq[Double](1).toArray)).toIndexedSeq
+        val lens = rows.map(_._2.length)
+        require(rows.isEmpty || (lens.min == dim && lens.max == dim),
+          s"query vectors must all be dim $dim, got [${lens.min}, ${lens.max}]")
+        val schema = StructType(Seq(StructField("__qid", narrow.schema("__qid").dataType),
+          StructField("__qe", ArrayType(DoubleType)), StructField("__qn", DoubleType)))
+        (queries.sparkSession.createDataFrame(java.util.Arrays.asList(rows.map {
+          case (qid, qe) => Row(qid, qe.toSeq, batchNorm(qe)) }: _*), schema),
+          rows.size.toLong, Some(rows))
     }
   }
 
@@ -1025,12 +1021,13 @@ object Ann {
     * top-`k` per qid. */
   private def batchExactRerank(vecs: DataFrame, cand: DataFrame, qn: DataFrame,
       idCol: String, vecCol: String, k: Int, digits: Int, nq: Long, rerank: Int,
-      broadcastMaxRows: Long, cellKey: Option[String]): DataFrame = {
+      qBytes: Long, cellKey: Option[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val onId = vecs(idCol) === cand(idCol)
-    vecs.join(sizeGated(cand, nq * rerank, broadcastMaxRows),
+    // a candidate is (qid, score, [cell], id)
+    vecs.join(sizeGated(cand, nq * rerank, DriverBudget.fixedRowBytes(3L + cellKey.size)),
         cellKey.fold(onId)(l => vecs(l) === cand("__cell") && onId))
-      .join(sizeGated(qn.select(col("__qid"), col("__qe")), nq, broadcastMaxRows), "__qid")
+      .join(sizeGated(qn.select(col("__qid"), col("__qe")), nq, qBytes), "__qid")
       .withColumn("cos", pround(
         dot(col("__qe"), toDoubleArr(vecs(vecCol))) /
           (l2Norm(toDoubleArr(vecs(vecCol))) * l2Norm(col("__qe"))), digits))

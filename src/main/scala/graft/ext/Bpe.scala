@@ -161,25 +161,6 @@ object Bpe {
     */
   val FoldEncodeMaxMerges = 64
 
-  /** Vocab-row gate for the DRIVER-side learn in [[learnMerges]]: a
-    * pre-token vocabulary at or under this many distinct words is
-    * collected once and the merge loop runs in-memory — the classical
-    * BPE learner (Sennrich et al. 2016 learn over the word-frequency
-    * table, with incremental pair-count maintenance), and the same
-    * size-gated driver-path shape as [[Dedup.connectedComponents]]'
-    * union-find (collect the provably SMALL product, never the corpus).
-    * Why: each distributed round is one aggregate + argmax collect —
-    * 2 Spark jobs + a fresh plan analysis/codegen per round, ~150-250 ms
-    * of fixed cost per merge regardless of data size, k rounds deep and
-    * inherently sequential. Driver-side the k=12 oracle-gated learn is
-    * sub-millisecond per round. At ~1M rows the collect is ≤ ~150 MB;
-    * above the gate the distributed loop below is unchanged (the path a
-    * 100 TB corpus' sub-billion-row vocabulary takes). Both paths are
-    * merge-for-merge identical (BpeSpec pins the equivalence, incl. the
-    * self-pair run and astral-plane fixtures).
-    */
-  val DriverLearnMaxVocab = 1000000
-
   /** Learn up to `k` merges over `df.textCol`'s pre-token vocabulary.
     * Stops early if no adjacent pair remains (every word fused to one
     * symbol). Deterministic: ties break to the lexicographically
@@ -195,15 +176,24 @@ object Bpe {
       onRound: (Int, Double) => Unit = (_, _) => ()): Seq[Merge] = {
     require(k >= 1, "k must be positive")
     require(checkpointEvery >= 1, "checkpointEvery must be positive")
-    // one capped action both sizes the vocab and, under the gate, IS the
-    // full vocab (the connectedComponents probe shape): the driver path
-    // then runs the whole loop with zero further Spark jobs
+    // a vocabulary that fits the driver budget is collected once and the
+    // merge loop runs in-memory — the classical BPE learner (Sennrich et
+    // al. 2016 learn over the word-frequency table, with incremental
+    // pair-count maintenance). Why: each distributed round is one
+    // aggregate + argmax collect — 2 Spark jobs + a fresh plan
+    // analysis/codegen per round, ~150-250 ms of fixed cost per merge
+    // regardless of data size, k rounds deep and inherently sequential;
+    // driver-side the k=12 oracle-gated learn is sub-millisecond per
+    // round. Above the budget the distributed loop runs (the path a
+    // 100 TB corpus' sub-billion-row vocabulary takes). Both paths are
+    // merge-for-merge identical (BpeSpec pins the equivalence, incl. the
+    // self-pair run and astral-plane fixtures).
     val vocabDf = spacedVocab(df, textCol)
-    val probe = vocabDf.limit(DriverLearnMaxVocab + 1).collect()
-    if (probe.length <= DriverLearnMaxVocab)
-      return learnMergesDriver(
-        probe.map(r => (r.getString(0), r.getLong(1))), k, onRound)
-    learnMergesDistributed(vocabDf, k, checkpointEvery, onRound)
+    graft.util.DriverBudget.collect(vocabDf, VocabWordBytes) match {
+      case Some(vocab) =>
+        learnMergesDriver(vocab.map(r => (r.getString(0), r.getLong(1))), k, onRound)
+      case None => learnMergesDistributed(vocabDf, k, checkpointEvery, onRound)
+    }
   }
 
   /** The distributed merge loop — the above-the-gate path, and the
@@ -278,6 +268,15 @@ object Bpe {
     }
     x.length < y.length
   }
+
+  /** Driver heap per vocabulary word of [[learnMergesDriver]], measured
+    * with Spark's SizeEstimator (JDK 17) on a 374k-word vocabulary: about
+    * 150 B for the collected row, its tuple and count; 54 B per symbol (a
+    * one-character String and its array slot); and the word's bit in the
+    * posting BitSet of every pair, at most 52² / 8 B, since only ASCII
+    * letter runs hold pairs. Symbols are charged at a 10-letter word.
+    */
+  private val VocabWordBytes = 150L + 54L * 10 + 52L * 52 / 8
 
   /** Below-the-gate in-memory learn over the collected `(spaced syms,
     * freq)` vocabulary — the classical fast BPE learner: pair counts

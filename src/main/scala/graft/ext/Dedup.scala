@@ -738,7 +738,7 @@ object Dedup {
     * no data is collected.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20, driverThreshold: Long = 1000000L): DataFrame = {
+      maxIter: Int = 20): DataFrame = {
     // Integral ids are the API contract — BOTH paths need them (the
     // driver union-find collects ids as longs; the distributed loop's
     // label-sum convergence check needs a numeric comp). Checked here
@@ -768,28 +768,24 @@ object Dedup {
       .filter(col("src") =!= col("dst"))
       .distinct().cache()
     // The verified-pair list is the SMALL product of near-dup detection
-    // (LSH already pruned the corpus² space), so up to `driverThreshold`
-    // edges union-find runs at the driver — the same size-based
-    // reasoning as broadcasting a small join side. The gate and the
-    // collect are ONE capped action (collect threshold+1 rows: if the
-    // cap is not hit, the probe IS the full edge list), not a count()
-    // followed by a second collect job. Above the threshold the
-    // distributed star-contraction loop takes over on the cached set.
-    val cap = math.min(driverThreshold + 1L, Int.MaxValue.toLong).toInt
-    val probe = oriented
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .limit(cap).collect()
-    if (probe.length <= driverThreshold) {
-      val spark = pairs.sparkSession
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val nxt = parent(c); parent(c) = r; c = nxt }
-        r
-      }
-      try {
+    // (LSH already pruned the corpus² space), so an edge list that fits
+    // the driver budget runs union-find at the driver — the same
+    // size-based reasoning as broadcasting a small join side. An edge
+    // is charged as a two-value row, which covers the map entry, id and
+    // output row it adds. Above the budget the distributed
+    // star-contraction loop takes over on the cached set.
+    val edges = oriented.select(col("src").cast("long"), col("dst").cast("long"))
+    try graft.util.DriverBudget.collect(edges, graft.util.DriverBudget.fixedRowBytes(2)) match {
+      case Some(probe) =>
+        val spark = pairs.sparkSession
+        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) { val nxt = parent(c); parent(c) = r; c = nxt }
+          r
+        }
         probe.foreach { row =>
           val (a, b) = (row.getLong(0), row.getLong(1))
           val (ra, rb) = (find(a), find(b))
@@ -799,11 +795,9 @@ object Dedup {
         }
         val ids = (parent.keySet ++ parent.values).toSeq
         import spark.implicits._
-        return ids.map(id => (id, find(id))).toDF("id", "comp")
-      } finally oriented.unpersist()
-    }
-    try starContraction(oriented, maxIter)._1
-    finally oriented.unpersist()
+        ids.map(id => (id, find(id))).toDF("id", "comp")
+      case None => starContraction(oriented, maxIter)._1
+    } finally oriented.unpersist()
   }
 
   /** Alternating large-star/small-star contraction over an ORIENTED

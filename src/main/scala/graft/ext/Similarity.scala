@@ -334,19 +334,22 @@ object Similarity {
     * seedless, engine-reproducible, independent of data order); each
     * iteration is ONE corpus pass (the codegen'd [[assignCell]]
     * argmax) feeding the (cell, dim)-keyed centroid aggregate — the
-    * same map-side-combined shuffle as [[centroidComponents]]. Only
-    * K-row results ever reach the driver; a cell that empties keeps
-    * its previous centroid so K is stable.
+    * same map-side-combined shuffle as [[centroidComponents]]. Vectors
+    * that fit the [[graft.util.DriverBudget]] learn in one collected
+    * pass instead; a cell that empties keeps its previous centroid so K
+    * is stable.
     */
   def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int = 5): Seq[Seq[Double]] =
-    kmeansCentroidsGated(df, idCol, vecCol, k, iters, DriverKmeansMaxComponents)
+    kmeans(df, idCol, col(vecCol), k, iters, l2 = false)
 
-  /** [[kmeansCentroids]] with an explicit driver-gate cap — the spec's
-    * forced-path hook (cap 0 forces the distributed loop).
+  /** The one quantized k-means loop behind [[kmeansCentroids]] and
+    * [[kmeansCentroidsL2]]; the metric is its only difference — argmax
+    * cosine ([[withCellLabels]]) or argmin reduced L2 ([[assignCellL2]]),
+    * in both the driver loop and the distributed assignment.
     */
-  private[ext] def kmeansCentroidsGated(df: DataFrame, idCol: String,
-      vecCol: String, k: Int, iters: Int, maxComponents: Long): Seq[Seq[Double]] = {
+  private def kmeans(df: DataFrame, idCol: String, vec: Column,
+      k: Int, iters: Int, l2: Boolean): Seq[Seq[Double]] = {
     require(k >= 1 && iters >= 0)
     // 1e-9 quantization of init components, per-iteration means, and
     // (in assignCell) argmax scores: corpus-order summation noise
@@ -366,55 +369,38 @@ object Similarity {
     // ~1e-14 at fixture scale against the 0.5e-9 quantum.
     def q(x: Double): Double = math.floor(x * 1e9 + 0.5) / 1e9
     var cents: IndexedSeq[Seq[Double]] = df
-      .select(col(idCol).cast("string").as("__id"), toDoubleArr(col(vecCol)).as("__v"))
+      .select(col(idCol).cast("string").as("__id"), toDoubleArr(vec).as("__v"))
       .orderBy(md5(col("__id")), col("__id"))
       .limit(k)
       .collect().map(_.getSeq[Double](1).map(q)).toIndexedSeq
-    // size-gated driver loop (the Bpe.DriverLearnMaxVocab shape): below
-    // the component cap the assignment + quantized mean run in-memory
-    // over one collected pass — k-means is k · iters corpus passes of
-    // 2-3 Spark jobs each otherwise, all fixed scheduling/codegen cost
-    // at fixture scale. Arithmetic is op-identical (KmeansPathSpec pins
-    // driver ≡ distributed); above the cap the distributed loop below
-    // is unchanged.
-    driverVectors(df, toDoubleArr(col(vecCol)), cents, maxComponents) match {
-      case Some(vecs) =>
-        return kmeansDriverLoop(vecs, cents, iters, l2 = false)
-      case None => ()
+    // driver loop under the budget (a dim-value row per vector): the
+    // assignment + quantized mean run in-memory over one collected pass
+    // — k-means is k · iters corpus passes of 2-3 Spark jobs each
+    // otherwise, all fixed scheduling/codegen cost at fixture scale.
+    // Arithmetic is op-identical (KmeansPathSpec pins driver ≡
+    // distributed); above the budget the distributed loop below runs.
+    val dim = cents.headOption.fold(0)(_.size)
+    val vecs = if (dim == 0) None
+      else graft.util.DriverBudget.collect(df.select(toDoubleArr(vec)),
+        graft.util.DriverBudget.fixedRowBytes(dim))
+    vecs match {
+      case Some(rows) =>
+        kmeansDriverLoop(rows.map(_.getSeq[Double](0).toArray), cents, iters, l2)
+      case None =>
+        val withV = df.withColumn("__kv", vec)
+        (1 to iters).foreach { _ =>
+          val labeled =
+            if (l2) withV.withColumn("__cell", assignCellL2(toDoubleArr(col("__kv")), cents))
+            else withCellLabels(withV, idCol, "__kv", cents, "__cell")
+          val next = centroidComponents(labeled, "__cell", "__kv")
+            .groupBy(col("__cell"))
+            .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
+              s => s.getField("c")).as("centroid"))
+            .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).map(q).toSeq).toMap
+          cents = cents.indices.map(j => next.getOrElse(j, cents(j)))
+        }
+        cents.map(_.toSeq)
     }
-    (1 to iters).foreach { _ =>
-      val next = centroidComponents(
-        withCellLabels(df, idCol, vecCol, cents, "__cell"), "__cell", vecCol)
-        .groupBy(col("__cell"))
-        .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
-          s => s.getField("c")).as("centroid"))
-        .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).map(q).toSeq).toMap
-      cents = cents.indices.map(j => next.getOrElse(j, cents(j)))
-    }
-    cents.map(_.toSeq)
-  }
-
-  /** Component cap for the driver-side k-means loop: rows × dim at or
-    * under this collects (≤ ~256 MB of doubles) and learns in-memory;
-    * above it the distributed loop runs — 150k × 768 rehearsal
-    * geometries and real corpora stay distributed.
-    */
-  val DriverKmeansMaxComponents: Long = 32L * 1024 * 1024
-
-  /** One capped collect of the vectors when they fit the driver gate
-    * (None above the gate). The row cap derives from the learned
-    * dimension so the cap is on COMPONENTS, not rows.
-    */
-  private def driverVectors(df: DataFrame, vec: Column,
-      cents: IndexedSeq[Seq[Double]],
-      maxComponents: Long): Option[Array[Array[Double]]] = {
-    val dim = cents.headOption.map(_.size).getOrElse(0)
-    if (dim == 0) return None
-    val rowCap = math.min(maxComponents / dim, Int.MaxValue.toLong - 1).toInt
-    if (rowCap <= 0) return None
-    val rows = df.select(vec.as("__v")).limit(rowCap + 1).collect()
-    if (rows.length > rowCap) None
-    else Some(rows.map(_.getSeq[Double](0).toArray))
   }
 
   /** In-memory twin of the quantized k-means iteration — the EXACT op
@@ -429,7 +415,7 @@ object Similarity {
     * HALF_UP at scale 18), with the empty-cell carry. KmeansPathSpec
     * pins bit-identity against the distributed loop on both metrics.
     */
-  private[ext] def kmeansDriverLoop(vecs: Array[Array[Double]],
+  private def kmeansDriverLoop(vecs: Array[Array[Double]],
       init: IndexedSeq[Seq[Double]], iters: Int, l2: Boolean): Seq[Seq[Double]] = {
     def q(x: Double): Double = math.floor(x * 1e9 + 0.5) / 1e9
     var cents = init
@@ -517,38 +503,7 @@ object Similarity {
     */
   def kmeansCentroidsL2(df: DataFrame, idCol: String, vecCol: Column,
       k: Int, iters: Int = 3): Seq[Seq[Double]] =
-    kmeansCentroidsL2Gated(df, idCol, vecCol, k, iters, DriverKmeansMaxComponents)
-
-  /** [[kmeansCentroidsL2]] with an explicit driver-gate cap — the
-    * spec's forced-path hook (cap 0 forces the distributed loop).
-    */
-  private[ext] def kmeansCentroidsL2Gated(df: DataFrame, idCol: String,
-      vecCol: Column, k: Int, iters: Int, maxComponents: Long): Seq[Seq[Double]] = {
-    require(k >= 1 && iters >= 0)
-    def q(x: Double): Double = math.floor(x * 1e9 + 0.5) / 1e9
-    var cents: IndexedSeq[Seq[Double]] = df
-      .select(col(idCol).cast("string").as("__id"), toDoubleArr(vecCol).as("__v"))
-      .orderBy(md5(col("__id")), col("__id"))
-      .limit(k)
-      .collect().map(_.getSeq[Double](1).map(q)).toIndexedSeq
-    // same size-gated driver loop as [[kmeansCentroids]], L2 metric
-    driverVectors(df, toDoubleArr(vecCol), cents, maxComponents) match {
-      case Some(vecs) =>
-        return kmeansDriverLoop(vecs, cents, iters, l2 = true)
-      case None => ()
-    }
-    (1 to iters).foreach { _ =>
-      val next = centroidComponents(
-        df.withColumn("__cell", assignCellL2(toDoubleArr(vecCol), cents))
-          .withColumn("__v2", vecCol), "__cell", "__v2")
-        .groupBy(col("__cell"))
-        .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
-          s => s.getField("c")).as("centroid"))
-        .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).map(q).toSeq).toMap
-      cents = cents.indices.map(j => next.getOrElse(j, cents(j)))
-    }
-    cents.map(_.toSeq)
-  }
+    kmeans(df, idCol, vecCol, k, iters, l2 = true)
 
   /** Product-quantization codebooks: the D-dim space split into `m`
     * contiguous subspaces of D/m dims, one quantized-L2 codebook of

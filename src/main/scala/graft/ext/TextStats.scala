@@ -256,47 +256,37 @@ object TextStats {
     * where Spark and DuckDB disagreed on 4 rows. Rounding both sides'
     * thresholds to the grid makes the cut deterministic.
     */
-  /** Histogram-row gate for the DRIVER-side threshold in
-    * [[percentileGate]]: at or under this many (stratum, value, count)
-    * rows the histogram is collected once and the order statistics +
-    * interpolation run in-memory — one Spark action at construction
-    * instead of four (boundary learn, subtotal collect, threshold scan,
-    * checkpoint), the same size-gated driver-path shape as
-    * [[Bpe.DriverLearnMaxVocab]] and the dedup union-find. The
-    * arithmetic is the distributed form's exact IEEE op sequence
-    * (verified by the chunking-invariance spec, which crosses the gate).
-    * Above the gate the chunked two-phase prefix sum below is unchanged
-    * — the 100 TB path for near-distinct value distributions.
-    */
-  val DriverGateMaxHistogram = 2000000
-
   def percentileGate(df: DataFrame, strataCol: String, valueCol: String,
       q: Double, thrDigits: Option[Int] = None,
       chunks: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(chunks > 0 && chunks <= 65536, s"chunks in [1, 65536], got $chunks")
     // group on the double view of the value — the same widening
     // Spark's percentile applies before interpolating.
     val ctsPlan = df.filter(col(valueCol).isNotNull)
       .groupBy(col(strataCol), col(valueCol).cast("double").as("__v"))
       .agg(count(lit(1)).as("__c"))
-    // one capped action both sizes the histogram and, under the gate,
-    // IS the histogram: thresholds then compute driver-side with zero
-    // further jobs (exact same order-statistic + interpolation ops)
-    val probe = ctsPlan.limit(DriverGateMaxHistogram + 1).collect()
-    if (probe.length <= DriverGateMaxHistogram) {
-      val thrRows = driverThresholds(probe, q, thrDigits)
-      val thrDf = df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(thrRows: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          ctsPlan.schema.head,
-          org.apache.spark.sql.types.StructField("__thr",
-            org.apache.spark.sql.types.DoubleType))))
-      return df.join(broadcast(thrDf), strataCol)
-        .filter(col(valueCol) >= col("__thr"))
-        .drop("__thr")
+    // a histogram that fits the driver budget is collected once and the
+    // order statistics + interpolation run in-memory — one Spark action
+    // at construction instead of four (boundary learn, subtotal collect,
+    // threshold scan, checkpoint). The arithmetic is the distributed
+    // form's exact IEEE op sequence (the chunking-invariance spec crosses
+    // the gate); above the budget the chunked two-phase prefix sum runs —
+    // the 100 TB path for near-distinct value distributions. A
+    // histogram row (stratum, value, count) is charged as three values.
+    graft.util.DriverBudget.collect(ctsPlan, graft.util.DriverBudget.fixedRowBytes(3)) match {
+      case Some(hist) =>
+        val thrRows = driverThresholds(hist, q, thrDigits)
+        val thrDf = df.sparkSession.createDataFrame(
+          java.util.Arrays.asList(thrRows: _*),
+          org.apache.spark.sql.types.StructType(Seq(
+            ctsPlan.schema.head,
+            org.apache.spark.sql.types.StructField("__thr",
+              org.apache.spark.sql.types.DoubleType))))
+        df.join(broadcast(thrDf), strataCol)
+          .filter(col(valueCol) >= col("__thr"))
+          .drop("__thr")
+      case None => percentileGateDistributed(df, strataCol, valueCol, q, thrDigits, chunks)
     }
-    percentileGateDistributed(df, strataCol, valueCol, q, thrDigits, chunks)
   }
 
   /** The above-the-gate chunked machinery — and the spec's forced-path

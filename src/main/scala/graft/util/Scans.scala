@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * (shingle explode + md5, JSON synth/parse, chunk explode) runs
   * serially on a 32-core executor.
   */
-object Scans {
+object Scans extends org.apache.spark.sql.catalyst.expressions.PredicateHelper {
 
   /** The scan partition count Spark's `FilePartition` would produce for
     * `fileSizes` — the split formula (maxPartitionBytes / openCost /
@@ -51,12 +51,15 @@ object Scans {
     parts
   }
 
-  /** The analyzed plan's single file relation, when `df` is a
-    * projection/filter chain over one file scan — enough for every
+  /** File sizes of the analyzed plan's single file relation, when `df`
+    * is a projection/filter chain over one file scan — enough for every
     * [[spread]] caller; anything else returns None and the caller
-    * falls back to the planned partition count.
+    * falls back to the planned partition count. The walked filters'
+    * conjuncts that reference only partition columns prune the listing,
+    * so a partition-pruned scan is sized from the files it reads.
     */
-  private def scanFileSizes(df: DataFrame): Option[Seq[Long]] = {
+  private[util] def scanFileSizes(df: DataFrame): Option[Seq[Long]] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression, SubqueryExpression}
     import org.apache.spark.sql.catalyst.plans.logical._
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     // STRICT chain walk, not collect(): a repartition/join/aggregate
@@ -64,18 +67,21 @@ object Scans {
     // file-derived width would be wrong for it (pinned by ScansSpec's
     // "already-wide frame passes through untouched")
     @scala.annotation.tailrec
-    def walk(p: LogicalPlan): Option[Seq[Long]] = p match {
-      case Project(_, child)      => walk(child)
-      case Filter(_, child)       => walk(child)
-      case SubqueryAlias(_, child) => walk(child)
+    def walk(p: LogicalPlan, filters: Seq[Expression]): Option[Seq[Long]] = p match {
+      case Project(_, child)      => walk(child, filters)
+      case Filter(cond, child)    => walk(child, filters ++ splitConjunctivePredicates(cond))
+      case SubqueryAlias(_, child) => walk(child, filters)
       case l: LogicalRelation => l.relation match {
         case fs: HadoopFsRelation =>
-          Some(fs.location.listFiles(Nil, Nil).flatMap(_.files.map(_.getLen)))
+          val part = AttributeSet(l.output.filter(a => fs.partitionSchema.fieldNames.contains(a.name)))
+          val pruning = filters.filter(f => f.deterministic &&
+            !SubqueryExpression.hasSubquery(f) && f.references.subsetOf(part))
+          Some(fs.location.listFiles(pruning, Nil).flatMap(_.files.map(_.getLen)))
         case _ => None
       }
       case _ => None
     }
-    walk(df.queryExecution.analyzed)
+    walk(df.queryExecution.analyzed, Nil)
   }
 
   /** Hash-repartition `df` to executor width ahead of an expensive

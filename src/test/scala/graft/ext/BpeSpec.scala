@@ -118,7 +118,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("driver-gated learn is merge-for-merge identical to the distributed loop") {
-    // the round-18 size gate (DriverLearnMaxVocab): below it the whole
+    // the round-18 size gate (graft.util.DriverBudget): under it the whole
     // merge loop runs in-memory over the collected vocabulary; the two
     // paths must agree on EVERY fixture family — count ties, self-pair
     // runs (the greedy-application trap), and astral-plane symbols,

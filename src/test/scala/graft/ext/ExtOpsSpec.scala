@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.util.DriverBudget
 
 /** Library-API tests for the operators not covered by the oracle gate:
   * ANN bucket probing, LSH-candidates→exact-verify composition, and the
@@ -125,18 +126,16 @@ class ExtOpsSpec extends SparkSpec {
     assert(driver == expected)
     // distributed star-contraction path must produce the identical
     // assignment
-    val dist = Dedup.connectedComponents(pairs, "doc_id_a", "doc_id_b",
-      driverThreshold = 0L)
-      .as[(Long, Long)].collect().toMap
+    val dist = DriverBudget.withBytes(0L)(Dedup.connectedComponents(pairs, "doc_id_a", "doc_id_b")
+      .as[(Long, Long)].collect().toMap)
     assert(dist == expected)
 
     // adversarial shape: one 64-node CHAIN (diameter 63 — the case the
     // old min-label propagation needed 63 rounds for). Star contraction
     // must label it in O(log n) rounds.
     val chain = (1L until 64L).map(i => (i, i + 1)).toDF("doc_id_a", "doc_id_b")
-    val chainDist = Dedup.connectedComponents(chain, "doc_id_a", "doc_id_b",
-      driverThreshold = 0L)
-      .as[(Long, Long)].collect().toMap
+    val chainDist = DriverBudget.withBytes(0L)(Dedup.connectedComponents(chain, "doc_id_a", "doc_id_b")
+      .as[(Long, Long)].collect().toMap)
     assert(chainDist == (1L to 64L).map(_ -> 1L).toMap)
     val oriented = chain.select(col("doc_id_b").as("src"), col("doc_id_a").as("dst"))
     val (labels, rounds) = Dedup.starContraction(oriented)

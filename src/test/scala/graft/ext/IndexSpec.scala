@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.util.DriverBudget
 
 /** The build-once / probe-many index lifecycle: probe results must
   * equal the one-shot forms bit-for-bit, probes must plan against the
@@ -610,13 +611,13 @@ class IndexSpec extends SparkSpec {
     assert(windows.nonEmpty && windows.forall(_.partitionSpec.nonEmpty),
       "unpartitioned window in batch probe")
 
-    // VERDICT r14 #2 — the size gate: above broadcastMaxRows the probe
+    // VERDICT r14 #2 — the size gate: above the driver budget the probe
     // and candidate sets take the SHUFFLE path (the broadcast hints are
     // structurally absent from the analyzed plan), with per-query
     // results identical to the broadcast path
-    val shuffled = Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
-      emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 10, rerank = 50,
-      broadcastMaxRows = 0L)
+    val shuffled = DriverBudget.withBytes(0L)(Ann.probeBatch(spark, idx, Ann.Ivf(nprobe = 2),
+      "vec_id", "embedding", emb.filter(col("vec_id") < 3), "vec_id", "embedding",
+      k = 10, rerank = 50))
     def hintCount(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.analyzed.collect {
         case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
@@ -661,8 +662,8 @@ class IndexSpec extends SparkSpec {
       assert(sq8Got(qid) == single, s"sq8 batch diverges from single probe for $qid")
     }
     // shuffle path (gate forced off) must be result-identical
-    assert(byQid(Ann.probeBatch(spark, sq8, Ann.Flat(corpus), "vec_id", "embedding",
-      queriesDf, "vec_id", "embedding", k = 10, rerank = 50, broadcastMaxRows = 0L)) == sq8Got, "sq8 shuffle path diverges")
+    assert(DriverBudget.withBytes(0L)(byQid(Ann.probeBatch(spark, sq8, Ann.Flat(corpus), "vec_id", "embedding",
+      queriesDf, "vec_id", "embedding", k = 10, rerank = 50))) == sq8Got, "sq8 shuffle path diverges")
 
     val ivfSq8 = tmpDir("idx-ivfsq8-batch")
     Ann.build(corpus, "vec_id", "embedding", ivfSq8, Ann.SQ8(64), Ann.Ivf(k = 8))
@@ -676,8 +677,8 @@ class IndexSpec extends SparkSpec {
         .as[(Long, Double)].collect().toSeq
       assert(ivfGot(qid) == single, s"ivfSq8 batch diverges from single probe for $qid")
     }
-    assert(byQid(Ann.probeBatch(spark, ivfSq8, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
-      queriesDf, "vec_id", "embedding", k = 10, rerank = 50, broadcastMaxRows = 0L)) == ivfGot,
+    assert(DriverBudget.withBytes(0L)(byQid(Ann.probeBatch(spark, ivfSq8, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      queriesDf, "vec_id", "embedding", k = 10, rerank = 50))) == ivfGot,
       "ivfSq8 shuffle path diverges")
 
     val bq = tmpDir("idx-bq-batch")
@@ -692,8 +693,8 @@ class IndexSpec extends SparkSpec {
         .as[(Long, Double)].collect().toSeq
       assert(bqGot(qid) == single, s"bq batch diverges from single probe for $qid")
     }
-    assert(byQid(Ann.probeBatch(spark, bq, Ann.Flat(corpus), "vec_id", "embedding",
-      queriesDf, "vec_id", "embedding", k = 10, rerank = 50, broadcastMaxRows = 0L)) == bqGot, "bq shuffle path diverges")
+    assert(DriverBudget.withBytes(0L)(byQid(Ann.probeBatch(spark, bq, Ann.Flat(corpus), "vec_id", "embedding",
+      queriesDf, "vec_id", "embedding", k = 10, rerank = 50))) == bqGot, "bq shuffle path diverges")
 
     val ivfBq = tmpDir("idx-ivfbq-batch")
     Ann.build(corpus, "vec_id", "embedding", ivfBq, Ann.BQ(64), Ann.Ivf(k = 8))
@@ -707,8 +708,8 @@ class IndexSpec extends SparkSpec {
         .as[(Long, Double)].collect().toSeq
       assert(ivfBqGot(qid) == single, s"ivfBq batch diverges from single probe for $qid")
     }
-    assert(byQid(Ann.probeBatch(spark, ivfBq, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
-      queriesDf, "vec_id", "embedding", k = 10, rerank = 50, broadcastMaxRows = 0L)) == ivfBqGot,
+    assert(DriverBudget.withBytes(0L)(byQid(Ann.probeBatch(spark, ivfBq, Ann.Ivf(nprobe = 2), "vec_id", "embedding",
+      queriesDf, "vec_id", "embedding", k = 10, rerank = 50))) == ivfBqGot,
       "ivfBq shuffle path diverges")
   }
 
@@ -851,15 +852,14 @@ class IndexSpec extends SparkSpec {
       df.collect().map(_.toString).toSeq.sorted
     val literal = probe()
     assert(hasTab(literal), "under the default budget the dot tables ride the probe rows")
-    // 3 queries x 64 dims x 8 B = 1.5 KB of vectors fit the budget; the
-    // dot tables add nprobe x m x ksub x 8 B = 1 KB per query, which
-    // does not — the batch must take the distributed path
-    System.setProperty("graft.batchquery.collect.maxbytes", "2048")
-    try {
+    // a budget of exactly 3 query rows (qid, 64 dims, norm): the vectors
+    // fit; the dot tables add nprobe probed rows of m x ksub values per
+    // query, which do not — the batch must take the distributed path
+    DriverBudget.withBytes(3 * DriverBudget.fixedRowBytes(2 + 64)) {
       val gated = probe()
       assert(!hasTab(gated), "over-budget batch still ships per-row dot tables")
       assert(rows(gated) == rows(literal), "distributed path diverges from the literal path")
-    } finally System.clearProperty("graft.batchquery.collect.maxbytes")
+    }
   }
 
   test("a same-path rebuild is probed with its new schema, never the memoized one") {

@@ -1,9 +1,11 @@
 package graft.ext
 
 import graft.SparkSpec
+import graft.util.DriverBudget
 
-/** Round-18 driver-gated k-means: below [[Similarity.DriverKmeansMaxComponents]]
-  * the quantized learn runs in-memory over one collected pass; these pins
+/** Round-18 driver-gated k-means: vectors that fit the
+  * [[graft.util.DriverBudget]] learn in-memory over one collected pass
+  * (a zero budget forces the distributed loop); these pins
   * hold the gate's contract — the driver loop is BIT-IDENTICAL to the
   * distributed loop on both metrics, including the deterministic tie and
   * empty-cell-carry rules, so every consumer (the kmeans_centroids oracle
@@ -33,8 +35,8 @@ class KmeansPathSpec extends SparkSpec {
   test("cosine k-means: driver-gated loop is bit-identical to the distributed loop") {
     val df = fixture
     val driver = Similarity.kmeansCentroids(df, "vec_id", "embedding", k = 4, iters = 3)
-    val dist = Similarity.kmeansCentroidsGated(df, "vec_id", "embedding",
-      k = 4, iters = 3, maxComponents = 0L)
+    val dist = DriverBudget.withBytes(0L)(Similarity.kmeansCentroids(df, "vec_id", "embedding",
+      k = 4, iters = 3))
     assert(driver == dist)
   }
 
@@ -43,8 +45,8 @@ class KmeansPathSpec extends SparkSpec {
     val slice = org.apache.spark.sql.functions.slice(
       Similarity.toDoubleArr(col("embedding")), 1, 4)
     val driver = Similarity.kmeansCentroidsL2(df, "vec_id", slice, k = 5, iters = 3)
-    val dist = Similarity.kmeansCentroidsL2Gated(df, "vec_id", slice,
-      k = 5, iters = 3, maxComponents = 0L)
+    val dist = DriverBudget.withBytes(0L)(Similarity.kmeansCentroidsL2(df, "vec_id", slice,
+      k = 5, iters = 3))
     assert(driver == dist)
   }
 
@@ -54,8 +56,8 @@ class KmeansPathSpec extends SparkSpec {
       (1L, Seq(1.0, 0.0)), (2L, Seq(1.0, 0.1)), (3L, Seq(0.9, 0.0)),
       (4L, Seq(1.1, 0.0)), (5L, Seq(1.0, 0.05))).toDF("vec_id", "embedding")
     val driver = Similarity.kmeansCentroids(df, "vec_id", "embedding", k = 5, iters = 2)
-    val dist = Similarity.kmeansCentroidsGated(df, "vec_id", "embedding",
-      k = 5, iters = 2, maxComponents = 0L)
+    val dist = DriverBudget.withBytes(0L)(Similarity.kmeansCentroids(df, "vec_id", "embedding",
+      k = 5, iters = 2))
     assert(driver == dist)
   }
 }

@@ -54,6 +54,19 @@ class ScansSpec extends SparkSpec {
       "estimate diverges on a multi-file layout")
   }
 
+  test("a partition-pruned scan is sized from the partitions it reads") {
+    val dir = tmpDir("scans-pruned")
+    spark.range(800).select(col("id"), (col("id") % 8).as("p"))
+      .coalesce(1).write.mode("overwrite").partitionBy("p").parquet(dir)
+    val pruned = spark.read.parquet(dir).filter(col("p") === 3)
+    assert(Scans.scanFileSizes(pruned).map(Scans.estimateScanPartitions(spark, _))
+      .contains(pruned.rdd.getNumPartitions),
+      "estimate diverges from the pruned scan's partition count")
+    assert(Scans.spread(pruned, col("id")).rdd.getNumPartitions ==
+      spark.sparkContext.defaultParallelism,
+      "a pruned single-file scan must spread to executor width")
+  }
+
   test("spread repartitions a narrow scan and leaves a wide frame alone") {
     val dir = tmpDir("scans-spread")
     spark.range(1000).select(col("id"), (col("id") % 7).as("k"))
