@@ -540,11 +540,11 @@ object Bench {
     }
     // Per-segment machine-speed factor, refreshed every
     // CalibEveryQueries queries (see MiniCalibRefSec). norm_v 3
-    // (round 13, the BenchDoctor diagnosis): each query divides by the
+    // (round 13, the A/B diagnosis in PERF.md): each query divides by the
     // larger of the signals BRACKETING its segment — the probe before
     // it AND the probe after it — because the dominant noise on this
     // VM is bursty JVM-internal churn (JIT compile storms + GC after
-    // new-plan codegen: a doctor A/B pass measured ±29% median
+    // new-plan codegen: an A/B pass measured ±29% median
     // single-rep jitter and 3.2× probe spikes with NO external load,
     // BENCH doctor r13). A burst that lands mid-segment registers in
     // the closing probe and still corrects the queries it inflated;
@@ -720,7 +720,7 @@ object Bench {
     // Machine-readable full-precision copy, free of sbt's [info]/[error]
     // line prefixes. Default is RELATIVE to the working directory so any
     // checkout works; SPARK_GRAFT_BENCH_OUT overrides.
-    // JVM-churn counters (BenchDoctor r13): GC + JIT time over the run,
+    // JVM-churn counters (PERF.md r13): GC + JIT time over the run,
     // for reading future raw-vs-norm divergence without a re-diagnosis
     val gcMs = {
       import scala.jdk.CollectionConverters._

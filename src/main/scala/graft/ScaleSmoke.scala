@@ -1071,37 +1071,6 @@ object ScaleSmoke {
       skewed.unpersist()
     }
 
-    // --- serving admission at 1,000 subscribers over a 1M-row batch:
-    // the broadcast-tag probe (ServeJob.admissionCounts, ≤4 jobs) vs
-    // the rejected designs — 1,000 serial count() jobs (round-2 shape)
-    // and 1,000 conditional counts in one agg (defeats codegen: 21 s
-    // measured on this same batch).
-    {
-      val batch = spark.range(1000000).select(
-        concat(lit("did:plc:u"), pmod(col("id"), lit(10000))).as("did"),
-        col("id").as("time_us"),
-        element_at(
-          array(lit("app.bsky.feed.post"), lit("app.bsky.feed.like"),
-            lit("app.bsky.graph.follow"), lit("app.bsky.feed.repost"),
-            lit("app.bsky.actor.profile")),
-          (pmod(col("id"), lit(5)) + 1).cast("int")).as("collection"))
-      batch.cache().count()
-      val specs = (0 until 1000).map { i =>
-        s"sub$i" -> Subscribe.SubscriberSpec(
-          wantedCollections = Seq("app.bsky.feed.post", "app.bsky.feed.like"),
-          wantedDids = Seq(s"did:plc:u$i", s"did:plc:u${i + 1}", s"did:plc:u${i + 2}"),
-          hwmUs = 1000L)
-      }.toMap
-      val t = System.nanoTime()
-      val counts = graft.serve.ServeJob.admissionCounts(batch, specs, "collection", "did")
-      val sec = (System.nanoTime() - t) / 1e9
-      println(f"[scale] 1000-subscriber admission (broadcast-tag probe) over 1M rows: " +
-        f"$sec%.2fs, ${counts.size} counts, ${counts.values.sum} matching events " +
-        f"(≤4 jobs at any N; the 1000-expression agg form measured 21s, " +
-        f"per-subscriber jobs would be 1000 serial submissions)")
-      batch.unpersist()
-    }
-
     // --- driver egress ceiling at 100 subscribers: the serving edge's
     // in-process half — the per-subscriber predicate pass (the
     // liveEmitFrames loop; Subscribe.admits is its spec-pinned twin)
@@ -1146,7 +1115,7 @@ object ScaleSmoke {
       val delivered = new java.util.concurrent.atomic.AtomicLong
       val bytes = new java.util.concurrent.atomic.AtomicLong
       val t0 = System.nanoTime()
-      graft.serve.ServeJob.onPool(conns, 100) { case (out, spec) =>
+      graft.serve.SocketServe.onPool(conns, 100) { case (out, spec) =>
         var i = 0; var n = 0L; var b = 0L
         while (i < nFrames) {
           val f = frames(i)

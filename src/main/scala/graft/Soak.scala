@@ -450,12 +450,12 @@ object Soak {
     // restarted edge's late subscriber must replay the surviving
     // history exactly-once and tail live, like any late joiner.
     def startEdge(tag: String): graft.serve.SocketServe.Server = {
-      val headUs = graft.sources.SocketIngress.resumeState(spark, tablePath)._2
+      val headUs = EventsTable.resumeState(spark, tablePath)._2
       val tail = spark.readStream.format("graft-replay")
         .option("path", tablePath)
         .option("cursor", (headUs + 1).toString)
         .load()
-      graft.serve.WebSocketServe.start(tail, tablePath,
+      graft.serve.SocketServe.start(tail, tablePath,
         s"$dataDir/checkpoints/serve-$tag",
         metrics = new Metrics.Registry, maxSubRate = Some(1e9),
         replayChunkSize = 50000,

@@ -19,7 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * through it).
   */
 object SyntaxCheck {
-  // conservative approximations of the atproto specs (see Subscribe)
+  // conservative approximations of the atproto specs, the one rule for
+  // subscribe validation (Subscribe.validate) and SQL: an NSID is dotted,
+  // ≥3 segments, last segment a name (indigo `syntax.ParseNSID`); a DID
+  // is `did:<method>:<id>` (indigo `syntax.ParseDID`)
   private val Nsid = java.util.regex.Pattern.compile(
     "[a-zA-Z]([a-zA-Z0-9-]*)(\\.[a-zA-Z0-9-]+)+\\.[a-zA-Z]([a-zA-Z0-9]*)")
   private val Did = java.util.regex.Pattern.compile(

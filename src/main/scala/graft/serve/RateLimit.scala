@@ -1,17 +1,17 @@
 package graft.serve
 
-/** S20 — per-subscriber egress pacing: a token bucket with the
-  * reference's two operating points (cmd/jetstream/server.go:211
-  * `rate.NewLimiter(rate.Limit(maxSubRate), int(maxSubRate))` for live
-  * delivery, and server.go:307 `playbackRateLimit = maxSubRate * 10` for
-  * replay, enforced inside the playback iterator at
-  * pkg/consumer/persist.go:147-149).
+/** S20 — per-subscriber replay pacing: a token bucket at the
+  * reference's playback operating point (server.go:307
+  * `playbackRateLimit = maxSubRate * 10`, enforced inside the playback
+  * iterator at pkg/consumer/persist.go:147-149). The reference's live
+  * limiter (server.go:211) has no twin here: live delivery is not
+  * capped per subscriber.
   *
   * Driver-side state by design: pacing is per-subscriber control flow,
   * not a data transform — the Spark work stays distributed, only the
-  * admit/deny decision lives here (the same split as the reference,
-  * where the limiter wraps the websocket write loop, not the storage
-  * scan). The clock is injectable so specs are deterministic.
+  * admit decision lives here (the same split as the reference, where
+  * the limiter wraps the playback loop, not the storage scan). The
+  * clock is injectable so specs are deterministic.
   */
 final class TokenBucket(ratePerSec: Double, burst: Long, nowUs: () => Long) {
   require(ratePerSec > 0 && burst > 0)
@@ -25,18 +25,6 @@ final class TokenBucket(ratePerSec: Double, burst: Long, nowUs: () => Long) {
       tokens = math.min(burst.toDouble, tokens + (t - lastUs) * ratePerSec / 1e6)
       lastUs = t
     }
-  }
-
-  /** All-or-nothing admit of `n` events — the live-tail form. The
-    * reference blocks the subscriber's write loop and closes the
-    * connection when its 10k-event buffer overflows (server.go:154-175);
-    * the micro-batch twin is: a batch that exceeds the accumulated
-    * budget would have overflowed the buffer → caller drops the
-    * subscriber (S21).
-    */
-  def tryAcquire(n: Long): Boolean = synchronized {
-    refill()
-    if (n <= tokens) { tokens -= n; true } else false
   }
 
   /** Take up to `n` tokens — the playback form (persist.go:147-149
@@ -66,15 +54,11 @@ final class TokenBucket(ratePerSec: Double, burst: Long, nowUs: () => Long) {
 }
 
 object TokenBucket {
-  /** Reference defaults: 5k ev/s live cap, 10× for playback
+  /** Reference defaults: 5k ev/s `maxSubRate`, 10× for playback
     * (BASELINE.md; cmd/jetstream/main.go's maxSubRate flag default).
     */
   val DefaultLiveRate = 5000.0
   val PlaybackMultiplier = 10.0
-
-  def live(nowUs: () => Long = () => System.nanoTime() / 1000L,
-      rate: Double = DefaultLiveRate): TokenBucket =
-    new TokenBucket(rate, rate.toLong, nowUs)
 
   def playback(nowUs: () => Long = () => System.nanoTime() / 1000L,
       liveRate: Double = DefaultLiveRate): TokenBucket = {

@@ -1,6 +1,5 @@
 package graft.serve
 
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.net.{ServerSocket, Socket}
 
 import org.apache.spark.sql.DataFrame
@@ -10,28 +9,26 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ingest.Decode
 
 /** The serving half of the standing-service posture across a REAL
-  * process boundary: a TCP line server whose subscribers receive wire
-  * JSON frames (the reference's websocket subscribe endpoint,
-  * cmd/jetstream/server.go:244-356 — handshake swapped for a
-  * line-protocol request, everything behind it the same shape).
+  * process boundary: the reference's WebSocket subscribe endpoint
+  * (cmd/jetstream/server.go:244-356), whose subscribers receive wire
+  * JSON frames over [[WebSocketServe.WsTransport]].
   *
-  * Protocol: a subscriber connects and sends ONE request line of query
-  * parameters — `wantedCollections=a,b&wantedDids=…&cursor=<µs>` (the
-  * reference's query-string surface, server.go:244-287) — then reads
-  * wire JSON lines until it disconnects. No `cursor` means live-only:
+  * Request: the upgrade's query string —
+  * `wantedCollections=a,b&wantedDids=…&cursor=<µs>` (the reference's
+  * query-string surface, server.go:244-287) — then wire JSON frames
+  * until the subscriber disconnects. No `cursor` means live-only:
   * implemented as a FUTURE cursor, which cuts over immediately — the
   * exact "future cursor → live" rule of server.go:283-286.
   *
-  * Serving loop (modeled on [[ServeJob.startSessions]], which pins the
-  * semantics intra-JVM): one streaming query tails the events table;
-  * each micro-batch snapshots the CURRENT subscriber registry — new
+  * Serving loop: one streaming query tails the events table; each
+  * micro-batch snapshots the CURRENT subscriber registry — new
   * connections join at the next batch, the reference's dynamic attach —
   * and every subscriber runs its [[CutoverSession]] lifecycle (cursor
   * replay chunks, gap-fill, live emit with the replay-lag gate) on the
   * bounded fan-out pool, its view serialized through the shared
-  * serialize-once wire cache. A write failure (disconnect, dead pipe)
-  * drops the subscriber exactly like the reference's slow-consumer
-  * close (server.go:168-175).
+  * serialize-once wire cache. A write failure (disconnect, dead pipe,
+  * or a write stalled past `writeTimeoutMs`) drops the subscriber
+  * exactly like the reference's slow-consumer close (server.go:168-175).
   *
   * Scale posture: the LIVE path costs ONE Spark job per micro-batch at
   * any subscriber count — the batch is wire-serialized distributed,
@@ -47,6 +44,29 @@ import graft.ingest.Decode
   * longs of state each) — the table, not the server, is the scale axis.
   */
 object SocketServe extends org.apache.spark.internal.Logging {
+
+  /** Reference fan-out concurrency (server.go:89 `sem := make(chan
+    * struct{}, 100)`).
+    */
+  val DefaultFanOutWidth = 100
+
+  /** Run `f` over `items` on a bounded pool, rethrowing the first
+    * failure. Pool width is the reference's fan-out semaphore.
+    */
+  private[graft] def onPool[A](items: Seq[A], width: Int)(f: A => Unit): Unit = {
+    if (items.isEmpty) return
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(width, items.size))
+    try {
+      val futures = items.map { i =>
+        pool.submit(new Runnable { def run(): Unit = f(i) })
+      }
+      futures.foreach { fut =>
+        try fut.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+    } finally pool.shutdown()
+  }
 
   /** Throttled warning: at most one log line per (context, exception
     * class) per interval. The serve loops run at 40 Hz / per-batch —
@@ -71,9 +91,9 @@ object SocketServe extends org.apache.spark.internal.Logging {
   }
 
   /** Per-connection wire protocol: how a subscriber's request arrives
-    * and how wire JSON frames go back. One implementation per
-    * transport; the serving loop (sessions, cutover, fan-out, metrics,
-    * drops) is transport-agnostic.
+    * and how wire JSON frames go back. [[WebSocketServe.WsTransport]] is
+    * the one wire; the trait is the seam a spec wraps to inject write
+    * faults.
     */
   private[serve] trait Transport {
     /** Handshake a fresh connection: the request query string
@@ -100,36 +120,6 @@ object SocketServe extends org.apache.spark.internal.Logging {
     def writeFrames(frames: Array[String]): Long
   }
 
-  /** The line protocol: one request line in, one JSON line per frame
-    * out (the round-6 serve surface, kept as the plain-TCP transport).
-    */
-  private[serve] object LineTransport extends Transport {
-    def open(sock: Socket): Option[(String, WireWriter)] = {
-      val line = new BufferedReader(
-        new InputStreamReader(sock.getInputStream, "UTF-8")).readLine()
-      Option(line).map { l =>
-        // explicit UTF-8: the wire contract (and every reader) is
-        // UTF-8, not the platform default; byte accounting likewise
-        // counts encoded bytes, not UTF-16 chars
-        val out = new PrintWriter(new java.io.OutputStreamWriter(
-          sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8), false)
-        (l, new WireWriter {
-          def writeFrames(frames: Array[String]): Long = {
-            var bytes = 0L
-            frames.foreach { f =>
-              out.println(f)
-              bytes += f.getBytes(java.nio.charset.StandardCharsets.UTF_8).length + 1L
-            }
-            out.flush()
-            if (out.checkError())
-              throw new java.io.IOException("dead or stalled pipe")
-            bytes
-          }
-        })
-      }
-    }
-  }
-
   private final case class Conn(
       name: String,
       session: CutoverSession,
@@ -139,16 +129,16 @@ object SocketServe extends org.apache.spark.internal.Logging {
       delivered: Metrics.Series,
       bytesDelivered: Metrics.Series)
 
-  /** Parse the request line's query parameters. REPEATED occurrences
+  /** Parse the request's query parameters. REPEATED occurrences
     * accumulate — `wantedCollections=a&wantedCollections=b` is the
     * reference's actual wire form (Go's `URL.Query()["k"]` slice,
     * server.go:251,263); the comma-separated form inside one value is
     * kept as this engine's extension. `cursor` takes the FIRST
     * occurrence (Go's `Query().Get`, server.go:275).
     */
-  private[serve] def parseRequest(line: String, nowUs: Long)
+  private[serve] def parseRequest(request: String, nowUs: Long)
       : (Subscribe.SubscriberSpec, Long) = {
-    val pairs = line.trim.stripPrefix("subscribe?").split("&").toSeq
+    val pairs = request.trim.stripPrefix("subscribe?").split("&").toSeq
       .map(_.split("=", 2)).collect {
         case Array(k, v) if v.nonEmpty => k -> v
       }
@@ -200,12 +190,12 @@ object SocketServe extends org.apache.spark.internal.Logging {
       events: DataFrame,
       tablePath: String,
       checkpointDir: String,
-      fanOutWidth: Int = ServeJob.DefaultFanOutWidth,
+      fanOutWidth: Int = DefaultFanOutWidth,
       trigger: Trigger = Trigger.ProcessingTime(0L),
       nowUs: () => Long = () => System.currentTimeMillis() * 1000L,
       writeTimeoutMs: Long = 30000L,
       metrics: Metrics.Registry = Metrics.default,
-      transport: Transport = LineTransport,
+      transport: Transport = WebSocketServe.WsTransport,
       maxSubRate: Option[Double] = None,
       port: Int = 0,
       replayChunkSize: Int = 10000,
@@ -252,20 +242,17 @@ object SocketServe extends org.apache.spark.internal.Logging {
         new Thread(() => {
           try {
             transport.open(sock) match {
-              case Some((line, writer)) =>
-                val (spec, cursor) = parseRequest(line, nowUs())
+              case Some((request, writer)) =>
+                val (spec, cursor) = parseRequest(request, nowUs())
                 // invalid filter params REJECT the subscription — the
                 // reference's ParseNSID/ParseDID error returns
                 // (server.go:253-271); a malformed cursor already
                 // rejects via the toLong throw → outer close
-                if (!spec.wantedCollections.forall(
-                      graft.functions.SyntaxCheck.isNsidStr) ||
-                    !spec.wantedDids.forall(
-                      graft.functions.SyntaxCheck.isDidStr))
-                  throw new IllegalArgumentException("invalid subscribe params")
+                Subscribe.validate(spec).left.foreach(msg =>
+                  throw new IllegalArgumentException(msg))
                 val name = s"sub-${counter.incrementAndGet()}"
                 val remote = sock.getInetAddress.getHostAddress
-                // per-subscriber replay pacing at 10× the live cap
+                // per-subscriber replay pacing at 10× maxSubRate
                 // (main.go:79-84 default, server.go:307)
                 val pacer = maxSubRate.map(r => TokenBucket.playback(liveRate = r))
                 val conn = Conn(name,
@@ -375,7 +362,7 @@ object SocketServe extends org.apache.spark.internal.Logging {
           // ticks — replay degrades to slow catch-up instead of
           // saturating the box until S21 drops a compliant client
           if (replaying.nonEmpty && replayThrottle.forall(_.stepAllowed())) {
-            ServeJob.onPool(replaying, fanOutWidth) { conn =>
+            onPool(replaying, fanOutWidth) { conn =>
               try conn.synchronized {
                 // the head is read INSIDE the lock, right before the
                 // step: a pre-read value can go stale while this worker
@@ -458,7 +445,7 @@ object SocketServe extends org.apache.spark.internal.Logging {
           // whichever site fires it.
           val batchStepAllowed = active.exists(_.session.replaying) &&
             replayThrottle.forall(_.stepAllowed())
-          ServeJob.onPool(active, fanOutWidth) { conn =>
+          onPool(active, fanOutWidth) { conn =>
             try conn.synchronized { // excludes the replay pump per conn
               // head read inside the lock — see the pump's note
               if (conn.session.replaying && batchStepAllowed)

@@ -25,24 +25,19 @@ import org.apache.spark.sql.functions._
   */
 object Subscribe {
 
-  /** NSID syntax per the reference's validation of wantedCollections
-    * (server.go:253-259, indigo `syntax.ParseNSID`): dotted, ≥3 segments,
-    * last segment a name. Conservative approximation of the atproto spec.
-    */
-  val NsidRegex = "^[a-zA-Z]([a-zA-Z0-9-]*)(\\.[a-zA-Z0-9-]+)+\\.[a-zA-Z]([a-zA-Z0-9]*)$"
-
-  /** DID syntax per server.go:265-271 (indigo `syntax.ParseDID`). */
-  val DidRegex = "^did:[a-z]+:[a-zA-Z0-9._:%-]*[a-zA-Z0-9._-]$"
-
   final case class SubscriberSpec(
       wantedCollections: Seq[String] = Nil,
       wantedDids: Seq[String] = Nil,
       hwmUs: Long = Long.MinValue)
 
-  /** S2 — parameter validation at the query boundary. */
+  /** S2 — parameter validation at the query boundary: NSID and DID
+    * syntax (the reference's `syntax.ParseNSID`/`ParseDID` at
+    * server.go:253-271), one rule shared with the SQL `nsid_valid`/
+    * `did_valid` checks ([[graft.functions.SyntaxCheck]]).
+    */
   def validate(spec: SubscriberSpec): Either[String, SubscriberSpec] = {
-    val badNsid = spec.wantedCollections.filterNot(_.matches(NsidRegex))
-    val badDid = spec.wantedDids.filterNot(_.matches(DidRegex))
+    val badNsid = spec.wantedCollections.filterNot(graft.functions.SyntaxCheck.isNsidStr)
+    val badDid = spec.wantedDids.filterNot(graft.functions.SyntaxCheck.isDidStr)
     if (badNsid.nonEmpty) Left(s"invalid NSIDs: ${badNsid.mkString(",")}")
     else if (badDid.nonEmpty) Left(s"invalid DIDs: ${badDid.mkString(",")}")
     else Right(spec)
@@ -127,16 +122,4 @@ object Subscribe {
       else col(didCol).isin(spec.wantedDids: _*)
     collOk && didOk && (col(timeCol) > spec.hwmUs)
   }
-
-  /** S17 — serialize-once fan-out: one upstream batch, N subscriber
-    * views. The wire JSON is materialized once (caller passes a batch
-    * already carrying a `wire` column, see Decode.toWire, and should
-    * `persist()` it — the Spark analog of marshaling once at
-    * server.go:73 before the semaphore fan-out at :87-111); each
-    * subscriber then only filters + selects.
-    */
-  def fanOut(wireBatch: DataFrame, specs: Map[String, SubscriberSpec]): Map[String, DataFrame] =
-    specs.map { case (name, spec) =>
-      name -> wireBatch.filter(filterFor(spec)).select(col("wire"))
-    }
 }

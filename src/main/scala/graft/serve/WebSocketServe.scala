@@ -4,17 +4,15 @@ import java.io.{BufferedOutputStream, InputStream}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-
-/** The reference's ACTUAL subscribe endpoint: WebSocket
+/** The reference's subscribe wire: WebSocket
   * (`GET /subscribe?wantedCollections=…&cursor=…` upgraded per
   * RFC 6455, cmd/jetstream/server.go:244-262 via the echo/websocket
-  * stack), as a [[SocketServe.Transport]] — the serving loop
-  * (sessions, cutover chunks, serialize-once fan-out, slow-consumer
-  * drops, metrics) is exactly [[SocketServe]]'s; only the handshake
-  * and frame encoding differ. A standard WebSocket client (e.g. the
-  * JDK's `java.net.http.WebSocket`) can subscribe directly.
+  * stack), as the [[SocketServe.Transport]] that [[SocketServe.start]]
+  * serves over — the serving loop (sessions, cutover chunks,
+  * serialize-once fan-out, slow-consumer drops, metrics) is
+  * [[SocketServe]]'s; this object is the handshake and the frame
+  * encoding. A standard WebSocket client (e.g. the JDK's
+  * `java.net.http.WebSocket`) can subscribe directly.
   *
   * Protocol implemented from the PUBLIC RFC 6455 surface only:
   * HTTP/1.1 Upgrade handshake (Sec-WebSocket-Accept = base64(SHA-1(
@@ -26,26 +24,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * PING is answered with PONG, everything else is ignored.
   */
 object WebSocketServe {
-
-  /** Start a WebSocket subscribe server — same contract as
-    * [[SocketServe.start]], different wire protocol.
-    */
-  def start(
-      events: DataFrame,
-      tablePath: String,
-      checkpointDir: String,
-      fanOutWidth: Int = ServeJob.DefaultFanOutWidth,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      nowUs: () => Long = () => System.currentTimeMillis() * 1000L,
-      writeTimeoutMs: Long = 30000L,
-      metrics: Metrics.Registry = Metrics.default,
-      maxSubRate: Option[Double] = None,
-      port: Int = 0,
-      replayChunkSize: Int = 10000,
-      replayThrottle: Option[ReplayThrottle] = None): SocketServe.Server =
-    SocketServe.start(events, tablePath, checkpointDir, fanOutWidth,
-      trigger, nowUs, writeTimeoutMs, metrics, WsTransport, maxSubRate, port,
-      replayChunkSize, replayThrottle)
 
   private[serve] object WsTransport extends SocketServe.Transport {
 
@@ -103,8 +81,7 @@ object WebSocketServe {
     /** Drain masked client frames: CLOSE → close the socket (the
       * serving loop's next write throws and drops the subscriber),
       * PING → PONG, anything else skipped. Runs as a daemon so a
-      * silent client costs one parked thread, same as the line
-      * transport's reader.
+      * silent client costs one parked thread.
       */
     private def startClientFrameReader(sock: Socket, in: InputStream,
         writer: FrameWriter): Unit = {

@@ -84,7 +84,7 @@ object ReplayTailSource {
     * stream would tail forever delivering zero rows with no error
     * surfaced.
     */
-  private[sources] def isFreshBoot(e: org.apache.spark.sql.AnalysisException): Boolean =
+  private[graft] def isFreshBoot(e: org.apache.spark.sql.AnalysisException): Boolean =
     Option(e.getCondition).exists(c =>
       c.startsWith("PATH_NOT_FOUND") || c.startsWith("UNABLE_TO_INFER_SCHEMA"))
 

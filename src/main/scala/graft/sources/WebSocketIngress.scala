@@ -307,10 +307,11 @@ class WebSocketFrameSource(sqlContext: SQLContext, params: Map[String, String],
     } catch { case _: Throwable => () }
 }
 
-/** The WebSocket twin of [[SocketIngress]]: dial → decode → sequence →
-  * events table, presenting the table-recovered cursor on the dial URL
-  * exactly like the reference's connect loop (main.go:299-317 dials
-  * `…/subscribe?cursor=N` and the server replays strictly after N).
+/** S1 — the network ingress for the live tail: dial → decode →
+  * sequence → events table, presenting the table-recovered cursor on
+  * the dial URL exactly like the reference's connect loop
+  * (main.go:299-317 dials `…/subscribe?cursor=N` and the server
+  * replays strictly after N).
   */
 object WebSocketIngress {
 
@@ -354,7 +355,7 @@ object WebSocketIngress {
       manifestCommits: Boolean = false): StreamingQuery = {
     // one table pass recovers BOTH marks (resume cursor + sequencer
     // high-water); a broken table fails here instead of resuming at 0
-    val (storedCursor, prevMax) = SocketIngress.resumeState(spark, tablePath)
+    val (storedCursor, prevMax) = graft.store.EventsTable.resumeState(spark, tablePath)
     val cursor = IngestJob.resolveStartCursor(
       Some(cursorOverrideUs).filter(_ >= 0), Some(storedCursor))
       .getOrElse(0L)

@@ -523,4 +523,44 @@ object EventsTable {
     read(spark, path)
       .filter(col(PartitionCol) >= cursorUs / 3600000000L && col("time_us") >= cursorUs)
       .orderBy(col("time_us"))
+
+  /** The persisted table, or None while it is still empty/absent (a
+    * fresh ingest has nothing to recover from). Only fresh-boot
+    * analysis failures map to None — a BROKEN table must fail the
+    * start, not silently resume with cursor 0 and re-ingest the whole
+    * upstream history as duplicates.
+    */
+  private def tableIfAny(spark: SparkSession, tablePath: String)
+      : Option[DataFrame] = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(tablePath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else try Some(read(spark, tablePath))
+    catch { case e: org.apache.spark.sql.AnalysisException
+        if graft.sources.ReplayTailSource.isFreshBoot(e) => None }
+  }
+
+  /** The cursor to present upstream on (re)connect: the newest
+    * upstream event time already persisted (0 on a fresh table). The
+    * CLIENT owns the cursor (the reference's cursor dance,
+    * cmd/jetstream/server.go:274-287 + pkg/consumer/persist.go:41-87):
+    * the upstream replays strictly after it, so a crash between
+    * micro-batches costs re-delivery, never loss.
+    */
+  def resumeCursorUs(spark: SparkSession, tablePath: String): Long =
+    resumeState(spark, tablePath)._1
+
+  /** Both recovery marks — the upstream resume cursor
+    * (max event_time_us) and the sequencer high-water mark
+    * (max time_us) — in ONE aggregate pass over the table, so a
+    * restart scans the log once, not once per mark. (0, 0) on a fresh
+    * table.
+    */
+  def resumeState(spark: SparkSession, tablePath: String): (Long, Long) =
+    tableIfAny(spark, tablePath).map { t =>
+      val row = t.agg(max(col("event_time_us")), max(col("time_us"))).head()
+      (if (row.isNullAt(0)) 0L else row.getLong(0),
+        if (row.isNullAt(1)) 0L else row.getLong(1))
+    }.getOrElse((0L, 0L))
 }

@@ -3,9 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.serve.{Metrics, SocketServe, WebSocketServe}
+import graft.serve.{Metrics, SocketServe}
 import graft.sources.WebSocketIngress
-import graft.store.{Compaction, Retention}
+import graft.store.{Compaction, EventsTable, Retention}
 import graft.streaming.{IngestMetrics, Watchdog}
 
 /** The standalone service: every piece of the engine composed into the
@@ -26,6 +26,10 @@ import graft.streaming.{IngestMetrics, Watchdog}
   *   --data-dir=./data --event-ttl-hours=24 \
   *   --max-sub-rate=5000 --override-relay-cursor=-1
   * }}}
+  *
+  * `--max-sub-rate` paces each subscriber's cursor REPLAY at 10× the
+  * rate (the reference's playback limit, server.go:307); live delivery
+  * is not capped per subscriber.
   *
   * `worker-count`/`max-queue-size` have no analog: Spark's scheduler
   * owns parallelism (`local[N]` / executor count), and backpressure is
@@ -149,7 +153,7 @@ object Service {
     // sessions' replay job
     // same fresh-boot-vs-breakage discipline as the ingest side: a
     // broken table fails the start instead of serving from head 0
-    val headUs = graft.sources.SocketIngress.resumeState(spark, tablePath)._2
+    val headUs = EventsTable.resumeState(spark, tablePath)._2
     // resumed-over-history restart: the reference's liveness check
     // reads the cursor back and kills on a hung upstream even before
     // this incarnation's first event — arm the stall clock to match
@@ -158,7 +162,7 @@ object Service {
       .option("path", tablePath)
       .option("cursor", (headUs + 1).toString)
       .load()
-    val server = WebSocketServe.start(tail, tablePath,
+    val server = SocketServe.start(tail, tablePath,
       s"${config.dataDir}/checkpoints/serve",
       metrics = registry, maxSubRate = Some(config.maxSubRate),
       port = config.listenPort, replayChunkSize = config.serveChunkSize,

@@ -2,19 +2,18 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.serve.{SocketServe, WebSocketServe}
+import graft.serve.SocketServe
 import graft.sources.WebSocketIngress
 import graft.store.EventsTable
 
-/** [[FullLoopSpec]] over the reference's ACTUAL transport: the full
-  * topology — upstream → ingest → table → serve → subscriber, both
-  * halves concurrent — with real WebSocket framing at BOTH edges
-  * (`WebSocketIngress` dialing `ws://…/subscribe?cursor=…` like
-  * cmd/jetstream/main.go:299-317, `WebSocketServe` upgrading and
-  * framing subscribers like server.go:244-356). The TCP twin pins the
-  * loop's engine semantics; this spec pins that nothing about the
-  * WebSocket transport (handshake, frame reassembly, cursor in the
-  * request line) breaks them.
+/** The reference's full topology over its ACTUAL transport — upstream →
+  * ingest → table → serve → subscriber, both halves concurrent — with
+  * real WebSocket framing at BOTH edges (`WebSocketIngress` dialing
+  * `ws://…/subscribe?cursor=…` like cmd/jetstream/main.go:299-317,
+  * `SocketServe` upgrading and framing subscribers like
+  * server.go:244-356): the mid-stream-cursor subscriber receives every
+  * event ≥ its cursor exactly once, in order, across the replay→live
+  * cutover while ingestion continues.
   */
 class WsFullLoopSpec extends SparkSpec {
   import spark.implicits._
@@ -53,7 +52,7 @@ class WsFullLoopSpec extends SparkSpec {
         .option("path", table)
         .option("cursor", (stamps.max + 1).toString)
         .load()
-      server = WebSocketServe.start(tail, table, tmpDir("ws-loop-sckpt"))
+      server = SocketServe.start(tail, table, tmpDir("ws-loop-sckpt"))
       val client = new WsTestKit.Client(
         s"ws://localhost:${server.port}/subscribe?cursor=$cursor")
       eventually(30000)(server.subscriberCount == 1)

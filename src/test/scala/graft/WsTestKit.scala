@@ -105,11 +105,14 @@ object WsTestKit {
     def close(): Unit = { closed = true; server.close() }
   }
 
-  /** A JDK WebSocket subscriber accumulating complete text messages. */
-  final class Client(url: String) {
+  /** A JDK WebSocket subscriber accumulating complete text messages.
+    * Many subscribers can share one `http` client (one selector thread
+    * for all of them).
+    */
+  final class Client(url: String, http: HttpClient = HttpClient.newHttpClient()) {
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     private val partial = new StringBuilder
-    val ws: WebSocket = HttpClient.newHttpClient().newWebSocketBuilder()
+    val ws: WebSocket = http.newWebSocketBuilder()
       .buildAsync(URI.create(url), new WebSocket.Listener {
         override def onText(w: WebSocket, data: CharSequence, last: Boolean)
             : CompletionStage[_] = {
@@ -131,5 +134,7 @@ object WsTestKit {
       val re = """"time_us":(\d+)""".r
       lines.asScala.toSeq.map(l => re.findFirstMatchIn(l).get.group(1).toLong)
     }
+    /** Drop the connection without a CLOSE handshake (a vanished peer). */
+    def close(): Unit = ws.abort()
   }
 }

@@ -60,4 +60,23 @@ class EventModelSpec extends SparkSpec {
     assert(acc.getAs[Boolean]("active"))
     assert(acc.getAs[Long]("seq") == 1409753013L)
   }
+
+  test("per-collection record view parses golden like record (README.md:60-81)") {
+    import org.apache.spark.sql.functions._
+    val src = scala.io.Source.fromResource("golden/commit_create_like.json")
+    val golden = try src.mkString.trim finally src.close()
+    val events = Seq(golden).toDF("value")
+      .select(from_json(col("value"), graft.model.Event.wireSchema).as("e"))
+      .select("e.*")
+    val view = Collections.recordView(events, Collections.Like)
+    val rec = view.select("record.*").head()
+    assert(rec.getAs[String]("$type") == "app.bsky.feed.like")
+    assert(rec.getAs[String]("createdAt") == "2024-09-09T19:46:02.102Z")
+    val subject = rec.getStruct(rec.fieldIndex("subject"))
+    assert(subject.getAs[String]("uri").startsWith("at://did:plc:wa7b35"))
+    // unknown collection rejected explicitly, raw passthrough preserved
+    intercept[IllegalArgumentException] {
+      Collections.recordView(events, "com.example.unknown")
+    }
+  }
 }

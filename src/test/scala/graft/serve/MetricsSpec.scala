@@ -1,7 +1,6 @@
 package graft.serve
 
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
-import java.net.{HttpURLConnection, Socket, URL}
+import java.net.{HttpURLConnection, URL}
 
 import org.apache.spark.sql.functions.{lit, struct}
 
@@ -142,16 +141,8 @@ class MetricsSpec extends SparkSpec {
     val server = SocketServe.start(tail, table, tmpDir("metrics-serve-ckpt"),
       metrics = reg)
     try {
-      val sock = new Socket("localhost", server.port)
-      new PrintWriter(sock.getOutputStream, true).println("subscribe?cursor=0")
-      val got = new java.util.concurrent.atomic.AtomicInteger
-      val reader = new Thread(() => {
-        try {
-          val in = new BufferedReader(new InputStreamReader(sock.getInputStream, "UTF-8"))
-          while (in.readLine() != null) got.incrementAndGet()
-        } catch { case _: Throwable => () }
-      })
-      reader.setDaemon(true); reader.start()
+      val sub = new graft.WsTestKit.Client(
+        s"ws://localhost:${server.port}/subscribe?cursor=0")
 
       def eventually(timeoutMs: Long)(cond: => Boolean): Unit = {
         val deadline = System.nanoTime() + timeoutMs * 1000000L
@@ -166,7 +157,7 @@ class MetricsSpec extends SparkSpec {
       // replays the 20-row table then receives the live rows
       EventsTable.append(Seq((21000L, "did:plc:u21", "app.graft.doc"))
         .toDF("time_us", "did", "collection"), table)
-      eventually(90000)(got.get() >= 21)
+      eventually(90000)(sub.lines.size >= 21)
 
       def series(out: String, name: String): Double =
         ("""(?m)^""" + name + """(\{[^}]*\})? (\S+)$""").r

@@ -1,9 +1,6 @@
 package graft.serve
 
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
-import java.net.Socket
-
-import graft.SparkSpec
+import graft.{SparkSpec, WsTestKit}
 import graft.store.EventsTable
 
 /** The horizontal-scale story for the serving edge, EXERCISED: N
@@ -28,26 +25,8 @@ class MultiEdgeServeSpec extends SparkSpec {
   private def rows(ids: Range) =
     ids.map(i => (i * 1000L, s"did:plc:u${i % 5}", "app.graft.doc"))
 
-  private final class Client(port: Int, request: String) {
-    private val sock = new Socket("localhost", port)
-    new PrintWriter(sock.getOutputStream, true).println(request)
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    private val reader = new Thread(() => {
-      try {
-        val in = new BufferedReader(new InputStreamReader(sock.getInputStream, "UTF-8"))
-        var l = in.readLine()
-        while (l != null) { lines.add(l); l = in.readLine() }
-      } catch { case _: Throwable => () }
-    })
-    reader.setDaemon(true)
-    reader.start()
-    def timesUs: Seq[Long] = {
-      import scala.jdk.CollectionConverters._
-      val re = """"time_us":(\d+)""".r
-      lines.asScala.toSeq.map(l => re.findFirstMatchIn(l).get.group(1).toLong)
-    }
-    def close(): Unit = sock.close()
-  }
+  private def client(port: Int, request: String) =
+    new WsTestKit.Client(s"ws://localhost:$port/$request")
 
   test("two serving edges on one table: independent exactly-once delivery and drop isolation") {
     val table = tmpDir("multi-edge-table")
@@ -62,11 +41,11 @@ class MultiEdgeServeSpec extends SparkSpec {
     val edgeB = edge("b")
     try {
       // disjoint subscriber sets: 2 cursored + 1 live-only per edge
-      val a1 = new Client(edgeA.port, "subscribe?cursor=0")
-      val a2 = new Client(edgeA.port, "subscribe?cursor=0")
-      val aLive = new Client(edgeA.port, "subscribe?")
-      val b1 = new Client(edgeB.port, "subscribe?cursor=0")
-      val bLive = new Client(edgeB.port, "subscribe?")
+      val a1 = client(edgeA.port, "subscribe?cursor=0")
+      val a2 = client(edgeA.port, "subscribe?cursor=0")
+      val aLive = client(edgeA.port, "subscribe?")
+      val b1 = client(edgeB.port, "subscribe?cursor=0")
+      val bLive = client(edgeB.port, "subscribe?")
       eventually(30000)(edgeA.subscriberCount == 3 && edgeB.subscriberCount == 2)
 
       // both edges' replay pumps serve their backlogs independently

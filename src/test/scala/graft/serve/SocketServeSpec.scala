@@ -1,18 +1,15 @@
 package graft.serve
 
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.net.Socket
 
-import org.apache.spark.sql.functions._
-
-import graft.SparkSpec
+import graft.{SparkSpec, WsTestKit}
 import graft.store.EventsTable
 
-/** The serving boundary end-to-end over real TCP: subscribers connect
-  * with the reference's query-string surface (filters + cursor),
-  * cursored subscribers replay the table then cut over to live,
-  * cursorless subscribers live-tail from attach, every delivery is
-  * wire JSON, in order, exactly once.
+/** The serving boundary end-to-end over real WebSocket connections:
+  * subscribers connect with the reference's query-string surface
+  * (filters + cursor), cursored subscribers replay the table then cut
+  * over to live, cursorless subscribers live-tail from attach, every
+  * delivery is wire JSON, in order, exactly once.
   */
 class SocketServeSpec extends SparkSpec {
   import spark.implicits._
@@ -20,27 +17,12 @@ class SocketServeSpec extends SparkSpec {
   private def rows(ids: Range, collection: String = "app.graft.doc") =
     ids.map(i => (i * 1000L, s"did:plc:u${i % 5}", collection))
 
-  /** A test subscriber: sends `request`, accumulates received lines. */
-  private final class Client(port: Int, request: String) {
-    private val sock = new Socket("localhost", port)
-    new PrintWriter(sock.getOutputStream, true).println(request)
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    private val reader = new Thread(() => {
-      try {
-        val in = new BufferedReader(new InputStreamReader(sock.getInputStream, "UTF-8"))
-        var l = in.readLine()
-        while (l != null) { lines.add(l); l = in.readLine() }
-      } catch { case _: Throwable => () }
-    })
-    reader.setDaemon(true)
-    reader.start()
-    def timesUs: Seq[Long] = {
-      import scala.jdk.CollectionConverters._
-      val re = """"time_us":(\d+)""".r
-      lines.asScala.toSeq.map(l => re.findFirstMatchIn(l).get.group(1).toLong)
-    }
-    def close(): Unit = sock.close()
-  }
+  /** A test subscriber: dials `request` as the upgrade's query string,
+    * accumulates received frames.
+    */
+  private def client(port: Int, request: String,
+      http: java.net.http.HttpClient = java.net.http.HttpClient.newHttpClient()) =
+    new WsTestKit.Client(s"ws://localhost:$port/$request", http)
 
   test("parseRequest: repeated params accumulate (the reference's wire form); cursor takes the first") {
     // Go's URL.Query()["k"] hands the reference EVERY occurrence
@@ -64,10 +46,13 @@ class SocketServeSpec extends SparkSpec {
       .option("path", table).option("cursor", "4000").load()
     val server = SocketServe.start(tail, table, tmpDir("socket-serve-reject-ckpt"))
     try {
-      new Client(server.port, "subscribe?wantedCollections=not-an-nsid&cursor=0")
-      new Client(server.port, "subscribe?wantedDids=plc:no-did-prefix&cursor=0")
-      new Client(server.port, "subscribe?cursor=notanumber")
-      val good = new Client(server.port,
+      // the upgrade completes before the params are checked, then the
+      // server closes the socket; whether the client sees the 101 first
+      // is immaterial here
+      scala.util.Try(client(server.port, "subscribe?wantedCollections=not-an-nsid&cursor=0"))
+      scala.util.Try(client(server.port, "subscribe?wantedDids=plc:no-did-prefix&cursor=0"))
+      scala.util.Try(client(server.port, "subscribe?cursor=notanumber"))
+      val good = client(server.port,
         "subscribe?cursor=0&wantedCollections=app.graft.doc")
       eventually(30000)(server.subscriberCount == 1)
       eventually(60000)(good.lines.size >= 3)
@@ -89,9 +74,9 @@ class SocketServeSpec extends SparkSpec {
     val server = SocketServe.start(tail, table, tmpDir("socket-serve-ckpt"))
     try {
       // A: cursor=0 → full replay of the table, then live
-      val a = new Client(server.port, "subscribe?cursor=0")
+      val a = client(server.port, "subscribe?cursor=0")
       // B: filtered live-only (no cursor = future cursor, server.go:283-286)
-      val b = new Client(server.port, "subscribe?wantedCollections=app.graft.doc")
+      val b = client(server.port, "subscribe?wantedCollections=app.graft.doc")
       eventually(30000)(server.subscriberCount == 2)
       // the replay pump serves A's backlog immediately, before any live
       // micro-batch (server.go:305-337's independent replay goroutine);
@@ -147,7 +132,7 @@ class SocketServeSpec extends SparkSpec {
     val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val faulty = new SocketServe.Transport {
       def open(sock: Socket): Option[(String, SocketServe.WireWriter)] =
-        SocketServe.LineTransport.open(sock).map { case (req, w) =>
+        WebSocketServe.WsTransport.open(sock).map { case (req, w) =>
           (req, new SocketServe.WireWriter {
             def writeFrames(frames: Array[String]): Long = {
               if (frames.exists(_.contains("\"time_us\":15000")) &&
@@ -163,7 +148,7 @@ class SocketServeSpec extends SparkSpec {
     val server = SocketServe.start(tail, table,
       tmpDir("socket-serve-rearm-ckpt"), transport = faulty)
     try {
-      val c = new Client(server.port, "subscribe?cursor=0")
+      val c = client(server.port, "subscribe?cursor=0")
       eventually(60000)(c.lines.size >= 10)
       // live: the batch carrying 15000 fails non-IO exactly once
       EventsTable.append(rows(11 to 15).toDF("time_us", "did", "collection"), table)
@@ -191,8 +176,8 @@ class SocketServeSpec extends SparkSpec {
       .load()
     val server = SocketServe.start(tail, table, tmpDir("socket-serve-idle-ckpt"))
     try {
-      val a = new Client(server.port, "subscribe?cursor=0")
-      val b = new Client(server.port, "subscribe?cursor=0&wantedCollections=app.graft.doc")
+      val a = client(server.port, "subscribe?cursor=0")
+      val b = client(server.port, "subscribe?cursor=0&wantedCollections=app.graft.doc")
       eventually(60000)(a.lines.size >= 25 && b.lines.size >= 25)
       val ts = a.timesUs
       assert(ts == ts.sorted && ts.toSet == (1 to 25).map(_ * 1000L).toSet,
@@ -209,20 +194,21 @@ class SocketServeSpec extends SparkSpec {
       .option("cursor", "21000") // serve the post-attach tail; history via cursors
       .load()
     val server = SocketServe.start(tail, table, tmpDir("socket-serve-100-ckpt"))
-    val clients = scala.collection.mutable.ArrayBuffer.empty[Client]
+    val clients = scala.collection.mutable.ArrayBuffer.empty[WsTestKit.Client]
+    val http = java.net.http.HttpClient.newHttpClient() // one for all 100
     try {
       // three spec shapes at once: collection-filtered live, did-filtered
       // live, and cursored full-replay — the mix a real serving edge holds
       val collClients = (1 to 45).map { _ =>
-        val c = new Client(server.port, "subscribe?wantedCollections=app.graft.doc")
+        val c = client(server.port, "subscribe?wantedCollections=app.graft.doc", http)
         clients += c; c
       }
       val didClients = (0 until 45).map { i =>
-        val c = new Client(server.port, s"subscribe?wantedDids=did:plc:u${i % 5}")
+        val c = client(server.port, s"subscribe?wantedDids=did:plc:u${i % 5}", http)
         clients += c; c
       }
       val cursored = (1 to 10).map { _ =>
-        val c = new Client(server.port, "subscribe?cursor=0")
+        val c = client(server.port, "subscribe?cursor=0", http)
         clients += c; c
       }
       eventually(60000)(server.subscriberCount == 100)
@@ -249,6 +235,68 @@ class SocketServeSpec extends SparkSpec {
       }
     } finally {
       clients.foreach(c => scala.util.Try(c.close()))
+      server.close()
+    }
+  }
+
+  test("slow consumer: a subscriber that stops reading is dropped; the others stay exactly-once (server.go:168-175)") {
+    // S21 on the service loop: a subscriber whose pipe is alive but who
+    // never reads fills its socket buffers, its write blocks, and the
+    // writeTimeoutMs watchdog closes it — the reference's slow-consumer
+    // close. Frames carry a 4 KiB payload so a few batches overrun a
+    // small receive window plus the server's send buffer.
+    val table = tmpDir("socket-serve-slow-table")
+    val pad = "x" * 4096
+    def padded(ids: Range) =
+      rows(ids).map { case (t, d, c) => (t, d, c, pad) }.toDF("time_us", "did", "collection", "pad")
+    EventsTable.append(padded(1 to 5), table)
+    val reg = new Metrics.Registry
+    val tail = spark.readStream.format("graft-replay")
+      .option("path", table).option("cursor", "6000").load()
+    val server = SocketServe.start(tail, table, tmpDir("socket-serve-slow-ckpt"),
+      writeTimeoutMs = 1000L, metrics = reg)
+    def connected: Double =
+      ("""(?m)^graft_subscribers_connected(\{[^}]*\})? (\S+)$""").r
+        .findAllMatchIn(reg.render).map(_.group(2).toDouble).sum
+    val stalled = new Socket()
+    try {
+      val reader = client(server.port, "subscribe?")
+      // the stalled subscriber: completes the upgrade, then never reads
+      stalled.setReceiveBufferSize(4096)
+      stalled.connect(new java.net.InetSocketAddress("localhost", server.port))
+      stalled.getOutputStream.write(("GET /subscribe? HTTP/1.1\r\nHost: localhost\r\n" +
+        "Upgrade: websocket\r\nConnection: Upgrade\r\n" +
+        "Sec-WebSocket-Key: dGhlIHNhbXBsZSBub25jZQ==\r\n" +
+        "Sec-WebSocket-Version: 13\r\n\r\n").getBytes("US-ASCII"))
+      stalled.getOutputStream.flush()
+      val head = new StringBuilder
+      while (head.length < 4 || head.substring(head.length - 4) != "\r\n\r\n")
+        head.append(stalled.getInputStream.read().toChar)
+      assert(head.toString.startsWith("HTTP/1.1 101"), head.toString.take(100))
+      eventually(30000)(server.subscriberCount == 2)
+      assert(connected == 2d)
+
+      // live traffic until the stalled subscriber's write times out
+      var next = 6
+      eventually(120000) {
+        if (next <= 2000) {
+          EventsTable.append(padded(next until next + 100), table)
+          next += 100
+        }
+        server.subscriberCount == 1
+      }
+      eventually(30000)(connected == 1d)
+
+      // the reading subscriber got every live event, once, in order
+      EventsTable.append(padded(next until next + 5), table)
+      val live = (6 until next + 5).map(_ * 1000L)
+      eventually(90000)(reader.lines.size >= live.size)
+      val ts = reader.timesUs
+      assert(ts == ts.sorted, "in order")
+      assert(ts.distinct.size == ts.size, "exactly once")
+      assert(ts == live, "the stalled subscriber's drop costs the others nothing")
+    } finally {
+      stalled.close()
       server.close()
     }
   }

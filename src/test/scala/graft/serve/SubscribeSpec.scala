@@ -90,13 +90,9 @@ class SubscribeSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val wire = sample.withColumn("wire",
       to_json(struct(col("did"), col("time_us"), col("collection"))))
-    val out = fanOut(wire, Map(
-      "all" -> SubscriberSpec(),
-      "c0"  -> SubscriberSpec(wantedCollections = Seq("app.bsky.c0.rec")),
-      "late" -> SubscriberSpec(hwmUs = 2000)))
-    assert(out("all").count() == 300)
-    assert(out("c0").count() == 60)
-    assert(out("late").count() == 100)
-    assert(out("c0").columns.toSeq == Seq("wire"))
+    def view(spec: SubscriberSpec) = wire.filter(filterFor(spec))
+    assert(view(SubscriberSpec()).count() == 300)
+    assert(view(SubscriberSpec(wantedCollections = Seq("app.bsky.c0.rec"))).count() == 60)
+    assert(view(SubscriberSpec(hwmUs = 2000)).count() == 100)
   }
 }

@@ -23,7 +23,7 @@ class WebSocketServeSpec extends SparkSpec {
 
     val tail = spark.readStream.format("graft-replay")
       .option("path", table).option("cursor", "41000").load()
-    val server = WebSocketServe.start(tail, table, tmpDir("ws-serve-ckpt"))
+    val server = SocketServe.start(tail, table, tmpDir("ws-serve-ckpt"))
     try {
       val a = new WsTestKit.Client(s"ws://localhost:${server.port}/subscribe?cursor=0")
       val b = new WsTestKit.Client(
@@ -81,7 +81,7 @@ class WebSocketServeSpec extends SparkSpec {
       .toDF("time_us", "did", "collection"), table)
     val tail = spark.readStream.format("graft-replay")
       .option("path", table).option("cursor", "500000").load()
-    val server = WebSocketServe.start(tail, table, tmpDir("ws-batch-ckpt"))
+    val server = SocketServe.start(tail, table, tmpDir("ws-batch-ckpt"))
     try {
       // raw RFC 6455 reader: handshake, then count frames AND events
       val sock = new java.net.Socket("localhost", server.port)
@@ -130,7 +130,7 @@ class WebSocketServeSpec extends SparkSpec {
       .toDF("time_us", "did", "collection"), table)
     val tail = spark.readStream.format("graft-replay")
       .option("path", table).option("cursor", "2000").load()
-    val server = WebSocketServe.start(tail, table, tmpDir("ws-serve-rej-ckpt"))
+    val server = SocketServe.start(tail, table, tmpDir("ws-serve-rej-ckpt"))
     try {
       val sock = new java.net.Socket("localhost", server.port)
       sock.getOutputStream.write(
