@@ -83,43 +83,6 @@ object ScaleSmoke {
       return
     }
 
-    if (args.headOption.contains("tailcost")) {
-      // `runMain graft.ScaleSmoke tailcost` — per-trigger tail-read
-      // cost as the LIVE hour fragments (one file per 1 s ingest
-      // trigger): a 5-minute soak leaves ~300 files in the open hour,
-      // and every serve trigger re-plans/re-lists/re-reads it. Measures
-      // the cost of "read rows with time_us > hwm" (the serve tail's
-      // per-trigger scan) against hour dirs of 30/150/300/600 files.
-      import spark.implicits._
-      Seq(30, 150, 300, 600).foreach { files =>
-        val dir = java.nio.file.Files.createTempDirectory("graft-tailcost").toString
-        val perFile = 20000L
-        (0 until files).foreach { i =>
-          val base = i * perFile
-          spark.range(base, base + perFile).select(
-            (col("id") + 1000L).as("time_us"),
-            concat(lit("did"), col("id") % 1000).as("did"),
-            lit("app.bsky.feed.post").as("collection"),
-            lit("{\"k\":\"v\"}").as("record"))
-            .coalesce(1).write.mode("append")
-            .parquet(s"$dir/event_hour=0")
-        }
-        val hwm = (files - 1) * perFile + 1000L // only the last file's rows are new
-        val secs = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          val got = EventsTable.read(spark, dir)
-            .filter(col("time_us") > hwm).count()
-          assert(got == perFile - 1, s"got $got")
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[tailcost] files=$files: per-trigger tail read ${secs.min}%.3fs (min of 3)")
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-      }
-      spark.stop()
-      return
-    }
-
     if (args.headOption.contains("wsegress")) {
       // `runMain graft.ScaleSmoke wsegress [nFrames]` — decompose the
       // per-subscriber WebSocket delivery ceiling the 25k soak hit:
@@ -1069,73 +1032,6 @@ object ScaleSmoke {
         f"agg(max_by) $aggSec%.2fs (${nSkew / aggSec / 1e6}%.1fM ev/s, $aggRows keys) vs " +
         f"window(rn=1) $winSec%.2fs (${nSkew / winSec / 1e6}%.1fM ev/s, $winRows keys)")
       skewed.unpersist()
-    }
-
-    // --- driver egress ceiling at 100 subscribers: the serving edge's
-    // in-process half — the per-subscriber predicate pass (the
-    // liveEmitFrames loop; Subscribe.admits is its spec-pinned twin)
-    // plus real loopback TCP writes through the fan-out pool. ONE
-    // SocketServe process tops out here regardless of how big the
-    // cluster behind the table is; PERF.md records the number as the
-    // per-edge-node capacity (the reference's single process has the
-    // same ceiling shape, server.go:87-134 + the per-conn write loop).
-    {
-      import java.net.{ServerSocket, Socket}
-      import java.nio.charset.StandardCharsets.UTF_8
-      val nFrames = 100000
-      val frames = Array.tabulate(nFrames) { i =>
-        Subscribe.WireFrame(i.toLong,
-          if (i % 5 == 0) "app.bsky.feed.post" else "app.bsky.feed.like",
-          s"did:plc:u${i % 1000}",
-          s"""{"did":"did:plc:u${i % 1000}","time_us":$i,"kind":"commit","commit":""" +
-            s"""{"collection":"app.bsky.feed.post","rkey":"k$i","rev":"r$i","operation":"create"}}""")
-      }
-      val nSubs = 100
-      val server = new ServerSocket(0)
-      val accepted = new java.util.concurrent.LinkedBlockingQueue[Socket]()
-      val acceptor = new Thread(() =>
-        (1 to nSubs).foreach(_ => accepted.add(server.accept())))
-      acceptor.start()
-      val clients = (1 to nSubs).map { _ =>
-        val s = new Socket("localhost", server.getLocalPort)
-        val t = new Thread(() => { // a well-behaved consumer: drain and discard
-          val buf = new Array[Byte](65536)
-          try { val in = s.getInputStream; while (in.read(buf) != -1) () }
-          catch { case _: Throwable => () }
-        })
-        t.setDaemon(true); t.start(); s
-      }
-      acceptor.join()
-      val conns = (0 until nSubs).map { i =>
-        val spec =
-          if (i % 2 == 0) Subscribe.SubscriberSpec() // pass-all tailer
-          else Subscribe.SubscriberSpec(wantedCollections = Seq("app.bsky.feed.post"))
-        (new java.io.BufferedOutputStream(accepted.take().getOutputStream, 65536), spec)
-      }
-      val delivered = new java.util.concurrent.atomic.AtomicLong
-      val bytes = new java.util.concurrent.atomic.AtomicLong
-      val t0 = System.nanoTime()
-      graft.serve.SocketServe.onPool(conns, 100) { case (out, spec) =>
-        var i = 0; var n = 0L; var b = 0L
-        while (i < nFrames) {
-          val f = frames(i)
-          if (Subscribe.admits(spec, f)) {
-            val w = f.wire.getBytes(UTF_8)
-            out.write(w); out.write('\n'); n += 1; b += w.length + 1
-          }
-          i += 1
-        }
-        out.flush()
-        delivered.addAndGet(n); bytes.addAndGet(b)
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] driver egress ceiling, $nSubs subscribers × $nFrames frames: " +
-        f"$sec%.2fs — ${delivered.get / sec / 1e6}%.1fM frames/s, " +
-        f"${bytes.get / sec / 1e9}%.2f GB/s aggregate " +
-        f"(${delivered.get / sec / nSubs / 1e3}%.0fk fr/s per subscriber; " +
-        f"reference sub cap is 5k ev/s)")
-      clients.foreach(s => scala.util.Try(s.close()))
-      server.close()
     }
 
     // --- distributed connected components at edge volumes the driver

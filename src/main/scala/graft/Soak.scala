@@ -444,23 +444,16 @@ object Soak {
     val subA = new Subscriber(s"ws://localhost:${running.servePort}/subscribe?cursor=0$fbArg")
 
     // MULTI-EDGE posture (VERDICT r11 #6): a second independent serve
-    // edge over the SAME table — own streaming tail, own checkpoint,
-    // own registry — killed mid-soak and later restarted. The survivor
-    // edge's subscriber (subA) must be bit-for-bit undisturbed; the
-    // restarted edge's late subscriber must replay the surviving
-    // history exactly-once and tail live, like any late joiner.
-    def startEdge(tag: String): graft.serve.SocketServe.Server = {
-      val headUs = EventsTable.resumeState(spark, tablePath)._2
-      val tail = spark.readStream.format("graft-replay")
-        .option("path", tablePath)
-        .option("cursor", (headUs + 1).toString)
-        .load()
-      graft.serve.SocketServe.start(tail, tablePath,
-        s"$dataDir/checkpoints/serve-$tag",
+    // edge over the SAME table — own emit thread, own registry — killed
+    // mid-soak and later restarted. The survivor edge's subscriber
+    // (subA) must be bit-for-bit undisturbed; the restarted edge's late
+    // subscriber must replay the surviving history exactly-once and
+    // tail live, like any late joiner.
+    def startEdge(tag: String): graft.serve.SocketServe.Server =
+      graft.serve.SocketServe.start(spark, tablePath,
         metrics = new Metrics.Registry, maxSubRate = Some(1e9),
         replayChunkSize = 50000,
         replayThrottle = Some(new graft.serve.ReplayThrottle()))
-    }
     var edge2: graft.serve.SocketServe.Server = if (multiEdge) startEdge("edge2") else null
     var subC: Subscriber =
       if (multiEdge) new Subscriber(s"ws://localhost:${edge2.port}/subscribe?cursor=0$fbArg")

@@ -75,6 +75,8 @@ object IngestJob {
       "Total events stamped by the sequencer", "table" -> tablePath)
     val persisted = metrics.counter("graft_consumer_events_persisted_total",
       "Total events appended to the events table", "table" -> tablePath)
+    val lastSeq = metrics.gauge("graft_consumer_last_seq",
+      "Sequence (time_us) of the last event processed", "table" -> tablePath)
     decoded.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -101,6 +103,7 @@ object IngestJob {
           else EventsTable.append(seq.df, tablePath, shards)
           persisted.add(n.toDouble)
           hwm.set(seq.maxTimeUs)
+          lastSeq.set(seq.maxTimeUs.toDouble)
         }
       }
       .start()

@@ -2,11 +2,13 @@ package graft.serve
 
 import java.net.{ServerSocket, Socket}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ingest.Decode
+import graft.store.EventsTable
+import graft.util.DriverBudget
 
 /** The serving half of the standing-service posture across a REAL
   * process boundary: the reference's WebSocket subscribe endpoint
@@ -20,28 +22,33 @@ import graft.ingest.Decode
   * implemented as a FUTURE cursor, which cuts over immediately — the
   * exact "future cursor → live" rule of server.go:283-286.
   *
-  * Serving loop: one streaming query tails the events table; each
-  * micro-batch snapshots the CURRENT subscriber registry — new
-  * connections join at the next batch, the reference's dynamic attach —
+  * Live delivery: the reference persists an event and hands it to its
+  * emit loop in the same process (`Server.Emit`, server.go:62-116); here
+  * every append to the events table, once its batch is visible, calls
+  * the table's commit listeners ([[EventsTable.onCommit]]) in this JVM.
+  * Each edge's listener wires the committed files and hands the
+  * time-sorted frames to the edge's emit thread, which snapshots the
+  * CURRENT subscriber registry — new
+  * connections join at the next pass, the reference's dynamic attach —
   * and every subscriber runs its [[CutoverSession]] lifecycle (cursor
   * replay chunks, gap-fill, live emit with the replay-lag gate) on the
-  * bounded fan-out pool, its view serialized through the shared
-  * serialize-once wire cache. A write failure (disconnect, dead pipe,
-  * or a write stalled past `writeTimeoutMs`) drops the subscriber
-  * exactly like the reference's slow-consumer close (server.go:168-175).
+  * bounded fan-out pool. The appender only enqueues: a stalled
+  * subscriber holds its edge's emit thread, never the ingest. A write
+  * failure (disconnect, dead pipe, or a write stalled past
+  * `writeTimeoutMs`) drops the subscriber exactly like the reference's
+  * slow-consumer close (server.go:168-175). The table is read only for
+  * cursor replay, as the reference reads its log (persist.go:143-204).
   *
-  * Scale posture: the LIVE path costs ONE Spark job per micro-batch at
-  * any subscriber count — the batch is wire-serialized distributed,
-  * collected once with its routing columns, and fanned out by the
-  * in-process emit loop ([[CutoverSession.liveEmitFrames]]), the same
-  * shape as the reference's single-marshal + per-subscriber-predicate
-  * loop (server.go:73,87-134). REPLAY views stay distributed — pruned,
-  * chunk-bounded table scans per session. The driver is the egress
-  * edge, exactly as the reference's process is: its ceiling (measured
-  * in ScaleSmoke, documented in PERF.md) is wire-bytes × subscribers
-  * through one process's sockets; a multi-node serving tier runs one of
-  * these per edge node against the shared table (sessions hold two
-  * longs of state each) — the table, not the server, is the scale axis.
+  * Scale posture: the LIVE path costs ONE Spark job per commit and edge
+  * at any subscriber count — the committed files are wire-serialized
+  * distributed, collected once with their routing columns, and fanned
+  * out by the in-process emit loop ([[CutoverSession.liveEmitFrames]]),
+  * the same shape as the reference's single-marshal + per-subscriber-
+  * predicate loop (server.go:73,87-134). REPLAY views stay distributed
+  * — pruned, chunk-bounded table scans per session. The driver is the
+  * egress edge, exactly as the reference's process is: its ceiling is
+  * wire-bytes × subscribers through one process's sockets. Live
+  * delivery reaches only edges in the appender's JVM (see [[start]]).
   */
 object SocketServe extends org.apache.spark.internal.Logging {
 
@@ -53,7 +60,7 @@ object SocketServe extends org.apache.spark.internal.Logging {
   /** Run `f` over `items` on a bounded pool, rethrowing the first
     * failure. Pool width is the reference's fan-out semaphore.
     */
-  private[graft] def onPool[A](items: Seq[A], width: Int)(f: A => Unit): Unit = {
+  private def onPool[A](items: Seq[A], width: Int)(f: A => Unit): Unit = {
     if (items.isEmpty) return
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(width, items.size))
@@ -149,18 +156,89 @@ object SocketServe extends org.apache.spark.internal.Logging {
     (Subscribe.SubscriberSpec(csv("wantedCollections"), csv("wantedDids")), cursor)
   }
 
-  /** A running server: `close()` stops accepting, disconnects
-    * subscribers and stops the streaming query.
+  /** One edge's commit feed: the frames of the commits its emit thread
+    * has not taken yet, in commit order. Their wire bytes are bounded by
+    * the driver budget ([[graft.util.DriverBudget]]): a commit that
+    * would cross it drops everything queued and marks the feed `lost`,
+    * as does a commit whose wiring failed. A lost feed re-arms every
+    * live session into replay, which re-reads the window from the
+    * table, hwm-deduped — exactly-once, at table-read speed.
+    */
+  private final class Feed {
+    private[this] val pending = scala.collection.mutable.ArrayBuffer.empty[Array[Subscribe.WireFrame]]
+    private[this] var bytes = 0L
+    private[this] var lost = false
+
+    def offer(frames: Array[Subscribe.WireFrame], budget: Long): Unit = {
+      // driver heap of a queued frame: its object and routing strings
+      // plus the wire JSON's UTF-16 chars (at most)
+      val b = frames.iterator.map(f => DriverBudget.fixedRowBytes(3) + 2L * f.wire.length).sum
+      synchronized {
+        if (bytes + b > budget) markLost()
+        else { pending += frames; bytes += b; notifyAll() }
+      }
+    }
+
+    def markLost(): Unit = synchronized {
+      pending.clear(); bytes = 0L; lost = true; notifyAll()
+    }
+
+    /** Blocks for the next commit, then takes every queued one:
+      * their frames concatenated in commit order, and whether a commit
+      * among them (or dropped before them) never reached this feed.
+      */
+    def take(): (Array[Subscribe.WireFrame], Boolean) = synchronized {
+      while (pending.isEmpty && !lost) wait()
+      val out = (pending.flatten.toArray, lost)
+      pending.clear(); bytes = 0L; lost = false
+      out
+    }
+  }
+
+  /** Fault-injection seam for specs: runs with the table key before a
+    * committed batch is wired; a throw fails that batch's wiring.
+    */
+  @volatile private[serve] var beforeWire: String => Unit = _ => ()
+
+  /** A committed batch's live frames, time-sorted: its files read back
+    * by name (no listing, the bytes a table read yields), serialized
+    * once and collected with their routing columns — ONE Spark job per
+    * commit and edge, at any subscriber count.
+    */
+  private[serve] def wireCommitted(spark: SparkSession, key: String,
+      files: Seq[String]): Array[Subscribe.WireFrame] = {
+    beforeWire(key)
+    if (files.isEmpty) Array.empty
+    else {
+      val wired = Decode.toWire(spark.read.option("basePath", key)
+        .parquet(files.map(f => s"$key/$f"): _*))
+      wired.select(col("time_us"),
+          Subscribe.resolvedCollection(wired).as("collection"),
+          col("did"), col("wire"))
+        .collect()
+        .map(r => Subscribe.WireFrame(r.getLong(0),
+          if (r.isNullAt(1)) null else r.getString(1),
+          if (r.isNullAt(2)) null else r.getString(2),
+          r.getString(3)))
+        .sortBy(_.timeUs)
+    }
+  }
+
+  /** A running server: `close()` stops accepting, detaches from the
+    * commit feed, stops the emit thread and disconnects subscribers.
     */
   final class Server private[SocketServe] (
       val port: Int,
       serverSocket: ServerSocket,
-      queryOf: () => StreamingQuery,
+      appender: java.util.concurrent.atomic.AtomicReference[StreamingQuery],
       conns: scala.collection.concurrent.TrieMap[String, Conn],
       drop: Conn => Unit,
       closing: java.util.concurrent.atomic.AtomicBoolean,
       onClose: () => Unit) {
-    lazy val query: StreamingQuery = queryOf()
+    /** The streaming query whose commits this edge delivers (the
+      * ingest, in the composed service); null until its first commit.
+      */
+    def query: StreamingQuery = appender.get
     def subscriberCount: Int = conns.size
     /** Sessions still in replay mode — cursors not yet cut over. */
     def replayingCount: Int = conns.values.count(_.session.replaying)
@@ -176,22 +254,22 @@ object SocketServe extends org.apache.spark.internal.Logging {
     }
     def close(): Unit = {
       closing.set(true) // before the sweep: in-flight handshakes self-drop
-      try query.stop() catch { case _: Throwable => () }
+      onClose()
       serverSocket.close()
       conns.values.foreach(drop) // closes sockets + settles the gauge
-      onClose()
     }
   }
 
-  /** Start serving `events` (a streaming tail of the events table at
-    * `tablePath` — e.g. the graft-replay source) on an ephemeral port.
+  /** Serve the events table at `tablePath` on an ephemeral port. Live
+    * frames come from the table's append commits IN THIS JVM: the edge
+    * must run in the process that appends (the composed
+    * [[graft.tools.Service]] does). An edge in any other process
+    * replays the table and cuts over, then receives nothing live.
     */
   def start(
-      events: DataFrame,
+      spark: SparkSession,
       tablePath: String,
-      checkpointDir: String,
       fanOutWidth: Int = DefaultFanOutWidth,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
       nowUs: () => Long = () => System.currentTimeMillis() * 1000L,
       writeTimeoutMs: Long = 30000L,
       metrics: Metrics.Registry = Metrics.default,
@@ -235,7 +313,7 @@ object SocketServe extends org.apache.spark.internal.Logging {
     watchdog.setRemoveOnCancelPolicy(true)
 
     // acceptor: one transport handshake → a registered CutoverSession;
-    // the subscriber starts receiving at the next micro-batch
+    // the subscriber starts receiving at the next pump tick or emit pass
     val acceptor = new Thread(() => {
       try while (true) {
         val sock = serverSocket.accept()
@@ -318,38 +396,48 @@ object SocketServe extends org.apache.spark.internal.Logging {
       writeWire(conn, wired.select("wire").collect().map(_.getString(0)))
     }
 
-    // the live head starts at the TABLE's current tail, not 0: a no-data
-    // first micro-batch must not hand replayStep serverSeqUs=0, which
-    // would declare any cursor caught-up and silently truncate a
-    // multi-chunk replay backlog
-    val initialHeadUs = scala.util.Try {
-      val row = graft.store.EventsTable.read(events.sparkSession, tablePath)
-        .agg(max(col("time_us"))).head()
-      if (row.isNullAt(0)) 0L else row.getLong(0)
-    }.getOrElse(0L)
-    val lastHeadUs = new java.util.concurrent.atomic.AtomicLong(initialHeadUs)
-
-    // AQE-off session clone for the session replay scans: the pump and
-    // the batch loop run these small chunk scans concurrently with the
-    // engine's own queries, and AQE's final-plan wait has a lost-wakeup
-    // race under exactly that concurrency (see ReplayTailSource's
-    // probeSession note); adaptive planning buys nothing on a pruned
-    // ≤chunkSize scan.
+    // AQE-off session clone for the session replay scans and head
+    // reads: the pump and the emit pass run these small scans
+    // concurrently with the engine's own queries, and AQE's final-plan
+    // wait has a lost-wakeup race under exactly that concurrency (see
+    // ReplayTailSource's probeSession note); adaptive planning buys
+    // nothing on a pruned ≤chunkSize scan.
     val replaySession = {
-      val s = events.sparkSession.newSession()
+      val s = spark.newSession()
       s.conf.set("spark.sql.adaptive.enabled", "false")
       s.experimental.extraOptimizations =
-        events.sparkSession.experimental.extraOptimizations
+        spark.experimental.extraOptimizations
       s
+    }
+
+    // the live head: the newest committed time_us this edge knows of.
+    // It starts stale, so the first replay step reads the table's
+    // current tail — never 0, which would declare any cursor caught-up
+    // and silently truncate a multi-chunk replay backlog — and goes
+    // stale again whenever a commit's frames do not reach this edge.
+    // The refresh is exclusive: the pump and the emit pass step
+    // different sessions at once, and a session that read the head
+    // while another was still refreshing it would cut over at the old
+    // one and lose the commits in between.
+    val lastHeadUs = new java.util.concurrent.atomic.AtomicLong(0L)
+    val headStale = new java.util.concurrent.atomic.AtomicBoolean(true)
+    // The flag clears BEFORE the read, so a commit that marks the head
+    // stale while a read is in flight forces the next refresh.
+    def liveHead(): Long = headStale.synchronized {
+      if (headStale.getAndSet(false))
+        try lastHeadUs.accumulateAndGet(
+          EventsTable.headUs(replaySession, tablePath, lastHeadUs.get()), math.max)
+        catch { case e: Throwable => headStale.set(true); throw e }
+      lastHeadUs.get()
     }
 
     // replay pump: the reference serves a cursored subscriber's replay
     // from its own goroutine, INDEPENDENT of live traffic
-    // (server.go:305-337). Micro-batches only fire when new events
-    // arrive, so without this thread a subscriber attaching to an idle
+    // (server.go:305-337). Emit passes only run when commits arrive,
+    // so without this thread a subscriber attaching to an idle
     // stream would wait for the next live event before its replay even
     // starts — and starve forever on a quiet one. Per-conn work is
-    // `conn.synchronized` here and in the batch loop, so a session's
+    // `conn.synchronized` here and in the emit pass, so a session's
     // replay chunks and its live emission never interleave; delivery
     // order and exactly-once still come from the session's gate + hwm.
     val pump = new Thread(() => {
@@ -366,11 +454,11 @@ object SocketServe extends org.apache.spark.internal.Logging {
               try conn.synchronized {
                 // the head is read INSIDE the lock, right before the
                 // step: a pre-read value can go stale while this worker
-                // waits behind a micro-batch that suppressed newer live
+                // waits behind an emit pass that suppressed newer live
                 // frames for this session — a stale head then lets the
                 // cutover barrier pass and the suppressed window is lost
                 if (conn.session.replaying)
-                  conn.session.replayStep(replaySession, tablePath, lastHeadUs.get())(
+                  conn.session.replayStep(replaySession, tablePath, liveHead())(
                     view => writeView(conn, view))
               } catch { case _: java.io.IOException => dropConn(conn) }
             }
@@ -390,126 +478,155 @@ object SocketServe extends org.apache.spark.internal.Logging {
     }, "socket-serve-replay-pump")
     pump.setDaemon(true)
     pump.start()
-    val query = events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val active = conns.readOnlySnapshot().values.toSeq.sortBy(_.name)
-        if (active.nonEmpty) {
-          // ONE Spark job per micro-batch, at ANY subscriber count:
-          // serialize once distributed (the single marshal of
-          // server.go:73) and collect the wire frames WITH their routing
-          // columns to the serving edge; everything below is the
-          // in-process emit loop (server.go:87-134) — per-subscriber
-          // predicate + hwm over the shared frame array, zero further
-          // jobs. The earlier shape (a filtered view + collect per
-          // subscriber) was 2·S jobs per batch; at S=100 the job-
-          // scheduling overhead alone dominated the batch. Driver memory
-          // holds one live micro-batch of wire bytes — bounded by the
-          // trigger interval, and the same window the reference keeps in
-          // process for its emit loop.
-          val wiredBatch = Decode.toWire(batch)
-          val frames = wiredBatch
-            .select(col("time_us"),
-              Subscribe.resolvedCollection(wiredBatch).as("collection"),
-              col("did"), col("wire"))
-            .collect()
-            .map(r => Subscribe.WireFrame(r.getLong(0),
-              if (r.isNullAt(1)) null else r.getString(1),
-              if (r.isNullAt(2)) null else r.getString(2),
-              r.getString(3)))
-            .sortBy(_.timeUs)
-          if (frames.nonEmpty) {
-            // live head + the emit-loop counters (server.go:71,80 counts
-            // each serialized event and its bytes once, before fan-out)
-            lastHeadUs.getAndAccumulate(frames.last.timeUs, math.max)
-            // live delivery lag at the serving edge: emit wall-clock −
-            // the batch's newest event time (its time_us is the ingest
-            // sequencer's wall-clock stamp) — the signal the adaptive
-            // replay share governs on
-            replayThrottle.foreach(_.observeLive(nowUs() - frames.last.timeUs))
-            eventsEmitted.add(frames.length.toDouble)
-            bytesEmitted.add(frames.iterator.map(f =>
-              f.wire.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong)
-              .sum.toDouble)
-          }
-          // one throttle decision per micro-batch covers every
-          // replaying conn this batch would step (same admission
-          // granularity as the pump's per-tick decision). The credit
-          // draw is LAZY — a batch with no replaying conn must not
-          // consume an admission the pump was owed (ADVICE r17 #4: the
-          // unconditional draw drifted the effective replay rate below
-          // the intended share under throttling). The pump and batch
-          // loop deliberately share ONE accumulator: both step the same
-          // sessions, and the share governs the TOTAL replay tick rate,
-          // whichever site fires it.
-          val batchStepAllowed = active.exists(_.session.replaying) &&
-            replayThrottle.forall(_.stepAllowed())
-          onPool(active, fanOutWidth) { conn =>
-            try conn.synchronized { // excludes the replay pump per conn
-              // head read inside the lock — see the pump's note
-              if (conn.session.replaying && batchStepAllowed)
-                try conn.session.replayStep(replaySession, tablePath, lastHeadUs.get())(
-                  view => writeView(conn, view))
-                catch {
-                  // write-path failure: the drop signal — rethrow to the
-                  // outer handler
-                  case e: java.io.IOException => throw e
-                  // the same transient table-read race the pump tolerates
-                  // (file listing during a concurrent append/compaction)
-                  // can land here instead; a healthy subscriber must not
-                  // be dropped for it. Leave the conn attached — the next
-                  // tick (pump or batch) retries; the session stays in
-                  // replay so the live gate below keeps suppressing.
-                  case e: Throwable => warnThrottled("batch-loop replay", e)
-                }
-              val (wires, tailUs) = conn.session.liveEmitFrames(frames)
-              // The rearm try covers ONLY the wire write: writeWire's
-              // post-flush bookkeeping is exception-free by construction,
-              // so a non-IO escaping it means frames did NOT all reach
-              // the pipe — the one case where a rearm is lossless. The
-              // hwm advance runs OUTSIDE the try: after a successful
-              // flush a failure there must surface, never re-arm (a
-              // rearm would re-read and re-deliver the window just
-              // written — duplicates, ADVICE r11).
-              val flushed =
-                try { writeWire(conn, wires); true }
-                catch {
-                  case e: java.io.IOException => throw e // → outer drop
-                  case e: Throwable if wires.nonEmpty =>
-                    // non-IO with frames IN FLIGHT: keep-attached would
-                    // LOSE this batch's window for the subscriber — a live
-                    // session never re-reads the table, the next batch
-                    // carries only newer events, and its delivered() would
-                    // advance the hwm past the gap. Re-arm the session into
-                    // replay at the current hwm instead: the skipped window
-                    // is re-read from the table, the hwm dedup skips
-                    // anything already written, and the normal gap-fill
-                    // cutover returns it to live exactly-once.
-                    conn.session.rearmReplay()
-                    warnThrottled(s"live emit for ${conn.name} (re-armed replay)", e)
-                    false
-                }
-              if (flushed)
-                conn.session.delivered(tailUs) // hwm past the SUCCESSFUL write
-            } catch {
-              case _: java.io.IOException => // slow consumer / disconnect:
-                dropConn(conn) // server.go:168-175
-              case e: Throwable =>
-                // non-IO BEFORE anything was emitted (the in-memory emit
-                // half failed) — a bug, not a broken pipe. Dropping would
-                // hide it behind a clean disconnect; keep the conn
-                // attached (its gate/hwm are untouched, so nothing is
-                // lost) and surface the error, throttled, while the next
-                // batch retries.
-                warnThrottled(s"live emit for ${conn.name}", e)
-            }
+    // one emit pass over the frames of one or more commits, in commit
+    // order; `rearm` = a commit reached the table but not this pass (its
+    // wiring failed, or the feed dropped it over the driver budget)
+    def emitPass(frames: Array[Subscribe.WireFrame], rearm: Boolean): Unit = {
+      if (rearm) headStale.set(true)
+      if (frames.nonEmpty) lastHeadUs.getAndAccumulate(frames.last.timeUs, math.max)
+      val active = conns.readOnlySnapshot().values.toSeq.sortBy(_.name)
+      // the commit's frames never reached this edge: every live
+      // session replays the window from the table, hwm-deduped
+      if (rearm) active.foreach(c => c.synchronized(c.session.rearmReplay()))
+      if (active.nonEmpty) {
+        // everything below is the in-process emit loop
+        // (server.go:87-134) over the commit's once-wired frames —
+        // per-subscriber predicate + hwm over the shared frame array,
+        // zero Spark jobs
+        if (frames.nonEmpty) {
+          // live delivery lag at the serving edge: emit wall-clock −
+          // the newest event time (its time_us is the ingest
+          // sequencer's wall-clock stamp) — the signal the adaptive
+          // replay share governs on
+          replayThrottle.foreach(_.observeLive(nowUs() - frames.last.timeUs))
+          // the emit-loop counters (server.go:71,80 counts each
+          // serialized event and its bytes once, before fan-out)
+          eventsEmitted.add(frames.length.toDouble)
+          bytesEmitted.add(frames.iterator.map(f =>
+            f.wire.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong)
+            .sum.toDouble)
+        }
+        // one throttle decision per emit pass covers every
+        // replaying conn this batch would step (same admission
+        // granularity as the pump's per-tick decision). The credit
+        // draw is LAZY — a batch with no replaying conn must not
+        // consume an admission the pump was owed (ADVICE r17 #4: the
+        // unconditional draw drifted the effective replay rate below
+        // the intended share under throttling). The pump and emit
+        // pass deliberately share ONE accumulator: both step the same
+        // sessions, and the share governs the TOTAL replay tick rate,
+        // whichever site fires it.
+        val batchStepAllowed = active.exists(_.session.replaying) &&
+          replayThrottle.forall(_.stepAllowed())
+        onPool(active, fanOutWidth) { conn =>
+          try conn.synchronized { // excludes the replay pump per conn
+            // head read inside the lock — see the pump's note
+            if (conn.session.replaying && batchStepAllowed)
+              try conn.session.replayStep(replaySession, tablePath, liveHead())(
+                view => writeView(conn, view))
+              catch {
+                // write-path failure: the drop signal — rethrow to the
+                // outer handler
+                case e: java.io.IOException => throw e
+                // the same transient table-read race the pump tolerates
+                // (file listing during a concurrent append/compaction)
+                // can land here instead; a healthy subscriber must not
+                // be dropped for it. Leave the conn attached — the next
+                // tick (pump or emit pass) retries; the session stays in
+                // replay so the live gate below keeps suppressing.
+                case e: Throwable => warnThrottled("emit-pass replay", e)
+              }
+            val (wires, tailUs) = conn.session.liveEmitFrames(frames)
+            // The rearm try covers ONLY the wire write: writeWire's
+            // post-flush bookkeeping is exception-free by construction,
+            // so a non-IO escaping it means frames did NOT all reach
+            // the pipe — the one case where a rearm is lossless. The
+            // hwm advance runs OUTSIDE the try: after a successful
+            // flush a failure there must surface, never re-arm (a
+            // rearm would re-read and re-deliver the window just
+            // written — duplicates, ADVICE r11).
+            val flushed =
+              try { writeWire(conn, wires); true }
+              catch {
+                case e: java.io.IOException => throw e // → outer drop
+                case e: Throwable if wires.nonEmpty =>
+                  // non-IO with frames IN FLIGHT: keep-attached would
+                  // LOSE this window for the subscriber — a live
+                  // session never re-reads the table, the next commit
+                  // carries only newer events, and its delivered() would
+                  // advance the hwm past the gap. Re-arm the session into
+                  // replay at the current hwm instead: the skipped window
+                  // is re-read from the table, the hwm dedup skips
+                  // anything already written, and the normal gap-fill
+                  // cutover returns it to live exactly-once.
+                  conn.session.rearmReplay()
+                  warnThrottled(s"live emit for ${conn.name} (re-armed replay)", e)
+                  false
+              }
+            if (flushed)
+              conn.session.delivered(tailUs) // hwm past the SUCCESSFUL write
+          } catch {
+            case _: java.io.IOException => // slow consumer / disconnect:
+              dropConn(conn) // server.go:168-175
+            case e: Throwable =>
+              // non-IO BEFORE anything was emitted (the in-memory emit
+              // half failed) — a bug, not a broken pipe. Dropping would
+              // hide it behind a clean disconnect; keep the conn
+              // attached (its gate/hwm are untouched, so nothing is
+              // lost) and surface the error, throttled, while the next
+              // pass retries.
+              warnThrottled(s"live emit for ${conn.name}", e)
           }
         }
       }
-      .start()
+    }
 
-    new Server(serverSocket.getLocalPort, serverSocket, () => query, conns,
-      dropConn, closing, () => { pump.interrupt(); watchdog.shutdownNow() })
+    // the emit thread: takes whatever commits arrived while it was
+    // busy as one pass (commit order is time order), so a stalled write
+    // delays this edge, never the appender
+    val feed = new Feed
+    val emitter = new Thread(() => {
+      try while (true) {
+        val (frames, lost) = feed.take()
+        try emitPass(frames, rearm = lost)
+        catch {
+          case e: InterruptedException => throw e
+          case e: Throwable => warnThrottled("emit pass", e)
+        }
+      } catch { case _: InterruptedException => () }
+    }, "socket-serve-emit")
+    emitter.setDaemon(true)
+    emitter.start()
+
+    // the commit listener: runs on the appending thread (the ingest
+    // micro-batch), wires the batch when this edge has a subscriber,
+    // hands the frames to the emit thread and returns — it never waits
+    // on a socket
+    val appender = new java.util.concurrent.atomic.AtomicReference[StreamingQuery]
+    val key = EventsTable.tableKey(spark, tablePath)
+    val detach = EventsTable.onCommit(spark, tablePath) { (s, files) =>
+      Option(s.sparkContext.getLocalProperty("sql.streaming.queryId"))
+        .map(java.util.UUID.fromString)
+        .filterNot(id => Option(appender.get).exists(_.id == id))
+        .flatMap(id => Option(spark.streams.get(id)))
+        .foreach(appender.set)
+      if (conns.isEmpty) headStale.set(true)
+      else
+        try feed.offer(wireCommitted(s, key, files), DriverBudget.bytes(s))
+        catch { case scala.util.control.NonFatal(e) =>
+          // the batch is in the table but its frames never reach this
+          // edge: its live sessions re-arm into replay at their hwm
+          warnThrottled(s"wiring a committed batch of $key (live sessions re-armed)", e)
+          feed.markLost()
+        }
+    }
+
+    new Server(serverSocket.getLocalPort, serverSocket, appender, conns,
+      dropConn, closing, () => {
+        detach()
+        emitter.interrupt()
+        pump.interrupt()
+        watchdog.shutdownNow()
+      })
   }
 }

@@ -105,9 +105,10 @@ object EventsTable {
     *     serves a partial PUT) guarantees every named file is fully
     *     readable by name.
     *
-    * [[read]] auto-detects the mode (the `_manifests` dir), so the
-    * serve tail, replay, and every query inherit manifest-gated
-    * visibility unchanged. A manifest table must be written ONLY in
+    * [[read]] auto-detects the mode (the `_manifests` dir), so
+    * replay, a `graft-replay` tail and every query inherit
+    * manifest-gated visibility unchanged; commit listeners run after
+    * the manifest is written. A manifest table must be written ONLY in
     * manifest mode: plain-append files are never named by a manifest
     * and stay invisible. Crash before the manifest PUT leaves the
     * whole batch invisible (the checkpoint replays it; the orphaned
@@ -137,6 +138,7 @@ object EventsTable {
       .mode(SaveMode.Overwrite)
       .partitionBy(PartitionCol)
       .parquet(staging.toString)
+    val moved = scala.collection.mutable.ListBuffer.empty[String]
     try {
       val hourDirs = fs.listStatus(staging)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$PartitionCol="))
@@ -156,7 +158,6 @@ object EventsTable {
               "range-partition index; the sharded append cannot order it " +
               "(did the output committer's file naming change?)", e)
         }
-      val moved = scala.collection.mutable.ListBuffer.empty[String]
       hourDirs.foreach { hd =>
         val dest = new Path(root, hd.getPath.getName)
         fs.mkdirs(dest)
@@ -177,6 +178,44 @@ object EventsTable {
       }
       if (manifest) commitManifest(fs, root, moved.toList)
     } finally { fs.delete(staging, true); () }
+    // the batch is already in the table: a failing listener is logged,
+    // never allowed to fail the append
+    Option(commitListeners.get(fs.makeQualified(root).toString)).foreach(_.foreach { l =>
+      try l(spark, moved.toList)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[events-table] commit listener on $root failed: $e")
+      }
+    })
+  }
+
+  /** Runs after an append has made its batch visible (renames done,
+    * manifest written), on the appending thread, with the appending
+    * session and the batch's committed files relative to the table
+    * root. It must return promptly: for the ingest query it runs inside
+    * the micro-batch.
+    */
+  type CommitListener = (SparkSession, Seq[String]) => Unit
+
+  /** Listeners by qualified table URI ([[tableKey]]). */
+  private val commitListeners =
+    new java.util.concurrent.ConcurrentHashMap[String, Vector[CommitListener]]()
+
+  /** The qualified table URI, so `./data/events` and its absolute path
+    * are one table.
+    */
+  def tableKey(spark: SparkSession, path: String): String = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    root.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(root).toString
+  }
+
+  /** Call `listener` after every append to the table at `path` commits,
+    * whoever appends. Returns the detach.
+    */
+  def onCommit(spark: SparkSession, path: String)(listener: CommitListener): () => Unit = {
+    val key = tableKey(spark, path)
+    commitListeners.merge(key, Vector(listener), _ ++ _)
+    () => { commitListeners.computeIfPresent(key,
+      (_, ls) => Some(ls.filterNot(_ eq listener)).filter(_.nonEmpty).orNull); () }
   }
 
   val ManifestsDir = "_manifests"
@@ -541,18 +580,21 @@ object EventsTable {
         if graft.sources.ReplayTailSource.isFreshBoot(e) => None }
   }
 
-  /** The cursor to present upstream on (re)connect: the newest
-    * upstream event time already persisted (0 on a fresh table). The
-    * CLIENT owns the cursor (the reference's cursor dance,
-    * cmd/jetstream/server.go:274-287 + pkg/consumer/persist.go:41-87):
-    * the upstream replays strictly after it, so a crash between
-    * micro-batches costs re-delivery, never loss.
+  /** The newest `time_us` in the table, at least `fromUs` (`fromUs` on
+    * a fresh table). Only the hours from `fromUs`'s hour on are scanned.
     */
-  def resumeCursorUs(spark: SparkSession, tablePath: String): Long =
-    resumeState(spark, tablePath)._1
+  def headUs(spark: SparkSession, tablePath: String, fromUs: Long = 0L): Long =
+    tableIfAny(spark, tablePath).map { t =>
+      val row = t.filter(col(PartitionCol) >= fromUs / HourUs)
+        .agg(max(col("time_us"))).head()
+      if (row.isNullAt(0)) fromUs else math.max(fromUs, row.getLong(0))
+    }.getOrElse(fromUs)
 
   /** Both recovery marks — the upstream resume cursor
-    * (max event_time_us) and the sequencer high-water mark
+    * (max event_time_us), which the CLIENT presents upstream on
+    * (re)connect (the reference's cursor dance,
+    * cmd/jetstream/server.go:274-287 + pkg/consumer/persist.go:41-87),
+    * and the sequencer high-water mark
     * (max time_us) — in ONE aggregate pass over the table, so a
     * restart scans the log once, not once per mark. (0, 0) on a fresh
     * table.

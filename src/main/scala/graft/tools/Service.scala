@@ -66,7 +66,7 @@ object Service {
       // composed-binary batching posture, both soak-derived (PERF.md
       // round 11): a 0 ms ingest trigger writes hundreds of tiny
       // parquet files per minute, and every file inflates the listing
-      // cost EVERY chunked replay scan and live-tail batch pays — at a
+      // cost EVERY chunked replay scan pays — at a
       // sustained 10k ev/s a replaying subscriber fell below the live
       // rate and could never cut over. One-second batches cut the file
       // count 10× and larger replay chunks amortize each scan.
@@ -148,22 +148,16 @@ object Service {
       cursorOverrideUs = config.overrideCursorUs, format = config.wsFormat,
       metrics = registry, manifestCommits = config.manifestCommits)
 
-    // serve: WebSocket subscribers against the same table; the serving
-    // tail starts at the table's current head — history is the
-    // sessions' replay job
-    // same fresh-boot-vs-breakage discipline as the ingest side: a
-    // broken table fails the start instead of serving from head 0
-    val headUs = EventsTable.resumeState(spark, tablePath)._2
     // resumed-over-history restart: the reference's liveness check
     // reads the cursor back and kills on a hung upstream even before
-    // this incarnation's first event — arm the stall clock to match
-    if (headUs > 0) watchdog.arm(ingest.id)
-    val tail = spark.readStream.format("graft-replay")
-      .option("path", tablePath)
-      .option("cursor", (headUs + 1).toString)
-      .load()
-    val server = SocketServe.start(tail, tablePath,
-      s"${config.dataDir}/checkpoints/serve",
+    // this incarnation's first event — arm the stall clock to match.
+    // Same fresh-boot-vs-breakage discipline as the ingest side: a
+    // broken table fails the start.
+    if (EventsTable.headUs(spark, tablePath) > 0) watchdog.arm(ingest.id)
+    // serve: WebSocket subscribers against the same table; the ingest's
+    // commits hand their frames to it in this JVM — history is the
+    // sessions' replay job
+    val server = SocketServe.start(spark, tablePath,
       metrics = registry, maxSubRate = Some(config.maxSubRate),
       port = config.listenPort, replayChunkSize = config.serveChunkSize,
       replayThrottle = if (config.replayTargetLagUs > 0)

@@ -48,11 +48,7 @@ class WsFullLoopSpec extends SparkSpec {
       val stamps = EventsTable.read(spark, table)
         .select("time_us").as[Long].collect().sorted
       val cursor = stamps(3)
-      val tail = spark.readStream.format("graft-replay")
-        .option("path", table)
-        .option("cursor", (stamps.max + 1).toString)
-        .load()
-      server = SocketServe.start(tail, table, tmpDir("ws-loop-sckpt"))
+      server = SocketServe.start(spark, table)
       val client = new WsTestKit.Client(
         s"ws://localhost:${server.port}/subscribe?cursor=$cursor")
       eventually(30000)(server.subscriberCount == 1)
@@ -76,7 +72,14 @@ class WsFullLoopSpec extends SparkSpec {
         "every event at-or-after the cursor, none before")
 
       assert(ingest.isActive, "ingest query still running")
+      // the query whose commits the edge delivers: the ingest itself
       assert(server.query.isActive, "serve query still running")
+      // the serving edge is still live: one more upstream frame reaches
+      // the subscriber through the commit hand-off
+      srv.log = (1 to 17).map(frame).toVector
+      eventually(120000)(client.lines.size >= 14)
+      val last = EventsTable.read(spark, table).select("time_us").as[Long].collect().max
+      assert(client.timesUs == got :+ last, "the live frame once, after the rest")
       client.ws.abort()
     } finally {
       if (server != null) server.close()

@@ -116,6 +116,30 @@ class MetricsSpec extends SparkSpec {
     } finally spark.streams.removeListener(listener)
   }
 
+  test("the WebSocket ingest sets graft_consumer_last_seq{table} to its committed head") {
+    val reg = new Metrics.Registry
+    val table = tmpDir("last-seq-table")
+    val srv = new graft.WsTestKit.ReplayServer
+    try {
+      srv.log = (1 to 8).map { i =>
+        val iso = f"2024-09-05T09:$i%02d:00.000Z"
+        java.time.Instant.parse(iso).toEpochMilli * 1000L ->
+          (s"""{"t":"#commit","did":"did:plc:m$i","rev":"r$i","seq":$i,"time":"$iso","tooBig":false,""" +
+            s""""ops":[{"action":"create","path":"app.bsky.feed.post/k$i","cid":"c$i","recordCid":"c$i","record":{"text":"m$i"}}]}""")
+      }.toVector
+      val q = graft.sources.WebSocketIngress.start(spark,
+        s"ws://localhost:${srv.port}/subscribe", table, tmpDir("last-seq-ckpt"), metrics = reg)
+      try eventually(90000)(EventsTable.read(spark, table).count() == 8)
+      finally { q.stop(); q.awaitTermination(30000) }
+      val head = EventsTable.read(spark, table).agg(org.apache.spark.sql.functions.max("time_us"))
+        .head().getLong(0)
+      val out = reg.render
+      assert(out.contains("# TYPE graft_consumer_last_seq gauge"), out)
+      val lastSeq = reg.gauge("graft_consumer_last_seq", "", "table" -> table).value
+      assert(lastSeq == head.toDouble, out)
+    } finally srv.close()
+  }
+
   test("HTTP endpoint serves the registry at /metrics") {
     val reg = new Metrics.Registry
     reg.counter("g_http_total", "hits").add(5)
@@ -136,10 +160,7 @@ class MetricsSpec extends SparkSpec {
       .toDF("time_us", "did", "collection"), table)
 
     val reg = new Metrics.Registry
-    val tail = spark.readStream.format("graft-replay")
-      .option("path", table).option("cursor", "21000").load()
-    val server = SocketServe.start(tail, table, tmpDir("metrics-serve-ckpt"),
-      metrics = reg)
+    val server = SocketServe.start(spark, table, metrics = reg)
     try {
       val sub = new graft.WsTestKit.Client(
         s"ws://localhost:${server.port}/subscribe?cursor=0")

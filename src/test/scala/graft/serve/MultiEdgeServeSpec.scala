@@ -3,13 +3,13 @@ package graft.serve
 import graft.{SparkSpec, WsTestKit}
 import graft.store.EventsTable
 
-/** The horizontal-scale story for the serving edge, EXERCISED: N
-  * `SocketServe` processes share one events table (the table, not the
-  * server, is the scale axis — SocketServe.scala's header), each edge
-  * with its own streaming tail + checkpoint and its own subscriber
-  * set. The reference's multi-instance posture is the same shape: any
-  * number of jetstream processes tail one upstream and serve disjoint
-  * client populations.
+/** Several serving edges on one events table, EXERCISED: N
+  * `SocketServe` edges in the appender's JVM (the commit hand-off
+  * reaches only edges in the process that appends —
+  * `SocketServe.start`'s scaladoc), each with its own emit thread and
+  * its own subscriber set. The reference's multi-instance posture is
+  * the same shape within one process: any number of edges serve
+  * disjoint client populations off one upstream.
   *
   * Asserted here, with ingest running concurrently under both edges:
   *   - every cursored subscriber on EITHER edge replays the shared
@@ -32,13 +32,8 @@ class MultiEdgeServeSpec extends SparkSpec {
     val table = tmpDir("multi-edge-table")
     EventsTable.append(rows(1 to 20).toDF("time_us", "did", "collection"), table)
 
-    def edge(name: String) = SocketServe.start(
-      spark.readStream.format("graft-replay")
-        .option("path", table).option("cursor", "21000").load(),
-      table, tmpDir(s"multi-edge-ckpt-$name"))
-
-    val edgeA = edge("a")
-    val edgeB = edge("b")
+    val edgeA = SocketServe.start(spark, table)
+    val edgeB = SocketServe.start(spark, table)
     try {
       // disjoint subscriber sets: 2 cursored + 1 live-only per edge
       val a1 = client(edgeA.port, "subscribe?cursor=0")
@@ -53,7 +48,7 @@ class MultiEdgeServeSpec extends SparkSpec {
       assert(aLive.lines.isEmpty && bLive.lines.isEmpty)
 
       // concurrent ingest: appends land while BOTH edges are serving;
-      // each edge's own micro-batch loop fans them out
+      // each edge's own emit thread fans them out
       (21 to 26).grouped(2).foreach { g =>
         EventsTable.append(rows(g.head to g.last).toDF("time_us", "did", "collection"), table)
       }

@@ -42,9 +42,7 @@ class SocketServeSpec extends SparkSpec {
   test("invalid subscribe params are rejected at the handshake (server.go:253-271)") {
     val table = tmpDir("socket-serve-reject-table")
     EventsTable.append(rows(1 to 3).toDF("time_us", "did", "collection"), table)
-    val tail = spark.readStream.format("graft-replay")
-      .option("path", table).option("cursor", "4000").load()
-    val server = SocketServe.start(tail, table, tmpDir("socket-serve-reject-ckpt"))
+    val server = SocketServe.start(spark, table)
     try {
       // the upgrade completes before the params are checked, then the
       // server closes the socket; whether the client sees the 101 first
@@ -66,12 +64,7 @@ class SocketServeSpec extends SparkSpec {
     EventsTable.append(rows(1 to 30).toDF("time_us", "did", "collection"), table)
     EventsTable.append(rows(31 to 40, "app.graft.other").toDF("time_us", "did", "collection"), table)
 
-    val tail = spark.readStream.format("graft-replay")
-      .option("path", table)
-      // the serving tail starts at the head; history is the sessions' job
-      .option("cursor", "41000")
-      .load()
-    val server = SocketServe.start(tail, table, tmpDir("socket-serve-ckpt"))
+    val server = SocketServe.start(spark, table)
     try {
       // A: cursor=0 → full replay of the table, then live
       val a = client(server.port, "subscribe?cursor=0")
@@ -143,10 +136,7 @@ class SocketServeSpec extends SparkSpec {
           })
         }
     }
-    val tail = spark.readStream.format("graft-replay")
-      .option("path", table).option("cursor", "11000").load()
-    val server = SocketServe.start(tail, table,
-      tmpDir("socket-serve-rearm-ckpt"), transport = faulty)
+    val server = SocketServe.start(spark, table, transport = faulty)
     try {
       val c = client(server.port, "subscribe?cursor=0")
       eventually(60000)(c.lines.size >= 10)
@@ -170,11 +160,7 @@ class SocketServeSpec extends SparkSpec {
     // backlog — no micro-batch ever fires here
     val table = tmpDir("socket-serve-idle-table")
     EventsTable.append(rows(1 to 25).toDF("time_us", "did", "collection"), table)
-    val tail = spark.readStream.format("graft-replay")
-      .option("path", table)
-      .option("cursor", "26000")
-      .load()
-    val server = SocketServe.start(tail, table, tmpDir("socket-serve-idle-ckpt"))
+    val server = SocketServe.start(spark, table)
     try {
       val a = client(server.port, "subscribe?cursor=0")
       val b = client(server.port, "subscribe?cursor=0&wantedCollections=app.graft.doc")
@@ -185,15 +171,40 @@ class SocketServeSpec extends SparkSpec {
     } finally server.close()
   }
 
+  test("cursored subscribers attaching together each replay a multi-chunk backlog whole") {
+    // the handshakes release together, so their sessions take their
+    // first replay steps at once while the edge's live head is still
+    // unread: each step must wait for the one head read, never cut over
+    // at the unread head (0) after its first chunk
+    val table = tmpDir("socket-serve-together-table")
+    val stamps = (1 to 60).map(_ * 100000L) // 6 s of event time, 12 chunks
+    EventsTable.append(stamps.map(t => (t, s"did:plc:u${t % 5}", "app.graft.doc"))
+      .toDF("time_us", "did", "collection"), table)
+    val n = 4
+    val gate = new java.util.concurrent.CountDownLatch(n)
+    val together = new SocketServe.Transport {
+      def open(sock: Socket): Option[(String, SocketServe.WireWriter)] = {
+        val opened = WebSocketServe.WsTransport.open(sock)
+        gate.countDown()
+        gate.await(30, java.util.concurrent.TimeUnit.SECONDS)
+        opened
+      }
+    }
+    val server = SocketServe.start(spark, table, transport = together, replayChunkSize = 5)
+    try {
+      val cs = (1 to n).map(_ => client(server.port, "subscribe?cursor=0"))
+      eventually(30000)(server.subscriberCount == n)
+      eventually(90000)(server.replayingCount == 0)
+      eventually(60000)(cs.forall(_.timesUs.size >= stamps.size))
+      cs.foreach(c => assert(c.timesUs == stamps, "the whole backlog, once, in order"))
+    } finally server.close()
+  }
+
   test("100 subscribers: the one-job-per-batch live fan-out delivers every spec shape") {
     val table = tmpDir("socket-serve-100-table")
     EventsTable.append(rows(1 to 20).toDF("time_us", "did", "collection"), table)
 
-    val tail = spark.readStream.format("graft-replay")
-      .option("path", table)
-      .option("cursor", "21000") // serve the post-attach tail; history via cursors
-      .load()
-    val server = SocketServe.start(tail, table, tmpDir("socket-serve-100-ckpt"))
+    val server = SocketServe.start(spark, table)
     val clients = scala.collection.mutable.ArrayBuffer.empty[WsTestKit.Client]
     val http = java.net.http.HttpClient.newHttpClient() // one for all 100
     try {
@@ -251,9 +262,7 @@ class SocketServeSpec extends SparkSpec {
       rows(ids).map { case (t, d, c) => (t, d, c, pad) }.toDF("time_us", "did", "collection", "pad")
     EventsTable.append(padded(1 to 5), table)
     val reg = new Metrics.Registry
-    val tail = spark.readStream.format("graft-replay")
-      .option("path", table).option("cursor", "6000").load()
-    val server = SocketServe.start(tail, table, tmpDir("socket-serve-slow-ckpt"),
+    val server = SocketServe.start(spark, table,
       writeTimeoutMs = 1000L, metrics = reg)
     def connected: Double =
       ("""(?m)^graft_subscribers_connected(\{[^}]*\})? (\S+)$""").r

@@ -21,9 +21,7 @@ class WebSocketServeSpec extends SparkSpec {
     EventsTable.append((31 to 40).map(i => (i * 1000L, s"did:plc:u${i % 5}", "app.graft.other"))
       .toDF("time_us", "did", "collection"), table)
 
-    val tail = spark.readStream.format("graft-replay")
-      .option("path", table).option("cursor", "41000").load()
-    val server = SocketServe.start(tail, table, tmpDir("ws-serve-ckpt"))
+    val server = SocketServe.start(spark, table)
     try {
       val a = new WsTestKit.Client(s"ws://localhost:${server.port}/subscribe?cursor=0")
       val b = new WsTestKit.Client(
@@ -79,9 +77,7 @@ class WebSocketServeSpec extends SparkSpec {
     val table = tmpDir("ws-batch-table")
     EventsTable.append((1 to 200).map(i => (i * 1000L, s"did:plc:u${i % 5}", "app.graft.doc"))
       .toDF("time_us", "did", "collection"), table)
-    val tail = spark.readStream.format("graft-replay")
-      .option("path", table).option("cursor", "500000").load()
-    val server = SocketServe.start(tail, table, tmpDir("ws-batch-ckpt"))
+    val server = SocketServe.start(spark, table)
     try {
       // raw RFC 6455 reader: handshake, then count frames AND events
       val sock = new java.net.Socket("localhost", server.port)
@@ -128,9 +124,7 @@ class WebSocketServeSpec extends SparkSpec {
     val table = tmpDir("ws-serve-rej-table")
     EventsTable.append(Seq((1000L, "did:plc:u1", "app.graft.doc"))
       .toDF("time_us", "did", "collection"), table)
-    val tail = spark.readStream.format("graft-replay")
-      .option("path", table).option("cursor", "2000").load()
-    val server = SocketServe.start(tail, table, tmpDir("ws-serve-rej-ckpt"))
+    val server = SocketServe.start(spark, table)
     try {
       val sock = new java.net.Socket("localhost", server.port)
       sock.getOutputStream.write(
