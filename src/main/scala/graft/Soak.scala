@@ -20,9 +20,10 @@ import graft.tools.Service
   * fire mid-run, with real WebSocket subscribers measuring end-to-end
   * ingest→delivery latency.
   *
-  * Invoked from [[ScaleSmoke]]: `runMain graft.ScaleSmoke soak
-  * [minutes] [eventsPerSec]` (not part of the default ScaleSmoke pass —
-  * a 10-minute wall-clock section would dominate it).
+  * Usage: `runMain graft.Soak [minutes] [eventsPerSec]
+  * [ingestTriggerMs] [multi] [manifest] [batch]` — defaults 10 minutes
+  * at 10k ev/s with a 1 s ingest trigger; the trailing words switch on
+  * two serving edges, manifest commits and 64-event frames.
   *
   * What a PASS asserts:
   *   - sustained ingest at the target rate (≥ 95% of generated events
@@ -262,9 +263,35 @@ object Soak {
     if (sorted.isEmpty) 0L
     else sorted(math.min(sorted.length - 1, (q * sorted.length).toInt))
 
-  def run(spark: SparkSession, minutes: Int, ratePerSec: Int,
-      ingestTriggerMs: Long = 1000L, multiEdge: Boolean = false,
-      manifestMode: Boolean = false, frameBatch: Int = 1): Unit = {
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder()
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      // FAIR scheduling keeps the replay pump's pool from starving
+      // behind live micro-batch jobs
+      .config("spark.scheduler.mode", "FAIR")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ graft.plans.HourBounds
+    spark.sparkContext.setLogLevel("WARN")
+    val words = args.drop(3)
+    try run(spark,
+      minutes = args.lift(0).map(_.toInt).getOrElse(10),
+      ratePerSec = args.lift(1).map(_.toInt).getOrElse(10000),
+      ingestTriggerMs = args.lift(2).map(_.toLong).getOrElse(1000L),
+      multiEdge = words.contains("multi"),
+      manifestMode = words.contains("manifest"),
+      frameBatch = if (words.contains("batch")) 64 else 1)
+    finally spark.stop()
+  }
+
+  private def run(spark: SparkSession, minutes: Int, ratePerSec: Int,
+      ingestTriggerMs: Long, multiEdge: Boolean,
+      manifestMode: Boolean, frameBatch: Int): Unit = {
     val durMs = minutes * 60000L
     println(s"[soak] ${minutes}m at $ratePerSec ev/s, local[${spark.sparkContext.defaultParallelism}]" +
       s", trigger=${ingestTriggerMs}ms" + (if (multiEdge) ", MULTI-EDGE" else "") +

@@ -72,8 +72,8 @@ import org.apache.spark.sql.functions._
   * the corpus) and the pending fold resets, so per-round cost is
   * bounded by O(cadence·|vocab|) and the codegen tree never exceeds
   * cadence depth: per-round time stays flat at k in the thousands
-  * instead of the unbounded-fold O(k²·|vocab|) (ScaleSmoke `bpe`
-  * measures this at k=500). At the oracle-gated k the cadence never
+  * instead of the unbounded-fold O(k²·|vocab|) (PERF.md records it
+  * flat at k=500). At the oracle-gated k the cadence never
   * fires and the plan is the same single fold as before.
   *
   * Encoding with a production-sized merge table cannot be a k-deep
@@ -172,8 +172,7 @@ object Bpe {
     * its value (BpeSpec pins cadence-invariance).
     */
   def learnMerges(df: DataFrame, textCol: String, k: Int,
-      checkpointEvery: Int = CheckpointEveryMerges,
-      onRound: (Int, Double) => Unit = (_, _) => ()): Seq[Merge] = {
+      checkpointEvery: Int = CheckpointEveryMerges): Seq[Merge] = {
     require(k >= 1, "k must be positive")
     require(checkpointEvery >= 1, "checkpointEvery must be positive")
     // a vocabulary that fits the driver budget is collected once and the
@@ -191,8 +190,8 @@ object Bpe {
     val vocabDf = spacedVocab(df, textCol)
     graft.util.DriverBudget.collect(vocabDf, VocabWordBytes) match {
       case Some(vocab) =>
-        learnMergesDriver(vocab.map(r => (r.getString(0), r.getLong(1))), k, onRound)
-      case None => learnMergesDistributed(vocabDf, k, checkpointEvery, onRound)
+        learnMergesDriver(vocab.map(r => (r.getString(0), r.getLong(1))), k)
+      case None => learnMergesDistributed(vocabDf, k, checkpointEvery)
     }
   }
 
@@ -200,8 +199,7 @@ object Bpe {
     * spec's forced-path twin for the driver/distributed equivalence pin.
     */
   private[ext] def learnMergesDistributed(vocabDf: DataFrame, k: Int,
-      checkpointEvery: Int = CheckpointEveryMerges,
-      onRound: (Int, Double) => Unit = (_, _) => ()): Seq[Merge] = {
+      checkpointEvery: Int = CheckpointEveryMerges): Seq[Merge] = {
     var vocab = vocabDf.cache()
     try {
       val out = scala.collection.mutable.ArrayBuffer.empty[Merge]
@@ -209,7 +207,6 @@ object Bpe {
       var pending = 0
       var exhausted = false
       while (out.length < k && !exhausted) {
-        val tRound = System.nanoTime()
         // The pending-merge fold is FENCED behind its own projection:
         // [[adjacentPairs]] references its input four times (size ×2,
         // slice ×2 over the split), and CollapseProject would inline
@@ -225,7 +222,6 @@ object Bpe {
           .orderBy(col("cnt").desc, col("l"), col("r"))
           .limit(1)
           .collect()
-        onRound(out.length + 1, (System.nanoTime() - tRound) / 1e9)
         if (top.isEmpty) exhausted = true
         else {
           val row = top(0)
@@ -291,8 +287,7 @@ object Bpe {
     * sequences are identical by induction: same tokenization → same
     * pair counts → same argmax → same greedy application.
     */
-  private[ext] def learnMergesDriver(vocab: Array[(String, Long)], k: Int,
-      onRound: (Int, Double) => Unit = (_, _) => ()): Seq[Merge] = {
+  private[ext] def learnMergesDriver(vocab: Array[(String, Long)], k: Int): Seq[Merge] = {
     val words = vocab.map { case (s, _) =>
       val t = s.trim
       if (t.isEmpty) Array.empty[String] else t.split(" ")
@@ -318,7 +313,6 @@ object Bpe {
     while (i < words.length) { reindex(i, 1L); i += 1 }
     val out = scala.collection.mutable.ArrayBuffer.empty[Merge]
     while (out.length < k && !counts.isEmpty) {
-      val tRound = System.nanoTime()
       var bestP: (String, String) = null
       var bestC = Long.MinValue
       val it = counts.entrySet().iterator()
@@ -344,7 +338,6 @@ object Bpe {
         }
       }
       out += Merge(out.length + 1, bestP._1, bestP._2, bestC)
-      onRound(out.length, (System.nanoTime() - tRound) / 1e9)
     }
     out.toSeq
   }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** End-to-end assembly of the training-data preprocessing DAG — the
-  * corpus-side twin of [[graft.Pipeline]] (which assembles the event
-  * side). Chains the extension operators in the order a pretraining
+  * corpus-side twin of [[graft.tools.Service]] (which assembles the
+  * event side). Chains the extension operators in the order a pretraining
   * pipeline runs them, with per-stage accounting:
   *
   *   1. quality gates: Gopher rules ∧ per-language percentile gate —

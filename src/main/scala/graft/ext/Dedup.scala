@@ -581,32 +581,6 @@ object Dedup {
         (col("e") - col("s")).cast("long").as("span_words"))
   }
 
-  /** Structural counter for the growth gate (VERDICT r12 #6): the
-    * number of duplicated-gram occurrences entering [[substringSpans]]'
-    * per-doc island window — the quantity that must stay LINEAR in
-    * corpus rows. The r12 verdict saw the TIME ratio drift 3.97→5.13×
-    * while this count grew 10.3× at 10× rows (linear); gating the count
-    * itself makes a structural regression (an accidental all-pairs
-    * gram stage) trip on counts, immune to wall-clock noise.
-    */
-  def substringSpanWindowRows(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 8, minCount: Int = 2): Long = {
-    // same fenced shared-exchange + pre-explode spread shape as
-    // [[substringSpans]]
-    val grams = graft.plans.Fence.wrap(
-      graft.util.Scans.spread(df, col(idCol))
-        .select(col(idCol), split(col(textCol), " ").as("w"))
-        .filter(size(col("w")) >= n)
-        .select(col(idCol), posexplode(expr(
-          s"transform(sequence(0, size(w) - $n)," +
-            s" i -> concat_ws(' ', slice(w, i + 1, $n)))")).as(Seq("pos", "gram")))
-        .select(col(idCol), col("pos"), h60(col("gram")).as("h"))
-        .repartition(col("h")))
-    val dup = grams.groupBy(col("h")).agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= minCount).select(col("h"))
-    grams.join(dup, Seq("h")).count()
-  }
-
   /** Span EXCISION — the deliverable of Lee et al. 2021's ExactSubstr
     * operator: cut every duplicated span [[substringSpans]] finds out of
     * its document and reassemble the surviving text. Returns one row per
@@ -647,7 +621,8 @@ object Dedup {
     * 60-BIT shingle hash ([[h60]]) — 32 bits is measurably wrong at
     * scale: the false-flag floor is benchShingles/2^32 per corpus
     * shingle, and a 200k-doc bench (12M distinct shingles) already
-    * false-flags ~17 % of a clean corpus (ScaleSmoke-measured); at
+    * false-flags ~17 % of a clean 10M-doc synthetic corpus (PERF.md,
+    * "Decontamination"); at
     * 2^60 the same bench's floor is ~1e-10. Benchmarks are normally
     * tiny (eval sets), so the distinct-shingle set broadcasts and the
     * corpus makes ONE pass with a hash probe; no pairwise document

@@ -48,12 +48,10 @@ import org.apache.spark.sql.SparkSession
 object IndexStore {
 
   /** Bumped whenever a persisted index LAYOUT changes incompatibly
-    * (e.g. SQ8 codes array<long> → binary in round 16): consumers that
-    * cache committed indexes across process lifetimes (the bench's
-    * census cache) key their roots on it, so a layout change never
-    * serves stale-schema tables to new probe code. IndexStore itself
-    * fingerprints only SOURCES — within one layout epoch that is the
-    * correct, sufficient key.
+    * (e.g. SQ8 codes array<long> → binary in round 16): it is part of
+    * every [[fingerprint]], so a layout change never serves
+    * stale-schema tables to new probe code. Within one layout epoch the
+    * fingerprint covers only SOURCES — the correct, sufficient key.
     */
   val LayoutEpoch = 2
 

@@ -27,10 +27,9 @@ object Multimodal {
     * and [[JpegCodec]] JPEG encodes of deterministic rasters) plus 20
     * known-undecodable blobs — pushed through [[decodeFeatures]].
     * Returns (decoded, total); the contract is exactly (200, 220).
-    * Bench publishes the share every run (`mm_decoded_share`) and a
-    * spec pins the exact counts, so a codec regression that silently
-    * flips real decodes to digest stand-ins moves a tracked number and
-    * fails a gate instead of hiding behind the honest-fallback flag.
+    * ExtOpsSpec pins the exact counts, so a codec regression that
+    * silently flips real decodes to digest stand-ins fails a test
+    * instead of hiding behind the honest-fallback flag.
     */
   def decodeCensus(spark: org.apache.spark.sql.SparkSession): (Long, Long) = {
     import spark.implicits._

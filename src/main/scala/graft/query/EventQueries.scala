@@ -252,7 +252,7 @@ object EventQueries {
     * row_number window — partial aggregation collapses every hot key
     * map-side before the shuffle, so a did receiving 30% of all events
     * costs one extra struct-compare per input row instead of one task
-    * sorting 30% of the corpus (measured in ScaleSmoke's skew section;
+    * sorting 30% of the corpus (measured at 20M rows, PERF.md round 2;
     * a key-partitioned window is the one shape AQE skew handling cannot
     * split). Tie order (time_us, event_id) lexicographic = the window's
     * desc/desc rn=1.

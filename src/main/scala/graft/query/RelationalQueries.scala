@@ -167,15 +167,14 @@ object RelationalQueries {
     * bare bucketed scans — ZERO Exchange anywhere (the follow-up
     * per-customer aggregate reuses the same partitioning). The `merge`
     * hint pins SMJ (a broadcast would hide the co-location property
-    * this query exists to exercise); LayoutSpec + PlanAudit assert the
+    * this query exists to exercise); LayoutSpec asserts the
     * exchange-free plan. At 100 TB this is the recurring-join posture:
     * the shuffle is paid once at layout time, not per query.
     */
   /** Bucketed layouts already built by this JVM, keyed by source dir —
     * the layout is the amortized once-per-table cost ("shuffle paid at
-    * layout time"), so repeat invocations (and the bench's timed pass
-    * after its warmup) measure the JOIN, not a table rewrite. A new
-    * dir (different SF) still rebuilds.
+    * layout time"), so repeat invocations measure the JOIN, not a
+    * table rewrite. A new dir (different SF) still rebuilds.
     */
   private val bucketedBuilt = scala.collection.mutable.Set.empty[String]
 
