@@ -23,7 +23,9 @@ import graft.tools.Service
   * Usage: `runMain graft.Soak [minutes] [eventsPerSec]
   * [ingestTriggerMs] [multi] [manifest] [batch]` — defaults 10 minutes
   * at 10k ev/s with a 1 s ingest trigger; the trailing words switch on
-  * two serving edges, manifest commits and 64-event frames.
+  * two serving edges, manifest commits and 64-event frames. Fewer than
+  * [[MinMinutes]] minutes (or a malformed number) prints the usage line
+  * and exits 2 before any Spark session starts.
   *
   * What a PASS asserts:
   *   - sustained ingest at the target rate (≥ 95% of generated events
@@ -263,14 +265,49 @@ object Soak {
     if (sorted.isEmpty) 0L
     else sorted(math.min(sorted.length - 1, (q * sorted.length).toInt))
 
+  /** The soak's schedule: maintenance (retention + compaction) first
+    * fires at +MaintenanceMs, the late subscriber joins and the
+    * retention check starts after +LateJoinS, and the loop looks every
+    * TickMs.
+    */
+  private val MaintenanceMs = 120000L
+  private val LateJoinS = 150L
+  private val TickMs = 15000L
+
+  /** The shortest soak whose checks all run: one tick past the late
+    * join. A shorter one always ends FAIL, whatever the code does.
+    */
+  val MinMinutes: Int = math.ceil((LateJoinS * 1000 + TickMs) / 60000.0).toInt
+
+  private[graft] final case class Settings(minutes: Int, ratePerSec: Int,
+      ingestTriggerMs: Long, multiEdge: Boolean, manifestMode: Boolean, frameBatch: Int)
+
+  private[graft] val Usage = s"usage: Soak [minutes >= $MinMinutes] [eventsPerSec] " +
+    "[ingestTriggerMs] [multi] [manifest] [batch]"
+
+  /** The command line, or the usage line when it cannot run a soak. */
+  private[graft] def parseArgs(args: Array[String]): Either[String, Settings] =
+    scala.util.Try {
+      val words = args.drop(3)
+      Settings(
+        minutes = args.lift(0).map(_.toInt).getOrElse(10),
+        ratePerSec = args.lift(1).map(_.toInt).getOrElse(10000),
+        ingestTriggerMs = args.lift(2).map(_.toLong).getOrElse(1000L),
+        multiEdge = words.contains("multi"),
+        manifestMode = words.contains("manifest"),
+        frameBatch = if (words.contains("batch")) 64 else 1)
+    }.toOption.filter(_.minutes >= MinMinutes).toRight(Usage)
+
   def main(args: Array[String]): Unit = {
+    val settings = parseArgs(args).fold(
+      usage => { System.err.println(usage); sys.exit(2) }, identity)
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // FAIR scheduling keeps the replay pump's pool from starving
+      // FAIR scheduling keeps the replay scans' pool from starving
       // behind live micro-batch jobs
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.ui.enabled", "false")
@@ -278,14 +315,8 @@ object Soak {
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ graft.plans.HourBounds
     spark.sparkContext.setLogLevel("WARN")
-    val words = args.drop(3)
-    try run(spark,
-      minutes = args.lift(0).map(_.toInt).getOrElse(10),
-      ratePerSec = args.lift(1).map(_.toInt).getOrElse(10000),
-      ingestTriggerMs = args.lift(2).map(_.toLong).getOrElse(1000L),
-      multiEdge = words.contains("multi"),
-      manifestMode = words.contains("manifest"),
-      frameBatch = if (words.contains("batch")) 64 else 1)
+    try run(spark, settings.minutes, settings.ratePerSec, settings.ingestTriggerMs,
+      settings.multiEdge, settings.manifestMode, settings.frameBatch)
     finally spark.stop()
   }
 
@@ -413,7 +444,7 @@ object Soak {
         dataDir = dataDir,
         eventTtlHours = 2.0,
         maxSubRate = 1e9, // the soak measures the pipeline, not the cap
-        maintenanceIntervalMs = 120000L, // retention+compaction at +2m, +4m, …
+        maintenanceIntervalMs = MaintenanceMs, // retention+compaction at +2m, +4m, …
         staleAfterMs = 15000L,
         compactionGraceMs = 0L,
         ingestTriggerMs = ingestTriggerMs,
@@ -471,7 +502,7 @@ object Soak {
     val subA = new Subscriber(s"ws://localhost:${running.servePort}/subscribe?cursor=0$fbArg")
 
     // MULTI-EDGE posture (VERDICT r11 #6): a second independent serve
-    // edge over the SAME table — own emit thread, own registry — killed
+    // edge over the SAME table — own writer pool, own registry — killed
     // mid-soak and later restarted. The survivor edge's subscriber
     // (subA) must be bit-for-bit undisturbed; the restarted edge's late
     // subscriber must replay the surviving history exactly-once and
@@ -513,7 +544,7 @@ object Soak {
     var ticksAtAppend = Int.MaxValue
     var indexVerified = false
     while (System.currentTimeMillis() - t0 < durMs) {
-      Thread.sleep(15000)
+      Thread.sleep(TickMs)
       sampleHealth()
       val elapsed = (System.currentTimeMillis() - t0) / 1000
       val h = health.last
@@ -529,7 +560,7 @@ object Soak {
       // that bar grow with soak length for no extra signal (the
       // measured fair-pool replay rate is ~28k ev/s against a 12k
       // live stream; a 240 s join at 8 min needs ~24k)
-      if (subB == null && elapsed >= math.max(150, math.min(240, durMs / 1000 * 6 / 10))) {
+      if (subB == null && elapsed >= math.max(LateJoinS, math.min(240, durMs / 1000 * 6 / 10))) {
         subB = new Subscriber(s"ws://localhost:${running.servePort}/subscribe?cursor=0$fbArg")
         subBJoinedAt = elapsed
       }
@@ -562,7 +593,7 @@ object Soak {
         subDJoinSeq = seedCount + fire.generated // events after this are subD's live tail
         println(s"[soak] edge3 (restarted edge) up at +${elapsed}s, late subscriber attached")
       }
-      if (!maintenanceSeen && elapsed > 150) {
+      if (!maintenanceSeen && elapsed > LateJoinS) {
         // retention should have dropped hour H-3 by now
         val hours = Option(new java.io.File(tablePath).list()).getOrElse(Array.empty)
           .filter(_.startsWith(s"${EventsTable.PartitionCol}=")).sorted
@@ -685,7 +716,7 @@ object Soak {
     // stalled behind a concurrent compaction or GC pause and truncate
     // the tail spuriously
     // quiet window must OUTLAST the cutover barrier-abandon budget
-    // (~30 s at the pump's 40 Hz): a subscriber barrier-held on a
+    // (~30 s at the replay tick's 40 Hz): a subscriber barrier-held on a
     // retention-removed head looks frozen for up to that long before it
     // delivers its surviving gap and cuts over — 3×3 s of quiet aliased
     // exactly that in a round-12 run and truncated the verdict counts
@@ -921,7 +952,7 @@ object Soak {
     }
 
     // latency: live window only (seed replay latency measures the
-    // replay pump, not the pipeline; reported separately)
+    // replay, not the pipeline; reported separately)
     val liveLats = nsA.indices.collect { case i if nsA(i) >= seedCount => latA(i) }.toArray.sorted
     val replayLats = nsA.indices.collect { case i if nsA(i) < seedCount => latA(i) }.toArray.sorted
     def ms(us: Long) = us / 1000.0

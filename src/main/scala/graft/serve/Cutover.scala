@@ -89,8 +89,8 @@ final class CutoverSession(
   // event becomes PERMANENTLY invisible (retention/compaction removed
   // the head hour), the barrier can never be satisfied. Bound the
   // silence: warn at BarrierWarnHolds and every multiple after, and at
-  // `barrierRecoverHolds` consecutive holds (≈30 s at the pump's 40 Hz
-  // tick — far beyond any append-commit latency) ABANDON the barrier:
+  // `barrierRecoverHolds` consecutive holds (≈30 s at the edge's 40 Hz
+  // replay tick — far beyond any append-commit latency) ABANDON the barrier:
   // treat the observed head as permanently invisible, deliver the
   // surviving gap window and cut over, instead of replaying forever
   // against a head that can never be seen again.
@@ -106,7 +106,7 @@ final class CutoverSession(
   // auditable after the fact.
   private[this] var barrierHolds = 0
   private[this] var barrierHoldKey = (Long.MinValue, Long.MinValue)
-  private val BarrierWarnHolds = 200 // ≈5 s at the pump's 40 Hz tick
+  private val BarrierWarnHolds = 200 // ≈5 s at the edge's 40 Hz replay tick
 
   /** Diagnostic breadcrumb trail of session-state transitions (hwm
     * advances with their source, cutover decisions) — bounded, cheap,
@@ -392,25 +392,23 @@ final class CutoverSession(
     * whose write then failed.
     */
   def liveEmitFrames(frames: Array[Subscribe.WireFrame]): (Array[String], Long) = {
-    if (replaying) return (Array.empty, Long.MinValue) // replay-lag gate (server.go:100-103)
+    val admitted = liveFrames(frames)
+    (admitted.map(_.wire), admitted.lastOption.fold(Long.MinValue)(_.timeUs))
+  }
+
+  /** [[liveEmitFrames]]'s admitted frames themselves, each keeping its
+    * `time_us`, so a writer that puts only a prefix on the wire can
+    * confirm exactly that prefix.
+    */
+  private[serve] def liveFrames(frames: Array[Subscribe.WireFrame]): Array[Subscribe.WireFrame] = {
+    if (replaying) return Array.empty // replay-lag gate (server.go:100-103)
     val hwm = seqVar
-    val out = Array.newBuilder[String]
-    var last = Long.MinValue
-    var i = 0
-    while (i < frames.length) {
-      val f = frames(i)
-      // a missing collection passes any wanted-set (server.go:119's
-      // `collection != ""` guard — identity/account events flow to all)
-      if (f.timeUs > hwm &&
-          (collSet.isEmpty || f.collection == null || f.collection.isEmpty ||
-            collSet(f.collection)) &&
-          (didSet.isEmpty || (f.did != null && didSet(f.did)))) {
-        out += f.wire
-        last = f.timeUs
-      }
-      i += 1
-    }
-    (out.result(), last)
+    // a missing collection passes any wanted-set (server.go:119's
+    // `collection != ""` guard — identity/account events flow to all)
+    frames.filter(f => f.timeUs > hwm &&
+      (collSet.isEmpty || f.collection == null || f.collection.isEmpty ||
+        collSet(f.collection)) &&
+      (didSet.isEmpty || (f.did != null && didSet(f.did))))
   }
 
   /** Confirm a successful wire write of [[liveEmitFrames]] output up to

@@ -1,11 +1,10 @@
 package graft.serve
 
-/** S20 — per-subscriber replay pacing: a token bucket at the
-  * reference's playback operating point (server.go:307
-  * `playbackRateLimit = maxSubRate * 10`, enforced inside the playback
-  * iterator at pkg/consumer/persist.go:147-149). The reference's live
-  * limiter (server.go:211) has no twin here: live delivery is not
-  * capped per subscriber.
+/** S20 — per-subscriber rate limits: a token bucket at the
+  * reference's live cap (`maxSubRate`, server.go:211,345) and at its
+  * playback operating point (server.go:307 `playbackRateLimit =
+  * maxSubRate * 10`, enforced inside the playback iterator at
+  * pkg/consumer/persist.go:147-149).
   *
   * Driver-side state by design: pacing is per-subscriber control flow,
   * not a data transform — the Spark work stays distributed, only the
@@ -59,6 +58,10 @@ object TokenBucket {
     */
   val DefaultLiveRate = 5000.0
   val PlaybackMultiplier = 10.0
+
+  /** The live cap: `rate` frames/s with a burst of one second of it. */
+  def live(rate: Double, nowUs: () => Long = () => System.nanoTime() / 1000L): TokenBucket =
+    new TokenBucket(rate, math.max(1L, rate.toLong), nowUs)
 
   def playback(nowUs: () => Long = () => System.nanoTime() / 1000L,
       liveRate: Double = DefaultLiveRate): TokenBucket = {

@@ -1,9 +1,6 @@
 package graft.serve
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.store.EventsTable
 
 /** Replay→live cutover (reference: cmd/jetstream/server.go:305-337 +
   * the replay-lag gate at :60,100-103 — SURVEY §3.3, §7.4.2).
@@ -14,11 +11,10 @@ import graft.store.EventsTable
   * and let the live tail take over; the per-subscriber high-water mark
   * dedups the overlap window.
   *
-  * Spark translation (kappa backfill): a batch query over the events
-  * table up to a boundary, then the streaming tail starting from that
-  * boundary, `union`-ed with hwm-dedup semantics. `replayUnionLive`
-  * is the batch twin used by the correctness harness; IngestJob +
-  * LiveTail provide the streaming half.
+  * Spark translation: a per-subscriber [[CutoverSession]] replays
+  * bounded chunks of the events table ([[replayChunk]]) until
+  * [[caughtUp]] with the live head, then takes live frames from the
+  * append commits, the hwm deduping the overlap.
   */
 object Replay {
 
@@ -62,21 +58,5 @@ object Replay {
     val row = chunk.agg(org.apache.spark.sql.functions.max(
       org.apache.spark.sql.functions.col("time_us"))).head()
     if (row.isNullAt(0)) cursorUs else row.getLong(0) + 1
-  }
-
-  /** Batch twin of the full replay∪live subscription: cursor range scan
-    * unioned with the live slice, deduped by event identity via the hwm
-    * rule — every event delivered exactly once, in time_us order.
-    */
-  def replayUnionLive(
-      spark: SparkSession,
-      path: String,
-      cursorUs: Long,
-      liveFromUs: Long): DataFrame = {
-    val replay = EventsTable.read(spark, path).filter(col("time_us") >= cursorUs)
-    val live = EventsTable.read(spark, path).filter(col("time_us") > liveFromUs)
-    replay.union(live)
-      .dropDuplicates("time_us") // hwm semantics: same event seen twice → once
-      .orderBy(col("time_us"))
   }
 }

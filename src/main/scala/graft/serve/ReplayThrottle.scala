@@ -1,7 +1,7 @@
 package graft.serve
 
 /** Adaptive replay share (VERDICT r16 #2) — the saturation governor
-  * between the replay pump and live delivery.
+  * between replay steps and live delivery.
   *
   * The FAIR scheduler pool (see [[CutoverSession.replayStep]]) gives
   * replay chunk scans a FIXED share of task slots. That share is what

@@ -1,6 +1,9 @@
 package graft.serve
 
 import java.net.{ServerSocket, Socket}
+import java.util.concurrent.TimeUnit.MILLISECONDS
+
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,74 +29,73 @@ import graft.util.DriverBudget
   * emit loop in the same process (`Server.Emit`, server.go:62-116); here
   * every append to the events table, once its batch is visible, calls
   * the table's commit listeners ([[EventsTable.onCommit]]) in this JVM.
-  * Each edge's listener wires the committed files and hands the
-  * time-sorted frames to the edge's emit thread, which snapshots the
-  * CURRENT subscriber registry — new
-  * connections join at the next pass, the reference's dynamic attach —
-  * and every subscriber runs its [[CutoverSession]] lifecycle (cursor
-  * replay chunks, gap-fill, live emit with the replay-lag gate) on the
-  * bounded fan-out pool. The appender only enqueues: a stalled
-  * subscriber holds its edge's emit thread, never the ingest. A write
-  * failure (disconnect, dead pipe, or a write stalled past
-  * `writeTimeoutMs`) drops the subscriber exactly like the reference's
-  * slow-consumer close (server.go:168-175). The table is read only for
-  * cursor replay, as the reference reads its log (persist.go:143-204).
+  * Each edge's listener wires the committed files once, runs every
+  * live session's predicate + hwm over the time-sorted frames
+  * ([[CutoverSession.liveEmitFrames]]) and appends what it admits to
+  * that connection's outbox — the reference's per-subscriber buffer
+  * (server.go:154-175,204). Each connection has ONE writer: a task on
+  * the edge's fixed pool, at most one per connection at a time, and the
+  * only code that writes its socket. A live writer drains its outbox at
+  * the live cap (`maxSubRate`, server.go:211,345); a replaying one runs
+  * the session's replay steps (cursor replay chunks, gap-fill cutover),
+  * scheduled by the edge's replay tick — the reference's replay
+  * goroutine (server.go:305-337). The appender only enqueues, and one
+  * subscriber's stalled socket holds only its own writer: an enqueue
+  * that would pass [[OutboxFrames]] drops that connection, and so does a
+  * dead pipe — the reference's slow-consumer close
+  * (server.go:168-175). The table is read only for cursor replay, as
+  * the reference reads its log (persist.go:143-204).
   *
   * Scale posture: the LIVE path costs ONE Spark job per commit and edge
   * at any subscriber count — the committed files are wire-serialized
   * distributed, collected once with their routing columns, and fanned
-  * out by the in-process emit loop ([[CutoverSession.liveEmitFrames]]),
-  * the same shape as the reference's single-marshal + per-subscriber-
-  * predicate loop (server.go:73,87-134). REPLAY views stay distributed
-  * — pruned, chunk-bounded table scans per session. The driver is the
-  * egress edge, exactly as the reference's process is: its ceiling is
-  * wire-bytes × subscribers through one process's sockets. Live
-  * delivery reaches only edges in the appender's JVM (see [[start]]).
+  * out in process, the same shape as the reference's single-marshal +
+  * per-subscriber-predicate loop (server.go:73,87-134). REPLAY views
+  * stay distributed — pruned, chunk-bounded table scans per session.
+  * The driver is the egress edge, exactly as the reference's process
+  * is: its ceiling is wire-bytes × subscribers through one process's
+  * sockets. Live delivery reaches only edges in the appender's JVM (see
+  * [[start]]).
   */
 object SocketServe extends org.apache.spark.internal.Logging {
 
   /** Reference fan-out concurrency (server.go:89 `sem := make(chan
-    * struct{}, 100)`).
+    * struct{}, 100)`): the width of an edge's writer pool.
     */
   val DefaultFanOutWidth = 100
 
-  /** Run `f` over `items` on a bounded pool, rethrowing the first
-    * failure. Pool width is the reference's fan-out semaphore.
+  /** Frames a connection's outbox may hold: the reference's
+    * per-subscriber buffer (server.go:204). An enqueue that would pass
+    * it drops the connection.
     */
-  private def onPool[A](items: Seq[A], width: Int)(f: A => Unit): Unit = {
-    if (items.isEmpty) return
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(width, items.size))
-    try {
-      val futures = items.map { i =>
-        pool.submit(new Runnable { def run(): Unit = f(i) })
-      }
-      futures.foreach { fut =>
-        try fut.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }
-    } finally pool.shutdown()
-  }
+  val OutboxFrames = 10000
 
-  /** Throttled warning: at most one log line per (context, exception
-    * class) per interval. The serve loops run at 40 Hz / per-batch —
-    * a persistent failure (schema drift, corrupted table) must surface
-    * in the log without flooding it, and a transient one (file listing
-    * racing a concurrent append/compaction) must not spam at all.
+  /** The replay tick, and how long a live writer short of tokens waits
+    * before it writes again.
     */
-  private val lastWarnMs =
+  private val TickMs = 25L
+
+  /** Throttled warning: at most one log line per (call site, exception
+    * class) per interval; `detail` (which connection, which table) goes
+    * into the message, never into the key. The serve loops run at
+    * 40 Hz / per commit — a persistent failure (schema drift, corrupted
+    * table) must surface in the log without flooding it, and a
+    * transient one (file listing racing a concurrent append/compaction)
+    * must not spam at all.
+    */
+  private[serve] val lastWarnMs =
     scala.collection.concurrent.TrieMap.empty[String, Long]
-  private def warnThrottled(context: String, e: Throwable,
+  private[serve] def warnThrottled(site: String, detail: String, e: Throwable,
       intervalMs: Long = 5000L): Unit = {
-    val key = context + ":" + e.getClass.getName
+    val key = site + ":" + e.getClass.getName
     val now = System.currentTimeMillis()
     val prev = lastWarnMs.getOrElse(key, 0L)
     if (now - prev >= intervalMs && lastWarnMs.replace(key, prev, now) ||
         lastWarnMs.putIfAbsent(key, now).isEmpty)
-      // the full throwable, not just class+message: the non-IO emit path
-      // classifies its catch as "a bug, not a broken pipe" — the stack
-      // trace IS the diagnostic there (one per throttle window)
-      logWarning(s"$context: ${e.getClass.getName}: ${e.getMessage} " +
+      // the full throwable, not just class+message: the non-IO write
+      // path classifies its catch as "a bug, not a broken pipe" — the
+      // stack trace IS the diagnostic there (one per throttle window)
+      logWarning(s"$site$detail: ${e.getClass.getName}: ${e.getMessage} " +
         "(retrying; this warning is throttled)", e)
   }
 
@@ -111,8 +113,8 @@ object SocketServe extends org.apache.spark.internal.Logging {
   }
 
   /** Writes one batch of wire frames; returns bytes put on the wire.
-    * MUST throw [[java.io.IOException]] on a dead or stalled pipe —
-    * that is the drop signal (server.go:168-175).
+    * MUST throw [[java.io.IOException]] on a dead pipe — that is the
+    * drop signal (server.go:168-175).
     *
     * Failure contract: a NON-IO throw means NO frame of this batch
     * reached the wire — the serving loop then re-arms the session into
@@ -127,14 +129,81 @@ object SocketServe extends org.apache.spark.internal.Logging {
     def writeFrames(frames: Array[String]): Long
   }
 
-  private final case class Conn(
-      name: String,
-      session: CutoverSession,
-      writer: WireWriter,
-      socket: Socket,
-      remote: String,
-      delivered: Metrics.Series,
-      bytesDelivered: Metrics.Series)
+  private final class Conn(
+      val name: String,
+      val session: CutoverSession,
+      val writer: WireWriter,
+      val socket: Socket,
+      val remote: String,
+      val liveCap: Option[TokenBucket],
+      val delivered: Metrics.Series,
+      val bytesDelivered: Metrics.Series) {
+    /** Admitted live frames not yet on the wire, in time order. Its
+      * lock guards all of this connection's delivery state.
+      */
+    val outbox = new java.util.ArrayDeque[Subscribe.WireFrame]
+    /** Commits that reached the session while it replayed, live-emitted
+      * once it cuts over (the gap-fill and the hwm dedup their overlap);
+      * the oldest go past OutboxFrames, noted in `missedUs`.
+      */
+    private[this] val held = new java.util.ArrayDeque[Array[Subscribe.WireFrame]]
+    private[this] var heldFrames = 0
+    /** The newest `time_us` of a commit the session neither holds nor
+      * emitted (Long.MaxValue: one whose frames never reached the edge).
+      */
+    private[this] var missedUs = Long.MinValue
+    /** Set while this connection's writer task is queued or running. */
+    val scheduled = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+    /** Live emit of one commit: the session's predicate + hwm over its
+      * frames (server.go:87-134) into the outbox, or held while the
+      * session replays. Returns the frames enqueued; -1 when the enqueue
+      * would pass OutboxFrames (an empty outbox — a writer that kept up
+      * — takes a whole commit).
+      */
+    def offer(frames: Array[Subscribe.WireFrame]): Int = outbox.synchronized {
+      if (session.replaying || !held.isEmpty) {
+        held.add(frames)
+        heldFrames += frames.length
+        while (heldFrames > OutboxFrames && held.size > 1) {
+          val old = held.poll()
+          heldFrames -= old.length
+          missedUs = math.max(missedUs, old.last.timeUs)
+        }
+        0
+      } else {
+        val live = session.liveFrames(frames)
+        if (!outbox.isEmpty && outbox.size + live.length > OutboxFrames) -1
+        else { live.foreach(outbox.add); live.length }
+      }
+    }
+
+    /** A commit whose frames never reached this session. */
+    def missed(upToUs: Long): Unit = outbox.synchronized {
+      if (session.replaying) missedUs = math.max(missedUs, upToUs) else rearm()
+    }
+
+    /** Back into replay at the hwm: whatever is not on the wire yet is
+      * re-read from the table, hwm-deduped.
+      */
+    def rearm(): Unit = outbox.synchronized {
+      outbox.clear(); held.clear(); heldFrames = 0; missedUs = Long.MinValue
+      session.rearmReplay()
+    }
+
+    /** The session cut over at `headUs`: its held commits go to the
+      * outbox — unless one it missed lies past the head, in neither the
+      * gap-fill nor the held commits; then it replays again.
+      */
+    def cutOver(headUs: Long): Unit = outbox.synchronized {
+      if (session.replaying) () // re-armed meanwhile: its next cutover releases them
+      else if (missedUs > headUs) rearm()
+      else {
+        held.forEach(c => session.liveFrames(c).foreach(outbox.add))
+        held.clear(); heldFrames = 0; missedUs = Long.MinValue
+      }
+    }
+  }
 
   /** Parse the request's query parameters. REPEATED occurrences
     * accumulate — `wantedCollections=a&wantedCollections=b` is the
@@ -154,45 +223,6 @@ object SocketServe extends org.apache.spark.internal.Logging {
     val cursor = vals("cursor").headOption.map(_.toLong)
       .getOrElse(nowUs) // no cursor = future cursor = live-only
     (Subscribe.SubscriberSpec(csv("wantedCollections"), csv("wantedDids")), cursor)
-  }
-
-  /** One edge's commit feed: the frames of the commits its emit thread
-    * has not taken yet, in commit order. Their wire bytes are bounded by
-    * the driver budget ([[graft.util.DriverBudget]]): a commit that
-    * would cross it drops everything queued and marks the feed `lost`,
-    * as does a commit whose wiring failed. A lost feed re-arms every
-    * live session into replay, which re-reads the window from the
-    * table, hwm-deduped — exactly-once, at table-read speed.
-    */
-  private final class Feed {
-    private[this] val pending = scala.collection.mutable.ArrayBuffer.empty[Array[Subscribe.WireFrame]]
-    private[this] var bytes = 0L
-    private[this] var lost = false
-
-    def offer(frames: Array[Subscribe.WireFrame], budget: Long): Unit = {
-      // driver heap of a queued frame: its object and routing strings
-      // plus the wire JSON's UTF-16 chars (at most)
-      val b = frames.iterator.map(f => DriverBudget.fixedRowBytes(3) + 2L * f.wire.length).sum
-      synchronized {
-        if (bytes + b > budget) markLost()
-        else { pending += frames; bytes += b; notifyAll() }
-      }
-    }
-
-    def markLost(): Unit = synchronized {
-      pending.clear(); bytes = 0L; lost = true; notifyAll()
-    }
-
-    /** Blocks for the next commit, then takes every queued one:
-      * their frames concatenated in commit order, and whether a commit
-      * among them (or dropped before them) never reached this feed.
-      */
-    def take(): (Array[Subscribe.WireFrame], Boolean) = synchronized {
-      while (pending.isEmpty && !lost) wait()
-      val out = (pending.flatten.toArray, lost)
-      pending.clear(); bytes = 0L; lost = false
-      out
-    }
   }
 
   /** Fault-injection seam for specs: runs with the table key before a
@@ -225,16 +255,14 @@ object SocketServe extends org.apache.spark.internal.Logging {
   }
 
   /** A running server: `close()` stops accepting, detaches from the
-    * commit feed, stops the emit thread and disconnects subscribers.
+    * commit feed, disconnects subscribers and returns once every thread
+    * of this edge has ended.
     */
   final class Server private[SocketServe] (
       val port: Int,
-      serverSocket: ServerSocket,
       appender: java.util.concurrent.atomic.AtomicReference[StreamingQuery],
       conns: scala.collection.concurrent.TrieMap[String, Conn],
-      drop: Conn => Unit,
-      closing: java.util.concurrent.atomic.AtomicBoolean,
-      onClose: () => Unit) {
+      shutdown: () => Unit) {
     /** The streaming query whose commits this edge delivers (the
       * ingest, in the composed service); null until its first commit.
       */
@@ -252,12 +280,7 @@ object SocketServe extends org.apache.spark.internal.Logging {
       conns.values.toSeq.sortBy(_.name)
         .map(c => c.name -> c.session.trace.asScala.toSeq).toMap
     }
-    def close(): Unit = {
-      closing.set(true) // before the sweep: in-flight handshakes self-drop
-      onClose()
-      serverSocket.close()
-      conns.values.foreach(drop) // closes sockets + settles the gauge
-    }
+    def close(): Unit = shutdown()
   }
 
   /** Serve the events table at `tablePath` on an ephemeral port. Live
@@ -265,13 +288,15 @@ object SocketServe extends org.apache.spark.internal.Logging {
     * must run in the process that appends (the composed
     * [[graft.tools.Service]] does). An edge in any other process
     * replays the table and cuts over, then receives nothing live.
+    * `maxSubRate` caps each subscriber's live delivery (burst: one
+    * second of it) and paces its replay at 10× (server.go:211,307).
+    * Every thread of the edge is named `socket-serve-<port>-…`.
     */
   def start(
       spark: SparkSession,
       tablePath: String,
       fanOutWidth: Int = DefaultFanOutWidth,
       nowUs: () => Long = () => System.currentTimeMillis() * 1000L,
-      writeTimeoutMs: Long = 30000L,
       metrics: Metrics.Registry = Metrics.default,
       transport: Transport = WebSocketServe.WsTransport,
       maxSubRate: Option[Double] = None,
@@ -279,6 +304,7 @@ object SocketServe extends org.apache.spark.internal.Logging {
       replayChunkSize: Int = 10000,
       replayThrottle: Option[ReplayThrottle] = None): Server = {
     val serverSocket = new ServerSocket(port)
+    val tag = s"socket-serve-${serverSocket.getLocalPort}"
     val conns = scala.collection.concurrent.TrieMap.empty[String, Conn]
     val counter = new java.util.concurrent.atomic.AtomicInteger
     // set before close() sweeps conns: a handshake completing AFTER the
@@ -294,97 +320,83 @@ object SocketServe extends org.apache.spark.internal.Logging {
     def connectedGauge(remote: String) = metrics.gauge(
       "graft_subscribers_connected",
       "Subscribers currently connected", "remote" -> remote)
-    def dropConn(conn: Conn): Unit =
+    def droppedTotal(reason: String) = metrics.counter(
+      "graft_subscribers_dropped_total",
+      "Subscribers dropped: outbox overflow, or a dead pipe / write error",
+      "reason" -> reason)
+    val overflowDrops = droppedTotal("overflow")
+    val writeDrops = droppedTotal("write")
+    // `reason` None: the edge is closing, no subscriber was dropped
+    def dropConn(conn: Conn, reason: Option[Metrics.Series]): Unit =
       if (conns.remove(conn.name).isDefined) {
         conn.socket.close()
         connectedGauge(conn.remote).dec()
+        reason.foreach(_.inc())
       }
-    // slow-consumer watchdog: a subscriber that stops READING (pipe
-    // alive, kernel send buffer full) blocks the write forever —
-    // checkError only sees closed pipes. The watchdog closes the socket
-    // if a view's write exceeds the budget, which surfaces as the same
-    // dead-pipe IOException and drops the subscriber (the reference's
-    // slow-consumer close, server.go:168-175).
-    val watchdog = new java.util.concurrent.ScheduledThreadPoolExecutor(1,
-      (r: Runnable) => { val t = new Thread(r, "socket-serve-watchdog"); t.setDaemon(true); t })
-    // cancelled kill tasks leave the queue immediately — one is
-    // scheduled per view write, and at ProcessingTime(0) batch rates
-    // they would otherwise pile up for their full timeout
-    watchdog.setRemoveOnCancelPolicy(true)
+
+    // the edge's one pool: every connection's writer task and the
+    // replay tick; a writer blocked on a stalled socket holds one thread
+    val writers = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    val pool = new java.util.concurrent.ScheduledThreadPoolExecutor(fanOutWidth,
+      (r: Runnable) => {
+        val t = new Thread(r, s"$tag-writer"); t.setDaemon(true); writers.add(t); t
+      })
 
     // acceptor: one transport handshake → a registered CutoverSession;
-    // the subscriber starts receiving at the next pump tick or emit pass
+    // the subscriber's replay starts at the next tick. Handshakes in
+    // flight are tracked so close() can end them.
+    val handshakes = new java.util.concurrent.ConcurrentHashMap[Thread, Socket]
+    def handshake(sock: Socket): Unit =
+      try {
+        transport.open(sock) match {
+          case Some((request, writer)) =>
+            val (spec, cursor) = parseRequest(request, nowUs())
+            // invalid filter params REJECT the subscription — the
+            // reference's ParseNSID/ParseDID error returns
+            // (server.go:253-271); a malformed cursor already
+            // rejects via the toLong throw → outer close
+            Subscribe.validate(spec).left.foreach(msg =>
+              throw new IllegalArgumentException(msg))
+            val name = s"sub-${counter.incrementAndGet()}"
+            val remote = sock.getInetAddress.getHostAddress
+            // per-subscriber replay pacing at 10× maxSubRate
+            // (main.go:79-84 default, server.go:307)
+            val pacer = maxSubRate.map(r => TokenBucket.playback(liveRate = r))
+            val conn = new Conn(name,
+              new CutoverSession(spec, cursor, chunkSize = replayChunkSize,
+                playback = pacer),
+              writer, sock, remote, maxSubRate.map(TokenBucket.live(_)),
+              metrics.counter("graft_events_delivered_total",
+                "Total events delivered to subscribers", "remote" -> remote),
+              metrics.counter("graft_bytes_delivered_total",
+                "Total wire bytes delivered to subscribers", "remote" -> remote))
+            conns.put(name, conn)
+            connectedGauge(remote).inc()
+            if (closing.get()) dropConn(conn, None) // lost the race with close()
+          case None => sock.close()
+        }
+      } catch { case _: Throwable => sock.close() }
     val acceptor = new Thread(() => {
       try while (true) {
         val sock = serverSocket.accept()
-        new Thread(() => {
-          try {
-            transport.open(sock) match {
-              case Some((request, writer)) =>
-                val (spec, cursor) = parseRequest(request, nowUs())
-                // invalid filter params REJECT the subscription — the
-                // reference's ParseNSID/ParseDID error returns
-                // (server.go:253-271); a malformed cursor already
-                // rejects via the toLong throw → outer close
-                Subscribe.validate(spec).left.foreach(msg =>
-                  throw new IllegalArgumentException(msg))
-                val name = s"sub-${counter.incrementAndGet()}"
-                val remote = sock.getInetAddress.getHostAddress
-                // per-subscriber replay pacing at 10× maxSubRate
-                // (main.go:79-84 default, server.go:307)
-                val pacer = maxSubRate.map(r => TokenBucket.playback(liveRate = r))
-                val conn = Conn(name,
-                  new CutoverSession(spec, cursor, chunkSize = replayChunkSize,
-                    playback = pacer),
-                  writer, sock, remote,
-                  metrics.counter("graft_events_delivered_total",
-                    "Total events delivered to subscribers", "remote" -> remote),
-                  metrics.counter("graft_bytes_delivered_total",
-                    "Total wire bytes delivered to subscribers", "remote" -> remote))
-                conns.put(name, conn)
-                connectedGauge(remote).inc()
-                if (closing.get()) dropConn(conn) // lost the race with close()
-              case None => sock.close()
-            }
-          } catch { case _: Throwable => sock.close() }
-        }).start()
+        val t = new Thread(() =>
+          try handshake(sock) finally handshakes.remove(Thread.currentThread()),
+          s"$tag-handshake")
+        handshakes.put(t, sock)
+        t.start()
       } catch { case _: Throwable => () } // server closed
-    })
+    }, s"$tag-acceptor")
     acceptor.setDaemon(true)
     acceptor.start()
 
     def writeWire(conn: Conn, wires: Array[String]): Unit = {
-      // a terminated watchdog pool means close() already ran: this conn
-      // can never emit again — surface the drop signal (IOException),
-      // not a retryable bug, so shutdown races drop the conn cleanly
-      // instead of leaving it attached with its frames unwritten
-      val kill =
-        try watchdog.schedule(
-          new Runnable { def run(): Unit = conn.socket.close() },
-          writeTimeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-        catch {
-          case e: java.util.concurrent.RejectedExecutionException =>
-            throw new java.io.IOException("server closing", e)
-        }
-      val bytes =
-        try conn.writer.writeFrames(wires)
-        finally kill.cancel(false)
+      val bytes = conn.writer.writeFrames(wires)
       // past writeFrames: count only deliveries that reached the pipe
-      // (server.go:151-152 counts after a successful write). This
-      // bookkeeping must be exception-free by construction: the frames
-      // are already flushed, so a throwable escaping here would reach
-      // the live-emit rearm handler and re-deliver the window just
-      // written (ADVICE r11). Metrics failures log; they never propagate.
-      if (wires.nonEmpty) {
-        try {
-          conn.delivered.add(wires.length.toDouble)
-          conn.bytesDelivered.add(bytes.toDouble)
-        } catch {
-          // NonFatal only: an OOM/StackOverflow here must still crash
-          // the session, not vanish into a throttled warn (ADVICE r12)
-          case scala.util.control.NonFatal(e) => warnThrottled("delivery metrics", e)
-        }
-      }
+      // (server.go:151-152 counts after a successful write). Two adder
+      // increments, so nothing can throw between a flush and the hwm
+      // advance and re-arm a window already written (ADVICE r11).
+      conn.delivered.add(wires.length.toDouble)
+      conn.bytesDelivered.add(bytes.toDouble)
     }
     // replay views come off per-subscriber PRUNED table scans (the
     // distributed half of the session) and serialize + collect here —
@@ -397,11 +409,11 @@ object SocketServe extends org.apache.spark.internal.Logging {
     }
 
     // AQE-off session clone for the session replay scans and head
-    // reads: the pump and the emit pass run these small scans
-    // concurrently with the engine's own queries, and AQE's final-plan
-    // wait has a lost-wakeup race under exactly that concurrency (see
-    // ReplayTailSource's probeSession note); adaptive planning buys
-    // nothing on a pruned ≤chunkSize scan.
+    // reads: writer tasks run these small scans concurrently with the
+    // engine's own queries, and AQE's final-plan wait has a lost-wakeup
+    // race under exactly that concurrency (see ReplayTailSource's
+    // probeSession note); adaptive planning buys nothing on a pruned
+    // ≤chunkSize scan.
     val replaySession = {
       val s = spark.newSession()
       s.conf.set("spark.sql.adaptive.enabled", "false")
@@ -415,10 +427,10 @@ object SocketServe extends org.apache.spark.internal.Logging {
     // current tail — never 0, which would declare any cursor caught-up
     // and silently truncate a multi-chunk replay backlog — and goes
     // stale again whenever a commit's frames do not reach this edge.
-    // The refresh is exclusive: the pump and the emit pass step
-    // different sessions at once, and a session that read the head
-    // while another was still refreshing it would cut over at the old
-    // one and lose the commits in between.
+    // The refresh is exclusive: writers step different sessions at
+    // once, and a session that read the head while another was still
+    // refreshing it would cut over at the old one and lose the commits
+    // in between.
     val lastHeadUs = new java.util.concurrent.atomic.AtomicLong(0L)
     val headStale = new java.util.concurrent.atomic.AtomicBoolean(true)
     // The flag clears BEFORE the read, so a commit that marks the head
@@ -431,177 +443,97 @@ object SocketServe extends org.apache.spark.internal.Logging {
       lastHeadUs.get()
     }
 
-    // replay pump: the reference serves a cursored subscriber's replay
-    // from its own goroutine, INDEPENDENT of live traffic
-    // (server.go:305-337). Emit passes only run when commits arrive,
-    // so without this thread a subscriber attaching to an idle
-    // stream would wait for the next live event before its replay even
-    // starts — and starve forever on a quiet one. Per-conn work is
-    // `conn.synchronized` here and in the emit pass, so a session's
-    // replay chunks and its live emission never interleave; delivery
-    // order and exactly-once still come from the session's gate + hwm.
-    val pump = new Thread(() => {
-      try while (!closing.get()) {
-        try {
-          val replaying =
-            conns.readOnlySnapshot().values.filter(_.session.replaying).toSeq.sortBy(_.name)
-          // adaptive share (VERDICT r16 #2): when live delivery lag is
-          // over target, the throttle admits only a fraction of pump
-          // ticks — replay degrades to slow catch-up instead of
-          // saturating the box until S21 drops a compliant client
-          if (replaying.nonEmpty && replayThrottle.forall(_.stepAllowed())) {
-            onPool(replaying, fanOutWidth) { conn =>
-              try conn.synchronized {
-                // the head is read INSIDE the lock, right before the
-                // step: a pre-read value can go stale while this worker
-                // waits behind an emit pass that suppressed newer live
-                // frames for this session — a stale head then lets the
-                // cutover barrier pass and the suppressed window is lost
-                if (conn.session.replaying)
-                  conn.session.replayStep(replaySession, tablePath, liveHead())(
-                    view => writeView(conn, view))
-              } catch { case _: java.io.IOException => dropConn(conn) }
-            }
-          }
-        } catch {
-          case e: InterruptedException => throw e
-          // a transient table-read race (file listing during a
-          // concurrent append/compaction) must not kill the pump —
-          // the streaming side gets the same retry from Spark itself.
-          // But a PERSISTENT failure (schema drift, corrupted table)
-          // would otherwise spin at 40 Hz with cursored subscribers
-          // starved and zero diagnostics — surface it, throttled.
-          case e: Throwable => warnThrottled("replay pump", e)
-        }
-        Thread.sleep(25) // also bounds the paced-out (budget 0) spin
-      } catch { case _: InterruptedException => () }
-    }, "socket-serve-replay-pump")
-    pump.setDaemon(true)
-    pump.start()
-    // one emit pass over the frames of one or more commits, in commit
-    // order; `rearm` = a commit reached the table but not this pass (its
-    // wiring failed, or the feed dropped it over the driver budget)
-    def emitPass(frames: Array[Subscribe.WireFrame], rearm: Boolean): Unit = {
-      if (rearm) headStale.set(true)
-      if (frames.nonEmpty) lastHeadUs.getAndAccumulate(frames.last.timeUs, math.max)
-      val active = conns.readOnlySnapshot().values.toSeq.sortBy(_.name)
-      // the commit's frames never reached this edge: every live
-      // session replays the window from the table, hwm-deduped
-      if (rearm) active.foreach(c => c.synchronized(c.session.rearmReplay()))
-      if (active.nonEmpty) {
-        // everything below is the in-process emit loop
-        // (server.go:87-134) over the commit's once-wired frames —
-        // per-subscriber predicate + hwm over the shared frame array,
-        // zero Spark jobs
-        if (frames.nonEmpty) {
-          // live delivery lag at the serving edge: emit wall-clock −
-          // the newest event time (its time_us is the ingest
-          // sequencer's wall-clock stamp) — the signal the adaptive
-          // replay share governs on
-          replayThrottle.foreach(_.observeLive(nowUs() - frames.last.timeUs))
-          // the emit-loop counters (server.go:71,80 counts each
-          // serialized event and its bytes once, before fan-out)
-          eventsEmitted.add(frames.length.toDouble)
-          bytesEmitted.add(frames.iterator.map(f =>
-            f.wire.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong)
-            .sum.toDouble)
-        }
-        // one throttle decision per emit pass covers every
-        // replaying conn this batch would step (same admission
-        // granularity as the pump's per-tick decision). The credit
-        // draw is LAZY — a batch with no replaying conn must not
-        // consume an admission the pump was owed (ADVICE r17 #4: the
-        // unconditional draw drifted the effective replay rate below
-        // the intended share under throttling). The pump and emit
-        // pass deliberately share ONE accumulator: both step the same
-        // sessions, and the share governs the TOTAL replay tick rate,
-        // whichever site fires it.
-        val batchStepAllowed = active.exists(_.session.replaying) &&
-          replayThrottle.forall(_.stepAllowed())
-        onPool(active, fanOutWidth) { conn =>
-          try conn.synchronized { // excludes the replay pump per conn
-            // head read inside the lock — see the pump's note
-            if (conn.session.replaying && batchStepAllowed)
-              try conn.session.replayStep(replaySession, tablePath, liveHead())(
-                view => writeView(conn, view))
-              catch {
-                // write-path failure: the drop signal — rethrow to the
-                // outer handler
-                case e: java.io.IOException => throw e
-                // the same transient table-read race the pump tolerates
-                // (file listing during a concurrent append/compaction)
-                // can land here instead; a healthy subscriber must not
-                // be dropped for it. Leave the conn attached — the next
-                // tick (pump or emit pass) retries; the session stays in
-                // replay so the live gate below keeps suppressing.
-                case e: Throwable => warnThrottled("emit-pass replay", e)
-              }
-            val (wires, tailUs) = conn.session.liveEmitFrames(frames)
-            // The rearm try covers ONLY the wire write: writeWire's
-            // post-flush bookkeeping is exception-free by construction,
-            // so a non-IO escaping it means frames did NOT all reach
-            // the pipe — the one case where a rearm is lossless. The
-            // hwm advance runs OUTSIDE the try: after a successful
-            // flush a failure there must surface, never re-arm (a
-            // rearm would re-read and re-deliver the window just
-            // written — duplicates, ADVICE r11).
-            val flushed =
-              try { writeWire(conn, wires); true }
-              catch {
-                case e: java.io.IOException => throw e // → outer drop
-                case e: Throwable if wires.nonEmpty =>
-                  // non-IO with frames IN FLIGHT: keep-attached would
-                  // LOSE this window for the subscriber — a live
-                  // session never re-reads the table, the next commit
-                  // carries only newer events, and its delivered() would
-                  // advance the hwm past the gap. Re-arm the session into
-                  // replay at the current hwm instead: the skipped window
-                  // is re-read from the table, the hwm dedup skips
-                  // anything already written, and the normal gap-fill
-                  // cutover returns it to live exactly-once.
-                  conn.session.rearmReplay()
-                  warnThrottled(s"live emit for ${conn.name} (re-armed replay)", e)
-                  false
-              }
-            if (flushed)
-              conn.session.delivered(tailUs) // hwm past the SUCCESSFUL write
-          } catch {
-            case _: java.io.IOException => // slow consumer / disconnect:
-              dropConn(conn) // server.go:168-175
-            case e: Throwable =>
-              // non-IO BEFORE anything was emitted (the in-memory emit
-              // half failed) — a bug, not a broken pipe. Dropping would
-              // hide it behind a clean disconnect; keep the conn
-              // attached (its gate/hwm are untouched, so nothing is
-              // lost) and surface the error, throttled, while the next
-              // pass retries.
-              warnThrottled(s"live emit for ${conn.name}", e)
-          }
-        }
+    // one replay step, its chunks written by this writer
+    def replayStep(conn: Conn): Unit =
+      try {
+        val head = liveHead()
+        if (!conn.session.replayStep(replaySession, tablePath, head)(view => writeView(conn, view)))
+          conn.cutOver(head)
+      } catch {
+        case e: java.io.IOException => throw e // → drop
+        // a transient table-read race (file listing during a concurrent
+        // append/compaction) must not drop a healthy subscriber; the
+        // session stays in replay and the next tick retries. A
+        // PERSISTENT failure (schema drift, corrupted table) surfaces,
+        // throttled.
+        case NonFatal(e) => warnThrottled("replay step", s" of ${conn.name}", e)
       }
+
+    // the live write: the outbox prefix the live cap grants. Returns
+    // whether tokens ran short of the queue.
+    def drain(conn: Conn): Boolean = {
+      val (frames, short) = conn.outbox.synchronized {
+        val queued = conn.outbox.size
+        val n = conn.liveCap.fold(queued.toLong)(_.acquireUpTo(queued.toLong)).toInt
+        (Array.fill(n)(conn.outbox.poll()), n < queued)
+      }
+      if (frames.nonEmpty) {
+        // The rearm covers ONLY the wire write: writeWire's post-flush
+        // bookkeeping is exception-free by construction, so a non-IO
+        // escaping it means frames did NOT all reach the pipe — the one
+        // case where a rearm is lossless. The hwm advance runs OUTSIDE
+        // the try: after a successful flush a failure there must
+        // surface, never re-arm (a rearm would re-read and re-deliver
+        // the window just written — duplicates, ADVICE r11).
+        val flushed =
+          try { writeWire(conn, frames.map(_.wire)); true }
+          catch {
+            case e: java.io.IOException => throw e // → drop
+            case NonFatal(e) =>
+              // keep-attached alone would LOSE this window: a live
+              // session never re-reads the table. Re-arm it into replay
+              // at its hwm instead: the window is re-read, the hwm dedup
+              // skips anything already written, and the gap-fill
+              // cutover returns it to live exactly-once.
+              conn.rearm()
+              warnThrottled("live write", s" of ${conn.name} (re-armed replay)", e)
+              false
+          }
+        if (flushed) conn.session.delivered(frames.last.timeUs) // hwm past the wire
+      }
+      short
     }
 
-    // the emit thread: takes whatever commits arrived while it was
-    // busy as one pass (commit order is time order), so a stalled write
-    // delays this edge, never the appender
-    val feed = new Feed
-    val emitter = new Thread(() => {
-      try while (true) {
-        val (frames, lost) = feed.take()
-        try emitPass(frames, rearm = lost)
+    // A connection's writer: live, it drains the outbox; replaying, it
+    // runs one replay step. Each run ends by rescheduling itself while
+    // live frames wait (after TickMs when the live cap ran short —
+    // never blocking a pool thread on tokens); a replaying session's
+    // next step waits for the tick.
+    def schedule(conn: Conn, delayMs: Long): Unit =
+      if (conn.scheduled.compareAndSet(false, true))
+        try pool.schedule(new Runnable { def run(): Unit = write(conn) }, delayMs, MILLISECONDS)
+        catch { case _: java.util.concurrent.RejectedExecutionException => () } // closing
+    def write(conn: Conn): Unit = {
+      val short =
+        try if (conn.session.replaying) { replayStep(conn); false } else drain(conn)
         catch {
-          case e: InterruptedException => throw e
-          case e: Throwable => warnThrottled("emit pass", e)
-        }
-      } catch { case _: InterruptedException => () }
-    }, "socket-serve-emit")
-    emitter.setDaemon(true)
-    emitter.start()
+          case _: java.io.IOException => // dead pipe / disconnect:
+            dropConn(conn, Some(writeDrops)); false // server.go:168-175
+        } finally conn.scheduled.set(false)
+      if (conns.contains(conn.name) && !conn.session.replaying &&
+          conn.outbox.synchronized(!conn.outbox.isEmpty))
+        schedule(conn, if (short) TickMs else 0L)
+    }
+
+    // the replay tick: the reference serves a cursored subscriber's
+    // replay from its own goroutine, INDEPENDENT of live traffic
+    // (server.go:305-337), so a subscriber attaching to an idle stream
+    // still receives its backlog. Adaptive share (VERDICT r16 #2): when
+    // live delivery lag is over target, the throttle admits only a
+    // fraction of ticks — replay degrades to slow catch-up instead of
+    // saturating the box.
+    pool.scheduleWithFixedDelay(() =>
+      try {
+        val replaying = conns.values.filter(_.session.replaying)
+        if (replaying.nonEmpty && replayThrottle.forall(_.stepAllowed()))
+          replaying.foreach(schedule(_, 0L))
+      } catch { case NonFatal(e) => warnThrottled("replay tick", "", e) },
+      0L, TickMs, MILLISECONDS)
 
     // the commit listener: runs on the appending thread (the ingest
-    // micro-batch), wires the batch when this edge has a subscriber,
-    // hands the frames to the emit thread and returns — it never waits
-    // on a socket
+    // micro-batch), wires the batch once when this edge has a
+    // subscriber, fills the outboxes and returns — it never waits on a
+    // socket
     val appender = new java.util.concurrent.atomic.AtomicReference[StreamingQuery]
     val key = EventsTable.tableKey(spark, tablePath)
     val detach = EventsTable.onCommit(spark, tablePath) { (s, files) =>
@@ -611,22 +543,64 @@ object SocketServe extends org.apache.spark.internal.Logging {
         .flatMap(id => Option(spark.streams.get(id)))
         .foreach(appender.set)
       if (conns.isEmpty) headStale.set(true)
-      else
-        try feed.offer(wireCommitted(s, key, files), DriverBudget.bytes(s))
-        catch { case scala.util.control.NonFatal(e) =>
+      else {
+        val wired =
+          try {
+            val frames = wireCommitted(s, key, files)
+            // driver heap of the commit's frames: each frame's object
+            // and routing strings plus its wire JSON's UTF-16 chars (at
+            // most), charged to the driver budget
+            val bytes = frames.iterator.map(f => DriverBudget.fixedRowBytes(3) + 2L * f.wire.length).sum
+            if (bytes > DriverBudget.bytes(s))
+              throw new IllegalStateException(s"$bytes bytes of frames exceed the driver budget")
+            Some(frames)
+          } catch { case NonFatal(e) =>
+            warnThrottled("wiring a committed batch", s" of $key (live sessions re-armed)", e)
+            None
+          }
+        wired match {
           // the batch is in the table but its frames never reach this
-          // edge: its live sessions re-arm into replay at their hwm
-          warnThrottled(s"wiring a committed batch of $key (live sessions re-armed)", e)
-          feed.markLost()
+          // edge: its live sessions replay the window, hwm-deduped
+          case None =>
+            headStale.set(true)
+            conns.values.foreach(_.missed(Long.MaxValue))
+          case Some(frames) if frames.nonEmpty =>
+            // the head first: a session cutting over at an older head
+            // holds this commit
+            lastHeadUs.getAndAccumulate(frames.last.timeUs, math.max)
+            // live delivery lag at the serving edge: now − the newest
+            // event time (its time_us is the ingest sequencer's
+            // wall-clock stamp) — the signal the adaptive replay share
+            // governs on
+            replayThrottle.foreach(_.observeLive(nowUs() - frames.last.timeUs))
+            // the emit-loop counters (server.go:71,80 counts each
+            // serialized event and its bytes once, before fan-out)
+            eventsEmitted.add(frames.length.toDouble)
+            bytesEmitted.add(frames.iterator.map(f =>
+              f.wire.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong)
+              .sum.toDouble)
+            conns.values.foreach { conn =>
+              val enqueued = conn.offer(frames)
+              // server.go:168-175: a full buffer closes the connection
+              if (enqueued < 0) dropConn(conn, Some(overflowDrops))
+              else if (enqueued > 0) schedule(conn, 0L)
+            }
+          case _ => ()
         }
+      }
     }
 
-    new Server(serverSocket.getLocalPort, serverSocket, appender, conns,
-      dropConn, closing, () => {
-        detach()
-        emitter.interrupt()
-        pump.interrupt()
-        watchdog.shutdownNow()
-      })
+    new Server(serverSocket.getLocalPort, appender, conns, () => {
+      closing.set(true) // before the sweep: in-flight handshakes self-drop
+      detach()
+      serverSocket.close()
+      acceptor.join()
+      handshakes.forEach((_, sock) => sock.close()) // one still reading its request
+      handshakes.keySet.forEach(_.join())
+      conns.values.foreach(dropConn(_, None)) // closes sockets + settles the gauge
+      pool.shutdownNow()
+      pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+      writers.forEach(_.join(1000)) // a worker ends just after the pool reports it
+    })
   }
 }

@@ -174,7 +174,7 @@ class ReplayTailSource(
   /** AQE-off session clone for the offset PROBES only. getOffset runs a
     * tiny `max(time_us)` head() every trigger, CONCURRENTLY with
     * whatever else the shared session is executing (e.g. the serve
-    * loop's replay pump); AQE's final-plan wait has a lost-wakeup race
+    * loop's replay steps); AQE's final-plan wait has a lost-wakeup race
     * under that concurrency — observed as the stream thread parked
     * forever in `AdaptiveSparkPlanExec.withFinalPlanUpdate` while every
     * executor thread idled — and adaptive planning buys nothing on a

@@ -27,9 +27,11 @@ import graft.streaming.{IngestMetrics, Watchdog}
   *   --max-sub-rate=5000 --override-relay-cursor=-1
   * }}}
   *
-  * `--max-sub-rate` paces each subscriber's cursor REPLAY at 10× the
-  * rate (the reference's playback limit, server.go:307); live delivery
-  * is not capped per subscriber.
+  * `--max-sub-rate` caps each subscriber's live delivery at the rate,
+  * with a burst of one second of it (server.go:211,345), and paces its
+  * cursor REPLAY at 10× the rate (the reference's playback limit,
+  * server.go:307). A subscriber whose stream runs above the cap falls
+  * behind until its 10k-frame outbox overflows and it is dropped.
   *
   * `worker-count`/`max-queue-size` have no analog: Spark's scheduler
   * owns parallelism (`local[N]` / executor count), and backpressure is

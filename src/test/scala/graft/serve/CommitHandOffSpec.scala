@@ -199,8 +199,8 @@ class CommitHandOffSpec extends SparkSpec {
 
   test("a stalled subscriber cannot hold up ingest: the commit only enqueues") {
     // one WebSocket subscriber reads; one completes the upgrade with a
-    // 4 KiB receive window and never reads, so its writes stall for
-    // writeTimeoutMs before the drop. Ingest batches keep completing
+    // 4 KiB receive window and never reads, so its writer stalls until
+    // its outbox overflows and drops it. Ingest batches keep completing
     // meanwhile, and the reader stays exactly-once and in order.
     val table = tmpDir("handoff-stall-table")
     val pad = "x" * 4096
@@ -216,7 +216,7 @@ class CommitHandOffSpec extends SparkSpec {
       ingest = WebSocketIngress.start(spark, s"ws://localhost:${srv.port}/subscribe", table,
         tmpDir("handoff-stall-ckpt"))
       eventually(90000)(EventsTable.read(spark, table).count() >= 5)
-      server = SocketServe.start(spark, table, writeTimeoutMs = 5000L)
+      server = SocketServe.start(spark, table)
       val reader = new WsTestKit.Client(s"ws://localhost:${server.port}/subscribe?")
       stalled.setReceiveBufferSize(4096)
       stalled.connect(new java.net.InetSocketAddress("localhost", server.port))

@@ -194,6 +194,44 @@ class MetricsSpec extends SparkSpec {
         series(out, "graft_bytes_delivered_total") > 0d
       }
 
+      // the drop counter, by reason: a subscriber that hangs up is
+      // dropped at its next write; one that stops reading is dropped
+      // when an enqueue would pass its outbox bound
+      def dropped(reason: String) =
+        reg.counter("graft_subscribers_dropped_total", "", "reason" -> reason).value
+      val gone = new graft.WsTestKit.Client(
+        s"ws://localhost:${server.port}/subscribe?wantedCollections=app.graft.gone")
+      eventually(30000)(server.subscriberCount == 2 && server.replayingCount == 0)
+      gone.close()
+      var t = 22L
+      def appendRows(n: Int, collection: String): Unit = {
+        EventsTable.append((0 until n).map(i => (t * 100000L + i, s"did:plc:u$i", collection))
+          .toDF("time_us", "did", "collection"), table)
+        t += 1
+      }
+      eventually(90000) { appendRows(1, "app.graft.gone"); server.subscriberCount == 1 }
+      assert(dropped("write") == 1d && dropped("overflow") == 0d)
+
+      // a subscriber that completes the upgrade with a 4 KiB receive
+      // window, then never reads
+      val stalled = new java.net.Socket()
+      try {
+        stalled.setReceiveBufferSize(4096)
+        stalled.connect(new java.net.InetSocketAddress("localhost", server.port))
+        stalled.getOutputStream.write(("GET /subscribe?wantedCollections=app.graft.flood HTTP/1.1\r\n" +
+          "Host: localhost\r\nUpgrade: websocket\r\nConnection: Upgrade\r\n" +
+          "Sec-WebSocket-Key: dGhlIHNhbXBsZSBub25jZQ==\r\n" +
+          "Sec-WebSocket-Version: 13\r\n\r\n").getBytes("US-ASCII"))
+        stalled.getOutputStream.flush()
+        eventually(30000)(server.subscriberCount == 2 && server.replayingCount == 0)
+        eventually(120000) {
+          appendRows(SocketServe.OutboxFrames + 1, "app.graft.flood")
+          server.subscriberCount == 1
+        }
+      } finally stalled.close()
+      assert(dropped("overflow") == 1d && dropped("write") == 1d)
+      assert(reg.render.contains("graft_subscribers_dropped_total{reason=\"overflow\"} 1\n"))
+
       server.close()
       assert(reg.gauge("graft_subscribers_connected", "",
         "remote" -> "127.0.0.1").value == 0d, "gauge settles on close")

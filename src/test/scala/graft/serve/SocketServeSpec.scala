@@ -252,22 +252,23 @@ class SocketServeSpec extends SparkSpec {
 
   test("slow consumer: a subscriber that stops reading is dropped; the others stay exactly-once (server.go:168-175)") {
     // S21 on the service loop: a subscriber whose pipe is alive but who
-    // never reads fills its socket buffers, its write blocks, and the
-    // writeTimeoutMs watchdog closes it — the reference's slow-consumer
-    // close. Frames carry a 4 KiB payload so a few batches overrun a
-    // small receive window plus the server's send buffer.
+    // never reads fills its socket buffers, its writer blocks, and its
+    // outbox fills until an enqueue would pass OutboxFrames — the
+    // reference's slow-consumer close. Frames carry a 4 KiB payload so a
+    // few batches overrun a small receive window plus the server's send
+    // buffer.
     val table = tmpDir("socket-serve-slow-table")
     val pad = "x" * 4096
     def padded(ids: Range) =
       rows(ids).map { case (t, d, c) => (t, d, c, pad) }.toDF("time_us", "did", "collection", "pad")
     EventsTable.append(padded(1 to 5), table)
     val reg = new Metrics.Registry
-    val server = SocketServe.start(spark, table,
-      writeTimeoutMs = 1000L, metrics = reg)
+    val server = SocketServe.start(spark, table, metrics = reg)
     def connected: Double =
       ("""(?m)^graft_subscribers_connected(\{[^}]*\})? (\S+)$""").r
         .findAllMatchIn(reg.render).map(_.group(2).toDouble).sum
     val stalled = new Socket()
+    @volatile var sampling = true
     try {
       val reader = client(server.port, "subscribe?")
       // the stalled subscriber: completes the upgrade, then never reads
@@ -285,28 +286,146 @@ class SocketServeSpec extends SparkSpec {
       eventually(30000)(server.subscriberCount == 2)
       assert(connected == 2d)
 
-      // live traffic until the stalled subscriber's write times out
+      // when each of the reader's frame counts was first seen
+      val arrivals = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]
+      val sampler = new Thread(() => {
+        var last = -1
+        while (sampling) {
+          val n = reader.lines.size
+          if (n != last) { arrivals.add(System.nanoTime() -> n); last = n }
+          Thread.sleep(5)
+        }
+      })
+      sampler.setDaemon(true)
+      sampler.start()
+
+      // live traffic until the stalled subscriber's outbox overflows
+      val commits = scala.collection.mutable.ArrayBuffer.empty[Long]
       var next = 6
       eventually(120000) {
-        if (next <= 2000) {
-          EventsTable.append(padded(next until next + 100), table)
-          next += 100
+        if (next <= 20000) {
+          EventsTable.append(padded(next until next + 500), table)
+          commits += System.nanoTime()
+          next += 500
         }
         server.subscriberCount == 1
       }
       eventually(30000)(connected == 1d)
+      assert(reg.counter("graft_subscribers_dropped_total", "", "reason" -> "overflow").value == 1d)
+      assert(reg.counter("graft_subscribers_dropped_total", "", "reason" -> "write").value == 0d)
 
       // the reading subscriber got every live event, once, in order
       EventsTable.append(padded(next until next + 5), table)
       val live = (6 until next + 5).map(_ * 1000L)
       eventually(90000)(reader.lines.size >= live.size)
+      sampling = false
+      sampler.join()
       val ts = reader.timesUs
       assert(ts == ts.sorted, "in order")
       assert(ts.distinct.size == ts.size, "exactly once")
       assert(ts == live, "the stalled subscriber's drop costs the others nothing")
+
+      // ... and kept pace while the stalled one was still attached: its
+      // longest wait between frames is within 3 batch periods (the
+      // longest interval between two commits), where one shared emit
+      // pass used to hold it for the stalled write
+      val batchPeriodNs = commits.zip(commits.tail).map { case (a, b) => b - a }.max
+      val seen = arrivals.toArray(Array.empty[(Long, Int)]).toSeq
+        .filter { case (t, n) => n > 0 && t <= commits.last }
+      val longestGapNs = seen.zip(seen.tail).map { case ((a, _), (b, _)) => b - a }.max
+      info(s"longest reader gap ${longestGapNs / 1000000} ms, batch period ${batchPeriodNs / 1000000} ms")
+      assert(longestGapNs <= 3 * batchPeriodNs,
+        s"the reader waited ${longestGapNs / 1000000} ms for a frame; batch period " +
+          s"${batchPeriodNs / 1000000} ms")
     } finally {
+      sampling = false
       stalled.close()
       server.close()
     }
+  }
+
+  test("live cap: a subscriber above maxSubRate gets at most rate × elapsed + burst, then overflows; one under it is exactly-once") {
+    // S20: the reference's per-subscriber live limiter (server.go:211,345)
+    // in front of its 10k buffer (server.go:204): a subscriber whose
+    // stream runs above the cap falls behind, its outbox fills and an
+    // enqueue that would pass OutboxFrames drops it. A filtered
+    // subscriber on the same edge, under the cap, is untouched.
+    val rate = 500.0 // burst: one second of it
+    def batch(ids: Range) =
+      ids.map(i => (i * 1000L, s"did:plc:u${i % 5}",
+        if (i % 500 == 0) "app.graft.rare" else "app.graft.doc"))
+        .toDF("time_us", "did", "collection")
+    val table = tmpDir("socket-serve-cap-table")
+    EventsTable.append(batch(1 to 3), table)
+    val reg = new Metrics.Registry
+    val server = SocketServe.start(spark, table, metrics = reg, maxSubRate = Some(rate))
+    try {
+      val t0 = System.nanoTime()
+      val fast = client(server.port, "subscribe?")
+      val rare = client(server.port, "subscribe?wantedCollections=app.graft.rare")
+      eventually(30000)(server.subscriberCount == 2 && server.replayingCount == 0)
+      var next = 4
+      eventually(180000) {
+        EventsTable.append(batch(next until next + 1000), table)
+        next += 1000
+        server.subscriberCount == 1
+      }
+      val elapsedS = (System.nanoTime() - t0) / 1e9
+      assert(reg.counter("graft_subscribers_dropped_total", "", "reason" -> "overflow").value == 1d)
+      Thread.sleep(1000) // frames written before the drop finish arriving
+      val got = fast.lines.size
+      info(f"$got frames in $elapsedS%.1f s at $rate/s")
+      assert(got <= rate * elapsedS + rate,
+        s"$got frames in ${elapsedS}s at $rate/s with a ${rate.toLong} burst")
+      assert(got > 0 && got < next - 4, s"paced: $got of ${next - 4} frames")
+      assert(fast.timesUs == (4 until 4 + got).map(_ * 1000L), "a prefix, in order, once")
+
+      EventsTable.append(batch(next until next + 1000), table)
+      val rareSet = (4 until next + 1000).filter(_ % 500 == 0).map(_ * 1000L)
+      eventually(60000)(rare.lines.size >= rareSet.size)
+      assert(rare.timesUs == rareSet, "the subscriber under the cap: every event, once, in order")
+      assert(server.subscriberCount == 1)
+    } finally server.close()
+  }
+
+  test("close(): no thread of the edge outlives it") {
+    val table = tmpDir("socket-serve-close-table")
+    EventsTable.append(rows(1 to 10).toDF("time_us", "did", "collection"), table)
+    val server = SocketServe.start(spark, table)
+    val prefix = s"socket-serve-${server.port}-"
+    def edgeThreads = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && t.getName.startsWith(prefix))
+    }
+    val idle = new Socket()
+    try {
+      val cursored = client(server.port, "subscribe?cursor=0")
+      val live = client(server.port, "subscribe?")
+      eventually(30000)(server.subscriberCount == 2)
+      eventually(60000)(cursored.lines.size >= 10 && server.replayingCount == 0)
+      EventsTable.append(rows(11 to 15).toDF("time_us", "did", "collection"), table)
+      eventually(60000)(live.lines.size >= 5)
+      // and a connection still in its handshake: it never sends a request
+      idle.connect(new java.net.InetSocketAddress("localhost", server.port))
+      eventually(30000)(edgeThreads.exists(_.getName == prefix + "handshake"))
+      assert(edgeThreads.exists(_.getName == prefix + "writer"))
+      assert(edgeThreads.exists(_.getName == prefix + "acceptor"))
+    } finally {
+      server.close()
+      idle.close()
+    }
+    assert(edgeThreads.isEmpty, s"alive after close(): ${edgeThreads.map(_.getName)}")
+    assert(server.subscriberCount == 0)
+  }
+
+  test("throttled warnings key on the call site, not the connection") {
+    val failure = new RuntimeException("injected")
+    val before = SocketServe.lastWarnMs.size
+    (1 to 1000).foreach { i =>
+      SocketServe.warnThrottled("live write", s" of sub-$i (re-armed replay)", failure)
+      SocketServe.warnThrottled("replay step", s" of sub-$i", failure)
+    }
+    assert(SocketServe.lastWarnMs.size <= before + 2,
+      s"${SocketServe.lastWarnMs.size - before} entries for 2 sites")
   }
 }
