@@ -60,8 +60,8 @@ object TokenBucket {
   val PlaybackMultiplier = 10.0
 
   /** The live cap: `rate` frames/s with a burst of one second of it. */
-  def live(rate: Double, nowUs: () => Long = () => System.nanoTime() / 1000L): TokenBucket =
-    new TokenBucket(rate, math.max(1L, rate.toLong), nowUs)
+  def live(rate: Double): TokenBucket =
+    new TokenBucket(rate, math.max(1L, rate.toLong), () => System.nanoTime() / 1000L)
 
   def playback(nowUs: () => Long = () => System.nanoTime() / 1000L,
       liveRate: Double = DefaultLiveRate): TokenBucket = {

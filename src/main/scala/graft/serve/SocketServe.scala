@@ -1,7 +1,6 @@
 package graft.serve
 
 import java.net.{ServerSocket, Socket}
-import java.util.concurrent.TimeUnit.MILLISECONDS
 
 import scala.util.control.NonFatal
 
@@ -41,10 +40,17 @@ import graft.util.DriverBudget
   * scheduled by the edge's replay tick — the reference's replay
   * goroutine (server.go:305-337). The appender only enqueues, and one
   * subscriber's stalled socket holds only its own writer: an enqueue
-  * that would pass [[OutboxFrames]] drops that connection, and so does a
-  * dead pipe — the reference's slow-consumer close
-  * (server.go:168-175). The table is read only for cursor replay, as
-  * the reference reads its log (persist.go:143-204).
+  * that would pass [[OutboxFrames]] drops that connection, and so do a
+  * dead pipe and a write stalled past [[StallMs]] — the reference's
+  * slow-consumer close (server.go:168-175). The table is read only for
+  * cursor replay, as the reference reads its log (persist.go:143-204).
+  *
+  * Driver memory: frames are shared objects, wired once per commit.
+  * Each connection pins at most its outbox (OutboxFrames of its frames,
+  * or one whole commit) plus its held commits (OutboxFrames + one
+  * commit); the driver budget bounds each commit, not their sum, which
+  * grows with the subscriber count, as the reference's per-subscriber
+  * buffers do.
   *
   * Scale posture: the LIVE path costs ONE Spark job per commit and edge
   * at any subscriber count — the committed files are wire-serialized
@@ -70,10 +76,17 @@ object SocketServe extends org.apache.spark.internal.Logging {
     */
   val OutboxFrames = 10000
 
-  /** The replay tick, and how long a live writer short of tokens waits
-    * before it writes again.
+  /** The edge's tick: it schedules replay steps, wakes live writers
+    * that ran short of tokens, and closes stalled writes.
     */
   private val TickMs = 25L
+
+  /** A socket write still running after this long is stalled: the tick
+    * closes its connection (a `reason="write"` drop). A reader that
+    * stops reading on a quiet stream or a narrow filter never overflows
+    * its outbox; this frees the pool thread its writer holds.
+    */
+  private[serve] val StallMs = 30000L
 
   /** Throttled warning: at most one log line per (call site, exception
     * class) per interval; `detail` (which connection, which table) goes
@@ -154,6 +167,8 @@ object SocketServe extends org.apache.spark.internal.Logging {
     private[this] var missedUs = Long.MinValue
     /** Set while this connection's writer task is queued or running. */
     val scheduled = new java.util.concurrent.atomic.AtomicBoolean(false)
+    /** When the writer entered its current socket write; 0 between writes. */
+    @volatile var writingSinceMs = 0L
 
     /** Live emit of one commit: the session's predicate + hwm over its
       * frames (server.go:87-134) into the outbox, or held while the
@@ -305,6 +320,9 @@ object SocketServe extends org.apache.spark.internal.Logging {
       replayThrottle: Option[ReplayThrottle] = None): Server = {
     val serverSocket = new ServerSocket(port)
     val tag = s"socket-serve-${serverSocket.getLocalPort}"
+    def daemon(role: String)(body: => Unit): Thread = {
+      val t = new Thread(() => body, s"$tag-$role"); t.setDaemon(true); t
+    }
     val conns = scala.collection.concurrent.TrieMap.empty[String, Conn]
     val counter = new java.util.concurrent.atomic.AtomicInteger
     // set before close() sweeps conns: a handshake completing AFTER the
@@ -322,7 +340,7 @@ object SocketServe extends org.apache.spark.internal.Logging {
       "Subscribers currently connected", "remote" -> remote)
     def droppedTotal(reason: String) = metrics.counter(
       "graft_subscribers_dropped_total",
-      "Subscribers dropped: outbox overflow, or a dead pipe / write error",
+      "Subscribers dropped: outbox overflow, or a dead pipe / stalled or failed write",
       "reason" -> reason)
     val overflowDrops = droppedTotal("overflow")
     val writeDrops = droppedTotal("write")
@@ -334,13 +352,18 @@ object SocketServe extends org.apache.spark.internal.Logging {
         reason.foreach(_.inc())
       }
 
-    // the edge's one pool: every connection's writer task and the
-    // replay tick; a writer blocked on a stalled socket holds one thread
+    // the edge's one pool: every connection's writer task. A writer
+    // blocked on a stalled socket holds one thread until the tick closes
+    // it; threads idle for 10 s exit.
     val writers = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
-    val pool = new java.util.concurrent.ScheduledThreadPoolExecutor(fanOutWidth,
+    val pool = new java.util.concurrent.ThreadPoolExecutor(fanOutWidth, fanOutWidth,
+      10L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable],
       (r: Runnable) => {
-        val t = new Thread(r, s"$tag-writer"); t.setDaemon(true); writers.add(t); t
+        writers.removeIf(!_.isAlive)
+        val t = daemon("writer")(r.run()); writers.add(t); t
       })
+    pool.allowCoreThreadTimeOut(true)
 
     // acceptor: one transport handshake → a registered CutoverSession;
     // the subscriber's replay starts at the next tick. Handshakes in
@@ -376,21 +399,20 @@ object SocketServe extends org.apache.spark.internal.Logging {
           case None => sock.close()
         }
       } catch { case _: Throwable => sock.close() }
-    val acceptor = new Thread(() => {
+    val acceptor = daemon("acceptor") {
       try while (true) {
         val sock = serverSocket.accept()
-        val t = new Thread(() =>
-          try handshake(sock) finally handshakes.remove(Thread.currentThread()),
-          s"$tag-handshake")
+        val t = daemon("handshake")(
+          try handshake(sock) finally handshakes.remove(Thread.currentThread()))
         handshakes.put(t, sock)
         t.start()
       } catch { case _: Throwable => () } // server closed
-    }, s"$tag-acceptor")
-    acceptor.setDaemon(true)
+    }
     acceptor.start()
 
     def writeWire(conn: Conn, wires: Array[String]): Unit = {
-      val bytes = conn.writer.writeFrames(wires)
+      conn.writingSinceMs = System.currentTimeMillis()
+      val bytes = try conn.writer.writeFrames(wires) finally conn.writingSinceMs = 0L
       // past writeFrames: count only deliveries that reached the pipe
       // (server.go:151-152 counts after a successful write). Two adder
       // increments, so nothing can throw between a flush and the hwm
@@ -496,13 +518,13 @@ object SocketServe extends org.apache.spark.internal.Logging {
 
     // A connection's writer: live, it drains the outbox; replaying, it
     // runs one replay step. Each run ends by rescheduling itself while
-    // live frames wait (after TickMs when the live cap ran short —
-    // never blocking a pool thread on tokens); a replaying session's
-    // next step waits for the tick.
-    def schedule(conn: Conn, delayMs: Long): Unit =
+    // live frames wait — unless the live cap ran short: then the tick
+    // wakes it, so no pool thread ever waits on tokens. A replaying
+    // session's next step waits for the tick.
+    def schedule(conn: Conn): Unit =
       if (conn.scheduled.compareAndSet(false, true))
-        try pool.schedule(new Runnable { def run(): Unit = write(conn) }, delayMs, MILLISECONDS)
-        catch { case _: java.util.concurrent.RejectedExecutionException => () } // closing
+        try pool.execute(() => write(conn))
+        catch { case _: java.util.concurrent.RejectedExecutionException => conn.scheduled.set(false) } // closing
     def write(conn: Conn): Unit = {
       val short =
         try if (conn.session.replaying) { replayStep(conn); false } else drain(conn)
@@ -510,25 +532,40 @@ object SocketServe extends org.apache.spark.internal.Logging {
           case _: java.io.IOException => // dead pipe / disconnect:
             dropConn(conn, Some(writeDrops)); false // server.go:168-175
         } finally conn.scheduled.set(false)
-      if (conns.contains(conn.name) && !conn.session.replaying &&
+      if (!short && conns.contains(conn.name) && !conn.session.replaying &&
           conn.outbox.synchronized(!conn.outbox.isEmpty))
-        schedule(conn, if (short) TickMs else 0L)
+        schedule(conn)
     }
 
-    // the replay tick: the reference serves a cursored subscriber's
-    // replay from its own goroutine, INDEPENDENT of live traffic
+    // the tick, on its own thread so stalled writers cannot starve it.
+    // It closes any write stalled past StallMs — a fixed pool, unlike
+    // the reference's goroutine per subscriber, must get that thread
+    // back — and wakes live writers with frames waiting. It schedules
+    // replay steps: the reference serves a cursored subscriber's replay
+    // from its own goroutine, INDEPENDENT of live traffic
     // (server.go:305-337), so a subscriber attaching to an idle stream
     // still receives its backlog. Adaptive share (VERDICT r16 #2): when
     // live delivery lag is over target, the throttle admits only a
     // fraction of ticks — replay degrades to slow catch-up instead of
     // saturating the box.
-    pool.scheduleWithFixedDelay(() =>
-      try {
-        val replaying = conns.values.filter(_.session.replaying)
-        if (replaying.nonEmpty && replayThrottle.forall(_.stepAllowed()))
-          replaying.foreach(schedule(_, 0L))
-      } catch { case NonFatal(e) => warnThrottled("replay tick", "", e) },
-      0L, TickMs, MILLISECONDS)
+    val ticker = daemon("tick") {
+      try while (!closing.get()) {
+        try {
+          val now = System.currentTimeMillis()
+          conns.values.foreach { conn =>
+            val since = conn.writingSinceMs
+            if (since != 0L && now - since > StallMs) dropConn(conn, Some(writeDrops))
+            else if (!conn.session.replaying && conn.outbox.synchronized(!conn.outbox.isEmpty))
+              schedule(conn)
+          }
+          val replaying = conns.values.filter(_.session.replaying)
+          if (replaying.nonEmpty && replayThrottle.forall(_.stepAllowed()))
+            replaying.foreach(schedule)
+        } catch { case NonFatal(e) => warnThrottled("tick", "", e) }
+        Thread.sleep(TickMs)
+      } catch { case _: InterruptedException => () } // closing
+    }
+    ticker.start()
 
     // the commit listener: runs on the appending thread (the ingest
     // micro-batch), wires the batch once when this edge has a
@@ -549,7 +586,7 @@ object SocketServe extends org.apache.spark.internal.Logging {
             val frames = wireCommitted(s, key, files)
             // driver heap of the commit's frames: each frame's object
             // and routing strings plus its wire JSON's UTF-16 chars (at
-            // most), charged to the driver budget
+            // most); one commit may not pass the driver budget
             val bytes = frames.iterator.map(f => DriverBudget.fixedRowBytes(3) + 2L * f.wire.length).sum
             if (bytes > DriverBudget.bytes(s))
               throw new IllegalStateException(s"$bytes bytes of frames exceed the driver budget")
@@ -583,7 +620,7 @@ object SocketServe extends org.apache.spark.internal.Logging {
               val enqueued = conn.offer(frames)
               // server.go:168-175: a full buffer closes the connection
               if (enqueued < 0) dropConn(conn, Some(overflowDrops))
-              else if (enqueued > 0) schedule(conn, 0L)
+              else if (enqueued > 0) schedule(conn)
             }
           case _ => ()
         }
@@ -595,6 +632,8 @@ object SocketServe extends org.apache.spark.internal.Logging {
       detach()
       serverSocket.close()
       acceptor.join()
+      ticker.interrupt()
+      ticker.join()
       handshakes.forEach((_, sock) => sock.close()) // one still reading its request
       handshakes.keySet.forEach(_.join())
       conns.values.foreach(dropConn(_, None)) // closes sockets + settles the gauge

@@ -344,6 +344,74 @@ class SocketServeSpec extends SparkSpec {
     }
   }
 
+  /** A subscriber that completes the upgrade, then never reads. */
+  private def stall(sock: Socket, port: Int, request: String): Unit = {
+    sock.setReceiveBufferSize(4096)
+    sock.connect(new java.net.InetSocketAddress("localhost", port))
+    sock.getOutputStream.write((s"GET /$request HTTP/1.1\r\nHost: localhost\r\n" +
+      "Upgrade: websocket\r\nConnection: Upgrade\r\n" +
+      "Sec-WebSocket-Key: dGhlIHNhbXBsZSBub25jZQ==\r\n" +
+      "Sec-WebSocket-Version: 13\r\n\r\n").getBytes("US-ASCII"))
+    sock.getOutputStream.flush()
+    val head = new StringBuilder
+    while (head.length < 4 || head.substring(head.length - 4) != "\r\n\r\n")
+      head.append(sock.getInputStream.read().toChar)
+    assert(head.toString.startsWith("HTTP/1.1 101"), head.toString.take(100))
+  }
+
+  test("stalled writes: readers that stop reading on a quiet filter free the pool; a third reader keeps receiving") {
+    // A fixed pool, unlike the reference's goroutine per subscriber: two
+    // readers that stop reading block both writers of a two-wide pool.
+    // Their filter then stops matching, so their outboxes never
+    // overflow; the tick closes each write stalled past StallMs, and the
+    // third reader's writer gets a thread again.
+    val table = tmpDir("socket-serve-stall-table")
+    val pad = "x" * 4096
+    def padded(ids: Range, collection: String) =
+      rows(ids, collection).map { case (t, d, c) => (t, d, c, pad) }
+        .toDF("time_us", "did", "collection", "pad")
+    EventsTable.append(padded(1 to 5, "app.graft.doc"), table)
+    val reg = new Metrics.Registry
+    val server = SocketServe.start(spark, table, fanOutWidth = 2, metrics = reg)
+    def dropped(reason: String) =
+      reg.counter("graft_subscribers_dropped_total", "", "reason" -> reason).value
+    val stalled = Seq.fill(2)(new Socket())
+    try {
+      val reader = client(server.port, "subscribe?")
+      stalled.foreach(stall(_, server.port, "subscribe?wantedCollections=app.graft.doc"))
+      eventually(30000)(server.subscriberCount == 3)
+
+      // ~10 MB of frames each stalled reader wants: more than its socket
+      // buffers hold, well under OutboxFrames
+      var next = 6
+      (1 to 5).foreach { _ =>
+        EventsTable.append(padded(next until next + 500, "app.graft.doc"), table)
+        next += 500
+      }
+      // then a quiet stream of frames only the third reader wants
+      val quietFrom = System.nanoTime()
+      eventually(SocketServe.StallMs + 60000) {
+        EventsTable.append(padded(next until next + 10, "app.graft.other"), table)
+        next += 10
+        dropped("write") == 2d
+      }
+      val droppedAfterMs = (System.nanoTime() - quietFrom) / 1000000
+      info(s"both stalled readers dropped ${droppedAfterMs} ms into the quiet stream")
+      assert(dropped("overflow") == 0d, "the quiet filter never overflows an outbox")
+      assert(server.subscriberCount == 1)
+
+      // the third reader keeps receiving: every frame, once, in order
+      val more = next
+      EventsTable.append(padded(more until more + 10, "app.graft.other"), table)
+      val all = (6 until more + 10).map(_ * 1000L)
+      eventually(90000)(reader.lines.size >= all.size)
+      assert(reader.timesUs == all, "the third reader: every frame, once, in order")
+    } finally {
+      stalled.foreach(_.close())
+      server.close()
+    }
+  }
+
   test("live cap: a subscriber above maxSubRate gets at most rate × elapsed + burst, then overflows; one under it is exactly-once") {
     // S20: the reference's per-subscriber live limiter (server.go:211,345)
     // in front of its 10k buffer (server.go:204): a subscriber whose
