@@ -22,7 +22,8 @@ import graft.tools.Service
   *
   * Usage: `runMain graft.Soak [minutes] [eventsPerSec]
   * [ingestTriggerMs] [multi] [manifest] [batch]` — defaults 10 minutes
-  * at 10k ev/s with a 1 s ingest trigger; the trailing words switch on
+  * at 10k ev/s with the service's ingest trigger
+  * (`Service.Config.ingestTriggerMs`); the trailing words switch on
   * two serving edges, manifest commits and 64-event frames. Fewer than
   * [[MinMinutes]] minutes (or a malformed number) prints the usage line
   * and exits 2 before any Spark session starts.
@@ -292,7 +293,8 @@ object Soak {
       Settings(
         minutes = args.lift(0).map(_.toInt).getOrElse(10),
         ratePerSec = args.lift(1).map(_.toInt).getOrElse(10000),
-        ingestTriggerMs = args.lift(2).map(_.toLong).getOrElse(1000L),
+        ingestTriggerMs = args.lift(2).map(_.toLong)
+          .getOrElse(Service.Config(wsUrl = "").ingestTriggerMs),
         multiEdge = words.contains("multi"),
         manifestMode = words.contains("manifest"),
         frameBatch = if (words.contains("batch")) 64 else 1)

@@ -81,30 +81,36 @@ object IngestJob {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val n = batch.count()
-        val seq =
-          if (n >= scalableThresholdRows)
-            Sequencer.stampScalable(batch, orderCols, hwm.get(), nowUs, rows = n)
-          else Sequencer.stamp(batch, orderCols, hwm.get(), nowUs, rows = n)
-        // sequenced counts every stamped batch — including replayed
-        // duplicates the hwm guard below skips — so the sequenced-vs-
-        // persisted gap is observable (consumer.go:79-81's two counters)
-        if (n > 0) sequenced.add(n.toDouble)
-        if (seq.maxTimeUs > hwm.get()) {
-          // 0 = auto: small live triggers stay one-file-per-hour; big
-          // batches fan the write out across time-contiguous shards
-          // (prefix closure holds either way — EventsTable.append doc).
-          // manifestCommits = the object-store-safe visibility mode:
-          // rename-order prefix closure degrades silently on rename-less
-          // stores; the manifest commit moves the boundary off the
-          // listing entirely (EventsTable.appendManifested doc)
-          val shards = if (appendShards > 0) appendShards else EventsTable.autoShards(n)
-          if (manifestCommits) EventsTable.appendManifested(seq.df, tablePath, shards)
-          else EventsTable.append(seq.df, tablePath, shards)
-          persisted.add(n.toDouble)
-          hwm.set(seq.maxTimeUs)
-          lastSeq.set(seq.maxTimeUs.toDouble)
-        }
+        // decode once: the count materializes the decoded batch, and the
+        // stamp reads that copy; the write and the commit listeners then
+        // share one computation of the stamped rows (EventsTable.append)
+        val frames = batch.persist()
+        try {
+          val n = frames.count()
+          val seq =
+            if (n >= scalableThresholdRows)
+              Sequencer.stampScalable(frames, orderCols, hwm.get(), nowUs, rows = n)
+            else Sequencer.stamp(frames, orderCols, hwm.get(), nowUs, rows = n)
+          // sequenced counts every stamped batch — including replayed
+          // duplicates the hwm guard below skips — so the sequenced-vs-
+          // persisted gap is observable (consumer.go:79-81's two counters)
+          if (n > 0) sequenced.add(n.toDouble)
+          if (seq.maxTimeUs > hwm.get()) {
+            // 0 = auto: small live triggers stay one-file-per-hour; big
+            // batches fan the write out across time-contiguous shards
+            // (prefix closure holds either way — EventsTable.append doc).
+            // manifestCommits = the object-store-safe visibility mode:
+            // rename-order prefix closure degrades silently on rename-less
+            // stores; the manifest commit moves the boundary off the
+            // listing entirely (EventsTable.appendManifested doc)
+            val shards = if (appendShards > 0) appendShards else EventsTable.autoShards(n)
+            if (manifestCommits) EventsTable.appendManifested(seq.df, tablePath, shards)
+            else EventsTable.append(seq.df, tablePath, shards)
+            persisted.add(n.toDouble)
+            hwm.set(seq.maxTimeUs)
+            lastSeq.set(seq.maxTimeUs.toDouble)
+          }
+        } finally { frames.unpersist(); () }
       }
       .start()
   }

@@ -25,8 +25,15 @@ object Sequencer {
 
   final case class Sequenced(df: DataFrame, maxTimeUs: Long)
 
-  /** Stamp a batch. `orderCols` defines the intra-batch total order
-    * (arrival order proxy — must be deterministic and unique).
+  /** Stamp a batch. `orderCols` define the intra-batch order (an
+    * arrival-order proxy, deterministic). They need not be unique: the
+    * service orders by `(event_time_us, did, type)`, which ties across
+    * the ops of one commit, and tied rows take their input order (the
+    * batch's partition order, then row order). So the stamp is a
+    * function of the batch as it is partitioned: stamp a materialized
+    * batch once, and read its rows from one computation (IngestJob
+    * persists the decoded batch; [[graft.store.EventsTable.append]]
+    * writes and hands on one computation of the stamped rows).
     * `nowUs` is injectable for tests.
     */
   def stamp(
@@ -38,11 +45,23 @@ object Sequencer {
     val n = if (rows >= 0) rows else batch.count()
     if (n == 0) return Sequenced(batch.sparkSession.emptyDataFrame, prevMaxUs)
     val base = math.max(prevMaxUs + 1, nowUs())
-    val w = Window.orderBy(orderCols.map(col): _*)
-    val stamped = batch.withColumn("time_us",
-      lit(base) + row_number().over(w).cast("long") - 1L)
+    val w = Window.orderBy(inputOrder(orderCols): _*)
+    // the base enters through a function, not a literal: a long literal
+    // is inlined into the generated code, so a new base per batch would
+    // compile the stage anew every batch
+    val offset = udf((rn: Int) => base + rn - 1L).asNonNullable()
+    val stamped = withInputPosition(batch).withColumn("time_us",
+      offset(row_number().over(w))).drop(InputPosition)
     Sequenced(stamped, base + n - 1)
   }
+
+  /** The tie-breaker column: each row's position in its batch. */
+  private val InputPosition = "_graft_input_position"
+
+  private def withInputPosition(batch: DataFrame): DataFrame =
+    batch.withColumn(InputPosition, monotonically_increasing_id())
+
+  private def inputOrder(orderCols: Seq[String]) = (orderCols :+ InputPosition).map(col)
 
   /** Distributed variant for very large batches: the unpartitioned
     * window in [[stamp]] funnels the whole batch through one task
@@ -69,10 +88,11 @@ object Sequencer {
     val base = math.max(prevMaxUs + 1, nowUs())
     val parts = if (partitions > 0) partitions
       else spark.sessionState.conf.numShufflePartitions
-    val cols = orderCols.map(col)
-    val ranged = batch
+    val cols = inputOrder(orderCols)
+    val ranged = withInputPosition(batch)
       .repartitionByRange(parts, cols: _*)
       .sortWithinPartitions(cols: _*)
+      .drop(InputPosition)
     val schema = org.apache.spark.sql.types.StructType(
       ranged.schema.fields :+
         org.apache.spark.sql.types.StructField("time_us", org.apache.spark.sql.types.LongType, nullable = false))

@@ -99,38 +99,33 @@ object Metrics {
     def render: String = {
       import scala.jdk.CollectionConverters._
       val sb = new StringBuilder
-      series.asScala.toSeq
-        .groupBy { case ((name, _), _) => name }.toSeq.sortBy(_._1)
-        .foreach { case (name, members) =>
-          val meta = metas.get(name)
-          sb.append(s"# HELP $name ${escapeHelp(meta.help)}\n")
-          sb.append(s"# TYPE $name ${meta.typ}\n")
-          members.sortBy { case ((_, labels), _) => labels.toString }
-            .foreach { case ((_, labels), s) =>
-              sb.append(s"$name${renderLabels(labels)} ${format(s.value)}\n")
-            }
+      def families[V](members: java.util.Map[(String, Seq[(String, String)]), V])(
+          member: (String, Seq[(String, String)], V) => Unit): Unit =
+        members.asScala.toSeq
+          .groupBy { case ((name, _), _) => name }.toSeq.sortBy(_._1)
+          .foreach { case (name, family) =>
+            val meta = metas.get(name)
+            sb.append(s"# HELP $name ${escapeHelp(meta.help)}\n")
+            sb.append(s"# TYPE $name ${meta.typ}\n")
+            family.sortBy { case ((_, labels), _) => labels.toString }
+              .foreach { case ((_, labels), v) => member(name, labels, v) }
+          }
+      families(series) { (name, labels, s) =>
+        sb.append(s"$name${renderLabels(labels)} ${format(s.value)}\n")
+      }
+      families(histograms) { (name, labels, h) =>
+        def withLe(le: String) = renderLabels(labels :+ ("le" -> le))
+        val base = renderLabels(labels)
+        var cum = 0L
+        h.buckets.indices.foreach { i =>
+          cum += h.counts(i).sum()
+          sb.append(s"${name}_bucket${withLe(format(h.buckets(i)))} $cum\n")
         }
-      histograms.asScala.toSeq
-        .groupBy { case ((name, _), _) => name }.toSeq.sortBy(_._1)
-        .foreach { case (name, members) =>
-          val meta = metas.get(name)
-          sb.append(s"# HELP $name ${escapeHelp(meta.help)}\n")
-          sb.append(s"# TYPE $name histogram\n")
-          members.sortBy { case ((_, labels), _) => labels.toString }
-            .foreach { case ((_, labels), h) =>
-              def withLe(le: String) = renderLabels(labels :+ ("le" -> le))
-              val base = renderLabels(labels)
-              var cum = 0L
-              h.buckets.indices.foreach { i =>
-                cum += h.counts(i).sum()
-                sb.append(s"${name}_bucket${withLe(format(h.buckets(i)))} $cum\n")
-              }
-              cum += h.counts(h.buckets.length).sum()
-              sb.append(s"${name}_bucket${withLe("+Inf")} $cum\n")
-              sb.append(s"${name}_sum$base ${format(h.sum.sum())}\n")
-              sb.append(s"${name}_count$base $cum\n")
-            }
-        }
+        cum += h.counts(h.buckets.length).sum()
+        sb.append(s"${name}_bucket${withLe("+Inf")} $cum\n")
+        sb.append(s"${name}_sum$base ${format(h.sum.sum())}\n")
+        sb.append(s"${name}_count$base $cum\n")
+      }
       sb.toString
     }
   }

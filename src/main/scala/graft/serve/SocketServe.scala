@@ -28,7 +28,7 @@ import graft.util.DriverBudget
   * emit loop in the same process (`Server.Emit`, server.go:62-116); here
   * every append to the events table, once its batch is visible, calls
   * the table's commit listeners ([[EventsTable.onCommit]]) in this JVM.
-  * Each edge's listener wires the committed files once, runs every
+  * Each edge's listener wires the committed rows once, runs every
   * live session's predicate + hwm over the time-sorted frames
   * ([[CutoverSession.liveEmitFrames]]) and appends what it admits to
   * that connection's outbox — the reference's per-subscriber buffer
@@ -53,7 +53,7 @@ import graft.util.DriverBudget
   * buffers do.
   *
   * Scale posture: the LIVE path costs ONE Spark job per commit and edge
-  * at any subscriber count — the committed files are wire-serialized
+  * at any subscriber count — the committed rows are wire-serialized
   * distributed, collected once with their routing columns, and fanned
   * out in process, the same shape as the reference's single-marshal +
   * per-subscriber-predicate loop (server.go:73,87-134). REPLAY views
@@ -245,28 +245,23 @@ object SocketServe extends org.apache.spark.internal.Logging {
     */
   @volatile private[serve] var beforeWire: String => Unit = _ => ()
 
-  /** A committed batch's live frames, time-sorted: its files read back
-    * by name (no listing, the bytes a table read yields), serialized
-    * once and collected with their routing columns — ONE Spark job per
-    * commit and edge, at any subscriber count.
+  /** A committed batch's live frames, time-sorted: the rows the commit
+    * made visible, serialized once and collected with their routing
+    * columns — ONE Spark job per commit and edge, at any subscriber
+    * count, and no read of the table.
     */
-  private[serve] def wireCommitted(spark: SparkSession, key: String,
-      files: Seq[String]): Array[Subscribe.WireFrame] = {
+  private[serve] def wireCommitted(key: String, rows: DataFrame): Array[Subscribe.WireFrame] = {
     beforeWire(key)
-    if (files.isEmpty) Array.empty
-    else {
-      val wired = Decode.toWire(spark.read.option("basePath", key)
-        .parquet(files.map(f => s"$key/$f"): _*))
-      wired.select(col("time_us"),
-          Subscribe.resolvedCollection(wired).as("collection"),
-          col("did"), col("wire"))
-        .collect()
-        .map(r => Subscribe.WireFrame(r.getLong(0),
-          if (r.isNullAt(1)) null else r.getString(1),
-          if (r.isNullAt(2)) null else r.getString(2),
-          r.getString(3)))
-        .sortBy(_.timeUs)
-    }
+    val wired = Decode.toWire(rows)
+    wired.select(col("time_us"),
+        Subscribe.resolvedCollection(wired).as("collection"),
+        col("did"), col("wire"))
+      .collect()
+      .map(r => Subscribe.WireFrame(r.getLong(0),
+        if (r.isNullAt(1)) null else r.getString(1),
+        if (r.isNullAt(2)) null else r.getString(2),
+        r.getString(3)))
+      .sortBy(_.timeUs)
   }
 
   /** A running server: `close()` stops accepting, detaches from the
@@ -573,7 +568,8 @@ object SocketServe extends org.apache.spark.internal.Logging {
     // socket
     val appender = new java.util.concurrent.atomic.AtomicReference[StreamingQuery]
     val key = EventsTable.tableKey(spark, tablePath)
-    val detach = EventsTable.onCommit(spark, tablePath) { (s, files) =>
+    val detach = EventsTable.onCommit(spark, tablePath) { rows =>
+      val s = rows.sparkSession
       Option(s.sparkContext.getLocalProperty("sql.streaming.queryId"))
         .map(java.util.UUID.fromString)
         .filterNot(id => Option(appender.get).exists(_.id == id))
@@ -583,7 +579,7 @@ object SocketServe extends org.apache.spark.internal.Logging {
       else {
         val wired =
           try {
-            val frames = wireCommitted(s, key, files)
+            val frames = wireCommitted(key, rows)
             // driver heap of the commit's frames: each frame's object
             // and routing strings plus its wire JSON's UTF-16 chars (at
             // most); one commit may not pass the driver budget

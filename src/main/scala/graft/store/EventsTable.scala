@@ -54,8 +54,9 @@ object EventsTable {
     * structural, not probe-side:
     *
     *   1. TIME-CONTIGUOUS files — with `shards <= 1` (the default),
-    *      `repartition(event_hour)` puts each distinct hour wholly in
-    *      one task (one file per hour per batch); with `shards > 1`,
+    *      one task writes the whole batch (`coalesce(1)`, no shuffle: a
+    *      window-stamped batch is one partition already), one file per
+    *      hour per batch; with `shards > 1`,
     *      `repartitionByRange(shards, event_hour, time_us)` slices the
     *      batch into up to `shards` CONTIGUOUS time ranges written in
     *      parallel — the multi-task form that lifts the one-task-per-
@@ -128,18 +129,23 @@ object EventsTable {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val staging = new Path(root, s".graft-staging-${java.util.UUID.randomUUID}")
     purgeStaleStaging(fs, root)
+    val key = fs.makeQualified(root).toString
+    // while a listener is registered, the write and the listeners read
+    // one computation of the rows: the listeners cost no second one, and
+    // a nondeterministic input cannot hand them rows the files lack
     val laid = withLayoutCols(events)
-    val arranged =
-      if (shards <= 1) laid.repartition(col(PartitionCol))
-      else laid.repartitionByRange(shards, col(PartitionCol), col("time_us"))
-    arranged
-      .sortWithinPartitions(col("time_us"))
-      .write
-      .mode(SaveMode.Overwrite)
-      .partitionBy(PartitionCol)
-      .parquet(staging.toString)
+    val rows = if (commitListeners.containsKey(key)) laid.persist() else laid
     val moved = scala.collection.mutable.ListBuffer.empty[String]
     try {
+      val arranged =
+        if (shards <= 1) rows.coalesce(1)
+        else rows.repartitionByRange(shards, col(PartitionCol), col("time_us"))
+      arranged
+        .sortWithinPartitions(col(PartitionCol), col("time_us"))
+        .write
+        .mode(SaveMode.Overwrite)
+        .partitionBy(PartitionCol)
+        .parquet(staging.toString)
       val hourDirs = fs.listStatus(staging)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$PartitionCol="))
         .sortBy(_.getPath.getName.stripPrefix(s"$PartitionCol=").toLong)
@@ -177,24 +183,28 @@ object EventsTable {
           }
       }
       if (manifest) commitManifest(fs, root, moved.toList)
-    } finally { fs.delete(staging, true); () }
-    // the batch is already in the table: a failing listener is logged,
-    // never allowed to fail the append
-    Option(commitListeners.get(fs.makeQualified(root).toString)).foreach(_.foreach { l =>
-      try l(spark, moved.toList)
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[events-table] commit listener on $root failed: $e")
-      }
-    })
+      // the batch is already in the table: a failing listener is logged,
+      // never allowed to fail the append
+      if (moved.nonEmpty) Option(commitListeners.get(key)).foreach(_.foreach { l =>
+        try l(rows)
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[events-table] commit listener on $root failed: $e")
+        }
+      })
+    } finally {
+      fs.delete(staging, true)
+      if (rows ne laid) rows.unpersist()
+    }
   }
 
   /** Runs after an append has made its batch visible (renames done,
-    * manifest written), on the appending thread, with the appending
-    * session and the batch's committed files relative to the table
-    * root. It must return promptly: for the ingest query it runs inside
+    * manifest written), on the appending thread, with the rows just
+    * made visible: the appended batch with its `event_hour` column last,
+    * as a table read yields them, read from the computation the write
+    * read. It must return promptly: for the ingest query it runs inside
     * the micro-batch.
     */
-  type CommitListener = (SparkSession, Seq[String]) => Unit
+  type CommitListener = DataFrame => Unit
 
   /** Listeners by qualified table URI ([[tableKey]]). */
   private val commitListeners =

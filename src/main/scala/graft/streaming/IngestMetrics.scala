@@ -22,6 +22,10 @@ import graft.serve.Metrics
   *   - `graft_consumer_event_processing_duration_seconds{query}`
   *     histogram of per-batch trigger execution, the reference's
   *     exponential buckets (metrics.go:18-22)
+  *   - `graft_consumer_batch_phase_seconds{query,phase}` histogram of
+  *     the micro-batch phases `getBatch`, `queryPlanning`, `addBatch`
+  *     (decode, sequence, append and the commit hand-off) and
+  *     `walCommit`, from the progress's `durationMs`
   *   - `graft_consumer_last_seq{query}`                 (metrics.go:24-27)
   *   - `graft_consumer_last_evt_processed_at{query}`    (metrics.go:29-32)
   *   - `graft_consumer_last_evt_created_at{query}`      (metrics.go:34-37)
@@ -35,6 +39,9 @@ object IngestMetrics {
 
   /** The reference's histogram buckets: ExponentialBuckets(0.0001, 2, 18). */
   val DurationBuckets: Array[Double] = Metrics.exponentialBuckets(0.0001, 2, 18)
+
+  /** The micro-batch phases exported per batch. */
+  val BatchPhases: Seq[String] = Seq("getBatch", "queryPlanning", "addBatch", "walCommit")
 
   /** Build the listener. Attach with
     * `spark.streams.addListener(IngestMetrics.listener(registry))`;
@@ -60,6 +67,13 @@ object IngestMetrics {
           registry.histogram("graft_consumer_event_processing_duration_seconds",
             "Micro-batch processing duration", DurationBuckets, "query" -> q)
             .observe(trigMs / 1000.0)
+        BatchPhases.foreach { phase =>
+          Option(p.durationMs.get(phase)).foreach { ms =>
+            registry.histogram("graft_consumer_batch_phase_seconds",
+              "Micro-batch phase duration", DurationBuckets, "query" -> q, "phase" -> phase)
+              .observe(ms / 1000.0)
+          }
+        }
         val nowUs = java.time.Instant.parse(p.timestamp).toEpochMilli * 1000L
         registry.gauge("graft_consumer_last_evt_processed_at",
           "Batch timestamp of the last progress, us", "query" -> q)

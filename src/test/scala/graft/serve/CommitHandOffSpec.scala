@@ -61,8 +61,8 @@ class CommitHandOffSpec extends SparkSpec {
   private def handedOff(table: String)(body: => Unit): Seq[Array[Subscribe.WireFrame]] = {
     val key = EventsTable.tableKey(spark, table)
     val got = new java.util.concurrent.ConcurrentLinkedQueue[Array[Subscribe.WireFrame]]
-    val detach = EventsTable.onCommit(spark, table) { (s, files) =>
-      got.add(SocketServe.wireCommitted(s, key, files))
+    val detach = EventsTable.onCommit(spark, table) { rows =>
+      got.add(SocketServe.wireCommitted(key, rows))
     }
     try body finally detach()
     import scala.jdk.CollectionConverters._
@@ -129,6 +129,87 @@ class CommitHandOffSpec extends SparkSpec {
       assertTableIdentity(ws, wsBatches)
     } finally {
       if (q != null) q.stop()
+      srv.close()
+    }
+  }
+
+  test("one pass per ingest micro-batch: frames parse once per batch, and no plan reads the table") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val table = tmpDir("handoff-onepass-table")
+    val srv = new WsTestKit.ReplayServer
+    // every executed plan, in completion order; a marker action fences
+    // off the plans executed before it
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]
+    val recorder = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.executedPlan)
+    }
+    val marker = "graft_plan_marker"
+    def untilMarker(): Seq[SparkPlan] = {
+      spark.range(1).toDF(marker).collect()
+      val out = Seq.newBuilder[SparkPlan]
+      var p = plans.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (p != null && !p.output.exists(_.name == marker)) {
+        out += p
+        p = plans.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(p != null, "the marker's plan was reported")
+      out.result()
+    }
+    // a plan's operators, through adaptive stages and into the plans
+    // that build the cached relations it reads
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case _ => (p.children ++ p.subqueries).flatMap(nodes)
+    })
+    // a micro-batch reaches foreachBatch as a scan of the RDD that reads
+    // and parses its frames: the scan operators a plan runs or reads the
+    // cached output of
+    def batchScans(p: SparkPlan) = nodes(p).collect { case s: RDDScanExec => s }
+    def scansTable(p: SparkPlan) = nodes(p).exists {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.toString.contains(table))
+      case _ => false
+    }
+    var ingest: org.apache.spark.sql.streaming.StreamingQuery = null
+    var server: SocketServe.Server = null
+    // registered before the ingest starts: the stream runs in a clone of
+    // the session, which copies the listeners registered by then
+    spark.listenerManager.register(recorder)
+    try {
+      srv.log = (1 to 5).map(frame(_)).toVector
+      ingest = WebSocketIngress.start(spark, s"ws://localhost:${srv.port}/subscribe", table,
+        tmpDir("handoff-onepass-ckpt"))
+      eventually(90000)(EventsTable.read(spark, table).count() == 5)
+      server = SocketServe.start(spark, table)
+      val live = new WsTestKit.Client(s"ws://localhost:${server.port}/subscribe?")
+      eventually(30000)(server.subscriberCount == 1 && server.replayingCount == 0)
+      eventually(30000)(!ingest.status.isTriggerActive)
+      untilMarker()
+      val before = ingest.lastProgress.batchId
+      srv.log = (1 to 40).map(frame(_)).toVector
+      eventually(90000)(live.lines.size >= 35)
+      eventually(30000)(!ingest.status.isTriggerActive)
+      val executed = untilMarker()
+      val progress = ingest.recentProgress.filter(p => p.batchId > before && p.numInputRows > 0)
+      val batches = progress.length
+      assert(live.lines.size == 35, "the live subscriber got each new event once")
+      assert(batches >= 1)
+      assert(!executed.exists(scansTable), "a plan of the ingest micro-batch read the events table")
+      // each batch's frames are parsed by one operator, however many
+      // plans read its output
+      val parsed = executed.flatMap(batchScans).map(System.identityHashCode).distinct.size
+      assert(parsed == batches, s"frames parsed by $parsed operators over $batches batches")
+      // the source's row count sums each computation of a batch
+      assert(progress.map(_.numInputRows).sum == 35, "each frame was read and parsed once")
+    } finally {
+      spark.listenerManager.unregister(recorder)
+      if (server != null) server.close()
+      if (ingest != null) { ingest.stop(); ingest.awaitTermination(30000) }
       srv.close()
     }
   }

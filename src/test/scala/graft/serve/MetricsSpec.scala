@@ -99,6 +99,9 @@ class MetricsSpec extends SparkSpec {
       assert(mine("graft_consumer_last_evt_created_at"), out)
       assert(mine("graft_consumer_last_evt_created_evt_processed_gap"), out)
       assert(out.contains("graft_consumer_event_processing_duration_seconds_count"), out)
+      assert(graft.streaming.IngestMetrics.BatchPhases.forall(phase =>
+        (s"""graft_consumer_batch_phase_seconds_count\\{phase="$phase",query="$qid"\\} [1-9]""").r
+          .findFirstIn(out).isDefined), s"batch phase histograms:\n$out")
       assert(("""graft_consumer_events_persisted_total\{table="[^"]*"\} 10""").r
         .findFirstIn(out).isDefined, s"persisted counter:\n$out")
       // sequenced counts every stamped batch, including hwm-skipped

@@ -6,10 +6,10 @@ import graft.store.EventsTable
 /** Several serving edges on one events table, EXERCISED: N
   * `SocketServe` edges in the appender's JVM (the commit hand-off
   * reaches only edges in the process that appends —
-  * `SocketServe.start`'s scaladoc), each with its own emit thread and
-  * its own subscriber set. The reference's multi-instance posture is
-  * the same shape within one process: any number of edges serve
-  * disjoint client populations off one upstream.
+  * `SocketServe.start`'s scaladoc), each with its own commit listener,
+  * writer pool and subscriber set. The reference's multi-instance
+  * posture is the same shape within one process: any number of edges
+  * serve disjoint client populations off one upstream.
   *
   * Asserted here, with ingest running concurrently under both edges:
   *   - every cursored subscriber on EITHER edge replays the shared
@@ -48,7 +48,7 @@ class MultiEdgeServeSpec extends SparkSpec {
       assert(aLive.lines.isEmpty && bLive.lines.isEmpty)
 
       // concurrent ingest: appends land while BOTH edges are serving;
-      // each edge's own emit thread fans them out
+      // each edge's own commit listener fills its subscribers' outboxes
       (21 to 26).grouped(2).foreach { g =>
         EventsTable.append(rows(g.head to g.last).toDF("time_us", "did", "collection"), table)
       }
