@@ -3,7 +3,6 @@ package graft.ingest
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.store.EventsTable
@@ -18,8 +17,9 @@ import graft.store.EventsTable
   * (reference: cursor write every 5 s, persist.go:41-63; here: the
   * Structured Streaming offset/commit log at `checkpointDir`), and the
   * sequencer high-water mark is recovered from the table itself on
-  * restart (`max(time_us)`), reproducing the reference's
-  * read-cursor-then-resume startup (cmd/jetstream/main.go:280-297).
+  * restart (`max(time_us)`, [[EventsTable.resumeState]]), reproducing
+  * the reference's read-cursor-then-resume startup
+  * (cmd/jetstream/main.go:280-297).
   */
 object IngestJob {
 
@@ -29,12 +29,6 @@ object IngestJob {
     */
   def resolveStartCursor(overrideUs: Option[Long], storedUs: Option[Long]): Option[Long] =
     overrideUs.filter(_ >= 0).orElse(storedUs.filter(_ >= 0))
-
-  /** Recover the sequencer position from the persisted log. */
-  def recoverMaxTimeUs(events: DataFrame): Long = {
-    val row = events.agg(max(col("time_us"))).head()
-    if (row.isNullAt(0)) 0L else row.getLong(0)
-  }
 
   /** Default batch size above which sequencing switches to the
     * no-serial-stage [[Sequencer.stampScalable]]: ~2M rows is where a
@@ -81,21 +75,25 @@ object IngestJob {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // decode once: the count materializes the decoded batch, and the
-        // stamp reads that copy; the write and the commit listeners then
-        // share one computation of the stamped rows (EventsTable.append)
+        // two jobs per batch: the count builds the decoded batch's cache
+        // and counts it in one stage (no aggregate, so no exchange); the
+        // write stamps from that copy and collects what it writes for
+        // the commit listeners (EventsTable.append)
         val frames = batch.persist()
         try {
-          val n = frames.count()
+          val n = frames.queryExecution.toRdd.count()
+          // the window stamp over one partition needs no exchange; ties
+          // still take partition order, then row order
           val seq =
             if (n >= scalableThresholdRows)
               Sequencer.stampScalable(frames, orderCols, hwm.get(), nowUs, rows = n)
-            else Sequencer.stamp(frames, orderCols, hwm.get(), nowUs, rows = n)
-          // sequenced counts every stamped batch — including replayed
-          // duplicates the hwm guard below skips — so the sequenced-vs-
-          // persisted gap is observable (consumer.go:79-81's two counters)
-          if (n > 0) sequenced.add(n.toDouble)
-          if (seq.maxTimeUs > hwm.get()) {
+            else Sequencer.stamp(frames.coalesce(1), orderCols, hwm.get(), nowUs, rows = n)
+          // every non-empty batch is stamped past the hwm and appended, a
+          // re-delivered one again (at-least-once, as the reference): the
+          // sequenced and persisted counters (consumer.go:79-81) differ
+          // only when an append throws
+          if (n > 0) {
+            sequenced.add(n.toDouble)
             // 0 = auto: small live triggers stay one-file-per-hour; big
             // batches fan the write out across time-contiguous shards
             // (prefix closure holds either way — EventsTable.append doc).
@@ -104,8 +102,8 @@ object IngestJob {
             // stores; the manifest commit moves the boundary off the
             // listing entirely (EventsTable.appendManifested doc)
             val shards = if (appendShards > 0) appendShards else EventsTable.autoShards(n)
-            if (manifestCommits) EventsTable.appendManifested(seq.df, tablePath, shards)
-            else EventsTable.append(seq.df, tablePath, shards)
+            if (manifestCommits) EventsTable.appendManifested(seq.df, tablePath, shards, rows = n)
+            else EventsTable.append(seq.df, tablePath, shards, rows = n)
             persisted.add(n.toDouble)
             hwm.set(seq.maxTimeUs)
             lastSeq.set(seq.maxTimeUs.toDouble)

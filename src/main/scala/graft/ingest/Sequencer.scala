@@ -16,10 +16,13 @@ import org.apache.spark.sql.functions._
   * stamp `time_us = base + row_number - 1` where
   * `base = max(prevMax + 1, wallClockUs)` — the same
   * max(last+1, now) rule as clock.go:45-53, applied batch-wise. The
-  * unpartitioned row_number is a deliberate single-task stage, exactly
-  * the bottleneck the reference accepted; everything before and after it
-  * is fully parallel. `prevMax` is carried across batches by the caller
-  * (checkpointed in streaming, see IngestJob).
+  * row_number over the whole batch is a deliberate single-task stage,
+  * exactly the bottleneck the reference accepted; everything before and
+  * after it is fully parallel. Over a one-partition input that task
+  * needs no exchange (the ingest stamps its persisted batch coalesced to
+  * one partition); a partitioned input is gathered into it by a shuffle.
+  * `prevMax` is carried across batches by the caller (checkpointed in
+  * streaming, see IngestJob).
   */
 object Sequencer {
 
@@ -33,7 +36,7 @@ object Sequencer {
     * function of the batch as it is partitioned: stamp a materialized
     * batch once, and read its rows from one computation (IngestJob
     * persists the decoded batch; [[graft.store.EventsTable.append]]
-    * writes and hands on one computation of the stamped rows).
+    * hands the commit listeners the rows its write computed).
     * `nowUs` is injectable for tests.
     */
   def stamp(

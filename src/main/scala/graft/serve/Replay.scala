@@ -21,18 +21,6 @@ object Replay {
   /** 1 s — replay considered "caught up" within half this (server.go:60,322). */
   val CutoverThresholdUs: Long = 1000000L
 
-  final case class CutoverPlan(replayFromUs: Long, replayUntilUs: Long, liveFromUs: Long)
-
-  /** Decide the backfill/live boundary given the live head position:
-    * replay covers [cursor, head]; live takes over for (head, ∞); the
-    * subscriber's hwm advances to the replay tail so overlap dedups
-    * (server.go:131-134). Future cursor ⇒ no replay, straight to live
-    * (server.go:283-286).
-    */
-  def plan(cursorUs: Long, liveHeadUs: Long): CutoverPlan =
-    if (cursorUs > liveHeadUs) CutoverPlan(liveHeadUs + 1, liveHeadUs, liveHeadUs)
-    else CutoverPlan(cursorUs, liveHeadUs, liveHeadUs)
-
   /** Has replay caught up enough to cut over? (server.go:322) */
   def caughtUp(replayTailUs: Long, liveHeadUs: Long): Boolean =
     replayTailUs > liveHeadUs - CutoverThresholdUs / 2
@@ -41,22 +29,11 @@ object Replay {
     * the cursor, in order (reference: playback limiter at 10× the
     * 5,000 ev/s sub rate, persist.go:147-149 + server.go:307; the
     * reference's replay loop is exactly repeated calls of this with the
-    * returned next-cursor, server.go:305-337). Ingest-side caps are the
-    * streaming source options (`maxFilesPerTrigger` /
-    * `maxOffsetsPerTrigger`) set by the IngestJob caller; per-consumer
-    * egress pacing beyond this stays in the serving layer (SURVEY §4:
-    * not a Catalyst concept).
+    * returned next-cursor, server.go:305-337). Per-consumer egress
+    * pacing beyond this stays in the serving layer (SURVEY §4: not a
+    * Catalyst concept).
     */
   def replayChunk(spark: SparkSession, path: String, cursorUs: Long,
       maxEvents: Int): DataFrame =
     graft.store.EventsTable.replay(spark, path, cursorUs).limit(maxEvents)
-
-  /** Next cursor after a replay chunk: max(time_us)+1, or the original
-    * cursor when the chunk was empty (persist.go:199-203).
-    */
-  def nextCursor(chunk: DataFrame, cursorUs: Long): Long = {
-    val row = chunk.agg(org.apache.spark.sql.functions.max(
-      org.apache.spark.sql.functions.col("time_us"))).head()
-    if (row.isNullAt(0)) cursorUs else row.getLong(0) + 1
-  }
 }

@@ -247,8 +247,8 @@ object SocketServe extends org.apache.spark.internal.Logging {
 
   /** A committed batch's live frames, time-sorted: the rows the commit
     * made visible, serialized once and collected with their routing
-    * columns — ONE Spark job per commit and edge, at any subscriber
-    * count, and no read of the table.
+    * columns, at any subscriber count and with no read of the table.
+    * Over the driver-local rows a commit hands on this runs no Spark job.
     */
   private[serve] def wireCommitted(key: String, rows: DataFrame): Array[Subscribe.WireFrame] = {
     beforeWire(key)
@@ -579,6 +579,9 @@ object SocketServe extends org.apache.spark.internal.Logging {
       else {
         val wired =
           try {
+            // a commit over the driver budget hands on its plan, not its rows
+            if (!rows.isLocal)
+              throw new IllegalStateException("the commit's rows exceed the driver budget")
             val frames = wireCommitted(key, rows)
             // driver heap of the commit's frames: each frame's object
             // and routing strings plus its wire JSON's UTF-16 chars (at

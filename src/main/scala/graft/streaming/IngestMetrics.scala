@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener.{
   QueryIdleEvent, QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
@@ -26,6 +27,8 @@ import graft.serve.Metrics
   *     the micro-batch phases `getBatch`, `queryPlanning`, `addBatch`
   *     (decode, sequence, append and the commit hand-off) and
   *     `walCommit`, from the progress's `durationMs`
+  *   - `graft_consumer_batch_jobs{query}` histogram of the Spark jobs
+  *     each micro-batch ran ([[jobsListener]], a SparkListener)
   *   - `graft_consumer_last_seq{query}`                 (metrics.go:24-27)
   *   - `graft_consumer_last_evt_processed_at{query}`    (metrics.go:29-32)
   *   - `graft_consumer_last_evt_created_at{query}`      (metrics.go:34-37)
@@ -42,6 +45,36 @@ object IngestMetrics {
 
   /** The micro-batch phases exported per batch. */
   val BatchPhases: Seq[String] = Seq("getBatch", "queryPlanning", "addBatch", "walCommit")
+
+  /** Buckets of `graft_consumer_batch_jobs`: a count per job up to 8. */
+  val JobBuckets: Array[Double] = Array(1d, 2d, 3d, 4d, 5d, 6d, 7d, 8d, 12d, 16d)
+
+  /** The Spark jobs each micro-batch ran, by query: counted per
+    * (query id, batch id) from the local properties the stream sets on
+    * its jobs, and folded into `graft_consumer_batch_jobs{query}` on
+    * that batch's progress event. The progress event reaches a
+    * SparkListener through the same queue as the batch's job starts,
+    * after them. Attach with `spark.sparkContext.addSparkListener`.
+    */
+  def jobsListener(registry: Metrics.Registry = Metrics.default): SparkListener =
+    new SparkListener {
+      // touched only by this listener's queue thread
+      private val jobs = scala.collection.mutable.HashMap.empty[(String, String), Int]
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        for (p <- Option(e.properties); q <- Option(p.getProperty("sql.streaming.queryId"));
+             b <- Option(p.getProperty("streaming.sql.batchId")))
+          jobs((q, b)) = jobs.getOrElse((q, b), 0) + 1
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case e: QueryProgressEvent =>
+          val p = e.progress
+          val n = jobs.remove((p.id.toString, p.batchId.toString)).getOrElse(0)
+          registry.histogram("graft_consumer_batch_jobs", "Spark jobs per micro-batch",
+            JobBuckets, "query" -> Option(p.name).getOrElse(p.id.toString)).observe(n.toDouble)
+        case e: QueryTerminatedEvent =>
+          jobs.keys.filter(_._1 == e.id.toString).foreach(jobs.remove)
+        case _ => ()
+      }
+    }
 
   /** Build the listener. Attach with
     * `spark.streams.addListener(IngestMetrics.listener(registry))`;

@@ -112,6 +112,7 @@ object Service {
       val watchdog: Watchdog,
       spark: SparkSession,
       listeners: Seq[org.apache.spark.sql.streaming.StreamingQueryListener],
+      jobsListener: org.apache.spark.scheduler.SparkListener,
       maintenance: java.util.concurrent.ScheduledExecutorService) {
     def servePort: Int = server.port
     def metricsPort: Int = metricsEndpoint.port
@@ -122,6 +123,7 @@ object Service {
       catch { case _: Throwable => () }
       listeners.foreach(l =>
         try spark.streams.removeListener(l) catch { case _: Throwable => () })
+      spark.sparkContext.removeSparkListener(jobsListener)
       metricsEndpoint.close()
     }
   }
@@ -139,8 +141,10 @@ object Service {
 
     // observability first, so the ingest's very first progress lands
     val ingestListener = IngestMetrics.listener(registry)
+    val jobsListener = IngestMetrics.jobsListener(registry)
     val watchdog = new Watchdog()
     spark.streams.addListener(ingestListener)
+    spark.sparkContext.addSparkListener(jobsListener)
     spark.streams.addListener(watchdog)
     val metricsEndpoint = Metrics.serve(registry, config.metricsPort)
 
@@ -217,7 +221,7 @@ object Service {
       java.util.concurrent.TimeUnit.MILLISECONDS)
 
     new Running(ingest, server, metricsEndpoint, watchdog, spark,
-      Seq(ingestListener, watchdog), maintenance)
+      Seq(ingestListener, watchdog), jobsListener, maintenance)
   }
 
   private def parseArgs(args: Array[String]): Config =

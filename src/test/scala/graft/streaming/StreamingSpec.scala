@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -13,6 +14,12 @@ import graft.store.EventsTable
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Recover the sequencer position from the persisted log. */
+  def recoverMaxTimeUs(events: DataFrame): Long = {
+    val row = events.agg(max(col("time_us"))).head()
+    if (row.isNullAt(0)) 0L else row.getLong(0)
+  }
 
   final case class Raw(arrival: Long, did: String, collection: String)
 
@@ -34,7 +41,7 @@ class StreamingSpec extends SparkSpec {
     // restart: recover hwm from the table (reference cursor-resume), new data
     val in2 = MemoryStream[Raw]
     in2.addData((51 to 80).map(i => Raw(i.toLong, s"did${i % 3}", "app.c")))
-    val recovered = IngestJob.recoverMaxTimeUs(EventsTable.read(spark, table))
+    val recovered = recoverMaxTimeUs(EventsTable.read(spark, table))
     assert(recovered == 1000049L)
     val q2 = IngestJob.start(in2.toDF(), Seq("arrival"), table, tmpDir("ingest-ckpt2"),
       prevMaxUs = recovered, nowUs = () => 500L) // stuck clock → prevMax+1 path

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
@@ -16,6 +17,15 @@ class WatchdogSpec extends SparkSpec {
       Thread.sleep(100)
     }
     cond
+  }
+
+  /** Next cursor after a replay chunk: max(time_us)+1, or the original
+    * cursor when the chunk was empty (persist.go:199-203).
+    */
+  def nextCursor(chunk: DataFrame, cursorUs: Long): Long = {
+    val row = chunk.agg(org.apache.spark.sql.functions.max(
+      org.apache.spark.sql.functions.col("time_us"))).head()
+    if (row.isNullAt(0)) cursorUs else row.getLong(0) + 1
   }
 
   test("watchdog tracks progress and flags staleness (main.go:184-214)") {
@@ -93,7 +103,7 @@ class WatchdogSpec extends SparkSpec {
       val n = chunk.count()
       if (n == 0) rounds = 20
       else {
-        val next = Replay.nextCursor(chunk, cursor)
+        val next = nextCursor(chunk, cursor)
         assert(next > cursor)
         cursor = next
         total += n
