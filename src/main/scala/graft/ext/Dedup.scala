@@ -123,60 +123,6 @@ object Dedup {
       k: Int = 16, bands: Int = 4, shingleN: Int = 3): DataFrame =
     lshPairsFromShingles(hashedShingles(df, idCol, textCol, shingleN), idCol, k, bands)
 
-  /** Corpus-size-aware banding knobs (VERDICT r14 #3, the
-    * [[Similarity.planesFor]] precedent): at FIXED (k, bands) the
-    * banding false-positive term is ~n² · b · p^r for background
-    * pair similarity p — measured on the fixture family as candidates
-    * growing 34× per 10.4× rows while true edges stayed linear. The
-    * cure is the S-curve, not the verifier's budget: hold the banding
-    * threshold t* = (1/b)^(1/r) at the caller's `threshold` while
-    * GROWING rows-per-band logarithmically with the corpus,
-    *
-    *   r(n) = 4 + log₂(n / 1000)   (clamped to [4, 12]),
-    *   b(r) = ⌈t^(−r)⌉             (solves (1/b)^(1/r) ≈ t),
-    *
-    * so each corpus doubling multiplies the per-pair collision odds by
-    * p: total FP ∝ n^(2+log₂ p) — sublinear for any p < ½, i.e. the
-    * candidate stream stays ~linear instead of quadratic. Banding
-    * stays recall-only (the verifier computes exact Jaccard), so
-    * steeper curves can only shrink the candidate stream; at the
-    * anchor J = t recall is the usual 1−(1−1/b)^b ≈ 0.63 shoulder and
-    * rises steeply above it, same as the fixed-knob curve. The r-cap
-    * bounds signature width (k = r·b ≤ ~132 min-aggregates at t=0.8);
-    * past it (n ≳ 10⁶ docs per partition-family) FP growth resumes at
-    * the fixed-knob exponent — raise the cap if the verify stage, not
-    * the shuffle, becomes the bottleneck.
-    */
-  def bandingFor(n: Long, threshold: Double = 0.8): (Int, Int) = {
-    require(threshold > 0.0 && threshold < 1.0, "threshold in (0, 1)")
-    val r = math.max(4, math.min(12,
-      4 + math.round(math.log(math.max(1.0, n / 1000.0)) / math.log(2.0)).toInt))
-    val b = math.max(2, math.ceil(math.pow(threshold, -r.toDouble)).toInt)
-    (r * b, b)
-  }
-
-  /** [[minhashLshPairs]] with (k, bands) derived from the actual corpus
-    * count via [[bandingFor]] — one count() job, then the same
-    * pipeline. The fixed-knob form stays for oracle-reproducible
-    * queries (the knobs are part of the result's semantics).
-    */
-  def minhashLshPairsAuto(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, shingleN: Int = 3): DataFrame = {
-    val (k, bands) = bandingFor(df.count(), threshold)
-    minhashLshPairs(df, idCol, textCol, k, bands, shingleN)
-  }
-
-  /** [[verifyCandidates]] with auto-sized banding ([[bandingFor]]):
-    * the production near-dup entry point when the corpus size isn't
-    * statically known. Verified output is exact-Jaccard-gated either
-    * way; only the candidate volume differs.
-    */
-  def verifyCandidatesAuto(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, shingleN: Int = 3): DataFrame = {
-    val (k, bands) = bandingFor(df.count(), threshold)
-    verifyCandidates(df, idCol, textCol, threshold, k, bands, shingleN)
-  }
-
   /** [[minhashLshPairs]] over an already-hashed shingle set (id, h) —
     * the shared-subtree form: callers that also verify ([[verifyCandidates]])
     * pass the SAME shingle DataFrame to both stages, so the shingle

@@ -114,7 +114,6 @@ object ExtQueries {
     * instead of n² pairs — and still oracle-exact since the buckets are
     * md5-deterministic). The fixture embeddings have no planted
     * near-dups, so the threshold sits in the similarity tail.
-    * [[Similarity.cosinePairs]] is the exhaustive-verifier variant.
     */
   def dedupEmbedCosine(spark: SparkSession, dir: String): DataFrame =
     Similarity.lshCosinePairs(Tables.embeddings(spark, dir), "vec_id", "embedding",
@@ -959,9 +958,8 @@ object ExtQueries {
 
   // ---------------------------------------------------------- multimodal
 
-  /** Multimodal metadata plumbing over an opaque payload column (the
-    * binary-decode stage itself is [[Multimodal.decodeFeatures]], spec'd
-    * separately — codecs are stubbed in this environment).
+  /** Multimodal metadata plumbing over an opaque payload column: byte
+    * length, digest and head, one narrow projection (no pixel decode).
     */
   def multimodalMeta(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)

@@ -4,21 +4,18 @@ import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing (build brief): image/audio/video payloads
-  * as opaque `binary` columns with typed metadata, plus feature-extract /
-  * resize / frame-sample stages. Container HEADER parsing (PNG/GIF/JPEG/
-  * BMP dims, EXIF orientation, WAV, MP4) and PIXEL decoding (PNG incl.
-  * Adam7 via zlib-inflate + unfilter, BMP, GIF incl. full LZW, baseline
-  * JPEG incl. full Huffman+IDCT entropy decode, sequential and
-  * progressive — see [[PixelCodec]] / [[JpegCodec]]) are REAL,
-  * pure-JDK implementations of the public formats. The only remaining
-  * stub is video sample decode: those payloads fall back to the
-  * deterministic digest stubs, stated per method.
+  * as opaque `binary` columns with typed metadata, plus the pre-decode
+  * chunking stage. Container HEADER parsing (PNG/GIF/JPEG/BMP dims,
+  * WAV, MP4) is a REAL, pure-JDK implementation of the public formats,
+  * and the synthetic payload builders write valid containers for the
+  * oracle queries to parse back. Pixel and video-sample decoding are
+  * not part of the shipped surface: no query reads pixels.
   *
   * Scale notes: binary payloads never shuffle — metadata extraction is a
-  * narrow projection, and downstream joins/aggregations use the digest or
-  * the (small) feature vector. Decode runs in `mapPartitions` over
-  * batched rows (amortizing codec state per partition, exactly like a
-  * Pandas-UDF batch on the PySpark side).
+  * narrow projection, and downstream joins/aggregations use the parsed
+  * columns. Header parsing runs in `mapPartitions` over batched rows
+  * (amortizing parser state per partition, exactly like a Pandas-UDF
+  * batch on the PySpark side).
   */
 object Multimodal {
 
@@ -44,14 +41,6 @@ object Multimodal {
         length(col("__c")).cast("long").as("chunk_len"),
         md5(col("__c")).as("chunk_md5"))
   }
-
-  /** Typed metadata over an opaque binary column: byte length, digest,
-    * magic-prefix hex. Pure projection — codegen'd, no shuffle.
-    */
-  def withMetadata(df: DataFrame, binCol: String): DataFrame =
-    df.withColumn("n_bytes", octet_length(col(binCol)).cast("long"))
-      .withColumn("content_digest", md5(col(binCol)))
-      .withColumn("magic", hex(expr(s"substring($binCol, 1, 4)")))
 
   /** REAL image-container header parsing — dimensions straight off the
     * magic bytes, no codec library: PNG (signature + IHDR chunk), GIF
@@ -110,73 +99,10 @@ object Multimodal {
     } else None
   }
 
-  /** EXIF Orientation (IFD0 tag 0x0112) from a JPEG's APP1 segment —
-    * the one EXIF field a resize/feature pipeline must honor: a
-    * camera-rotated capture stores the sensor's dims plus orientation
-    * 5-8 (transpose family), so downstream crops/resizes that ignore it
-    * work on sideways images. Pure public-spec parsing: segment walk to
-    * APP1 `Exif\0\0`, TIFF header (II little / MM big endian, magic 42),
-    * IFD0 entry scan. Returns the raw 1-8 value; None when the payload
-    * is not a JPEG, carries no EXIF, omits the tag, or is malformed —
-    * never a throw.
-    */
-  def parseExifOrientation(bytes: Array[Byte]): Option[Int] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def be16(i: Int) = u8(i) << 8 | u8(i + 1)
-    if (bytes.length < 4 || u8(0) != 0xff || u8(1) != 0xd8) return None
-    var i = 2
-    while (i + 3 < bytes.length) {
-      if (u8(i) != 0xff) return None
-      var m = i + 1
-      while (u8(m) == 0xff && m + 1 < bytes.length) m += 1 // fill bytes
-      val marker = u8(m)
-      if (marker >= 0xd0 && marker <= 0xd9) i = m + 1 // standalone RSTn/EOI
-      else if (marker == 0xda) return None // entropy stream: EXIF sits before SOS
-      else if (m + 2 >= bytes.length) return None
-      else {
-        val segLen = be16(m + 1)
-        if (segLen < 2) return None
-        if (marker == 0xe1 && segLen >= 16 && m + 1 + segLen <= bytes.length &&
-            u8(m + 3) == 'E' && u8(m + 4) == 'x' && u8(m + 5) == 'i' &&
-            u8(m + 6) == 'f' && u8(m + 7) == 0 && u8(m + 8) == 0) {
-          val t = m + 9 // TIFF header
-          val end = m + 1 + segLen // APP1 payload bound: offsets must stay inside
-          val little = u8(t) == 'I' && u8(t + 1) == 'I'
-          val big = u8(t) == 'M' && u8(t + 1) == 'M'
-          if (!little && !big) return None
-          def u16(p: Int) = if (little) u8(p) | u8(p + 1) << 8 else be16(p)
-          def u32(p: Int): Long =
-            if (little) (u8(p) | u8(p + 1) << 8 | u8(p + 2) << 16).toLong | (u8(p + 3).toLong << 24)
-            else (u8(p).toLong << 24) | (u8(p + 1) << 16 | u8(p + 2) << 8 | u8(p + 3)).toLong
-          if (u16(t + 2) != 42) return None
-          val ifdOff = u32(t + 4)
-          if (ifdOff < 8 || t + ifdOff + 2 > end) return None
-          val ifd = t + ifdOff.toInt
-          val n = u16(ifd)
-          var e = 0
-          while (e < n) {
-            val p = ifd + 2 + e * 12
-            if (p + 12 > end) return None
-            // tag 0x0112, type 3 (SHORT), count 1: value inline at +8
-            if (u16(p) == 0x0112 && u16(p + 2) == 3 && u32(p + 4) == 1L) {
-              val v = u16(p + 8)
-              return if (v >= 1 && v <= 8) Some(v) else None
-            }
-            e += 1
-          }
-          return None
-        }
-        i = m + 1 + segLen
-      }
-    }
-    None
-  }
-
   /** Batched per-partition header decode over an opaque binary column:
     * adds `img_format` / `width` / `height` (null for unrecognized
-    * payloads). Same codec-per-partition shape as [[decodeFeatures]],
-    * but the parser behind it is REAL ([[parseImageDims]]) — binary
-    * stays row-local, nothing shuffles.
+    * payloads). The parser behind it is REAL ([[parseImageDims]]) —
+    * binary stays row-local, nothing shuffles.
     */
   def withImageDims(df: DataFrame, binCol: String): DataFrame = {
     import org.apache.spark.sql.types._
@@ -486,434 +412,5 @@ object Multimodal {
       be32(trakSize.toLong); fourcc("trak"); tkhd(2 + i, 0, 0)
     }
     out.toByteArray
-  }
-
-  /** MJPEG-in-AVI sample extraction — the REAL video-sample path
-    * (reference: n/a — jetstream has no media pipeline; container
-    * layout per the public RIFF/AVI spec): walks the RIFF chunk tree
-    * lazily and yields each video sample chunk's payload (`##dc` /
-    * `##db`, compressed/uncompressed DIB ids — MJPEG files carry one
-    * JPEG per `dc` chunk), descending into the `movi` LIST and its
-    * nested `rec ` groups. Returns None unless the payload is a
-    * RIFF/AVI container; corrupt sizes end the walk at that nesting
-    * level instead of throwing (same posture as [[parseMp4Meta]]).
-    */
-  private[ext] def aviVideoSamples(bytes: Array[Byte]): Option[Iterator[Array[Byte]]] = {
-    def ascii(off: Int) = new String(bytes, off, 4, "US-ASCII")
-    def le32(off: Int): Long =
-      (bytes(off) & 0xffL) | (bytes(off + 1) & 0xffL) << 8 |
-        (bytes(off + 2) & 0xffL) << 16 | (bytes(off + 3) & 0xffL) << 24
-    if (bytes == null || bytes.length < 12 || ascii(0) != "RIFF" || ascii(8) != "AVI ")
-      None
-    else Some(new Iterator[Array[Byte]] {
-      // (cursor, end, insideMovi) per open nesting level
-      private var stack = List((12, bytes.length, false))
-      private var staged: Array[Byte] = null
-      @annotation.tailrec
-      private def advance(): Unit =
-        if (staged == null && stack.nonEmpty) {
-          val (off, end, inMovi) = stack.head
-          if (off + 8 > end) stack = stack.tail
-          else {
-            val id = ascii(off)
-            val size = le32(off + 4)
-            val dataOff = off + 8
-            if (size > end - dataOff) stack = stack.tail // corrupt: stop level
-            else {
-              val dataEnd = dataOff + size.toInt
-              stack = (dataEnd + (size.toInt & 1), end, inMovi) :: stack.tail
-              if (id == "LIST" && size >= 4) {
-                val listType = ascii(dataOff)
-                if (listType == "movi" || (inMovi && listType == "rec "))
-                  stack = (dataOff + 4, dataEnd, true) :: stack
-              } else if (inMovi && size > 0 &&
-                  (id.endsWith("dc") || id.endsWith("db")))
-                staged = java.util.Arrays.copyOfRange(bytes, dataOff, dataEnd)
-            }
-          }
-          advance()
-        }
-      def hasNext: Boolean = { advance(); staged != null }
-      def next(): Array[Byte] = {
-        if (!hasNext) throw new NoSuchElementException("no more AVI samples")
-        val s = staged; staged = null; s
-      }
-    })
-  }
-
-  /** The first `vids` stream's `strf` payload (BITMAPINFOHEADER +
-    * palette) from the `hdrl` LIST — required to decode `##db`/`##dc`
-    * DIB samples, which carry raw pixel bits with no self-describing
-    * header (the MJPEG case is self-describing: each sample is a whole
-    * JPEG). Walks RIFF → LIST hdrl → LIST strl; within a strl, `strh`'s
-    * fccType (first 4 bytes of its payload) tags the stream type and
-    * the following `strf` is its format. Corrupt sizes end that nesting
-    * level; never throws.
-    */
-  private[ext] def aviVideoFormat(bytes: Array[Byte]): Option[Array[Byte]] = {
-    def ascii(off: Int) = new String(bytes, off, 4, "US-ASCII")
-    def le32(off: Int): Long =
-      (bytes(off) & 0xffL) | (bytes(off + 1) & 0xffL) << 8 |
-        (bytes(off + 2) & 0xffL) << 16 | (bytes(off + 3) & 0xffL) << 24
-    if (bytes == null || bytes.length < 12 || ascii(0) != "RIFF" || ascii(8) != "AVI ")
-      return None
-    var found: Option[Array[Byte]] = None
-    def walkLevel(from: Int, end: Int, inStrl: Boolean): Unit = {
-      var off = from
-      var vids = false // last strh at THIS level was a video stream
-      while (found.isEmpty && off + 8 <= end) {
-        val id = ascii(off)
-        val size = le32(off + 4)
-        val dataOff = off + 8
-        if (size > end - dataOff) return // corrupt: stop this level
-        val dataEnd = dataOff + size.toInt
-        if (id == "LIST" && size >= 4) {
-          val lt = ascii(dataOff)
-          if (lt == "hdrl" || lt == "strl")
-            walkLevel(dataOff + 4, dataEnd, inStrl = lt == "strl")
-        } else if (inStrl && id == "strh" && size >= 4)
-          vids = ascii(dataOff) == "vids"
-        else if (inStrl && id == "strf" && vids && size >= 40)
-          found = Some(java.util.Arrays.copyOfRange(bytes, dataOff, dataEnd))
-        off = dataEnd + (size.toInt & 1)
-      }
-    }
-    walkLevel(12, bytes.length, inStrl = false)
-    found
-  }
-
-  /** Decode one AVI video sample: MJPEG samples are self-describing
-    * JPEGs (any still codec here may match); DIB samples need the
-    * stream's `strf` header ([[PixelCodec.decodeDib]] — BI_RGB 24-bit
-    * and BI_RLE8).
-    */
-  private def decodeAviSample(fmt: Option[Array[Byte]],
-      sample: Array[Byte]): Option[PixelCodec.RgbImage] =
-    PixelCodec.decodeImage(sample)
-      .orElse(fmt.flatMap(f => PixelCodec.decodeDib(f, sample)))
-
-  /** MJPEG-in-MP4 sample extraction: finds the first track whose
-    * `stsd` sample description is `jpeg` (QuickTime/BMFF motion-JPEG —
-    * every sample is a standalone baseline JPEG) and yields sample
-    * payloads by walking the `stbl` sample tables: `stsz` sizes,
-    * `stsc` sample-to-chunk runs, `stco`/`co64` chunk offsets (absolute
-    * file offsets into `mdat`). Returns None for non-BMFF payloads or
-    * when no jpeg track exists; corrupt or out-of-range tables end the
-    * iteration early instead of throwing.
-    */
-  private[ext] def mp4VideoSamples(bytes: Array[Byte]): Option[Iterator[Array[Byte]]] = {
-    def u8(i: Int) = bytes(i) & 0xff
-    def be32(i: Int): Long = (u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    def be64(i: Int): Long = (be32(i) << 32) | be32(i + 4)
-    def ascii(from: Int, until: Int) = new String(bytes.slice(from, until), "US-ASCII")
-    def walk(from: Int, until: Int)(f: (String, Int, Int) => Unit): Unit = {
-      var i = from
-      var ok = true
-      while (ok && i + 8 <= until) {
-        val size32 = be32(i)
-        val typ = ascii(i + 4, i + 8)
-        var hdr = 8L
-        val boxSize =
-          if (size32 == 1L) { hdr = 16L; if (i + 16 <= until) be64(i + 8) else -1L }
-          else if (size32 == 0L) (until - i).toLong
-          else size32
-        if (boxSize < hdr || i + boxSize > until) ok = false
-        else { f(typ, i + hdr.toInt, i + boxSize.toInt); i += boxSize.toInt }
-      }
-    }
-    if (bytes == null || bytes.length < 16 || ascii(4, 8) != "ftyp") return None
-    val MaxSamples = 1 << 20 // absurd-count guard on corrupt tables
-    var sizes: Array[Long] = null // per-sample; null with fixedSize > 0 = constant
-    var fixedSize = 0L
-    var nSamples = 0L
-    var chunkOffs: Array[Long] = null
-    var stscRuns: Array[(Long, Long)] = null // (first_chunk 1-based, samples_per_chunk)
-    var isJpeg = false
-    var captured = false
-    walk(0, bytes.length) {
-      case ("moov", ms, me) => walk(ms, me) {
-        case ("trak", ts, te) if !captured => walk(ts, te) {
-          case ("mdia", ds, de) => walk(ds, de) {
-            case ("minf", fs, fe) => walk(fs, fe) {
-              case ("stbl", bs, be) =>
-                var jpeg = false
-                var sz: Array[Long] = null; var fx = 0L; var n = 0L
-                var co: Array[Long] = null; var sc: Array[(Long, Long)] = null
-                walk(bs, be) {
-                  case ("stsd", s, e) =>
-                    // v/f(4) entry_count(4) then [size(4) fourcc(4) …]
-                    if (e - s >= 16) jpeg = ascii(s + 12, s + 16) == "jpeg"
-                  case ("stsz", s, e) if e - s >= 12 =>
-                    fx = be32(s + 4)
-                    n = math.min(be32(s + 8), MaxSamples)
-                    if (fx == 0L && e - s >= 12 + 4 * n)
-                      sz = Array.tabulate(n.toInt)(k => be32(s + 12 + 4 * k))
-                  case ("stsc", s, e) if e - s >= 8 =>
-                    val cnt = math.min(be32(s + 4), MaxSamples)
-                    if (e - s >= 8 + 12 * cnt)
-                      sc = Array.tabulate(cnt.toInt)(k =>
-                        (be32(s + 8 + 12 * k), be32(s + 12 + 12 * k)))
-                  case ("stco", s, e) if e - s >= 8 =>
-                    val cnt = math.min(be32(s + 4), MaxSamples)
-                    if (e - s >= 8 + 4 * cnt)
-                      co = Array.tabulate(cnt.toInt)(k => be32(s + 8 + 4 * k))
-                  case ("co64", s, e) if e - s >= 8 =>
-                    val cnt = math.min(be32(s + 4), MaxSamples)
-                    if (e - s >= 8 + 8 * cnt)
-                      co = Array.tabulate(cnt.toInt)(k => be64(s + 8 + 8 * k))
-                  case _ =>
-                }
-                if (jpeg && n > 0 && co != null && sc != null &&
-                    (sz != null || fx > 0L)) {
-                  isJpeg = true; captured = true
-                  sizes = sz; fixedSize = fx; nSamples = n
-                  chunkOffs = co; stscRuns = sc
-                }
-              case _ =>
-            }
-            case _ =>
-          }
-          case _ =>
-        }
-        case _ =>
-      }
-      case _ =>
-    }
-    if (!isJpeg) None
-    else Some(new Iterator[Array[Byte]] {
-      private var sample = 0 // 0-based global sample index
-      private var chunk = 0 // 0-based chunk index
-      private var inChunk = 0 // sample index within chunk
-      private var offset: Long = if (chunkOffs.nonEmpty) chunkOffs(0) else -1L
-      private def samplesPerChunk(c: Int): Long = {
-        // stsc runs: last run whose first_chunk (1-based) <= c+1
-        var spc = 1L
-        var k = 0
-        while (k < stscRuns.length && stscRuns(k)._1 <= c + 1) {
-          spc = stscRuns(k)._2; k += 1
-        }
-        spc
-      }
-      private def sizeOf(s: Int): Long = if (sizes != null) sizes(s) else fixedSize
-      private def inRange: Boolean = {
-        if (sample >= nSamples || chunk >= chunkOffs.length || offset < 0) false
-        else {
-          val sz = sizeOf(sample)
-          sz > 0 && offset + sz <= bytes.length
-        }
-      }
-      def hasNext: Boolean = inRange
-      def next(): Array[Byte] = {
-        if (!hasNext) throw new NoSuchElementException("no more MP4 samples")
-        val sz = sizeOf(sample).toInt
-        val out = java.util.Arrays.copyOfRange(bytes, offset.toInt, offset.toInt + sz)
-        sample += 1; inChunk += 1; offset += sz
-        if (inChunk >= samplesPerChunk(chunk)) {
-          chunk += 1; inChunk = 0
-          offset = if (chunk < chunkOffs.length) chunkOffs(chunk) else -1L
-        }
-        out
-      }
-    })
-  }
-
-  /** Chained decode stages carry ONE `decoded` flag — the latest
-    * stage's. Appending a second column of the same name would make
-    * every downstream `col("decoded")` ambiguous and parquet writes
-    * fail; callers wanting the upstream stage's flag rename it before
-    * chaining.
-    */
-  private def dropDecoded(df: DataFrame): DataFrame =
-    if (df.columns.contains("decoded")) df.drop("decoded") else df
-
-  /** First rasterizable content of a payload: a still image
-    * (PNG/BMP/GIF/JPEG) directly, the first decodable video sample of
-    * an MJPEG / uncompressed-DIB / RLE8-DIB AVI, or the first sample of
-    * an MJPEG-in-MP4 `jpeg` track. None means no codec here can
-    * rasterize it — the callers' stub fallbacks apply, flagged
-    * `decoded = false`.
-    */
-  private def firstRaster(bytes: Array[Byte]): Option[PixelCodec.RgbImage] =
-    PixelCodec.decodeImage(bytes)
-      .orElse(aviVideoSamples(bytes).flatMap { samples =>
-        val fmt = aviVideoFormat(bytes)
-        samples.map(decodeAviSample(fmt, _)).collectFirst { case Some(img) => img }
-      })
-      .orElse(mp4VideoSamples(bytes).flatMap(samples =>
-        samples.map(PixelCodec.decodeImage).collectFirst { case Some(img) => img }))
-
-  /** Feature dimension of [[decodeFeatures]] (4×2 luma grid; the
-    * digest fallback emits the same width).
-    */
-  val StubDims = 8
-
-  /** FALLBACK — deterministic digest features for payloads no codec
-    * here can rasterize: derives `StubDims` floats from the content
-    * digest, always flagged `decoded = false` so a downstream pipeline
-    * can machine-distinguish them from real features at any scale.
-    * Recognized rasters — PNG/BMP/GIF/JPEG stills and MJPEG AVI
-    * samples — never reach this path, see [[decodeFeatures]].
-    */
-  private[ext] def stubFeatures(bytes: Array[Byte]): Array[Float] = {
-    val digest = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-    (0 until StubDims).map { i =>
-      // two digest bytes per dim → [-1, 1)
-      (((digest(2 * i) & 0xff) << 8 | (digest(2 * i + 1) & 0xff)) - 32768) / 32768.0f
-    }.toArray
-  }
-
-  /** Batched per-partition decode + feature extract — REAL for
-    * PNG/BMP/GIF/JPEG payloads ([[PixelCodec.decodeImage]] rasterizes
-    * the container: zlib inflate + unfilter / LZW / Huffman+IDCT incl.
-    * progressive) AND for MJPEG AVI video (first sample rasterized via
-    * [[aviVideoSamples]] + the JPEG codec); [[PixelCodec.pooledLuma]]
-    * grid-pools mean luminance into a `StubDims`-wide embedding. The
-    * remaining unrasterizable payloads fall back to [[stubFeatures]].
-    * Returns (passthrough columns..., features array<float>, decoded
-    * boolean) — `decoded = false` marks the digest fallback, so stub
-    * outputs are machine-distinguishable at runtime.
-    */
-  def decodeFeatures(df: DataFrame, binCol: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val in = dropDecoded(df) // chained ops REPLACE the flag, never duplicate it
-    val spark = in.sparkSession
-    val schema = StructType(in.schema.fields ++ Seq(
-      StructField("features", ArrayType(FloatType)),
-      StructField("decoded", BooleanType, nullable = false)))
-    val binIdx = in.schema.fieldIndex(binCol)
-    val rdd = in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        val (feats, decoded) = firstRaster(bytes) match {
-          case Some(img) => (PixelCodec.pooledLuma(img, 4, 2), true)
-          case None => (stubFeatures(bytes), false)
-        }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq ++ Seq(feats.toSeq, decoded))
-      }
-    }
-    spark.createDataFrame(rdd, schema)
-  }
-
-  /** FALLBACK — digest stand-in for resize of payloads no pure-JDK
-    * codec can rasterize; recognized rasters take the real path in
-    * [[resize]].
-    */
-  private[ext] def stubResize(bytes: Array[Byte], w: Int, h: Int): Array[Byte] =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(bytes ++ s"${w}x$h".getBytes("UTF-8"))
-
-  /** Image resize stage — REAL for PNG/BMP/GIF/JPEG stills and MJPEG
-    * AVI first samples: decode ([[firstRaster]]) → nearest-neighbor
-    * resample → PNG re-encode with real CRCs ([[PixelCodec.encodePng]]);
-    * the output binary decodes in any PNG reader. Unrasterizable
-    * payloads fall back to [[stubResize]], flagged `decoded = false`.
-    * Per-partition batched; row count unchanged; binary stays columnar
-    * and never shuffles.
-    */
-  def resize(df: DataFrame, binCol: String, width: Int, height: Int): DataFrame = {
-    import org.apache.spark.sql.types._
-    val in = dropDecoded(df) // chained ops REPLACE the flag, never duplicate it
-    val spark = in.sparkSession
-    val schema = StructType(in.schema.fields ++ Seq(
-      StructField("resized", BinaryType),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("decoded", BooleanType, nullable = false)))
-    val binIdx = in.schema.fieldIndex(binCol)
-    val rdd = in.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        val (resized, decoded) = firstRaster(bytes) match {
-          case Some(img) =>
-            (PixelCodec.encodePng(PixelCodec.resizeNearest(img, width, height)), true)
-          case None => (stubResize(bytes, width, height), false)
-        }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq ++ Seq(resized, width, height, decoded))
-      }
-    }
-    spark.createDataFrame(rdd, schema)
-  }
-
-  /** FALLBACK frame model for containers without a pure-JDK sample
-    * decoder (MP4 et al): frame count derived from payload length (one
-    * per 256 bytes, ≥1), frame bytes a digest of (payload, index),
-    * always flagged `decoded = false`. GIF and MJPEG AVI payloads
-    * never reach this — see [[frameSample]].
-    */
-  private[ext] def stubFrameCount(bytes: Array[Byte]): Int =
-    math.max(1, bytes.length / 256)
-
-  private[ext] def stubFrame(bytes: Array[Byte], idx: Int): Array[Byte] =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(bytes ++ s"frame:$idx".getBytes("UTF-8"))
-
-  /** Video frame sampling: one output row per kept frame — every
-    * `everyNth` frame up to `maxFrames` per video. REAL for animated
-    * GIF ([[PixelCodec.decodeGifFrames]] LZW-decodes and composites
-    * each frame, disposal + transparency honored), for MJPEG /
-    * uncompressed-DIB / RLE8-DIB AVI ([[aviVideoSamples]] walks the
-    * `movi` list; JPEG samples self-decode, DIB samples decode against
-    * the stream's `strf` header via [[PixelCodec.decodeDib]]), and for
-    * MJPEG-in-MP4 ([[mp4VideoSamples]] walks the `jpeg` track's sample
-    * tables); kept frames are re-encoded as standalone PNGs with
-    * `decoded = true`. Other containers use the digest fallback
-    * above, flagged `decoded = false`. The 1→N explode happens inside
-    * the per-partition iterator (lazily — no frame list materialized
-    * per video), which is the production demux shape: a container is
-    * opened once and frames stream out. Output adds (frame_idx int,
-    * frame binary, decoded boolean).
-    */
-  def frameSample(df: DataFrame, binCol: String,
-      everyNth: Int = 1, maxFrames: Int = Int.MaxValue): DataFrame = {
-    require(everyNth >= 1 && maxFrames >= 1)
-    import org.apache.spark.sql.types._
-    val in = dropDecoded(df) // chained ops REPLACE the flag, never duplicate it
-    val spark = in.sparkSession
-    val schema = StructType(in.schema.fields ++ Seq(
-      StructField("frame_idx", IntegerType, nullable = false),
-      StructField("frame", BinaryType),
-      StructField("decoded", BooleanType, nullable = false)))
-    val binIdx = in.schema.fieldIndex(binCol)
-    val rdd = in.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        def row(i: Int, frame: Array[Byte], decoded: Boolean) =
-          org.apache.spark.sql.Row.fromSeq(r.toSeq ++ Seq(i, frame, decoded))
-        PixelCodec.decodeGifFrames(bytes) match {
-          case Some(frames) =>
-            frames.iterator.zipWithIndex
-              .filter(_._2 % everyNth == 0).take(maxFrames).map { case (f, i) =>
-                row(i, PixelCodec.encodePng(f.image), decoded = true)
-              }
-          case None => aviVideoSamples(bytes) match {
-            case Some(samples) =>
-              val fmt = aviVideoFormat(bytes)
-              samples.zipWithIndex
-                .filter(_._2 % everyNth == 0).take(maxFrames).map { case (sample, i) =>
-                  decodeAviSample(fmt, sample) match {
-                    case Some(img) => row(i, PixelCodec.encodePng(img), decoded = true)
-                    // a corrupt sample inside a well-formed AVI: emit
-                    // the flagged digest stand-in, never silently real
-                    case None => row(i, stubFrame(bytes, i), decoded = false)
-                  }
-                }
-            case None => mp4VideoSamples(bytes) match {
-              case Some(samples) =>
-                samples.zipWithIndex
-                  .filter(_._2 % everyNth == 0).take(maxFrames).map { case (jpeg, i) =>
-                    PixelCodec.decodeImage(jpeg) match {
-                      case Some(img) => row(i, PixelCodec.encodePng(img), decoded = true)
-                      case None => row(i, stubFrame(bytes, i), decoded = false)
-                    }
-                  }
-              case None =>
-                (0 until stubFrameCount(bytes) by everyNth).iterator.take(maxFrames)
-                  .map(i => row(i, stubFrame(bytes, i), decoded = false))
-            }
-          }
-        }
-      }
-    }
-    spark.createDataFrame(rdd, schema)
   }
 }

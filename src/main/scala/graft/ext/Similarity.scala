@@ -98,33 +98,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** Embedding-cosine near-duplicate pairs: all (a < b) pairs with
-    * rounded cosine ≥ threshold. This is the EXACT form (the verifier);
-    * at corpus scale generate candidates with the LSH bucket join
-    * (`withBuckets` → self-join on bucket) and verify only those —
-    * same composition as Dedup.verifyCandidates.
-    */
-  def cosinePairs(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, digits: Int = 6): DataFrame = {
-    val e = df.select(col(idCol), col(vecCol).as("__v"))
-    val joined = e.select(col(idCol).as(s"${idCol}_a"), col("__v").as("va"))
-      .join(e.select(col(idCol).as(s"${idCol}_b"), col("__v").as("vb")),
-        col(s"${idCol}_a") < col(s"${idCol}_b"))
-    joined
-      .select(col(s"${idCol}_a"), col(s"${idCol}_b"),
-        pround(dot(col("va"), col("vb")) / (l2Norm(col("va")) * l2Norm(col("vb"))), digits)
-          .as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
-  /** Embedding-cosine near-dup pairs, LSH-bucketed (the scale form):
-    * candidates are same-bucket pairs under the deterministic hyperplane
-    * signature, verified with exact cosine at `threshold`. Complexity is
-    * Σ_bucket n_b² instead of n² — and because the buckets are
-    * md5-deterministic, the whole pipeline (bucketing included) is still
-    * exactly oracle-reproducible. Unit-normalizes each side once before
-    * the join so the verify is one dot-fold per candidate pair.
-    */
   /** Number of hyperplanes sized to the corpus: 2^nPlanes buckets with
     * expected bucket size ≈ `targetBucketSize`, clamped to [4, 24].
     * This is THE scale knob of [[lshCosinePairs]]: candidate volume is
@@ -142,17 +115,14 @@ object Similarity {
     math.max(4, math.min(24, needed))
   }
 
-  /** [[lshCosinePairs]] with `nPlanes` derived from the actual corpus
-    * count via [[planesFor]] — one count() job, then the same pipeline.
-    * Use this form when the corpus size isn't statically known; the
-    * fixed-plane form stays for oracle-reproducible queries (the plane
-    * count is part of the result's semantics).
+  /** Embedding-cosine near-dup pairs, LSH-bucketed (the scale form):
+    * candidates are same-bucket pairs under the deterministic hyperplane
+    * signature, verified with exact cosine at `threshold`. Complexity is
+    * Σ_bucket n_b² instead of n² — and because the buckets are
+    * md5-deterministic, the whole pipeline (bucketing included) is still
+    * exactly oracle-reproducible. Unit-normalizes each side once before
+    * the join so the verify is one dot-fold per candidate pair.
     */
-  def lshCosinePairsAuto(df: DataFrame, idCol: String, vecCol: String, dims: Int,
-      threshold: Double, targetBucketSize: Long = 64L, digits: Int = 6): DataFrame =
-    lshCosinePairs(df, idCol, vecCol, dims, threshold,
-      planesFor(df.count(), targetBucketSize), digits)
-
   def lshCosinePairs(df: DataFrame, idCol: String, vecCol: String, dims: Int,
       threshold: Double, nPlanes: Int = 8, digits: Int = 6): DataFrame = {
     val bucketed = withBuckets(df, vecCol, dims, nPlanes)

@@ -18,8 +18,8 @@ import graft.store.EventsTable
   * gap a hand-written predicate has: `events.filter($"time_us" >= c)`
   * reads row-group stats in all 24h × N days of partitions, while the
   * rewritten filter lists only the hours the range covers. (The same
-  * derivation EventsTable.replay and the graft-replay source do by
-  * hand — with this rule installed, callers no longer have to.)
+  * derivation EventsTable.replay does by hand — with this rule
+  * installed, callers no longer have to.)
   *
   * Applies only to relations exposing BOTH `time_us` and `event_hour`
   * — the engine's own layout signature — and is idempotent: plans

@@ -266,10 +266,10 @@ object EventQueries {
         struct(col("time_us"), col("event_id"))).as("e"))
       .select(col("e.event_id"), col("e.time_us"), col("user_id"), col("e.event_type"))
 
-  /** S25/S26 batch twin of the streaming tumbling-window counters
-    * ([[graft.streaming.LiveTail.windowedCounts]]): events per (hour
-    * window, type) via the same `window()` operator the streaming side
-    * uses — one partial-aggregated shuffle keyed on (window, type).
+  /** S25/S26 tumbling-window counters (the reference's Grafana
+    * `rate()` panels as a query): events per (hour window, type) via
+    * Spark's `window()` operator — one partial-aggregated shuffle keyed
+    * on (window, type).
     */
   def hourlyCounts(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)

@@ -428,9 +428,10 @@ object SocketServe extends org.apache.spark.internal.Logging {
     // AQE-off session clone for the session replay scans and head
     // reads: writer tasks run these small scans concurrently with the
     // engine's own queries, and AQE's final-plan wait has a lost-wakeup
-    // race under exactly that concurrency (see ReplayTailSource's
-    // probeSession note); adaptive planning buys nothing on a pruned
-    // ≤chunkSize scan.
+    // race under exactly that concurrency (a stream thread was seen
+    // parked for good in `AdaptiveSparkPlanExec.withFinalPlanUpdate`
+    // while every executor thread idled); adaptive planning buys
+    // nothing on a pruned ≤chunkSize scan.
     val replaySession = {
       val s = spark.newSession()
       s.conf.set("spark.sql.adaptive.enabled", "false")

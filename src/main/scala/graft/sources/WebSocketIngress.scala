@@ -92,6 +92,14 @@ object WebSocketFrameSource {
 
   def schemaFor(params: Map[String, String]): StructType =
     if (isBinary(params)) BinaryFrameSchema else FrameSchema
+
+  /** Engine offsets arrive live (LongOffset) or checkpoint-recovered
+    * (SerializedOffset). */
+  private[sources] def offsetToLong(o: Offset): Long = o match {
+    case l: LongOffset => l.offset
+    case s: SerializedOffset => LongOffset(s).offset
+    case other => other.json.toLong
+  }
 }
 
 class WebSocketFrameSource(sqlContext: SQLContext, params: Map[String, String],
@@ -274,9 +282,9 @@ class WebSocketFrameSource(sqlContext: SQLContext, params: Map[String, String],
     */
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val (rows, resume) = synchronized {
-      rebase(ReplayTailSource.offsetToLong(end)) // a recovered range re-runs as an empty batch
-      val lo = math.max(start.map(ReplayTailSource.offsetToLong).getOrElse(0L), base)
-      val hi = math.max(math.min(ReplayTailSource.offsetToLong(end), base + buffer.size), lo)
+      rebase(WebSocketFrameSource.offsetToLong(end)) // a recovered range re-runs as an empty batch
+      val lo = math.max(start.map(WebSocketFrameSource.offsetToLong).getOrElse(0L), base)
+      val hi = math.max(math.min(WebSocketFrameSource.offsetToLong(end), base + buffer.size), lo)
       deliveredHi = math.max(deliveredHi, hi)
       val out = buffer.slice((lo - base).toInt, (hi - base).toInt).toSeq
       val r = paused && undelivered <= maxBuffered / 2
@@ -294,8 +302,8 @@ class WebSocketFrameSource(sqlContext: SQLContext, params: Map[String, String],
 
   /** Trim the committed prefix (the socket-source memory contract). */
   override def commit(end: Offset): Unit = synchronized {
-    rebase(ReplayTailSource.offsetToLong(end))
-    val n = math.min(math.max(ReplayTailSource.offsetToLong(end) - base, 0L), buffer.size.toLong).toInt
+    rebase(WebSocketFrameSource.offsetToLong(end))
+    val n = math.min(math.max(WebSocketFrameSource.offsetToLong(end) - base, 0L), buffer.size.toLong).toInt
     if (n > 0) { buffer.remove(0, n); base += n }
     deliveredHi = math.max(deliveredHi, base)
   }

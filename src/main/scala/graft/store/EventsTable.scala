@@ -117,7 +117,7 @@ object EventsTable {
     *     readable by name.
     *
     * [[read]] auto-detects the mode (the `_manifests` dir), so
-    * replay, a `graft-replay` tail and every query inherit
+    * replay and every query inherit
     * manifest-gated visibility unchanged; commit listeners run after
     * the manifest is written. A manifest table must be written ONLY in
     * manifest mode: plain-append files are never named by a manifest
@@ -580,8 +580,7 @@ object EventsTable {
     val gens = Compaction.committedGens(spark, path)
     if (gens.isEmpty) {
       // plain parquet dirs without the hour layout stay readable
-      // (ReplayTailSource's documented fallback) — cast only when the
-      // partition column exists
+      // (unpruned) — cast only when the partition column exists
       val plain = spark.read.parquet(path)
       if (plain.columns.contains(PartitionCol))
         plain.withColumn(PartitionCol, col(PartitionCol).cast("long"))
@@ -608,6 +607,16 @@ object EventsTable {
       .filter(col(PartitionCol) >= cursorUs / 3600000000L && col("time_us") >= cursorUs)
       .orderBy(col("time_us"))
 
+  /** True only for the analysis failures a FRESH BOOT produces — the
+    * events-table dir not created yet (PATH_NOT_FOUND) or created but
+    * holding no parquet to infer from (UNABLE_TO_INFER_SCHEMA).
+    * Everything else (schema drift, an unreadable generation, a failed
+    * partition-column cast) must PROPAGATE.
+    */
+  private[store] def isFreshBoot(e: org.apache.spark.sql.AnalysisException): Boolean =
+    Option(e.getCondition).exists(c =>
+      c.startsWith("PATH_NOT_FOUND") || c.startsWith("UNABLE_TO_INFER_SCHEMA"))
+
   /** The persisted table, or None while it is still empty/absent (a
     * fresh ingest has nothing to recover from). Only fresh-boot
     * analysis failures map to None — a BROKEN table must fail the
@@ -622,7 +631,7 @@ object EventsTable {
     if (!fs.exists(p)) None
     else try Some(read(spark, tablePath))
     catch { case e: org.apache.spark.sql.AnalysisException
-        if graft.sources.ReplayTailSource.isFreshBoot(e) => None }
+        if isFreshBoot(e) => None }
   }
 
   /** The newest `time_us` in the table, at least `fromUs` (`fromUs` on

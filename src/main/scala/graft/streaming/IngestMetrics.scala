@@ -10,12 +10,10 @@ import graft.serve.Metrics
 /** Consumer-side metric parity (pkg/consumer/metrics.go:8-58) as a
   * [[StreamingQueryListener]]: the reference counts per event inside
   * its handler; the Spark-native equivalent reads each micro-batch's
-  * progress — row counts from the source, event-time positions from
-  * the `observe()` aggregates [[LiveTail.withTailObservation]] already
-  * piggybacks on the plan — and folds them into a [[Metrics.Registry]]
-  * the `/metrics` endpoint serves. No extra jobs, no second
-  * aggregation: everything here is read off work the stream already
-  * did.
+  * progress (row counts from the source, per-phase durations) and
+  * folds it into a [[Metrics.Registry]] the `/metrics` endpoint serves.
+  * No extra jobs, no second aggregation: everything here is read off
+  * work the stream already did.
   *
   * Series (consumer_* → graft_consumer_*, label `socket_url` → the
   * query name, which for graft ingests carries the source identity):
@@ -29,14 +27,12 @@ import graft.serve.Metrics
   *     `walCommit`, from the progress's `durationMs`
   *   - `graft_consumer_batch_jobs{query}` histogram of the Spark jobs
   *     each micro-batch ran ([[jobsListener]], a SparkListener)
-  *   - `graft_consumer_last_seq{query}`                 (metrics.go:24-27)
   *   - `graft_consumer_last_evt_processed_at{query}`    (metrics.go:29-32)
-  *   - `graft_consumer_last_evt_created_at{query}`      (metrics.go:34-37)
-  *   - `graft_consumer_last_evt_created_evt_processed_gap{query}`
-  *     seconds, end-to-end freshness (metrics.go:39-42)
-  * Timestamps are µs-since-epoch (the engine's event-time unit; the
-  * reference publishes ns — unit is a label-free scale choice, the
-  * shape is what transfers).
+  * `graft_consumer_last_seq{table}` (metrics.go:24-27) is set by
+  * [[graft.ingest.IngestJob]] from each committed batch. Timestamps are
+  * µs-since-epoch (the engine's event-time unit; the reference
+  * publishes ns — unit is a label-free scale choice, the shape is what
+  * transfers).
   */
 object IngestMetrics {
 
@@ -82,8 +78,7 @@ object IngestMetrics {
     * it for the process lifetime, like the reference's promauto
     * globals).
     */
-  def listener(registry: Metrics.Registry = Metrics.default,
-      observationName: String = "graft_tail"): StreamingQueryListener =
+  def listener(registry: Metrics.Registry = Metrics.default): StreamingQueryListener =
     new StreamingQueryListener {
       override def onQueryStarted(e: QueryStartedEvent): Unit = ()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
@@ -107,50 +102,9 @@ object IngestMetrics {
               .observe(ms / 1000.0)
           }
         }
-        val nowUs = java.time.Instant.parse(p.timestamp).toEpochMilli * 1000L
         registry.gauge("graft_consumer_last_evt_processed_at",
           "Batch timestamp of the last progress, us", "query" -> q)
-          .set(nowUs.toDouble)
-        Option(p.observedMetrics.get(observationName)).foreach { row =>
-          // per-type / per-op-kind counts (events_processed{event_type},
-          // ops_processed{kind} — metrics.go:8-16; op_path is omitted:
-          // an unbounded-cardinality label doesn't fit a fixed
-          // observation row, the per-collection view is a query)
-          def counted(field: String, family: String, help: String,
-              label: (String, String)): Unit =
-            if (row.schema.fieldNames.contains(field) &&
-                !row.isNullAt(row.schema.fieldIndex(field))) {
-              val n = row.getLong(row.schema.fieldIndex(field))
-              if (n > 0)
-                registry.counter(family, help, "query" -> q, label).add(n.toDouble)
-            }
-          Seq("n_commit" -> graft.model.Event.TypeCommit,
-            "n_identity" -> graft.model.Event.TypeIdentity,
-            "n_account" -> graft.model.Event.TypeAccount).foreach { case (f, t) =>
-            counted(f, "graft_consumer_events_by_type_total",
-              "Events processed by envelope type", "event_type" -> t)
-          }
-          Seq("n_op_create" -> graft.model.Event.CommitCreate,
-            "n_op_update" -> graft.model.Event.CommitUpdate,
-            "n_op_delete" -> graft.model.Event.CommitDelete).foreach { case (f, k) =>
-            counted(f, "graft_consumer_ops_processed_total",
-              "Repo operations processed by kind", "kind" -> k)
-          }
-          val i = row.schema.fieldIndex("max_time_us")
-          if (!row.isNullAt(i)) {
-            val maxUs = row.getLong(i)
-            registry.gauge("graft_consumer_last_seq",
-              "Sequence (time_us) of the last event processed", "query" -> q)
-              .set(maxUs.toDouble)
-            registry.gauge("graft_consumer_last_evt_created_at",
-              "Event time of the last event processed, us", "query" -> q)
-              .set(maxUs.toDouble)
-            registry.gauge("graft_consumer_last_evt_created_evt_processed_gap",
-              "Seconds between last event's event time and its processing",
-              "query" -> q)
-              .set((nowUs - maxUs) / 1e6)
-          }
-        }
+          .set(java.time.Instant.parse(p.timestamp).toEpochMilli * 1000.0)
       }
     }
 }

@@ -49,10 +49,6 @@ object FsMutex {
       Some(new String(bytes, "UTF-8"))
     } catch { case _: java.io.IOException => None }
 
-  /** Whether `path` currently carries `token` (this caller's lock). */
-  def isOwner(fs: FileSystem, path: Path, token: String): Boolean =
-    readToken(fs, path).contains(token)
-
   /** Delete `path` only when its content matches `token` — never
     * release a lock someone else now holds. Returns whether deleted.
     */

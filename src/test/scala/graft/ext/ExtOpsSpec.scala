@@ -7,37 +7,10 @@ import graft.util.DriverBudget
 
 /** Library-API tests for the operators not covered by the oracle gate:
   * ANN bucket probing, LSH-candidates→exact-verify composition, and the
-  * multimodal binary plumbing.
+  * multimodal header parsers.
   */
 class ExtOpsSpec extends SparkSpec {
   import spark.implicits._
-  import Multimodal.decodeFeatures
-
-  /** Deterministic decode census (VERDICT r16 #6): a fixed synthetic
-    * corpus — 200 genuinely decodable images (real [[PixelCodec]] PNG
-    * and [[JpegCodec]] JPEG encodes of deterministic rasters) plus 20
-    * known-undecodable blobs — pushed through [[decodeFeatures]].
-    * Returns (decoded, total); the contract is exactly (200, 220).
-    * ExtOpsSpec pins the exact counts, so a codec regression that
-    * silently flips real decodes to digest stand-ins fails a test
-    * instead of hiding behind the honest-fallback flag.
-    */
-  def decodeCensus(spark: org.apache.spark.sql.SparkSession): (Long, Long) = {
-    import spark.implicits._
-    def img(i: Int): Array[Byte] = {
-      val w = 8 + i % 9
-      val h = 8 + (i / 2) % 9
-      val rgb = Array.tabulate(w * h * 3)(j => ((i * 31 + j * 7) % 256).toByte)
-      val im = PixelCodec.RgbImage(w, h, rgb)
-      if (i % 2 == 0) PixelCodec.encodePng(im) else JpegCodec.encode(im)
-    }
-    val good = (0 until 200).map(i => (i.toLong, img(i)))
-    val bad = (200 until 220).map(i =>
-      (i.toLong, Array.tabulate[Byte](64)(j => ((i * 31 + j) % 127).toByte)))
-    val r = decodeFeatures((good ++ bad).toDF("id", "payload"), "payload")
-      .agg(count(when(col("decoded"), lit(1))), count(lit(1))).head()
-    (r.getLong(0), r.getLong(1))
-  }
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -434,70 +407,11 @@ class ExtOpsSpec extends SparkSpec {
     }
   }
 
-  test("bandingFor holds the threshold anchor; auto knobs keep candidate growth ~linear") {
-    // knob math (VERDICT r14 #3): r grows log2 with n, b solves the
-    // anchor (1/b)^(1/r) ≈ t from below
-    assert(Dedup.bandingFor(1000, 0.8) == (12, 3))  // r=4, b=ceil(0.8^-4)=3
-    assert(Dedup.bandingFor(16000, 0.8) == (48, 6)) // r=8, b=ceil(0.8^-8)=6
-    assert(Dedup.bandingFor(1000000000L, 0.8) == (180, 15), "r clamps at 12")
-    assert(Dedup.bandingFor(1, 0.8) == (12, 3), "clamped low")
-    for (n <- Seq(1000L, 16000L, 500000L); t <- Seq(0.7, 0.8, 0.9)) {
-      val (k, b) = Dedup.bandingFor(n, t)
-      val r = k / b
-      val anchor = math.pow(1.0 / b, 1.0 / r)
-      assert(anchor <= t + 1e-12 && anchor >= t - 0.1,
-        s"anchor $anchor strayed from threshold $t at n=$n")
-    }
-
-    // fixture family: 60-word docs over a 6-word vocab (high background
-    // similarity J≈0.15 — the regime where fixed-knob banding FP grows
-    // ~n²), every 20th doc an EXACT duplicate of its neighbor (the true
-    // pairs, linear by construction)
-    def fam(n: Long) = spark.range(0L, n, 1L, 16).selectExpr(
-      "id AS doc_id",
-      """array_join(transform(sequence(1, 60), i ->
-        |  element_at(split('alpha beta gamma delta epsilon zeta', ' '),
-        |    cast(1 + pmod(xxhash64((CASE WHEN id % 20 = 19 THEN id - 1 ELSE id END) * 31 + i), 6) AS int))), ' ')
-        |AS text""".stripMargin)
-    val (nSmall, nBig) = (800L, 6400L)
-    val ratio = nBig.toDouble / nSmall
-    def cands(n: Long, auto: Boolean): Long = {
-      val df = fam(n)
-      if (auto) Dedup.minhashLshPairsAuto(df, "doc_id", "text", 0.8).count()
-      else Dedup.minhashLshPairs(df, "doc_id", "text", 16, 4).count()
-    }
-    val fixedGrowth = cands(nBig, auto = false).toDouble / cands(nSmall, auto = false)
-    val autoGrowth = cands(nBig, auto = true).toDouble / cands(nSmall, auto = true)
-    info(f"candidate growth at ${ratio}%.0f× rows: fixed-knob $fixedGrowth%.1f×, auto $autoGrowth%.1f×")
-    assert(autoGrowth <= math.pow(ratio, 1.3),
-      f"auto-banding candidates grew $autoGrowth%.1f× on ${ratio}%.0f× rows — not ~linear")
-    assert(autoGrowth <= fixedGrowth + 1e-9,
-      "auto knobs must never produce steeper candidate growth than fixed knobs")
-
-    // banding is recall-only: the verified pair set is IDENTICAL under
-    // fixed and auto knobs (the exact-Jaccard verifier decides)
-    val big = fam(nBig)
-    val vFixed = Dedup.verifyCandidates(big, "doc_id", "text", 0.8)
-      .select("doc_id_a", "doc_id_b").as[(Long, Long)].collect().toSet
-    val vAuto = Dedup.verifyCandidatesAuto(big, "doc_id", "text", 0.8)
-      .select("doc_id_a", "doc_id_b").as[(Long, Long)].collect().toSet
-    assert(vAuto == vFixed, "verified pairs must not depend on the banding knobs")
-    assert(vFixed.size >= (nBig / 20 - 5).toInt, "the injected duplicates must be found")
-  }
-
   test("shingles of docs shorter than n words are empty, not garbage") {
     val docs = Seq((1L, "only two"), (2L, "a b c d")).toDF("doc_id", "text")
     val sh = Dedup.shingles(docs, "doc_id", "text", n = 3)
       .as[(Long, String)].collect().toSet
     assert(sh == Set((2L, "a b c"), (2L, "b c d"))) // doc 1 yields none
-  }
-
-  test("decode census contract: 200 real decodes, 20 honest stand-ins, exactly") {
-    // the tracked-number gate (VERDICT r16 #6): bench publishes this
-    // census's share every run; a codec regression that silently flips
-    // a real decode to a digest stand-in changes the counts and fails
-    // HERE rather than hiding behind the honest-fallback flag
-    assert(decodeCensus(spark) == ((200L, 220L)))
   }
 
   test("flat batch probes log the corpus x nq steer above the threshold") {
@@ -521,26 +435,6 @@ class ExtOpsSpec extends SparkSpec {
       assert(Ann.FlatBatchGuard.fired.get() == before + 1,
         "guard did not fire above threshold")
     } finally System.clearProperty("graft.flatbatch.warn.rows")
-  }
-
-  test("multimodal metadata + stubbed batch decode plumbing") {
-    val df = Seq(
-      (1L, Array[Byte](0x42, 0x4d, 1, 2, 3)), // "BM" magic
-      (2L, Array[Byte](0891.toByte))).toDF("id", "payload")
-    val meta = Multimodal.withMetadata(df, "payload")
-    val m1 = meta.filter(col("id") === 1).head()
-    assert(m1.getAs[Long]("n_bytes") == 5)
-    assert(m1.getAs[String]("magic") == "424D0102")
-    assert(m1.getAs[String]("content_digest").length == 32)
-
-    val feats = Multimodal.decodeFeatures(df, "payload")
-    val rows = feats.select("id", "features").as[(Long, Seq[Float])].collect().toMap
-    assert(rows(1L).length == Multimodal.StubDims)
-    assert(rows(1L).forall(f => f >= -1f && f < 1f))
-    // deterministic: same bytes → same features
-    val again = Multimodal.decodeFeatures(df, "payload")
-      .select("id", "features").as[(Long, Seq[Float])].collect().toMap
-    assert(again == rows)
   }
 
   test("parseImageDims reads real container headers: PNG/GIF/JPEG/BMP, big sizes, junk") {
@@ -618,35 +512,19 @@ class ExtOpsSpec extends SparkSpec {
     }
 
     // EXIF-rotated progressive JPEG, big-endian TIFF: dims come off the
-    // SOF unchanged, orientation off IFD0
+    // SOF unchanged, past the APP1 segment
     val rotBig = jpeg(0xc2, 3024, 4032, exif = Some((false, 6)))
     assert(Multimodal.parseImageDims(rotBig).contains(("jpeg", 3024, 4032)))
-    assert(Multimodal.parseExifOrientation(rotBig).contains(6))
 
     // little-endian TIFF, baseline SOF0, fill bytes before markers,
     // padded APP1 (real cameras over-allocate the segment)
     val rotLit = jpeg(0xc0, 640, 480, exif = Some((true, 3)), fillBytes = 3, app1Pad = 64)
     assert(Multimodal.parseImageDims(rotLit).contains(("jpeg", 640, 480)))
-    assert(Multimodal.parseExifOrientation(rotLit).contains(3))
 
     // every SOF variant a scan can hit: baseline, extended, progressive,
     // lossless, differential/arithmetic family
     for (sof <- Seq(0xc0, 0xc1, 0xc2, 0xc3, 0xc5, 0xc6, 0xc7, 0xc9, 0xca, 0xcb, 0xcd, 0xce, 0xcf))
       assert(Multimodal.parseImageDims(jpeg(sof, 123, 45)).contains(("jpeg", 123, 45)), f"SOF $sof%02x")
-
-    // no EXIF / no orientation tag / out-of-range value / truncation:
-    // None, never a throw
-    assert(Multimodal.parseExifOrientation(jpeg(0xc0, 10, 10)).isEmpty)
-    assert(Multimodal.parseExifOrientation(jpeg(0xc0, 10, 10, Some((false, 9)))).isEmpty)
-    val truncated = rotBig.take(18)
-    assert(Multimodal.parseExifOrientation(truncated).isEmpty)
-    assert(Multimodal.parseExifOrientation("noise".getBytes).isEmpty)
-    // a malformed IFD offset pointing past the segment must not escape it
-    val evil = rotBig.clone()
-    // TIFF header starts at SOI(2)+marker(2)+len(2)+"Exif\0\0"(6) = offset 12;
-    // IFD0 offset field is at TIFF+4 (big-endian here) — point it far away
-    evil(12 + 4) = 0x7f.toByte
-    assert(Multimodal.parseExifOrientation(evil).isEmpty)
   }
 
   test("parseWavMeta chunk-walks real RIFF headers; junk and truncation never throw") {
@@ -757,271 +635,6 @@ class ExtOpsSpec extends SparkSpec {
     assert(dims(1L) == (("png", Some(320L), Some(240L))))
     assert(dims(2L) == (("gif", Some(12L), Some(34L))))
     assert(dims(3L) == ((null, None, None)))
-  }
-
-  test("multimodal resize + frame sampling keep the batched partition shape") {
-    val vids = Seq(
-      (1L, Array.tabulate(1000)(_.toByte)), // 1000 bytes → 3 stub frames
-      (2L, Array.tabulate(100)(_.toByte)))  // 100 bytes → 1 stub frame
-      .toDF("id", "payload")
-
-    val resized = Multimodal.resize(vids, "payload", 224, 224)
-    assert(resized.count() == 2) // row count unchanged
-    val r1 = resized.filter(col("id") === 1).head()
-    assert(r1.getAs[Int]("width") == 224 && r1.getAs[Int]("height") == 224)
-    assert(r1.getAs[Array[Byte]]("resized").length == 16) // stub digest bytes
-    // deterministic re-run
-    val r1b = Multimodal.resize(vids, "payload", 224, 224).filter(col("id") === 1).head()
-    assert(r1b.getAs[Array[Byte]]("resized").toSeq == r1.getAs[Array[Byte]]("resized").toSeq)
-
-    val frames = Multimodal.frameSample(vids, "payload", everyNth = 2, maxFrames = 10)
-      .select("id", "frame_idx").as[(Long, Int)].collect().toSet
-    // video 1: frames 0,2 of {0,1,2}; video 2: frame 0
-    assert(frames == Set((1L, 0), (1L, 2), (2L, 0)))
-    val capped = Multimodal.frameSample(vids, "payload", everyNth = 1, maxFrames = 2)
-      .groupBy("id").count().as[(Long, Long)].collect().toMap
-    assert(capped == Map(1L -> 2L, 2L -> 1L)) // per-video cap applies
-  }
-
-  test("MJPEG-in-AVI: real frame decode; decoded flag separates every stub output") {
-    // real JPEG frames (JDK encoder, test-side only) wrapped in a real
-    // RIFF/AVI layout: hdrl LIST + movi LIST with 00dc sample chunks
-    // (one frame odd-sized to exercise RIFF padding)
-    def jpegOf(w: Int, h: Int, rgb: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (x <- 0 until w; y <- 0 until h) img.setRGB(x, y, rgb)
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", out)
-      out.toByteArray
-    }
-    def chunk(id: String, data: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(id.getBytes("US-ASCII"))
-      val n = data.length
-      Seq(n, n >> 8, n >> 16, n >> 24).foreach(v => out.write(v & 0xff))
-      out.write(data)
-      if (n % 2 == 1) out.write(0) // RIFF chunks are word-aligned
-      out.toByteArray
-    }
-    def list(listType: String, body: Array[Byte]): Array[Byte] =
-      chunk("LIST", listType.getBytes("US-ASCII") ++ body)
-    val jpegs = Seq(jpegOf(8, 6, 0xff0000), jpegOf(8, 6, 0x00ff00), jpegOf(8, 6, 0x0000ff))
-    val avi = chunk("RIFF", "AVI ".getBytes("US-ASCII") ++
-      list("hdrl", chunk("avih", Array.fill[Byte](56)(0))) ++
-      list("movi", jpegs.map(chunk("00dc", _)).reduce(_ ++ _)))
-
-    val df = Seq((1L, avi), (2L, Array.tabulate(300)(_.toByte))).toDF("id", "payload")
-
-    // frameSample: every AVI sample becomes a REAL 8x6 PNG, decoded=true;
-    // the unrasterizable payload stays a flagged digest stub
-    val frames = Multimodal.frameSample(df, "payload")
-      .select("id", "frame_idx", "frame", "decoded").collect()
-    val f1 = frames.filter(_.getLong(0) == 1L).sortBy(_.getInt(1))
-    assert(f1.map(_.getInt(1)).toSeq == Seq(0, 1, 2))
-    assert(f1.forall(_.getBoolean(3)), "AVI samples must be flagged decoded")
-    f1.foreach(r => assert(Multimodal.parseImageDims(r.getAs[Array[Byte]]("frame"))
-      .contains(("png", 8, 6))))
-    val f2 = frames.filter(_.getLong(0) == 2L)
-    assert(f2.nonEmpty && f2.forall(!_.getBoolean(3)),
-      "stub frames must be machine-distinguishable via decoded=false")
-
-    // the three frames decode to three DIFFERENT rasters (red/green/blue
-    // planes — proves per-sample decode, not one frame repeated)
-    assert(f1.map(_.getAs[Array[Byte]]("frame").toSeq).distinct.length == 3)
-
-    // decodeFeatures: AVI → real first-frame pooled luma, decoded=true
-    val feats = Multimodal.decodeFeatures(df, "payload")
-      .select("id", "features", "decoded")
-      .as[(Long, Seq[Float], Boolean)].collect()
-      .map { case (k, v, d) => k -> ((v, d)) }.toMap
-    assert(feats(1L)._2 && !feats(2L)._2)
-    assert(feats(1L)._1 != feats(2L)._1 && feats(1L)._1.length == Multimodal.StubDims)
-
-    // resize: AVI first frame → real 4x4 PNG, decoded=true; stub flagged
-    val rs = Multimodal.resize(df, "payload", 4, 4)
-      .select("id", "resized", "decoded").collect()
-      .map(r => r.getLong(0) -> (r.getAs[Array[Byte]]("resized"), r.getBoolean(2))).toMap
-    assert(rs(1L)._2 && Multimodal.parseImageDims(rs(1L)._1).contains(("png", 4, 4)))
-    assert(!rs(2L)._2 && rs(2L)._1.length == 16)
-
-    // chaining decode stages carries ONE `decoded` flag (the last
-    // stage's), never a duplicate column
-    val chained = Multimodal.resize(
-      Multimodal.frameSample(df, "payload"), "frame", 4, 4)
-    assert(chained.columns.count(_ == "decoded") == 1)
-    assert(chained.filter(col("decoded")).count() == 3,
-      "the three real AVI frames re-rasterize through the chain")
-  }
-
-  // ---- shared byte-assembly helpers for the container fixtures ----
-  private def le16b(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def le32b(v: Int) = Array(
-    (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-    ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-  private def be32b(v: Int) = le32b(v).reverse
-  private def riffChunk(id: String, data: Array[Byte]): Array[Byte] = {
-    val body = id.getBytes("US-ASCII") ++ le32b(data.length) ++ data
-    if (data.length % 2 == 1) body :+ 0.toByte else body
-  }
-  private def riffList(listType: String, body: Array[Byte]): Array[Byte] =
-    riffChunk("LIST", listType.getBytes("US-ASCII") ++ body)
-  private def bmpInfo(w: Int, h: Int, bpp: Int, comp: Int,
-      palette: Array[Byte] = Array.empty): Array[Byte] =
-    le32b(40) ++ le32b(w) ++ le32b(h) ++ le16b(1) ++ le16b(bpp) ++
-      le32b(comp) ++ le32b(0) ++ le32b(0) ++ le32b(0) ++
-      le32b(palette.length / 4) ++ le32b(0) ++ palette
-  /** AVI with a real hdrl (vids strh + strf) and movi sample chunks. */
-  private def dibAvi(strf: Array[Byte], samples: Seq[Array[Byte]]): Array[Byte] =
-    riffChunk("RIFF", "AVI ".getBytes("US-ASCII") ++
-      riffList("hdrl", riffChunk("avih", Array.fill[Byte](56)(0)) ++
-        riffList("strl",
-          riffChunk("strh", "vids".getBytes("US-ASCII") ++ Array.fill[Byte](52)(0)) ++
-            riffChunk("strf", strf))) ++
-      riffList("movi", samples.map(riffChunk("00db", _)).reduce(_ ++ _)))
-  private def mp4Box(typ: String, payload: Array[Byte]): Array[Byte] =
-    be32b(8 + payload.length) ++ typ.getBytes("US-ASCII") ++ payload
-  /** MJPEG MP4: ftyp + mdat(jpegs) + moov/trak/mdia/minf/stbl with real
-    * sample tables — two chunks (2 samples + 1 sample) to exercise the
-    * stsc run walk.
-    */
-  private def mjpegMp4(jpegs: Seq[Array[Byte]]): Array[Byte] = {
-    require(jpegs.length == 3)
-    val ftyp = mp4Box("ftyp", "isom".getBytes("US-ASCII") ++ be32b(512))
-    val mdatDataOff = ftyp.length + 8
-    val chunk2Off = mdatDataOff + jpegs(0).length + jpegs(1).length
-    val stsd = mp4Box("stsd", be32b(0) ++ be32b(1) ++
-      mp4Box("jpeg", Array.fill[Byte](70)(0)))
-    val stsz = mp4Box("stsz", be32b(0) ++ be32b(0) ++ be32b(3) ++
-      jpegs.flatMap(j => be32b(j.length).toSeq))
-    val stsc = mp4Box("stsc", be32b(0) ++ be32b(2) ++
-      be32b(1) ++ be32b(2) ++ be32b(1) ++ // chunk 1: 2 samples
-      be32b(2) ++ be32b(1) ++ be32b(1)) // chunk 2+: 1 sample
-    val stco = mp4Box("stco", be32b(0) ++ be32b(2) ++
-      be32b(mdatDataOff) ++ be32b(chunk2Off))
-    ftyp ++ mp4Box("mdat", jpegs.reduce(_ ++ _)) ++
-      mp4Box("moov", mp4Box("trak", mp4Box("mdia", mp4Box("minf",
-        mp4Box("stbl", stsd ++ stsz ++ stsc ++ stco)))))
-  }
-
-  test("uncompressed-DIB AVI samples decode to real pixels via the stream strf") {
-    // 2x2 BI_RGB 24-bit, bottom-up, rows padded to 4 bytes:
-    // top row red,green / bottom row blue,white
-    def px(b: Int, g: Int, r: Int) = Array(b.toByte, g.toByte, r.toByte)
-    val pad = Array[Byte](0, 0)
-    val bits = // storage order: bottom row first
-      px(0xff, 0, 0) ++ px(0xff, 0xff, 0xff) ++ pad ++
-        px(0, 0, 0xff) ++ px(0, 0xff, 0) ++ pad
-    val avi = dibAvi(bmpInfo(2, 2, 24, 0), Seq(bits, bits))
-    val df = Seq((1L, avi)).toDF("id", "payload")
-    val frames = Multimodal.frameSample(df, "payload")
-      .select("frame_idx", "frame", "decoded").collect().sortBy(_.getInt(0))
-    assert(frames.length == 2 && frames.forall(_.getBoolean(2)),
-      "both DIB samples must decode for real")
-    val img = PixelCodec.decodeImage(frames(0).getAs[Array[Byte]]("frame")).get
-    assert(img.width == 2 && img.height == 2)
-    // top-down RGB: red green / blue white
-    assert(img.rgb.map(_ & 0xff).toSeq == Seq(
-      255, 0, 0, 0, 255, 0, 0, 0, 255, 255, 255, 255))
-    // decodeFeatures takes the real path too
-    val feat = Multimodal.decodeFeatures(df, "payload").select("decoded").head()
-    assert(feat.getBoolean(0))
-  }
-
-  test("RLE8-DIB AVI samples decode runs, escapes and palette correctly") {
-    // palette: 0=red 1=green 2=blue (BGRA quads)
-    val palette = Array[Byte](0, 0, 0xff.toByte, 0, 0, 0xff.toByte, 0, 0,
-      0xff.toByte, 0, 0, 0)
-    // bottom row: (1,0)(1,1) EOL; top row: (2,2) EOS
-    val bits = Array[Byte](1, 0, 1, 1, 0, 0, 2, 2, 0, 1)
-    val avi = dibAvi(bmpInfo(2, 2, 8, 1, palette), Seq(bits))
-    val frames = Multimodal.frameSample(Seq((1L, avi)).toDF("id", "payload"), "payload")
-      .select("frame", "decoded").collect()
-    assert(frames.length == 1 && frames(0).getBoolean(1))
-    val img = PixelCodec.decodeImage(frames(0).getAs[Array[Byte]]("frame")).get
-    // top-down: blue blue / red green
-    assert(img.rgb.map(_ & 0xff).toSeq == Seq(
-      0, 0, 255, 0, 0, 255, 255, 0, 0, 0, 255, 0))
-  }
-
-  test("MJPEG-in-MP4: jpeg-track samples decode across stsc chunk runs") {
-    def jpegOf(w: Int, h: Int, rgb: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (x <- 0 until w; y <- 0 until h) img.setRGB(x, y, rgb)
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", out)
-      out.toByteArray
-    }
-    val mp4 = mjpegMp4(Seq(
-      jpegOf(8, 6, 0xff0000), jpegOf(8, 6, 0x00ff00), jpegOf(8, 6, 0x0000ff)))
-    val df = Seq((1L, mp4)).toDF("id", "payload")
-    val frames = Multimodal.frameSample(df, "payload")
-      .select("frame_idx", "frame", "decoded").collect().sortBy(_.getInt(0))
-    assert(frames.map(_.getInt(0)).toSeq == Seq(0, 1, 2))
-    assert(frames.forall(_.getBoolean(2)), "all three MP4 samples decode for real")
-    frames.foreach(r => assert(Multimodal.parseImageDims(r.getAs[Array[Byte]]("frame"))
-      .contains(("png", 8, 6))))
-    assert(frames.map(_.getAs[Array[Byte]]("frame").toSeq).distinct.length == 3,
-      "red/green/blue planes decode to three different rasters")
-    assert(Multimodal.decodeFeatures(df, "payload").select("decoded").head().getBoolean(0))
-    // a non-jpeg stsd (the synthetic meta fixture) still stubs, flagged
-    val meta = Seq((2L, Multimodal.syntheticMp4(64, 48, 1500, 1000)))
-      .toDF("id", "payload")
-    val stub = Multimodal.frameSample(meta, "payload").select("decoded").collect()
-    assert(stub.nonEmpty && stub.forall(!_.getBoolean(0)))
-  }
-
-  test("DIB/MP4 sample walkers: truncation and corruption never throw") {
-    val pal = Array[Byte](0, 0, 0xff.toByte, 0, 0, 0xff.toByte, 0, 0)
-    val avi = dibAvi(bmpInfo(2, 2, 8, 1, pal), Seq(Array[Byte](1, 0, 0, 1)))
-    def jpegStub = Array.fill[Byte](40)(0x11)
-    val mp4 = mjpegMp4(Seq(jpegStub, jpegStub, jpegStub))
-    def drain(b: Array[Byte]): Unit = {
-      Multimodal.aviVideoSamples(b).foreach(ss =>
-        ss.foreach(s => PixelCodec.decodeDib(Multimodal.aviVideoFormat(b).orNull, s)))
-      Multimodal.mp4VideoSamples(b).foreach(_.foreach(_ => ()))
-    }
-    (0 to avi.length).foreach(k => drain(avi.take(k)))
-    (0 to mp4.length).foreach(k => drain(mp4.take(k)))
-    avi.indices.foreach { i => val c = avi.clone(); c(i) = 0xff.toByte; drain(c) }
-    mp4.indices.foreach { i => val c = mp4.clone(); c(i) = 0xff.toByte; drain(c) }
-    val rnd = new scala.util.Random(11L)
-    (1 to 50).foreach { _ =>
-      drain(Array.fill[Byte](rnd.nextInt(300))(rnd.nextInt().toByte))
-    }
-  }
-
-  test("aviVideoSamples walker: junk, truncation, corrupt bytes — never throws, always terminates") {
-    def chunk(id: String, data: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(id.getBytes("US-ASCII"))
-      val n = data.length
-      Seq(n, n >> 8, n >> 16, n >> 24).foreach(v => out.write(v & 0xff))
-      out.write(data)
-      if (n % 2 == 1) out.write(0)
-      out.toByteArray
-    }
-    val avi = chunk("RIFF", "AVI ".getBytes("US-ASCII") ++
-      chunk("LIST", "movi".getBytes("US-ASCII") ++
-        chunk("00dc", Array[Byte](1, 2, 3)) ++ chunk("01db", Array[Byte](4))))
-    assert(Multimodal.aviVideoSamples(avi).get.map(_.toSeq).toList ==
-      List(Seq[Byte](1, 2, 3), Seq[Byte](4)))
-    // every truncation of a valid container: walk to exhaustion, no throw
-    (0 to avi.length).foreach { k =>
-      Multimodal.aviVideoSamples(avi.take(k)).foreach(_.foreach(_ => ()))
-    }
-    // every single-byte corruption (sizes, ids, payload): same property
-    avi.indices.foreach { i =>
-      val c = avi.clone(); c(i) = 0xff.toByte
-      Multimodal.aviVideoSamples(c).foreach(_.foreach(_ => ()))
-    }
-    // pure garbage of assorted sizes
-    val rnd = new scala.util.Random(7L)
-    (1 to 50).foreach { _ =>
-      val b = Array.fill[Byte](rnd.nextInt(200))(rnd.nextInt().toByte)
-      Multimodal.aviVideoSamples(b).foreach(_.foreach(_ => ()))
-    }
   }
 
   test("chunkDedup drops corpus-repeated chunks, reassembles the rest in order") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.model.Event
 
-/** S3 router, S23 sequential scheduler, S29 cursor precedence. */
+/** S3 router, S29 cursor precedence. */
 class RouterSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,17 +23,6 @@ class RouterSpec extends SparkSpec {
     assert(branches(Event.TypeAccount).count() == 1)
     // unknown type lands in no branch (drop semantics)
     assert(branches.values.map(_.count()).sum == 4)
-  }
-
-  test("sequential scheduler yields strict total order in one partition (sequential.go:49-55)") {
-    import graft.streaming.KeyedOrder
-    import graft.streaming.KeyedOrder.KeyedEvent
-    val ds = (1 to 500).reverse.map(i => KeyedEvent(s"did${i % 7}", i.toLong, s"p$i")).toDS()
-      .repartition(8)
-    val seq = KeyedOrder.sequential(ds)
-    assert(seq.rdd.getNumPartitions == 1)
-    val times = seq.collect().map(_.time_us)
-    assert(times.toSeq == times.sorted.toSeq)
   }
 
   test("cursor precedence: override > stored > live (main.go:280-297)") {

@@ -166,4 +166,25 @@ class EventsTableSpec extends SparkSpec {
     EventsTable.append(sampleEvents.limit(10), path)
     assert(EventsTable.read(spark, path).count() == 20)
   }
+
+  test("only fresh-boot analysis errors read as an empty table; breakage propagates") {
+    // fresh boot: dir absent → PATH_NOT_FOUND classifies as boot
+    val missing = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.read.parquet(tmpDir("no-such-table") + "/gone").collect()
+    }
+    assert(EventsTable.isFreshBoot(missing))
+    // created-but-empty dir → UNABLE_TO_INFER_SCHEMA classifies as boot
+    val emptyDir = tmpDir("empty-table")
+    val inferFail = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.read.parquet(emptyDir).collect()
+    }
+    assert(EventsTable.isFreshBoot(inferFail))
+    // genuine breakage (unresolvable column) must NOT classify as boot —
+    // mapping it to an empty stream would tail forever delivering zero
+    // rows with no error surfaced
+    val broken = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq(1L).toDF("a").select(org.apache.spark.sql.functions.col("nope"))
+    }
+    assert(!EventsTable.isFreshBoot(broken))
+  }
 }

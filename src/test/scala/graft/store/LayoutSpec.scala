@@ -19,9 +19,9 @@ class LayoutSpec extends SparkSpec {
     // not provide. appendManifested's contract — readers see exactly
     // the contiguous committed-manifest prefix, by name, never a
     // listing — must hold when objects become visible out of order.
-    // ReplayTailSource's probe and range scan both go through
-    // EventsTable.read (ReplayTailSourceSpec pins that delegation), so
-    // the read-level invariant here IS the tailing reader's.
+    // The serving edge's replay steps and cutover gap reads both go
+    // through EventsTable.read (Replay via EventsTable.replay), so the
+    // read-level invariant here IS the tailing reader's.
     import org.apache.hadoop.fs.Path
     val path = s"${tmpDir("manifest-events")}/events"
     def us(h: Long, i: Long) = h * HourUs + i

@@ -15,18 +15,18 @@ import os
 import sys
 
 
-def code_lines(text):
-    """Number of lines of `text` that carry code outside comments."""
-    count = 0
+def strip_comments(text):
+    """`text` with every comment removed and every newline kept, so
+    line numbers still match. String and character literals are kept
+    as they are."""
+    out = []
     depth = 0          # block-comment nesting (Scala block comments nest)
     in_str = None      # None, '"' or '"""'
     i, n = 0, len(text)
-    line_has_code = False
     while i < n:
         c = text[i]
         if c == "\n":
-            count += line_has_code
-            line_has_code = False
+            out.append(c)
             i += 1
             continue
         if depth:
@@ -40,8 +40,6 @@ def code_lines(text):
                 i += 1
             continue
         if in_str:
-            if not c.isspace():
-                line_has_code = True
             if in_str == '"""':
                 if text.startswith('"""', i):
                     # a run of more than three quotes closes on its last three
@@ -49,15 +47,20 @@ def code_lines(text):
                     while j < n and text[j] == '"':
                         j += 1
                     in_str = None
+                    out.append(text[i:j])
                     i = j
                 else:
+                    out.append(c)
                     i += 1
             elif c == "\\":
+                out.append(text[i:i + 2])
                 i += 2
             elif c == '"':
                 in_str = None
+                out.append(c)
                 i += 1
             else:
+                out.append(c)
                 i += 1
             continue
         if text.startswith("//", i):
@@ -68,31 +71,29 @@ def code_lines(text):
             depth = 1
             i += 2
             continue
-        if c.isspace():
-            i += 1
-            continue
-        line_has_code = True
+        step = 1
         if text.startswith('"""', i):
             in_str = '"""'
-            i += 3
+            step = 3
         elif c == '"':
             in_str = '"'
-            i += 1
         elif c == "'":
             # character literal: 'x', '\n', '\\', 'A'; otherwise a
             # symbol literal or a lone quote, scanned as plain code
             if text.startswith("\\u", i + 1) and i + 7 < n and text[i + 7] == "'":
-                i += 8
+                step = 8
             elif i + 3 < n and text[i + 1] == "\\" and text[i + 3] == "'":
-                i += 4
+                step = 4
             elif i + 2 < n and text[i + 2] == "'" and text[i + 1] != "\n":
-                i += 3
-            else:
-                i += 1
-        else:
-            i += 1
-    count += line_has_code
-    return count
+                step = 3
+        out.append(text[i:i + step])
+        i += step
+    return "".join(out)
+
+
+def code_lines(text):
+    """Number of lines of `text` that carry code outside comments."""
+    return sum(1 for line in strip_comments(text).split("\n") if line.strip())
 
 
 def scala_files(path):
