@@ -71,39 +71,6 @@ object LiveTail {
         col("session_window.end").as("session_end"),
         col(keyCol), col("n_events"))
 
-  /** S27 as first-class streaming observation: attach per-micro-batch
-    * observed metrics (row count, max sequence, head-relative lag is
-    * derivable downstream) to the stream WITHOUT a second aggregation
-    * query — `observe` piggybacks an accumulator-style aggregate on the
-    * existing plan, and a StreamingQueryListener reads it from each
-    * progress event (the push model of the reference's
-    * `jetstream_events_processed` / lag gauges, consumer.go:129-155).
-    */
-  def withTailObservation(events: DataFrame, name: String = "graft_tail"): DataFrame = {
-    val base = Seq(
-      count(lit(1)).as("n_events"),
-      max(col("time_us")).as("max_time_us"),
-      min(col("time_us")).as("min_time_us"))
-    // per-type / per-op-kind counts when the stream carries the decoded
-    // envelope — the reference's events_processed{event_type} and
-    // ops_processed{kind} counters (consumer.go:104-134,201) at zero
-    // extra jobs; IngestMetrics folds them into labeled series
-    val typed =
-      if (!events.columns.contains("type")) Seq.empty
-      else Seq(
-        count(when(col("type") === graft.model.Event.TypeCommit, 1)).as("n_commit"),
-        count(when(col("type") === graft.model.Event.TypeIdentity, 1)).as("n_identity"),
-        count(when(col("type") === graft.model.Event.TypeAccount, 1)).as("n_account"))
-    val kinds =
-      if (!events.columns.contains("commit")) Seq.empty
-      else Seq(
-        count(when(col("commit.type") === graft.model.Event.CommitCreate, 1)).as("n_op_create"),
-        count(when(col("commit.type") === graft.model.Event.CommitUpdate, 1)).as("n_op_update"),
-        count(when(col("commit.type") === graft.model.Event.CommitDelete, 1)).as("n_op_delete"))
-    val aggs = base ++ typed ++ kinds
-    events.observe(name, aggs.head, aggs.tail: _*)
-  }
-
   /** Stream-stream interval join: pair each left event with the right
     * events of the same key whose event time falls within `[left,
     * left + within]` — click-through attribution, request/response

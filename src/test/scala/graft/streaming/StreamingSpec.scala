@@ -9,8 +9,8 @@ import graft.ingest.IngestJob
 import graft.store.EventsTable
 
 /** Streaming end-to-end: MemoryStream-driven micro-batches through the
-  * ingest job (sequencer + append + checkpoint resume) and a
-  * stream-static join.
+  * ingest job (sequencer + append + checkpoint resume) and the
+  * watermarked operators.
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -77,6 +77,69 @@ class StreamingSpec extends SparkSpec {
     assert(rows.map(_._2).toSeq == (1000000L until 1000070L))
   }
 
+  test("dedupOverlap drops replay/live duplicates within watermark") {
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[(Long, String)]
+    val deduped = LiveTail.dedupOverlap(in.toDF().toDF("time_us", "did"))
+    val q = deduped.writeStream.format("memory").queryName("dedup_out")
+      .outputMode("append").start()
+    // replay tail and live head overlap on 100..104
+    in.addData((100L to 104L).map(t => (t * 1000000, "a")))
+    q.processAllAvailable()
+    in.addData((102L to 107L).map(t => (t * 1000000, "a")))
+    q.processAllAvailable()
+    q.stop()
+    val out = spark.table("dedup_out").select("time_us").as[Long].collect().sorted
+    assert(out.length == 8) // 100..107 exactly once
+    assert(out.toSeq == (100L to 107L).map(_ * 1000000))
+  }
+
+  test("dedupContent drops repeated content within watermark, normalized") {
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[(Long, String)]
+    val deduped = LiveTail.dedupContent(in.toDF().toDF("time_us", "text"), "text")
+    val q = deduped.writeStream.format("memory").queryName("cdedup_out")
+      .outputMode("append").start()
+    // a repost storm: same content at different times, with whitespace
+    // and case variation the fingerprint must normalize away
+    in.addData(Seq(
+      (100L * 1000000, "hello  World"),
+      (101L * 1000000, "unique one"),
+      (102L * 1000000, "HELLO world"), // dup of 100 after normalization
+      (103L * 1000000, "hello world"))) // dup again
+    q.processAllAvailable()
+    in.addData(Seq(
+      (104L * 1000000, "hello\tworld"), // still inside the watermark: dup
+      (105L * 1000000, "unique two")))
+    q.processAllAvailable()
+    q.stop()
+    val out = spark.table("cdedup_out").select("time_us").as[Long].collect().sorted
+    assert(out.toSeq == Seq(100L, 101L, 105L).map(_ * 1000000),
+      "one survivor per distinct content, earliest wins")
+  }
+
+  test("dedupContent passes null-text events through, never dedupes them") {
+    // ADVICE r11 (medium): deletes/likes/identity events carry no text;
+    // a null fingerprint must not group them as "equal content" and
+    // collapse the lot to one survivor.
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[(Long, String)]
+    val deduped = LiveTail.dedupContent(in.toDF().toDF("time_us", "text"), "text")
+    val q = deduped.writeStream.format("memory").queryName("cdedup_null_out")
+      .outputMode("append").start()
+    in.addData(Seq(
+      (100L * 1000000, "real content"),
+      (101L * 1000000, null),
+      (102L * 1000000, null), // textless: must SURVIVE, not dedupe vs 101
+      (103L * 1000000, "real  CONTENT"), // dup of 100 after normalization
+      (104L * 1000000, null)))
+    q.processAllAvailable()
+    q.stop()
+    val out = spark.table("cdedup_null_out").select("time_us").as[Long].collect().sorted
+    assert(out.toSeq == Seq(100L, 101L, 102L, 104L).map(_ * 1000000),
+      "every null-text event passes through; only real content dedupes")
+  }
+
   test("stream-static enrichment joins the live tail against a dim table") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
@@ -92,5 +155,69 @@ class StreamingSpec extends SparkSpec {
       .select("collection", "weight").collect()
       .map(r => r.getString(0) -> Option(r.get(1))).toMap
     assert(out == Map("click" -> Some(1), "view" -> Some(2), "repost" -> None))
+  }
+
+  test("intervalJoin pairs events within the window, drops outside it") {
+    implicit val ctx = spark.sqlContext
+    val views = MemoryStream[(Long, String)]
+    val clicks = MemoryStream[(Long, String)]
+    val joined = LiveTail.intervalJoin(
+      views.toDF().toDF("time_us", "v_user"),
+      clicks.toDF().toDF("time_us", "c_user"),
+      keyCol = "v_user", rightKeyCol = "c_user", within = "10 minutes")
+      // an unqualified time_us downstream projection must resolve: only
+      // the LEFT side's survives the join (the right's is r_time_us)
+      .select(col("v_user"), col("event_time"), col("r_event_time"),
+        col("time_us"), col("r_time_us"))
+    val q = joined.writeStream.format("memory").queryName("ij_out")
+      .outputMode("append").start()
+    val base = 1700000000000000L
+    val min = 60L * 1000000
+    // view at t0 for users a,b; clicks: a at +5min (in window),
+    // b at +20min (outside), c at +1min (no matching view key)
+    views.addData(Seq((base, "a"), (base, "b")))
+    clicks.addData(Seq((base + 5 * min, "a"), (base + 20 * min, "b"), (base + min, "c")))
+    q.processAllAvailable()
+    q.stop()
+    val out = spark.table("ij_out").select("v_user", "time_us", "r_time_us")
+      .as[(String, Long, Long)].collect().toSeq
+    assert(out == Seq(("a", base, base + 5 * min))) // only a's click is in [view, view+10min]
+  }
+
+  test("sessionCounts groups activity bursts split by the gap") {
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[(Long, String)]
+    val sessions = LiveTail.sessionCounts(
+      in.toDF().toDF("time_us", "did"), keyCol = "did",
+      gap = "10 seconds", watermark = "0 seconds")
+    val q = sessions.writeStream.format("memory").queryName("sess_out")
+      .outputMode("complete").start()
+    // did a: burst at 0-4s (5 events), silence, burst at 60-61s (2 events)
+    in.addData((0L to 4L).map(s => (s * 1000000, "a")) ++ Seq((60000000L, "a"), (61000000L, "a")))
+    q.processAllAvailable()
+    q.stop()
+    val out = spark.table("sess_out")
+      .select("did", "n_events").as[(String, Long)].collect().sorted.toSeq
+    assert(out == Seq(("a", 2L), ("a", 5L)))
+  }
+
+  test("windowedCounts aggregates per tumbling window and collection") {
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[(Long, String)]
+    val counts = LiveTail.windowedCounts(
+      in.toDF().toDF("time_us", "collection"), "1 minute", "0 seconds")
+    val q = counts.writeStream.format("memory").queryName("win_out")
+      .outputMode("complete").start()
+    // 90 events in minute 0, 30 in minute 1, two collections
+    in.addData((0 until 120).map(i => (i.toLong * 1000000, s"c${i % 2}")))
+    q.processAllAvailable()
+    q.stop()
+    val out = spark.table("win_out")
+      .select("window_start", "collection", "n_events")
+      .as[(java.sql.Timestamp, String, Long)].collect().toSet
+    def ts(min: Int) = java.sql.Timestamp.valueOf(s"1970-01-01 00:0$min:00")
+    assert(out == Set(
+      (ts(0), "c0", 30L), (ts(0), "c1", 30L),
+      (ts(1), "c0", 30L), (ts(1), "c1", 30L)))
   }
 }
