@@ -185,8 +185,8 @@ object Soak {
   }
 
   /** A JDK WebSocket subscriber: per frame, records (n, time_us,
-    * latency) — latency = receive wall − embedded generation wall.
-    * Stores primitives only; 6M events ≈ 100 MB.
+    * latency, generation wall) — latency = receive wall − embedded
+    * generation wall. Stores primitives only; 6M events ≈ 130 MB.
     */
   private final class Subscriber(url: String) {
     private val swRe = """sw\\?"\s*:\s*(\d+)""".r
@@ -196,16 +196,18 @@ object Soak {
     private var ns = new Array[Long](1 << 20)
     private var ts = new Array[Long](1 << 20)
     private var lats = new Array[Long](1 << 20)
+    private var gens = new Array[Long](1 << 20)
     private var count = 0
     @volatile var parseFailures = 0L
 
-    private def add(n: Long, t: Long, lat: Long): Unit = lock.synchronized {
+    private def add(n: Long, t: Long, lat: Long, gen: Long): Unit = lock.synchronized {
       if (count == ns.length) {
         ns = java.util.Arrays.copyOf(ns, count * 2)
         ts = java.util.Arrays.copyOf(ts, count * 2)
         lats = java.util.Arrays.copyOf(lats, count * 2)
+        gens = java.util.Arrays.copyOf(gens, count * 2)
       }
-      ns(count) = n; ts(count) = t; lats(count) = lat; count += 1
+      ns(count) = n; ts(count) = t; lats(count) = lat; gens(count) = gen; count += 1
     }
 
     private val partial = new StringBuilder
@@ -226,7 +228,7 @@ object Soak {
                 t <- tRe.findFirstMatchIn(line)
                 sw <- swRe.findFirstMatchIn(line)
               } yield add(n.group(1).toLong, t.group(1).toLong,
-                nowUs - sw.group(1).toLong)) getOrElse { parseFailures += 1 }
+                nowUs - sw.group(1).toLong, sw.group(1).toLong)) getOrElse { parseFailures += 1 }
             }
           }
           w.request(1)
@@ -240,6 +242,8 @@ object Soak {
       (java.util.Arrays.copyOf(ns, count), java.util.Arrays.copyOf(ts, count),
         java.util.Arrays.copyOf(lats, count))
     }
+    /** The generation wall µs of each event, receive order. */
+    def generatedUs(): Array[Long] = lock.synchronized(java.util.Arrays.copyOf(gens, count))
     def close(): Unit = try ws.abort() catch { case _: Throwable => () }
   }
 
@@ -502,6 +506,21 @@ object Soak {
       onStale = _ => staleFired.incrementAndGet())
 
     val subA = new Subscriber(s"ws://localhost:${running.servePort}/subscribe?cursor=0$fbArg")
+    // the live-latency windows' bounds, in wall ms: subscriber A's
+    // cutover (the main edge holds A alone and none replays), the late
+    // subscriber's join, and its cutover (both held, none replays),
+    // sampled every 50 ms
+    @volatile var aCutoverMs, bJoinMs, bCutoverMs = -1L
+    val cutovers = new Thread(() =>
+      try while (bCutoverMs < 0) {
+        val srv = running.server
+        val now = System.currentTimeMillis()
+        if (aCutoverMs < 0 && srv.subscriberCount >= 1 && srv.replayingCount == 0) aCutoverMs = now
+        if (bJoinMs > 0 && srv.subscriberCount >= 2 && srv.replayingCount == 0) bCutoverMs = now
+        Thread.sleep(50)
+      } catch { case _: InterruptedException => () })
+    cutovers.setDaemon(true)
+    cutovers.start()
 
     // MULTI-EDGE posture (VERDICT r11 #6): a second independent serve
     // edge over the SAME table — own writer pool, own registry — killed
@@ -563,6 +582,7 @@ object Soak {
       // measured fair-pool replay rate is ~28k ev/s against a 12k
       // live stream; a 240 s join at 8 min needs ~24k)
       if (subB == null && elapsed >= math.max(LateJoinS, math.min(240, durMs / 1000 * 6 / 10))) {
+        bJoinMs = System.currentTimeMillis()
         subB = new Subscriber(s"ws://localhost:${running.servePort}/subscribe?cursor=0$fbArg")
         subBJoinedAt = elapsed
       }
@@ -962,6 +982,32 @@ object Soak {
       f"p50=${ms(pct(liveLats, 0.50))}%.0fms p90=${ms(pct(liveLats, 0.90))}%.0fms " +
       f"p99=${ms(pct(liveLats, 0.99))}%.0fms max=${ms(liveLats.lastOption.getOrElse(0L))}%.0fms")
     println(f"[soak] seed replay completed in ≤ ${ms(replayLats.lastOption.getOrElse(0L))}%.0fms")
+    // the same live events split by when they were generated: during
+    // A's seed replay (they reach A only at its cutover), during the
+    // late subscriber's replay (its catch-up contends with live
+    // delivery), and the rest — the pipeline's steady state
+    cutovers.interrupt()
+    val genA = subA.generatedUs()
+    val lateUntilMs = if (bCutoverMs > 0) bCutoverMs else t0 + durMs
+    def window(name: String, in: Long => Boolean): Unit = {
+      val lats = nsA.indices.collect { case i if nsA(i) >= seedCount && in(genA(i) / 1000L) => latA(i) }
+        .toArray.sorted
+      println(f"[soak] live latency, $name: ${lats.length} events, " +
+        f"p50=${ms(pct(lats, 0.50))}%.0fms p90=${ms(pct(lats, 0.90))}%.0fms " +
+        f"p99=${ms(pct(lats, 0.99))}%.0fms")
+    }
+    def late(g: Long) = bJoinMs > 0 && g >= bJoinMs && g < lateUntilMs
+    if (aCutoverMs < 0) println("[soak] subscriber A's cutover was never seen")
+    else {
+      window(s"generated during A's seed replay (to its cutover at +${(aCutoverMs - t0) / 1000}s)",
+        _ < aCutoverMs)
+      window("generated after A's cutover, outside the late-join window",
+        g => g >= aCutoverMs && !late(g))
+    }
+    if (bJoinMs > 0)
+      window(s"generated in the late-join window (+${(bJoinMs - t0) / 1000}s to " +
+        s"${if (bCutoverMs > 0) s"its cutover at +${(bCutoverMs - t0) / 1000}s" else "generation end"})",
+        late)
     val hm = health.toList
     println(s"[soak] fds first→last: ${hm.headOption.map(_._2)}→${hm.lastOption.map(_._2)}; " +
       s"threads ${hm.headOption.map(_._3)}→${hm.lastOption.map(_._3)}; " +

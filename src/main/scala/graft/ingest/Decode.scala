@@ -150,7 +150,11 @@ object Decode {
     * callers fan the single `wire` column out to N subscribers.
     * Storage-layout columns (`event_hour`) are excluded from the wire.
     */
-  def toWire(events: DataFrame, exclude: Set[String] = Set("event_hour")): DataFrame = {
+  def toWire(events: DataFrame, exclude: Set[String] = Set("event_hour")): DataFrame =
+    events.withColumn("wire", wire(events, exclude))
+
+  /** The [[toWire]] JSON of one row of `events`, as a column. */
+  def wire(events: DataFrame, exclude: Set[String] = Set("event_hour")): Column = {
     val withInlineRecord = events.columns.filterNot(exclude).toIndexedSeq.map {
       case "commit" =>
         when(col("commit").isNotNull, struct(
@@ -162,7 +166,6 @@ object Decode {
           col("commit.cid").as("cid"))).as("commit")
       case name => col(name)
     }
-    events.withColumn("wire", to_json(struct(withInlineRecord: _*),
-      Map("ignoreNullFields" -> "true")))
+    to_json(struct(withInlineRecord: _*), Map("ignoreNullFields" -> "true"))
   }
 }

@@ -3,9 +3,11 @@ package graft.ingest
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.store.EventsTable
+import graft.streaming.IngestMetrics
 
 /** S1+S9+S10+S11 — the ingest job: streaming source → per-batch monotonic
   * sequencing → append to the events table (reference pipeline §3.1:
@@ -44,6 +46,26 @@ object IngestJob {
     * `scalableThresholdRows` are stamped with the distributed sequencer
     * (same gap-free assignment, no single-task stage).
     *
+    * One Spark job per micro-batch: the batch is stamped straight from
+    * the source and written by [[EventsTable.append]], whose write
+    * observes the row count, the newest `time_us` and the commit
+    * listeners' frames. The hwm, `graft_consumer_last_seq` and the
+    * sequenced/persisted counters come from that observation; if it
+    * does not arrive they come from a read of the table from the hour
+    * the batch began in, never from a guess.
+    *
+    * The stamp path and the shard count take a bound known before the
+    * batch: the offsets the batch spans ([[Bridge.microBatchSpan]]),
+    * frames for the WebSocket source. Frames are not rows: Decode
+    * drops a too-big or CID-mismatched commit's ops and explodes the
+    * rest, one row per op. Neither use needs a row count to be right:
+    * `stamp` and `stampScalable` assign the same sequence, and prefix
+    * closure holds at any shard count (EventsTable.append), so a bound
+    * off by the ops per commit only picks a slower stamp or a different
+    * file layout. A source whose offsets are not integers gives no
+    * bound: its batches take the window stamp and `autoShards(0)`. A
+    * batch that spans no offsets is not written.
+    *
     * `trigger` defaults to AvailableNow (drain-and-stop — tests and
     * backfills); pass `Trigger.ProcessingTime(...)` for the standing
     * live ingest (the reference's firehose consumer runs until shutdown,
@@ -61,6 +83,7 @@ object IngestJob {
       metrics: graft.serve.Metrics.Registry = graft.serve.Metrics.default,
       appendShards: Int = 0,
       manifestCommits: Boolean = false): StreamingQuery = {
+    val spark = decoded.sparkSession
     val hwm = new AtomicLong(prevMaxUs)
     // the reference's per-consumer sequenced/persisted counters
     // (pkg/consumer/consumer.go:79-81), labeled by the table the way
@@ -71,44 +94,49 @@ object IngestJob {
       "Total events appended to the events table", "table" -> tablePath)
     val lastSeq = metrics.gauge("graft_consumer_last_seq",
       "Sequence (time_us) of the last event processed", "table" -> tablePath)
+    val handOff = metrics.histogram("graft_commit_handoff_seconds",
+      "Commit hand-off: the write's return to the last commit listener's return",
+      IngestMetrics.DurationBuckets, "table" -> tablePath)
     decoded.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // two jobs per batch: the count builds the decoded batch's cache
-        // and counts it in one stage (no aggregate, so no exchange); the
-        // write stamps from that copy and collects what it writes for
-        // the commit listeners (EventsTable.append)
-        val frames = batch.persist()
-        try {
-          val n = frames.queryExecution.toRdd.count()
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val bound = Bridge.microBatchSpan(spark, batchId)
+        if (!bound.contains(0L)) {
+          val base = Sequencer.baseUs(hwm.get(), nowUs)
           // the window stamp over one partition needs no exchange; ties
           // still take partition order, then row order
-          val seq =
-            if (n >= scalableThresholdRows)
-              Sequencer.stampScalable(frames, orderCols, hwm.get(), nowUs, rows = n)
-            else Sequencer.stamp(frames.coalesce(1), orderCols, hwm.get(), nowUs, rows = n)
-          // every non-empty batch is stamped past the hwm and appended, a
-          // re-delivered one again (at-least-once, as the reference): the
-          // sequenced and persisted counters (consumer.go:79-81) differ
-          // only when an append throws
+          val stamped =
+            if (bound.exists(_ >= scalableThresholdRows))
+              Sequencer.stampScalableFrom(batch, orderCols, base)
+            else Sequencer.stampFrom(batch.coalesce(1), orderCols, base)
+          // 0 = auto: small live triggers stay one-file-per-hour; big
+          // batches fan the write out across time-contiguous shards.
+          // manifestCommits = the object-store-safe visibility mode:
+          // rename-order prefix closure degrades silently on rename-less
+          // stores; the manifest commit moves the boundary off the
+          // listing entirely (EventsTable.appendManifested doc)
+          val shards = if (appendShards > 0) appendShards else EventsTable.autoShards(bound.getOrElse(0L))
+          val appended =
+            if (manifestCommits) EventsTable.appendManifested(stamped, tablePath, shards)
+            else EventsTable.append(stamped, tablePath, shards)
+          handOff.observe(appended.handOffSeconds)
+          // the stamps run gap-free from `base`, so the head read also
+          // gives the row count
+          val (n, maxUs) = appended.written.fold {
+            val head = EventsTable.headUs(spark, tablePath, fromUs = base - 1)
+            (head - base + 1, head)
+          }(w => (w.rows, w.maxTimeUs))
+          // a batch is stamped by the job that writes it, so the
+          // sequenced and persisted counters (consumer.go:79-81) count
+          // the same rows: what that write wrote
           if (n > 0) {
             sequenced.add(n.toDouble)
-            // 0 = auto: small live triggers stay one-file-per-hour; big
-            // batches fan the write out across time-contiguous shards
-            // (prefix closure holds either way — EventsTable.append doc).
-            // manifestCommits = the object-store-safe visibility mode:
-            // rename-order prefix closure degrades silently on rename-less
-            // stores; the manifest commit moves the boundary off the
-            // listing entirely (EventsTable.appendManifested doc)
-            val shards = if (appendShards > 0) appendShards else EventsTable.autoShards(n)
-            if (manifestCommits) EventsTable.appendManifested(seq.df, tablePath, shards, rows = n)
-            else EventsTable.append(seq.df, tablePath, shards, rows = n)
             persisted.add(n.toDouble)
-            hwm.set(seq.maxTimeUs)
-            lastSeq.set(seq.maxTimeUs.toDouble)
+            hwm.set(maxUs)
+            lastSeq.set(maxUs.toDouble)
           }
-        } finally { frames.unpersist(); () }
+        }
       }
       .start()
   }

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   * row_number over the whole batch is a deliberate single-task stage,
   * exactly the bottleneck the reference accepted; everything before and
   * after it is fully parallel. Over a one-partition input that task
-  * needs no exchange (the ingest stamps its persisted batch coalesced to
-  * one partition); a partitioned input is gathered into it by a shuffle.
+  * needs no exchange (the ingest stamps its micro-batch coalesced to
+  * one partition, inside the job that writes it); a partitioned input
+  * is gathered into it by a shuffle.
   * `prevMax` is carried across batches by the caller (checkpointed in
   * streaming, see IngestJob).
   */
@@ -33,11 +34,13 @@ object Sequencer {
     * service orders by `(event_time_us, did, type)`, which ties across
     * the ops of one commit, and tied rows take their input order (the
     * batch's partition order, then row order). So the stamp is a
-    * function of the batch as it is partitioned: stamp a materialized
-    * batch once, and read its rows from one computation (IngestJob
-    * persists the decoded batch; [[graft.store.EventsTable.append]]
-    * hands the commit listeners the rows its write computed).
-    * `nowUs` is injectable for tests.
+    * function of the batch as it is partitioned: stamp a batch once,
+    * and read its rows from one computation (the ingest stamps inside
+    * the job that writes the batch, and
+    * [[graft.store.EventsTable.append]] hands the commit listeners the
+    * frames that write computed). `rows`, when known, saves the count
+    * that sizes the result's `maxTimeUs`. `nowUs` is injectable for
+    * tests.
     */
   def stamp(
       batch: DataFrame,
@@ -47,15 +50,26 @@ object Sequencer {
       rows: Long = -1L): Sequenced = {
     val n = if (rows >= 0) rows else batch.count()
     if (n == 0) return Sequenced(batch.sparkSession.emptyDataFrame, prevMaxUs)
-    val base = math.max(prevMaxUs + 1, nowUs())
+    val base = baseUs(prevMaxUs, nowUs)
+    Sequenced(stampFrom(batch, orderCols, base), base + n - 1)
+  }
+
+  /** A batch's first stamp after `prevMaxUs`: `max(prevMax + 1, now)`. */
+  def baseUs(prevMaxUs: Long, nowUs: () => Long): Long = math.max(prevMaxUs + 1, nowUs())
+
+  /** [[stamp]] from a known first stamp: `batch` stamped `baseUs`,
+    * `baseUs + 1`, … in order, as a plan that runs no job. The caller
+    * learns the last stamp from what it does with the rows (the ingest,
+    * from its write's observation).
+    */
+  def stampFrom(batch: DataFrame, orderCols: Seq[String], baseUs: Long): DataFrame = {
     val w = Window.orderBy(inputOrder(orderCols): _*)
     // the base enters through a function, not a literal: a long literal
     // is inlined into the generated code, so a new base per batch would
     // compile the stage anew every batch
-    val offset = udf((rn: Int) => base + rn - 1L).asNonNullable()
-    val stamped = withInputPosition(batch).withColumn("time_us",
+    val offset = udf((rn: Int) => baseUs + rn - 1L).asNonNullable()
+    withInputPosition(batch).withColumn("time_us",
       offset(row_number().over(w))).drop(InputPosition)
-    Sequenced(stamped, base + n - 1)
   }
 
   /** The tie-breaker column: each row's position in its batch. */
@@ -85,10 +99,19 @@ object Sequencer {
       nowUs: () => Long = () => System.currentTimeMillis() * 1000L,
       partitions: Int = 0,
       rows: Long = -1L): Sequenced = {
-    val spark = batch.sparkSession
     val n = if (rows >= 0) rows else batch.count()
-    if (n == 0) return Sequenced(spark.emptyDataFrame, prevMaxUs)
-    val base = math.max(prevMaxUs + 1, nowUs())
+    if (n == 0) return Sequenced(batch.sparkSession.emptyDataFrame, prevMaxUs)
+    val base = baseUs(prevMaxUs, nowUs)
+    Sequenced(stampScalableFrom(batch, orderCols, base, partitions), base + n - 1)
+  }
+
+  /** [[stampScalable]] from a known first stamp, as [[stampFrom]] is
+    * [[stamp]]'s. Its range sampling and index count run their jobs
+    * here, when the stamped frame is built.
+    */
+  def stampScalableFrom(batch: DataFrame, orderCols: Seq[String], baseUs: Long,
+      partitions: Int = 0): DataFrame = {
+    val spark = batch.sparkSession
     val parts = if (partitions > 0) partitions
       else spark.sessionState.conf.numShufflePartitions
     val cols = inputOrder(orderCols)
@@ -100,8 +123,8 @@ object Sequencer {
       ranged.schema.fields :+
         org.apache.spark.sql.types.StructField("time_us", org.apache.spark.sql.types.LongType, nullable = false))
     val stamped = ranged.rdd.zipWithIndex().map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (base + i))
+      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (baseUs + i))
     }
-    Sequenced(spark.createDataFrame(stamped, schema), base + n - 1)
+    spark.createDataFrame(stamped, schema)
   }
 }

@@ -5,12 +5,10 @@ import java.net.{ServerSocket, Socket}
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ingest.Decode
 import graft.store.EventsTable
-import graft.util.DriverBudget
 
 /** The serving half of the standing-service posture across a REAL
   * process boundary: the reference's WebSocket subscribe endpoint
@@ -27,9 +25,10 @@ import graft.util.DriverBudget
   * Live delivery: the reference persists an event and hands it to its
   * emit loop in the same process (`Server.Emit`, server.go:62-116); here
   * every append to the events table, once its batch is visible, calls
-  * the table's commit listeners ([[EventsTable.onCommit]]) in this JVM.
-  * Each edge's listener wires the committed rows once, runs every
-  * live session's predicate + hwm over the time-sorted frames
+  * the table's commit listeners ([[EventsTable.onCommit]]) in this JVM
+  * with the batch's frames, wired once by the append's own write. Each
+  * edge's listener runs every live session's predicate + hwm over the
+  * time-sorted frames
   * ([[CutoverSession.liveEmitFrames]]) and appends what it admits to
   * that connection's outbox — the reference's per-subscriber buffer
   * (server.go:154-175,204). Each connection has ONE writer: a task on
@@ -52,10 +51,11 @@ import graft.util.DriverBudget
   * grows with the subscriber count, as the reference's per-subscriber
   * buffers do.
   *
-  * Scale posture: the LIVE path costs ONE Spark job per commit and edge
-  * at any subscriber count — the committed rows are wire-serialized
-  * distributed, collected once with their routing columns, and fanned
-  * out in process, the same shape as the reference's single-marshal +
+  * Scale posture: the LIVE path costs no Spark job of its own at any
+  * subscriber or edge count — the append's write serializes the
+  * committed rows in its tasks and collects them once with their
+  * routing columns; they are fanned out in process, the same shape as
+  * the reference's single-marshal +
   * per-subscriber-predicate loop (server.go:73,87-134). REPLAY views
   * stay distributed — pruned, chunk-bounded table scans per session.
   * The driver is the egress edge, exactly as the reference's process
@@ -240,29 +240,11 @@ object SocketServe extends org.apache.spark.internal.Logging {
     (Subscribe.SubscriberSpec(csv("wantedCollections"), csv("wantedDids")), cursor)
   }
 
-  /** Fault-injection seam for specs: runs with the table key before a
-    * committed batch is wired; a throw fails that batch's wiring.
+  /** Fault-injection seam for specs: runs with the table key before an
+    * edge takes a committed batch's frames; a throw fails that batch's
+    * hand-off to the edge.
     */
   @volatile private[serve] var beforeWire: String => Unit = _ => ()
-
-  /** A committed batch's live frames, time-sorted: the rows the commit
-    * made visible, serialized once and collected with their routing
-    * columns, at any subscriber count and with no read of the table.
-    * Over the driver-local rows a commit hands on this runs no Spark job.
-    */
-  private[serve] def wireCommitted(key: String, rows: DataFrame): Array[Subscribe.WireFrame] = {
-    beforeWire(key)
-    val wired = Decode.toWire(rows)
-    wired.select(col("time_us"),
-        Subscribe.resolvedCollection(wired).as("collection"),
-        col("did"), col("wire"))
-      .collect()
-      .map(r => Subscribe.WireFrame(r.getLong(0),
-        if (r.isNullAt(1)) null else r.getString(1),
-        if (r.isNullAt(2)) null else r.getString(2),
-        r.getString(3)))
-      .sortBy(_.timeUs)
-  }
 
   /** A running server: `close()` stops accepting, detaches from the
     * commit feed, disconnects subscribers and returns once every thread
@@ -564,14 +546,13 @@ object SocketServe extends org.apache.spark.internal.Logging {
     ticker.start()
 
     // the commit listener: runs on the appending thread (the ingest
-    // micro-batch), wires the batch once when this edge has a
+    // micro-batch), takes the batch's frames when this edge has a
     // subscriber, fills the outboxes and returns — it never waits on a
     // socket
     val appender = new java.util.concurrent.atomic.AtomicReference[StreamingQuery]
     val key = EventsTable.tableKey(spark, tablePath)
-    val detach = EventsTable.onCommit(spark, tablePath) { rows =>
-      val s = rows.sparkSession
-      Option(s.sparkContext.getLocalProperty("sql.streaming.queryId"))
+    val detach = EventsTable.onCommit(spark, tablePath) { committed =>
+      Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
         .map(java.util.UUID.fromString)
         .filterNot(id => Option(appender.get).exists(_.id == id))
         .flatMap(id => Option(spark.streams.get(id)))
@@ -580,19 +561,12 @@ object SocketServe extends org.apache.spark.internal.Logging {
       else {
         val wired =
           try {
-            // a commit over the driver budget hands on its plan, not its rows
-            if (!rows.isLocal)
-              throw new IllegalStateException("the commit's rows exceed the driver budget")
-            val frames = wireCommitted(key, rows)
-            // driver heap of the commit's frames: each frame's object
-            // and routing strings plus its wire JSON's UTF-16 chars (at
-            // most); one commit may not pass the driver budget
-            val bytes = frames.iterator.map(f => DriverBudget.fixedRowBytes(3) + 2L * f.wire.length).sum
-            if (bytes > DriverBudget.bytes(s))
-              throw new IllegalStateException(s"$bytes bytes of frames exceed the driver budget")
-            Some(frames)
+            beforeWire(key)
+            if (committed.isEmpty) throw new IllegalStateException(
+              "the commit's frames did not reach the driver (over the driver budget, or unobserved)")
+            committed
           } catch { case NonFatal(e) =>
-            warnThrottled("wiring a committed batch", s" of $key (live sessions re-armed)", e)
+            warnThrottled("taking a committed batch", s" of $key (live sessions re-armed)", e)
             None
           }
         wired match {

@@ -83,7 +83,8 @@ object Subscribe {
     }
   }
 
-  private def resolvedDid(df: DataFrame): Column = {
+  /** The event's `did` column, or null for a shape without one. */
+  def resolvedDid(df: DataFrame): Column = {
     import org.apache.spark.sql.types.StringType
     if (df.columns.contains("did")) col("did") else lit(null).cast(StringType)
   }

@@ -1,11 +1,15 @@
 package graft.store
 
 import scala.concurrent.Await
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
+import graft.functions.WireFramesAgg
+import graft.ingest.Decode
+import graft.serve.Subscribe
+import graft.serve.Subscribe.WireFrame
 import graft.util.DriverBudget
 
 /** The persisted event log: a time-partitioned, time-sorted parquet table
@@ -84,13 +88,26 @@ object EventsTable {
     * increasing `time_us`, so the tail probe's `>` high-water mark
     * never splits an instant.
     *
-    * `rows`, the batch's row count when the caller knows it (the
-    * ingest's), sizes the commit listeners' hand-off against the driver
-    * budget; unknown (-1), it costs a count while a listener is
-    * registered.
+    * The write is the append's one Spark job. It observes what it
+    * writes (`Dataset.observe`): the row count and the newest
+    * `time_us`, returned as [[Appended.written]], and, while a commit
+    * listener is registered, the batch's wired frames for the
+    * listeners ([[CommitListener]]).
     */
-  def append(events: DataFrame, path: String, shards: Int = 1, rows: Long = -1L): Unit =
-    append(events, path, shards, rows, manifest = false)
+  def append(events: DataFrame, path: String, shards: Int = 1): Appended =
+    append(events, path, shards, manifest = false)
+
+  /** What an append's write observed: the rows it wrote and the newest
+    * `time_us` among them (meaningless when `rows` is 0).
+    */
+  final case class Written(rows: Long, maxTimeUs: Long)
+
+  /** An append's outcome: what its write observed, None when that
+    * observation did not arrive within [[ObservedWait]]; and the seconds
+    * from the write's return to the last commit listener's return (the
+    * observation wait, the renames and the listeners).
+    */
+  final case class Appended(written: Option[Written], handOffSeconds: Double)
 
   /** Object-store-safe variant of [[append]] (VERDICT r13 #8): the
     * rename-order visibility contract above is real on HDFS-class
@@ -127,11 +144,11 @@ object EventsTable {
     * Retention still drops whole hour dirs; manifest entries under a
     * dropped hour are filtered at read time.
     */
-  def appendManifested(events: DataFrame, path: String, shards: Int = 1, rows: Long = -1L): Unit =
-    append(events, path, shards, rows, manifest = true)
+  def appendManifested(events: DataFrame, path: String, shards: Int = 1): Appended =
+    append(events, path, shards, manifest = true)
 
-  private def append(events: DataFrame, path: String, shards: Int, rows: Long,
-      manifest: Boolean): Unit = {
+  private def append(events: DataFrame, path: String, shards: Int,
+      manifest: Boolean): Appended = {
     require(shards <= 10000, "shards beyond part-file name ordering")
     val spark = events.sparkSession
     import org.apache.hadoop.fs.Path
@@ -141,29 +158,30 @@ object EventsTable {
     purgeStaleStaging(fs, root)
     val key = fs.makeQualified(root).toString
     val laid = withLayoutCols(events)
-    // while a listener is registered and the batch fits the driver
-    // budget, the write itself collects the rows it writes: the
-    // listeners get them with no second job, and a nondeterministic
-    // input cannot hand them rows the files lack. The budget is charged
-    // before the collection is attached, so a hand-off never fails the
-    // write (spark.driver.maxResultSize)
-    val collect = commitListeners.containsKey(key) && {
-      val n = if (rows >= 0) rows else laid.count()
-      n > 0 && DriverBudget.fits(spark, n, DriverBudget.fixedRowBytes(leafCount(laid.schema)))
+    // while a listener is registered the write also wires the rows it
+    // writes, in its own tasks: the listeners get the frames with no
+    // second job, and a nondeterministic input cannot hand them frames
+    // the files lack. The collection charges each frame against the
+    // driver budget and stops at it, so a hand-off never fails the write
+    // (spark.driver.maxResultSize)
+    val wired = Option.when(commitListeners.containsKey(key)) {
+      val frames = udaf(new WireFramesAgg(DriverBudget.bytes(spark)), ExpressionEncoder[WireFrame]())
+      frames(col("time_us"), Subscribe.resolvedCollection(laid), Subscribe.resolvedDid(laid),
+        Decode.wire(laid)).as("frames")
     }
-    val observed = Option.when(collect)(Observation())
+    val observed = Observation()
     val moved = scala.collection.mutable.ListBuffer.empty[String]
     try {
       val arranged =
         if (shards <= 1) laid.coalesce(1)
         else laid.repartitionByRange(shards, col(PartitionCol), col("time_us"))
-      val sorted = arranged.sortWithinPartitions(col(PartitionCol), col("time_us"))
-      val row = struct(laid.columns.toIndexedSeq.map(col): _*)
-      observed.fold(sorted)(sorted.observe(_, collect_list(row)))
+      arranged.sortWithinPartitions(col(PartitionCol), col("time_us"))
+        .observe(observed, count(lit(1)).as("rows"), max(col("time_us")).as("max_us") +: wired.toSeq: _*)
         .write
         .mode(SaveMode.Overwrite)
         .partitionBy(PartitionCol)
         .parquet(staging.toString)
+      val written = System.nanoTime()
       val hourDirs = fs.listStatus(staging)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$PartitionCol="))
         .sortBy(_.getPath.getName.stripPrefix(s"$PartitionCol=").toLong)
@@ -200,46 +218,45 @@ object EventsTable {
             moved += s"${hd.getPath.getName}/${f.getPath.getName}"
           }
       }
-      if (manifest) commitManifest(fs, root, moved.toList)
+      if (manifest && moved.nonEmpty) commitManifest(fs, root, moved.toList)
+      // the observation reaches the driver on the listener bus, just
+      // after the write returns
+      val row = scala.util.Try(Await.result(observed.future, ObservedWait)).toOption
       // the batch is already in the table: a failing listener is logged,
       // never allowed to fail the append
       if (moved.nonEmpty) Option(commitListeners.get(key)).foreach { ls =>
-        // the collected rows reach the observation on the listener bus,
-        // just after the write returns; uncollected, listeners get `laid`
-        val handed = observed
-          .flatMap(o => scala.util.Try(Await.result(o.future, ObservedWait)).toOption)
-          .fold(laid)(r => spark.createDataFrame(r.getSeq[Row](0).asJava, laid.schema))
+        val frames = row.filter(_ => wired.nonEmpty).map(_.getStruct(2))
+          .filterNot(_.getBoolean(2))
+          .map(_.getSeq[Row](0).iterator.map(f => WireFrame(f.getLong(0), f.getString(1),
+            f.getString(2), f.getString(3))).toArray.sortBy(_.timeUs))
         ls.foreach { l =>
-          try l(handed)
+          try l(frames)
           catch { case scala.util.control.NonFatal(e) =>
             System.err.println(s"[events-table] commit listener on $root failed: $e")
           }
         }
       }
+      Appended(row.map(r => Written(r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))),
+        (System.nanoTime() - written) / 1e9)
     } finally fs.delete(staging, true)
   }
-
-  /** The values of one row of `schema`, counting each nested field. */
-  private def leafCount(schema: org.apache.spark.sql.types.StructType): Int =
-    schema.fields.map(_.dataType match {
-      case s: org.apache.spark.sql.types.StructType => leafCount(s)
-      case _ => 1
-    }).sum
 
   private val ObservedWait = scala.concurrent.duration.Duration(10, "s")
 
   /** Runs after an append has made its batch visible (renames done,
-    * manifest written), on the appending thread, with the rows just
-    * made visible: the appended batch with its `event_hour` column last,
-    * as a table read yields them. While the batch fits the driver budget
-    * the write collects those rows as it writes them, and the listener
-    * gets a driver-local DataFrame (`isLocal`): reading it runs no job.
-    * Over the budget it gets the plan the write ran, uncollected, which
-    * it should not run: the serving edge re-arms its live sessions
-    * instead. It must return promptly: for the ingest query it runs
-    * inside the micro-batch.
+    * manifest written), on the appending thread, with the batch's live
+    * frames: every row the write wrote, wired as [[Decode.toWire]] wires
+    * a table read of it (collection and did resolved by
+    * [[Subscribe.resolvedCollection]] and [[Subscribe.resolvedDid]]),
+    * time-sorted. The write computed them, so reading them runs no
+    * job. None when the frames did not reach the driver: past the
+    * driver budget, or the write's observation did not arrive. The
+    * batch is in the table either way, and the serving edge then
+    * re-arms its live sessions to read it from there. A listener must
+    * return promptly: for the ingest query it runs inside the
+    * micro-batch.
     */
-  type CommitListener = DataFrame => Unit
+  type CommitListener = Option[Array[WireFrame]] => Unit
 
   /** Listeners by qualified table URI ([[tableKey]]). */
   private val commitListeners =

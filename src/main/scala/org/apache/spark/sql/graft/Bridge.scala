@@ -24,6 +24,37 @@ object Bridge {
       df.queryExecution.toRdd, df.schema, isStreaming = true)
   }
 
+  /** The offsets the running micro-batch `batchId` spans, summed over
+    * the sources of the streaming query whose stream thread calls this
+    * (its `sql.streaming.queryId` local property). Read off the batch's
+    * planned start and end offsets, so it costs no job. Defined only
+    * when every source numbers its offsets with bare integers: the
+    * WebSocket frame source counts frames, MemoryStream counts
+    * `addData` calls. None for any other offset, or off a stream thread.
+    */
+  def microBatchSpan(spark: org.apache.spark.sql.SparkSession, batchId: Long): Option[Long] =
+    Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
+      .flatMap(id => Option(spark.streams.get(id))).collect {
+        case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
+          w.streamingQuery.getLatestExecutionContext()
+      }.filter(_.batchId == batchId).flatMap { ctx =>
+        def num(o: org.apache.spark.sql.connector.read.streaming.Offset) =
+          Option(o).flatMap(_.json.toLongOption)
+        val spans = ctx.endOffsets.toSeq.map { case (source, end) =>
+          val start = ctx.startOffsets.get(source) match {
+            case Some(o) => num(o)
+            // a first batch: a DSv1 source delivers everything up to
+            // `end`, a DSv2 stream everything after its initial offset
+            case None => source match {
+              case _: org.apache.spark.sql.execution.streaming.Source => Some(0L)
+              case s => num(s.initialOffset)
+            }
+          }
+          for (s <- start; e <- num(end)) yield math.max(0L, e - s)
+        }
+        if (spans.nonEmpty && spans.forall(_.isDefined)) Some(spans.flatten.sum) else None
+      }
+
   /** Drain the listener bus (private[spark]) — the hook specs need
     * before reading SparkListener-accumulated counters.
     */

@@ -101,6 +101,42 @@ class DecodeSpec extends SparkSpec {
     assert(out.count() == 0) // error-frame arm: log-and-drop (consumer.go:156-159)
   }
 
+  /** The shipped decode (`decodeFrames(parseMixedFrames(…))`, what the
+    * WebSocket ingest runs) over one commit frame per (tooBig, ops JSON)
+    * pair, frame `i` from `did:plc:f<i>`: the (did, rkey) of each row
+    * it keeps.
+    */
+  private def shipped(commits: (Boolean, String)*): Set[(String, String)] =
+    Decode.decodeFrames(Decode.parseMixedFrames(commits.zipWithIndex.map { case ((tooBig, ops), i) =>
+      s"""{"t":"#commit","did":"did:plc:f$i","rev":"r$i","seq":$i,"time":"2024-09-05T06:11:04.870Z",""" +
+        s""""tooBig":$tooBig,"ops":[$ops]}"""
+    }.toDF("value")))
+      .select(col("did"), col("commit.rkey")).as[(String, String)].collect().toSet
+
+  private def op(action: String, rkey: String, cid: String = "c", recordCid: String = "c") =
+    s"""{"action":"$action","path":"app.bsky.feed.post/$rkey","cid":"$cid","recordCid":"$recordCid","record":{"text":"t"}}"""
+
+  test("shipped decode: a tooBig commit is dropped whole (consumer.go:106-109)") {
+    assert(shipped(
+      false -> op("create", "kept"),
+      true -> Seq(op("create", "big1"), op("delete", "big2")).mkString(",")) ==
+      Set("did:plc:f0" -> "kept"))
+  }
+
+  test("shipped decode: a create or update whose CIDs differ is dropped, its siblings kept (consumer.go:227-231)") {
+    assert(shipped(false -> Seq(
+      op("create", "ok"),
+      op("create", "bad1", cid = "c1", recordCid = "c2"),
+      op("update", "bad2", cid = "c3", recordCid = "c4"),
+      op("delete", "del", cid = "c5", recordCid = "c6")).mkString(",")) ==
+      Set("did:plc:f0" -> "ok", "did:plc:f0" -> "del"))
+  }
+
+  test("shipped decode: an op of unknown kind is dropped, its siblings kept (consumer.go:298-301)") {
+    assert(shipped(false -> Seq(op("frobnicate", "odd"), op("update", "ok")).mkString(",")) ==
+      Set("did:plc:f0" -> "ok"))
+  }
+
   test("wire serialization omits null fields like Go omitempty") {
     val wire = Decode.toWire(decoded.filter(col("commit.type") === Event.CommitDelete))
       .select("wire").as[String].head()

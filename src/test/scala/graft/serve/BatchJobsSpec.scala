@@ -80,12 +80,12 @@ class BatchJobsSpec extends SparkSpec {
         tmpDir(s"jobs-$edges-ckpt"),
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(200L))
       eventually(90000)(EventsTable.read(spark, table).count() == 5)
-      detach :+= EventsTable.onCommit(spark, table) { rows =>
-        rows.sparkSession.sparkContext.setLocalProperty(HandOff, "1")
+      detach :+= EventsTable.onCommit(spark, table) { _ =>
+        spark.sparkContext.setLocalProperty(HandOff, "1")
       }
       servers = (1 to edges).map(_ => SocketServe.start(spark, table))
-      detach :+= EventsTable.onCommit(spark, table) { rows =>
-        rows.sparkSession.sparkContext.setLocalProperty(HandOff, null)
+      detach :+= EventsTable.onCommit(spark, table) { _ =>
+        spark.sparkContext.setLocalProperty(HandOff, null)
       }
       val clients = servers.map(s => new WsTestKit.Client(s"ws://localhost:${s.port}/subscribe?"))
       eventually(30000)(servers.forall(s => s.subscriberCount == 1 && s.replayingCount == 0))
@@ -114,10 +114,10 @@ class BatchJobsSpec extends SparkSpec {
     }
   }
 
-  test("an ingest micro-batch runs at most two Spark jobs, and its hand-off none, with one edge or two") {
+  test("an ingest micro-batch runs at most one Spark job, and its hand-off none, with one edge or two") {
     Seq(1, 2).foreach { edges =>
       val perBatch = steadyBatchJobs(edges)
-      assert(perBatch.forall(_._1 <= 2), s"$edges edge(s): jobs per batch (all, hand-off): $perBatch")
+      assert(perBatch.forall(_._1 <= 1), s"$edges edge(s): jobs per batch (all, hand-off): $perBatch")
       assert(perBatch.forall(_._2 == 0), s"$edges edge(s): jobs per batch (all, hand-off): $perBatch")
     }
   }
@@ -137,7 +137,7 @@ class BatchJobsSpec extends SparkSpec {
       val live = new WsTestKit.Client(s"ws://localhost:${server.port}/subscribe?")
       eventually(30000)(server.subscriberCount == 1 && server.replayingCount == 0)
       eventually(30000)(!ingest.status.isTriggerActive)
-      // a one-byte budget: no batch's rows are collected for the hand-off
+      // a one-byte budget: no batch's frames are collected for the hand-off
       DriverBudget.withBytes(1L) {
         srv.log = (1 to 25).map(frame).toVector
         eventually(90000)(EventsTable.read(spark, table).count() == 25)

@@ -59,10 +59,9 @@ class CommitHandOffSpec extends SparkSpec {
     * the serving edges receive it.
     */
   private def handedOff(table: String)(body: => Unit): Seq[Array[Subscribe.WireFrame]] = {
-    val key = EventsTable.tableKey(spark, table)
     val got = new java.util.concurrent.ConcurrentLinkedQueue[Array[Subscribe.WireFrame]]
-    val detach = EventsTable.onCommit(spark, table) { rows =>
-      got.add(SocketServe.wireCommitted(key, rows))
+    val detach = EventsTable.onCommit(spark, table) { frames =>
+      got.add(frames.getOrElse(fail("a commit within the driver budget handed over no frames")))
     }
     try body finally detach()
     import scala.jdk.CollectionConverters._

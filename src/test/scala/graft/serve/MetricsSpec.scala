@@ -109,6 +109,10 @@ class MetricsSpec extends SparkSpec {
       val sequenced = ("""graft_consumer_events_sequenced_total\{table="[^"]*"\} (\d+)""").r
         .findFirstMatchIn(out).map(_.group(1).toLong)
       assert(sequenced.contains(10L), s"sequenced counter:\n$out")
+      // the one batch's commit hand-off, timed once
+      assert(("""graft_commit_handoff_seconds_count\{table="[^"]*"\} 1""").r
+        .findFirstIn(out).isDefined, s"hand-off histogram:\n$out")
+      assert(out.contains("# TYPE graft_commit_handoff_seconds histogram"), out)
       // jobs per batch: a SparkListener, whose queue may lag the progress one
       eventually(30000)((s"""graft_consumer_batch_jobs_count\\{query="$qid"\\} [1-9]""").r
         .findFirstIn(reg.render).isDefined)

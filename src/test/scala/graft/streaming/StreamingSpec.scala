@@ -1,8 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.ingest.IngestJob
@@ -53,22 +57,66 @@ class StreamingSpec extends SparkSpec {
     assert(t2.max == 1000079L)
   }
 
+  /** The operators of every plan executed while `body` runs, through
+    * adaptive stages.
+    */
+  private def executedNodes(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val recorder = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.executedPlan)
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => (p.children ++ p.subqueries).flatMap(nodes)
+    })
+    // registered before the stream starts: the stream runs in a clone
+    // of the session, which copies the listeners registered by then
+    spark.listenerManager.register(recorder)
+    try body finally {
+      org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext)
+      spark.listenerManager.unregister(recorder)
+    }
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq.flatMap(nodes)
+  }
+
   test("ingest monotonicity holds through the scalable-stamp path (large-batch form)") {
     implicit val ctx = spark.sqlContext
     val table = tmpDir("ingest-scalable-table")
 
     // threshold 40: batch 1 (50 rows) takes stampScalable, batch 2 (20)
-    // takes the window stamp — both paths in one stream, one hwm chain
+    // takes the window stamp — both paths in one stream, one hwm chain.
+    // The ingest picks the path by the offsets a batch spans, and
+    // MemoryStream numbers its offsets by addData call: one row per
+    // call makes the span the row count, as the WebSocket source's span
+    // is its frame count
     val in = MemoryStream[Raw]
-    in.addData((1 to 50).map(i => Raw(i.toLong, s"did${i % 3}", "app.c")))
-    val q = IngestJob.start(in.toDF(), Seq("arrival"), table, tmpDir("ingest-scalable-ckpt"),
-      prevMaxUs = 0L, nowUs = () => 1000000L, scalableThresholdRows = 40L)
-    q.awaitTermination()
+    (1 to 50).foreach(i => in.addData(Raw(i.toLong, s"did${i % 3}", "app.c")))
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    val first = executedNodes {
+      q = IngestJob.start(in.toDF(), Seq("arrival"), table, tmpDir("ingest-scalable-ckpt"),
+        prevMaxUs = 0L, nowUs = () => 1000000L, scalableThresholdRows = 40L)
+      q.awaitTermination()
+    }
     val in2 = MemoryStream[Raw]
-    in2.addData((51 to 70).map(i => Raw(i.toLong, s"did${i % 3}", "app.c")))
-    val q2 = IngestJob.start(in2.toDF(), Seq("arrival"), table, tmpDir("ingest-scalable-ckpt2"),
-      prevMaxUs = 1000049L, nowUs = () => 500L, scalableThresholdRows = 40L)
-    q2.awaitTermination()
+    (51 to 70).foreach(i => in2.addData(Raw(i.toLong, s"did${i % 3}", "app.c")))
+    var q2: org.apache.spark.sql.streaming.StreamingQuery = null
+    val second = executedNodes {
+      q2 = IngestJob.start(in2.toDF(), Seq("arrival"), table, tmpDir("ingest-scalable-ckpt2"),
+        prevMaxUs = 1000049L, nowUs = () => 500L, scalableThresholdRows = 40L)
+      q2.awaitTermination()
+    }
+    // one batch each (the scalable stamp reads its batch more than once,
+    // so the source's row count sums those reads)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+    assert(q2.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq == Seq(20L))
+    // the scalable stamp writes the RDD its index assigned, with no
+    // window; the window stamp plans its row_number window
+    assert(!first.exists(_.isInstanceOf[WindowExec]), "the 50-row batch took the window stamp")
+    assert(first.exists(_.isInstanceOf[RDDScanExec]), "the 50-row batch's write read no stamped RDD")
+    assert(second.exists(_.isInstanceOf[WindowExec]), "the 20-row batch did not take the window stamp")
 
     val rows = EventsTable.read(spark, table)
       .select("arrival", "time_us").as[(Long, Long)].collect().sortBy(_._1)
