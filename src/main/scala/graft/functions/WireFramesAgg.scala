@@ -38,8 +38,8 @@ class WireFramesAgg(budgetBytes: Long)
 
   override def finish(b: Frames): Frames = b
 
-  override def bufferEncoder: Encoder[Frames] = ExpressionEncoder[Frames]()
-  override def outputEncoder: Encoder[Frames] = ExpressionEncoder[Frames]()
+  override def bufferEncoder: Encoder[Frames] = FramesEncoder
+  override def outputEncoder: Encoder[Frames] = FramesEncoder
 }
 
 object WireFramesAgg {
@@ -48,6 +48,10 @@ object WireFramesAgg {
     * seen, and whether those passed the budget (then `frames` is empty).
     */
   final case class Frames(frames: Seq[WireFrame], bytes: Long, over: Boolean)
+
+  // built once: an encoder is derived by reflection
+  private val FramesEncoder: Encoder[Frames] = ExpressionEncoder[Frames]()
+  val FrameEncoder: Encoder[WireFrame] = ExpressionEncoder[WireFrame]()
 
   private def chars(s: String): Long = if (s == null) 0L else s.length.toLong
 

@@ -3,7 +3,6 @@ package graft.store
 import scala.concurrent.Await
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 import graft.functions.WireFramesAgg
@@ -165,7 +164,7 @@ object EventsTable {
     // driver budget and stops at it, so a hand-off never fails the write
     // (spark.driver.maxResultSize)
     val wired = Option.when(commitListeners.containsKey(key)) {
-      val frames = udaf(new WireFramesAgg(DriverBudget.bytes(spark)), ExpressionEncoder[WireFrame]())
+      val frames = udaf(new WireFramesAgg(DriverBudget.bytes(spark)), WireFramesAgg.FrameEncoder)
       frames(col("time_us"), Subscribe.resolvedCollection(laid), Subscribe.resolvedDid(laid),
         Decode.wire(laid)).as("frames")
     }
