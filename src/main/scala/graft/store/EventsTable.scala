@@ -177,6 +177,7 @@ object EventsTable {
       arranged.sortWithinPartitions(col(PartitionCol), col("time_us"))
         .observe(observed, count(lit(1)).as("rows"), max(col("time_us")).as("max_us") +: wired.toSeq: _*)
         .write
+        .options(NioLocalFileSystem.WriteOptions)
         .mode(SaveMode.Overwrite)
         .partitionBy(PartitionCol)
         .parquet(staging.toString)

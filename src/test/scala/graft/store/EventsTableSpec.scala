@@ -160,6 +160,29 @@ class EventsTableSpec extends SparkSpec {
     assert(replayed.length == 40 * 400 && replayed.sameElements(replayed.sorted))
   }
 
+  test("the append's write leaves the modes the default local file system gives") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.PosixFilePermissions.{fromString, toString => mode}
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val path = tmpDir("events-modes")
+    EventsTable.append(sampleEvents.limit(10), path)
+    val hour = Paths.get(path, s"${EventsTable.PartitionCol}=0")
+    val part = Files.list(hour).filter(_.getFileName.toString.startsWith("part-")).findFirst().get
+    // the same dir and file made by Hadoop's stock local file system
+    val ref = tmpDir("events-modes-ref")
+    val local = FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    local.mkdirs(new Path(ref, "d"))
+    local.create(new Path(ref, "f")).close()
+    def modeOf(p: java.nio.file.Path) = mode(Files.getPosixFilePermissions(p))
+    assert(modeOf(hour) == modeOf(Paths.get(ref, "d")))
+    assert(modeOf(part) == modeOf(Paths.get(ref, "f")))
+    // and a mode set through java.nio is the mode asked for
+    val raw = new NioLocalFileSystem.Raw
+    raw.initialize(java.net.URI.create("file:///"), spark.sessionState.newHadoopConf())
+    raw.setPermission(new Path(ref, "f"), new org.apache.hadoop.fs.permission.FsPermission("0640"))
+    assert(modeOf(Paths.get(ref, "f")) == mode(fromString("rw-r-----")))
+  }
+
   test("appends accumulate (at-least-once append contract)") {
     val path = tmpDir("events-append")
     EventsTable.append(sampleEvents.limit(10), path)
