@@ -38,14 +38,17 @@ object Sequencer {
     * and read its rows from one computation (the ingest stamps inside
     * the job that writes the batch, and
     * [[graft.store.EventsTable.append]] hands the commit listeners the
-    * frames that write computed). `nowUs` is injectable for tests.
+    * frames that write computed). `rows`, when known, saves the count
+    * that sizes the result's `maxTimeUs`. `nowUs` is injectable for
+    * tests.
     */
   def stamp(
       batch: DataFrame,
       orderCols: Seq[String],
       prevMaxUs: Long,
-      nowUs: () => Long = () => System.currentTimeMillis() * 1000L): Sequenced = {
-    val n = batch.count()
+      nowUs: () => Long = () => System.currentTimeMillis() * 1000L,
+      rows: Long = -1L): Sequenced = {
+    val n = if (rows >= 0) rows else batch.count()
     if (n == 0) return Sequenced(batch.sparkSession.emptyDataFrame, prevMaxUs)
     val base = baseUs(prevMaxUs, nowUs)
     Sequenced(stampFrom(batch, orderCols, base), base + n - 1)
@@ -94,8 +97,9 @@ object Sequencer {
       orderCols: Seq[String],
       prevMaxUs: Long,
       nowUs: () => Long = () => System.currentTimeMillis() * 1000L,
-      partitions: Int = 0): Sequenced = {
-    val n = batch.count()
+      partitions: Int = 0,
+      rows: Long = -1L): Sequenced = {
+    val n = if (rows >= 0) rows else batch.count()
     if (n == 0) return Sequenced(batch.sparkSession.emptyDataFrame, prevMaxUs)
     val base = baseUs(prevMaxUs, nowUs)
     Sequenced(stampScalableFrom(batch, orderCols, base, partitions), base + n - 1)
